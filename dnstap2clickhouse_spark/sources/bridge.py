@@ -17,19 +17,32 @@ behaviors preserved:
 - S1: listener with the reference's backoff ladder (1,3,7,...s capped at
   60 — dnstap.go:112-124) while the socket directory doesn't exist, and
   chmod 0660 on the bound socket (dnstap.go:130-133);
-- S2: a length-prefixed frame protocol per connection. The production
-  protocol is framestream with a bidirectional handshake — that handshake
-  is a transport detail; the plug point is ``_read_frames``;
-- S3/S4: frames carry JSON event rows here. In production this is dnstap
-  protobuf (decode with the generated classes, or ship raw bytes and use
-  ``from_protobuf`` in Spark 3.4+) + DNS wire unpack (dnspython in a
-  pandas UDF, or bridge-side). The plug point is ``_decode_frame``;
+- S2: Frame Streams per connection, with the bidirectional
+  READY/ACCEPT/START/STOP/FINISH handshake and content-type negotiation
+  (bare length-prefixed frames without a handshake are accepted too).
+  Each ``recv`` is parsed with an offset cursor, and its complete data
+  frames go on as one batch;
+- S3/S4: frames are ``protobuf:dnstap.Dnstap``, decoded by the in-repo
+  pure-Python codecs (``dnstap_proto`` for the protobuf, ``dnswire`` for
+  the embedded DNS message) into the decode chain's raw-frame row. JSON
+  and a binary stand-in for events rows ride the same frame layer. A
+  frame that fails to decode is dropped and counted in
+  ``decode_errors``; ``frames_read`` counts the frames decoded into rows;
 - S5: a bounded pool of reader threads drains accepted connections from
   one queue (the reference's conn channel, cap 1 — dnstap.go:72).
+
+Hand-off and chunk files: a reader decodes its batch without holding a
+lock, appends the rows to the shared buffer in one lock hold, cuts off
+chunks of exactly ``flush_rows`` rows, and writes them after releasing
+the lock, so one reader's parquet write never stalls another. Only
+``flush()`` and ``stop()`` write a shorter chunk. Each file is written
+under a dot-prefixed temp name, which Spark's file source skips, and
+renamed to ``chunk-<uuid>.parquet`` once complete.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import queue
@@ -46,6 +59,9 @@ import pyarrow.parquet as pq
 
 MAX_READERS = 32  # dnstap.go:38
 _FRAME_HEADER = struct.Struct(">I")  # 4-byte big-endian length prefix
+#: what the frame decoders raise on a malformed frame (truncated fields,
+#: bad varints or wire types, bad UTF-8/ASCII or JSON, wrong value types)
+_MALFORMED_FRAME_ERRORS = (ValueError, IndexError, TypeError, AttributeError, struct.error)
 
 # --------------------------------------------------------------- framestream
 # Frame Streams (fstrm) control protocol, as spoken by dnstap senders over
@@ -203,6 +219,8 @@ class SocketBridge:
         readers: int = 2,
         flush_rows: int = 1000,
     ) -> None:
+        if flush_rows < 1:
+            raise ValueError(f"flush_rows must be at least 1, got {flush_rows}")
         if readers > MAX_READERS:
             readers = MAX_READERS  # dnstap.go:38 hard cap
         self.socket_path = socket_path
@@ -215,7 +233,10 @@ class SocketBridge:
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
         self._server: socket.socket | None = None
-        self.frames_read = 0  # A11-style stage counter (dnstap.go:380-386)
+        # A11-style stage counters (dnstap.go:380-386): frames decoded into
+        # rows, and frames dropped because they failed to decode
+        self.frames_read = 0
+        self.decode_errors = 0
 
     # ------------------------------------------------------------- listen
     def start(self) -> None:
@@ -274,32 +295,22 @@ class SocketBridge:
             return False
         return True
 
-    def _read_frames(self, conn: socket.socket) -> Iterator[bytes]:
-        """S2: framestream reader — data frames out, control frames handled.
+    def _read_frames(self, conn: socket.socket) -> Iterator[list[bytes]]:
+        """S2: framestream reader. Yields the complete data frames of each
+        ``recv`` as one list and handles control frames in stream order:
+        the data frames before a control frame are yielded first, so every
+        row sent before STOP is taken in before FINISH goes out. The
+        buffer is parsed with an offset cursor and compacted once per
+        ``recv``, never per frame.
 
         Also accepts bare length-prefixed data with no handshake (a
         degenerate framestream session), so simple senders keep working.
         """
-        buf = b""
+        hdr = _FRAME_HEADER.size
+        unpack = _FRAME_HEADER.unpack_from
+        buf = bytearray()
         conn.settimeout(0.2)
         while not self._stop.is_set():
-            while len(buf) >= _FRAME_HEADER.size:
-                (n,) = _FRAME_HEADER.unpack_from(buf)
-                if n == 0:  # control-frame escape
-                    if len(buf) < 2 * _FRAME_HEADER.size:
-                        break
-                    (clen,) = _FRAME_HEADER.unpack_from(buf, _FRAME_HEADER.size)
-                    if len(buf) < 2 * _FRAME_HEADER.size + clen:
-                        break
-                    cframe = buf[2 * _FRAME_HEADER.size : 2 * _FRAME_HEADER.size + clen]
-                    buf = buf[2 * _FRAME_HEADER.size + clen :]
-                    if not self._handle_control(conn, cframe):
-                        return
-                    continue
-                if len(buf) < _FRAME_HEADER.size + n:
-                    break
-                yield buf[_FRAME_HEADER.size : _FRAME_HEADER.size + n]
-                buf = buf[_FRAME_HEADER.size + n :]
             try:
                 chunk = conn.recv(65536)
             except TimeoutError:
@@ -309,6 +320,31 @@ class SocketBridge:
             if not chunk:
                 return
             buf += chunk
+            frames: list[bytes] = []
+            off, end = 0, len(buf)
+            while end - off >= hdr:
+                (n,) = unpack(buf, off)
+                if n:  # data frame
+                    if end - off < hdr + n:
+                        break
+                    frames.append(bytes(buf[off + hdr : off + hdr + n]))
+                    off += hdr + n
+                    continue
+                # control-frame escape: a zero length, then the control length
+                if end - off < 2 * hdr:
+                    break
+                (clen,) = unpack(buf, off + hdr)
+                if end - off < 2 * hdr + clen:
+                    break
+                if frames:
+                    yield frames
+                    frames = []
+                if not self._handle_control(conn, bytes(buf[off + 2 * hdr : off + 2 * hdr + clen])):
+                    return
+                off += 2 * hdr + clen
+            if frames:
+                yield frames
+            del buf[:off]
 
     def _read_loop(self) -> None:
         while not self._stop.is_set():
@@ -319,13 +355,35 @@ class SocketBridge:
             if conn is None:
                 return
             with conn:
-                for payload in self._read_frames(conn):
-                    row = _decode_frame(payload)
-                    with self._rows_lock:
-                        self._rows.append(row)
-                        self.frames_read += 1
-                        if len(self._rows) >= self.flush_rows:
-                            self._flush_locked()
+                for payloads in self._read_frames(conn):
+                    self._take_in(payloads)
+
+    def _take_in(self, payloads: list[bytes]) -> None:
+        """Decode one batch of frames outside the lock, append its rows to
+        the shared buffer in one lock hold, cut every full chunk of exactly
+        ``flush_rows`` rows off the buffer's head, and write those chunks
+        after releasing the lock, so one reader's write never stalls
+        another reader. A frame that fails to decode is counted in
+        ``decode_errors`` and dropped alone: the rest of its batch and its
+        reader carry on."""
+        rows: list[dict] = []
+        errors = 0
+        for payload in payloads:
+            try:
+                rows.append(_decode_frame(payload))
+            except _MALFORMED_FRAME_ERRORS:
+                errors += 1
+        n = self.flush_rows
+        with self._rows_lock:
+            buffered = self._rows
+            buffered.extend(rows)
+            self.frames_read += len(rows)
+            self.decode_errors += errors
+            cut = len(buffered) - len(buffered) % n
+            chunks = [buffered[i : i + n] for i in range(0, cut, n)]
+            del buffered[:cut]
+        for chunk in chunks:
+            self._write_chunk(chunk)
 
     # ------------------------------------------------------------- write
     #: events-row chunks (JSON / binary bridge codecs)
@@ -359,12 +417,12 @@ class SocketBridge:
         ]
     )
 
-    def _flush_locked(self) -> None:
-        if not self._rows:
-            return
-        rows, self._rows = self._rows, []
-        # one chunk file per row shape: dnstap raw frames and events rows
-        # never mix schemas within a parquet file
+    def _write_chunk(self, rows: list[dict]) -> None:
+        """Write rows as parquet chunk files, one per row shape (dnstap raw
+        frames and events rows never mix schemas within a file). Each file
+        is written under a dot-prefixed temp name, which Spark's file
+        source never lists, and then renamed to ``chunk-<uuid>.parquet``,
+        so a reader sees a chunk whole or not at all."""
         for shape, schema in (("dnstap", self._DNSTAP_SCHEMA), ("events", self._EVENTS_SCHEMA)):
             part = [r for r in rows if ("frameType" in r) == (shape == "dnstap")]
             if not part:
@@ -378,13 +436,22 @@ class SocketBridge:
                 table = table.set_column(
                     1, "ts", table.column("ts_us").cast(pa.timestamp("us", tz="UTC"))
                 )
-            pq.write_table(
-                table, os.path.join(self.out_dir, f"chunk-{uuid.uuid4().hex}.parquet")
-            )
+            name = f"chunk-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(self.out_dir, "." + name)
+            try:
+                pq.write_table(table, tmp)
+            except BaseException:
+                with contextlib.suppress(OSError):
+                    os.unlink(tmp)
+                raise
+            os.replace(tmp, os.path.join(self.out_dir, name))
 
     def flush(self) -> None:
+        """Write every buffered row now, however few."""
         with self._rows_lock:
-            self._flush_locked()
+            rows, self._rows = self._rows, []
+        if rows:
+            self._write_chunk(rows)
 
     def stop(self) -> None:
         self._stop.set()

@@ -94,19 +94,34 @@ def _field_fixed32(field: int, value: int) -> bytes:
     return _tag(field, 5) + _FIXED32.pack(value)
 
 
-def _decode_fields(payload: bytes) -> dict[int, list]:
-    """Generic decode: field number -> list of raw values (int or bytes).
-    Unknown wire types raise; unknown field numbers are preserved (the
-    caller simply ignores them) — mirroring protobuf's skip semantics."""
-    fields: dict[int, list] = {}
-    off = 0
-    while off < len(payload):
-        key, off = decode_varint(payload, off)
-        field, wire_type = key >> 3, key & 0x07
+def _decode_fields(payload: bytes) -> dict[int, int | bytes]:
+    """One pass over a message: field number -> its last value (int or
+    bytes), protobuf's last-one-wins rule for non-repeated fields (every
+    dnstap field this package reads is one). Unknown field numbers are
+    kept (the caller simply ignores them) and unknown wire types raise,
+    mirroring protobuf's skip semantics. Keys, varints and lengths below
+    128 -- nearly all of them in a dnstap frame -- are read inline."""
+    fields: dict[int, int | bytes] = {}
+    off, end = 0, len(payload)
+    while off < end:
+        key = payload[off]
+        if key < 0x80:
+            off += 1
+        else:
+            key, off = decode_varint(payload, off)
+        wire_type = key & 0x07
         if wire_type == 0:
-            value, off = decode_varint(payload, off)
+            value = payload[off]
+            if value < 0x80:
+                off += 1
+            else:
+                value, off = decode_varint(payload, off)
         elif wire_type == 2:
-            n, off = decode_varint(payload, off)
+            n = payload[off]
+            if n < 0x80:
+                off += 1
+            else:
+                n, off = decode_varint(payload, off)
             value = payload[off : off + n]
             off += n
         elif wire_type == 5:
@@ -117,7 +132,7 @@ def _decode_fields(payload: bytes) -> dict[int, list]:
             off += 8
         else:
             raise ValueError(f"unsupported wire type {wire_type}")
-        fields.setdefault(field, []).append(value)
+        fields[key >> 3] = value
     return fields
 
 
@@ -172,10 +187,9 @@ def decode_dnstap(payload: bytes) -> dict:
     frame/message types, identity, address/port, sec+nsec timestamp, and
     the raw embedded DNS message bytes (S4 decodes those separately)."""
     top = _decode_fields(payload)
-    dnstap_type = top.get(15, [0])[-1]
     out: dict = {
-        "frameType": "MESSAGE" if dnstap_type == DNSTAP_TYPE_MESSAGE else "OTHER",
-        "identity": top.get(1, [b""])[-1].decode(errors="replace"),
+        "frameType": "MESSAGE" if top.get(15, 0) == DNSTAP_TYPE_MESSAGE else "OTHER",
+        "identity": top.get(1, b"").decode(errors="replace"),
         "messageType": None,
         "hasPayload": False,
         "timeSec": None,
@@ -186,21 +200,18 @@ def decode_dnstap(payload: bytes) -> dict:
     }
     if 14 not in top:
         return out
-    msg = _decode_fields(top[14][-1])
-    mtype = msg.get(1, [0])[-1]
+    msg = _decode_fields(top[14])
+    mtype = msg.get(1, 0)
     out["messageType"] = MESSAGE_TYPES.get(mtype, f"TYPE{mtype}")
     is_response = out["messageType"].endswith("_RESPONSE")
     sec_f, nsec_f, payload_f = (12, 13, 14) if is_response else (8, 9, 10)
-    if sec_f in msg:
-        out["timeSec"] = msg[sec_f][-1]
-    if nsec_f in msg:
-        out["timeNsec"] = msg[nsec_f][-1]
+    out["timeSec"] = msg.get(sec_f)
+    out["timeNsec"] = msg.get(nsec_f)
     if 4 in msg:
-        out["addrBytes"] = msg[4][-1]
-        out["queryAddress"] = ".".join(str(b) for b in msg[4][-1])
-    if 6 in msg:
-        out["queryPort"] = msg[6][-1]
-    dns_message = msg.get(payload_f, [b""])[-1]
+        out["addrBytes"] = msg[4]
+        out["queryAddress"] = ".".join(str(b) for b in msg[4])
+    out["queryPort"] = msg.get(6)
+    dns_message = msg.get(payload_f, b"")
     out["dnsMessage"] = dns_message
     out["hasPayload"] = bool(dns_message)
     return out

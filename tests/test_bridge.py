@@ -6,12 +6,21 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+import socket
 import sys
 import tempfile
+import threading
+import time
+
+import pyarrow.parquet as pq
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dnstap2clickhouse_spark.sources import bridge as br
 from dnstap2clickhouse_spark.sources.bridge import SocketBridge, backoff_delays, send_frames
+from dnstap2clickhouse_spark.sources.dnstap_proto import encode_dnstap
+from dnstap2clickhouse_spark.sources.dnswire import encode_message
 from dnstap2clickhouse_spark import streaming as st
 
 def _sample_rows(n: int) -> list[dict]:
@@ -175,3 +184,242 @@ def test_fstrm_rejects_unaccepted_content_type():
     finally:
         bridge.stop()
         shutil.rmtree(d, ignore_errors=True)
+
+
+# ------------------------------------------------- framing and hand-off
+#
+# Pyarrow only, no Spark: dnstap protobuf frames over raw fstrm sessions,
+# each frame tagged "<conn>.<seq>" in its identity so every chunk row
+# names the frame that made it.
+
+_DNSTAP_CT = b"protobuf:dnstap.Dnstap"
+
+
+def _dnstap(tag: str, pad: int = 0) -> bytes:
+    return encode_dnstap(
+        message_type="CLIENT_QUERY", identity=tag + " " * pad,
+        query_address=bytes([10, 0, 0, 1]), query_port=5353,
+        time_sec=1_760_000_000, time_nsec=1,
+        dns_message=encode_message(7, [("host.example.", 1)]),
+    )
+
+
+def _session(payloads: list[bytes]) -> bytes:
+    """One whole fstrm session as sent: READY, START, data frames, STOP."""
+    return (
+        br.encode_control_frame(br.FSTRM_READY, (_DNSTAP_CT,))
+        + br.encode_control_frame(br.FSTRM_START, (_DNSTAP_CT,))
+        + b"".join(br._FRAME_HEADER.pack(len(p)) + p for p in payloads)
+        + br.encode_control_frame(br.FSTRM_STOP)
+    )
+
+
+def _send_session(path: str, payloads: list[bytes], piece: int | None = None) -> list[int]:
+    """Send a session in ``piece``-byte sends (all at once when None) and
+    return the control types the bridge answered, read until it closes."""
+    data = _session(payloads)
+    with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as c:
+        c.settimeout(10)
+        c.connect(path)
+        step = piece or len(data)
+        for i in range(0, len(data), step):
+            c.sendall(data[i : i + step])
+        got = b""
+        while chunk := c.recv(65536):
+            got += chunk
+    replies, off = [], 0
+    while off < len(got):
+        (clen,) = br._FRAME_HEADER.unpack_from(got, off + 4)
+        replies.append(br.parse_control_frame(got[off + 8 : off + 8 + clen])[0])
+        off += 8 + clen
+    return replies
+
+
+@pytest.fixture
+def live_bridge(tmp_path):
+    """Factory: start a bridge with the given settings and return
+    (bridge, socket path, chunk dir); every bridge is stopped at teardown."""
+    made = []
+
+    def make(**kw) -> tuple[br.SocketBridge, str, str]:
+        sock, out = str(tmp_path / "dnstap.sock"), str(tmp_path / "chunks")
+        b = br.SocketBridge(sock, out, **kw)
+        b.start()
+        made.append(b)
+        return b, sock, out
+
+    yield make
+    for b in made:
+        b.stop()
+
+
+def _chunk_identities(out: str) -> dict[str, list[str]]:
+    return {
+        f: pq.read_table(os.path.join(out, f)).column("identity").to_pylist()
+        for f in sorted(os.listdir(out))
+    }
+
+
+def test_frames_one_byte_per_send(live_bridge):
+    bridge, sock, out = live_bridge(readers=2)
+    tags = [f"0.{k}" for k in range(12)]
+    assert _send_session(sock, [_dnstap(t) for t in tags], piece=1) == [
+        br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert bridge.frames_read == len(tags)
+    bridge.stop()
+    assert [t for ids in _chunk_identities(out).values() for t in ids] == tags
+
+
+def test_data_and_stop_in_one_send_land_before_finish(live_bridge):
+    """FINISH goes out only after every frame sent before STOP is taken in:
+    the counter is complete the moment the sender sees FINISH."""
+    bridge, sock, out = live_bridge(readers=2, flush_rows=1000)
+    tags = [f"0.{k}" for k in range(300)]
+    assert _send_session(sock, [_dnstap(t) for t in tags]) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert bridge.frames_read == len(tags)
+    bridge.stop()
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(tags)
+
+
+def test_frame_larger_than_one_recv(live_bridge):
+    bridge, sock, out = live_bridge(readers=1)
+    big = _dnstap("0.1", pad=200_000)
+    assert len(big) > 65536
+    _send_session(sock, [_dnstap("0.0"), big, _dnstap("0.2")])
+    assert bridge.frames_read == 3
+    bridge.stop()
+    ids = [t.rstrip() for ids in _chunk_identities(out).values() for t in ids]
+    assert ids == ["0.0", "0.1", "0.2"]
+
+
+def _concurrent_sessions(make, flush_rows: int, n: int, conns: int = 2) -> tuple[br.SocketBridge, str]:
+    """``conns`` concurrent connections of ``n`` tagged frames each, sent
+    in uneven pieces, into a bridge with one reader per connection;
+    returns once every connection got FINISH."""
+    bridge, sock, out = make(readers=conns, flush_rows=flush_rows)
+    errors: list[BaseException] = []
+
+    def send(conn: int) -> None:
+        try:
+            _send_session(sock, [_dnstap(f"{conn}.{k}") for k in range(n)], piece=997 + conn)
+        except BaseException as exc:  # noqa: BLE001 - re-raised in the test
+            errors.append(exc)
+
+    threads = [threading.Thread(target=send, args=(i,)) for i in range(conns)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert bridge.frames_read == conns * n
+    return bridge, out
+
+
+def test_each_connection_keeps_its_order_across_chunks(live_bridge):
+    """Chunks are cut off the head of one shared buffer that every batch
+    is appended to whole, so each chunk holds a contiguous, ascending run
+    of each connection's frames, and those runs tile the connection."""
+    n = 400
+    bridge, out = _concurrent_sessions(live_bridge, flush_rows=7, n=n)
+    bridge.stop()
+    for conn in ("0", "1"):
+        runs = []
+        for ids in _chunk_identities(out).values():
+            seqs = [int(t.split(".")[1]) for t in ids if t.split(".")[0] == conn]
+            if seqs:
+                assert seqs == list(range(seqs[0], seqs[0] + len(seqs)))
+                runs.append(seqs)
+        assert [k for run in sorted(runs) for k in run] == list(range(n))
+
+
+def test_chunks_before_stop_hold_exactly_flush_rows(live_bridge):
+    """Every chunk a running bridge writes holds exactly ``flush_rows``
+    rows: the paced latency (about flush_rows / rate) rests on it. Only
+    the final flush at stop may be short."""
+    bridge, out = _concurrent_sessions(live_bridge, flush_rows=64, n=500)
+    before = _chunk_identities(out)
+    assert len(before) == 2 * 500 // 64
+    assert all(len(ids) == 64 for ids in before.values())
+    bridge.stop()
+    after = _chunk_identities(out)
+    assert sum(map(len, after.values())) == 2 * 500
+    assert [len(after[f]) for f in after if f not in before] == [2 * 500 % 64]
+
+
+def test_hand_off_under_thread_switch_stress(live_bridge):
+    """More readers than cores, switching threads every few bytecodes: no
+    row is lost or doubled and every running-bridge chunk is exact."""
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        bridge, out = _concurrent_sessions(live_bridge, flush_rows=13, n=150, conns=8)
+        before = _chunk_identities(out)
+        bridge.stop()
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(len(ids) == 13 for ids in before.values())
+    rows = [t for ids in _chunk_identities(out).values() for t in ids]
+    assert sorted(rows) == sorted(f"{c}.{k}" for c in range(8) for k in range(150))
+
+
+def test_malformed_frame_is_counted_and_contained(live_bridge):
+    """One bad frame between good ones on an fstrm connection: every good
+    frame lands, the bad one is counted, no reader dies, and the next
+    connection is still served."""
+    bridge, sock, out = live_bridge(readers=2, flush_rows=5)
+    good = [f"0.{k}" for k in range(12)]
+    payloads = [_dnstap(t) for t in good[:6]] + [b"\x0a\xff\xff\xff"] + [_dnstap(t) for t in good[6:]]
+    assert _send_session(sock, payloads) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert (bridge.frames_read, bridge.decode_errors) == (len(good), 1)
+    assert all(t.is_alive() for t in bridge._threads)
+    more = [f"1.{k}" for k in range(3)]
+    assert _send_session(sock, [_dnstap(t) for t in more]) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert (bridge.frames_read, bridge.decode_errors) == (len(good) + len(more), 1)
+    bridge.stop()
+    assert not any(t.is_alive() for t in bridge._threads)
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(good + more)
+
+
+def test_chunks_are_published_whole(live_bridge, monkeypatch):
+    """A slow writer leaves a half-written file for a while; no
+    ``chunk-*.parquet`` name may point at one (Spark would list it)."""
+    real_write = pq.write_table
+
+    def slow_write(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 half-written")
+        time.sleep(0.05)
+        real_write(table, where, **kw)
+
+    monkeypatch.setattr(br.pq, "write_table", slow_write)
+    bridge, sock, out = live_bridge(readers=2, flush_rows=10)
+    seen: dict[str, int] = {}
+    bad: list[str] = []
+    done = threading.Event()
+
+    def watch() -> None:
+        while not done.is_set():
+            for f in os.listdir(out):
+                if f.startswith("chunk-") and f not in seen:
+                    try:
+                        seen[f] = pq.read_table(os.path.join(out, f)).num_rows
+                    except Exception as exc:  # noqa: BLE001 - any unreadable file fails
+                        bad.append(f"{f}: {exc}")
+                        seen[f] = -1
+            time.sleep(0.001)
+
+    watcher = threading.Thread(target=watch)
+    watcher.start()
+    try:
+        _send_session(sock, [_dnstap(f"0.{k}") for k in range(60)])
+        deadline = time.time() + 10
+        while len(seen) < 6 and time.time() < deadline:
+            time.sleep(0.01)
+    finally:
+        done.set()
+        watcher.join(timeout=10)
+    assert not watcher.is_alive()
+    assert not bad
+    assert sorted(seen.values()) == [10] * 6
+    bridge.stop()
+    assert all(f.startswith("chunk-") for f in os.listdir(out))  # no temp file left

@@ -96,17 +96,17 @@ def test_descriptor_set_wire_shape():
     carrying one file with package 'dnstap' and messages Dnstap+Message
     (decoded back with the repo's own wire decoder)."""
     blob = dnstap_file_descriptor_set()
-    top = dp._decode_fields(blob)
+    top = _fields(blob)
     assert list(top) == [1]
-    fdp = dp._decode_fields(top[1][0])
+    fdp = _fields(top[1][0])
     assert fdp[1][0] == b"dnstap.proto"
     assert fdp[2][0] == b"dnstap"
-    names = [dp._decode_fields(m)[1][0] for m in fdp[4]]
+    names = [_fields(m)[1][0] for m in fdp[4]]
     assert names == [b"Dnstap", b"Message"]
     # every declared field number must round-trip
-    dnstap_fields = [dp._decode_fields(f) for f in dp._decode_fields(fdp[4][0])[2]]
+    dnstap_fields = [_fields(f) for f in _fields(fdp[4][0])[2]]
     assert sorted(f[3][0] for f in dnstap_fields) == [1, 2, 14, 15]
-    msg_fields = [dp._decode_fields(f) for f in dp._decode_fields(fdp[4][1])[2]]
+    msg_fields = [_fields(f) for f in _fields(fdp[4][1])[2]]
     assert sorted(f[3][0] for f in msg_fields) == [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 12, 13, 14]
 
 
@@ -117,13 +117,13 @@ def test_descriptor_field_types_match_wire_encoder():
     wire_type_of = {_T_INT32: 0, _T_UINT32: 0, _T_UINT64: 0, _T_BYTES: 2,
                     _T_MESSAGE: 2, _T_FIXED32: 5}
     blob = dnstap_file_descriptor_set()
-    fdp = dp._decode_fields(dp._decode_fields(blob)[1][0])
+    fdp = _fields(_fields(blob)[1][0])
     declared = {}  # (message, field number) -> wire type
     for m in fdp[4]:
-        md = dp._decode_fields(m)
+        md = _fields(m)
         mname = md[1][0].decode()
         for f in md[2]:
-            fd = dp._decode_fields(f)
+            fd = _fields(f)
             declared[(mname, fd[3][0])] = wire_type_of[fd[5][0]]
     frame = dp.encode_dnstap(
         message_type="CLIENT_RESPONSE", identity="ns1",
@@ -135,6 +135,15 @@ def test_descriptor_field_types_match_wire_encoder():
         if fnum == 14:  # embedded Message
             for mf, mwt, _ in _iter_wire(payload):
                 assert declared[("Message", mf)] == mwt
+
+
+def _fields(payload: bytes) -> dict[int, list]:
+    """Field number -> all its values in wire order (descriptor messages
+    repeat fields, so no value may overwrite another)."""
+    out: dict[int, list] = {}
+    for fnum, _wt, val in _iter_wire(payload):
+        out.setdefault(fnum, []).append(val)
+    return out
 
 
 def _iter_wire(payload: bytes):
