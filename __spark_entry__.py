@@ -66,213 +66,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ingest pipeline + Q1 top query addresses, sf0.001."""
     return an.top_query_addresses(dp.client_query_table(spark, SF0001))
 
-#: ORDERING POLICY: the external harness adjudicates the FIRST 50 dict
-#: entries per round, so queries() orders entries least-recently-
-#: adjudicated first. The age of each entry's newest driver evidence is
-#: read from the CORRECTNESS_r*.json files the harness itself writes —
-#: never-adjudicated entries lead, then ascending last-adjudicated round,
-#: declaration order breaking ties. Self-maintaining: when the harness
-#: records round N, round N+1's import rotates automatically. Local
-#: `tools/check_correctness.py` verifies ALL entries every round
-#: regardless of the window.
-#:
-#: CODE-CHANGE AWARENESS (r7 verdict item 3): driver evidence is only as
-#: fresh as the last adjudication that POST-dates the entry's code. An
-#: entry whose implementing engine module last changed in a git round
-#: AFTER the entry's last adjudicated round has evidence for code that no
-#: longer exists (exactly how `events_sketch_stats`, reworked in r4 right
-#: after its r3 adjudication, waited a full rotation cycle) — such
-#: entries are treated as never-adjudicated and sort to the front. The
-#: change round of a module is derived from git history (round N = the
-#: commits between the driver's 'round N-1:' and 'round N:' boundary
-#: commits; commits after the newest boundary belong to the in-progress
-#: round). Edits made before _EDIT_VOID_FLOOR are grandfathered: the
-#: r6/r7 full 259-entry local sweeps re-verified the whole contract
-#: after those edits, the r7-window catch-up gave every entry driver
-#: evidence, and retro-voiding them would displace the r8 window the r7
-#: verdict pinned (the DNS spine + events_sketch_stats). From r8 edits
-#: onward the rule is live: touch a module, and its entries lead the
-#: next round's window.
-
-_EDIT_VOID_FLOOR = 8
-
-def _last_adjudicated(names: list[str]) -> dict[str, int]:
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last = {n: -1 for n in names}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:
-            continue  # malformed/partial file: ignore, keep rotating
-        for n in data:
-            if n in last:
-                last[n] = max(last[n], rnd)
-    return last
-
-_EDIT_ROUNDS_CACHE: dict[str, int] | None = None
-
-def _file_edit_rounds() -> dict[str, int]:
-    """Repo-relative path -> round number of its LAST modifying commit.
-
-    One ``git log --name-only`` pass, newest first: commits newer than
-    the newest 'round N:' driver boundary commit belong to round N+1;
-    each boundary switches the running round down. A file's edit round
-    is recorded at its first (newest) sighting. Returns {} when git is
-    unavailable (fallback: no evidence voiding, plain rotation).
-    """
-    global _EDIT_ROUNDS_CACHE
-    if _EDIT_ROUNDS_CACHE is not None:
-        return _EDIT_ROUNDS_CACHE
-    import os
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        out = subprocess.run(
-            ["git", "log", "--first-parent", "--name-only", "--format=__C__ %s"],
-            capture_output=True, text=True, cwd=here, timeout=30,
-        )
-        lines = out.stdout.splitlines() if out.returncode == 0 else []
-    except Exception:
-        lines = []
-    _EDIT_ROUNDS_CACHE = _parse_edit_rounds(lines)
-    return _EDIT_ROUNDS_CACHE
-
-import re as _re
-
-#: the driver's fixed boundary-commit subject form ("round N: verdict/
-#: advice/correctness/bench") — NOT any commit that happens to start with
-#: "round N:"; a looser match would let an ordinary commit silently shift
-#: every file's edit-round attribution (r8 ADVICE)
-_BOUNDARY_RE = _re.compile(r"__C__ round (\d+): verdict")
-
-def _parse_edit_rounds(lines: list[str]) -> dict[str, int]:
-    """Pure parse of ``git log --name-only --format='__C__ %s'`` output
-    (newest first) into {file: edit round}. Boundary numbers must
-    strictly decrease down the walk; an out-of-order number means history
-    was rewritten or the subject form collided — fall back to {} (plain
-    rotation) rather than mis-attribute edits."""
-    boundaries = [
-        int(m.group(1))
-        for l in lines
-        if l.startswith("__C__") and (m := _BOUNDARY_RE.match(l))
-    ]
-    edits: dict[str, int] = {}
-    if lines and boundaries:
-        cur = max(boundaries) + 1  # in-progress round
-        prev_boundary = cur
-        for l in lines:
-            if l.startswith("__C__"):
-                m = _BOUNDARY_RE.match(l)
-                if m:
-                    cur = int(m.group(1))
-                    if cur >= prev_boundary:
-                        return {}
-                    prev_boundary = cur
-                continue
-            if l and l not in edits:
-                edits[l] = cur
-    return edits
-
-def _entry_module_files(fn) -> set[str]:
-    """Repo-relative engine-module file(s) implementing an entry.
-
-    Direct function refs resolve via ``__module__``; lambdas declared in
-    this file resolve via their code's referenced global names (module
-    aliases like ``stp``/``an`` and directly-imported functions). Each
-    resolved module is then expanded by ONE level of its package-internal
-    imports (r8 ADVICE: ``dns_response_time_join`` resolves to
-    ``operators/dns_pipeline.py``, but part of its behavior lives in
-    ``operators/join.py`` — an edit there must void the entry's evidence
-    too). One level covers every shared-helper relationship in the
-    package (entry module -> helper module); deeper chains change the
-    helper's direct importer, which the walk then catches next round.
-    This file itself is never counted — it changes every round by design.
-    """
-    import inspect
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    direct: set = set()
-
-    def in_package(mod) -> bool:
-        f = getattr(mod, "__file__", None)
-        return bool(f and os.sep + "dnstap2clickhouse_spark" + os.sep in f)
-
-    mod = sys.modules.get(getattr(fn, "__module__", "") or "")
-    if mod is not None and getattr(mod, "__name__", "") != __name__:
-        direct.add(mod)
-    else:
-        code = getattr(fn, "__code__", None)
-        if code is not None:
-            g = globals()
-            for nm in code.co_names:
-                obj = g.get(nm)
-                if obj is None:
-                    continue
-                if inspect.ismodule(obj):
-                    direct.add(obj)
-                else:
-                    m = sys.modules.get(getattr(obj, "__module__", "") or "")
-                    if m is not None and getattr(m, "__name__", "") != __name__:
-                        direct.add(m)
-    direct = {m for m in direct if in_package(m)}
-
-    expanded = set(direct)
-    for m in direct:  # one level of package-internal imports
-        for obj in vars(m).values():
-            if inspect.ismodule(obj):
-                if in_package(obj):
-                    expanded.add(obj)
-            else:
-                im = sys.modules.get(getattr(obj, "__module__", "") or "")
-                if im is not None and in_package(im):
-                    expanded.add(im)
-    return {os.path.relpath(m.__file__, here) for m in expanded}
-
-def _evidence_rounds(qdict: dict) -> dict[str, int]:
-    """Effective evidence round per entry: last adjudicated round, voided
-    to -1 (never) when the implementing module changed after it in round
-    >= _EDIT_VOID_FLOOR (policy comment above)."""
-    names = list(qdict)
-    last = _last_adjudicated(names)
-    edits = _file_edit_rounds()
-    if edits:
-        for n in names:
-            er = max(
-                (edits.get(f, -1) for f in _entry_module_files(qdict[n])),
-                default=-1,
-            )
-            if er >= _EDIT_VOID_FLOOR and er > last[n]:
-                last[n] = -1
-    return last
-
-def _rotate(qdict: dict) -> dict:
-    """Reorder least-recently-evidenced first (see policy above)."""
-    names = list(qdict)
-    last = _evidence_rounds(qdict)
-    order = sorted(names, key=lambda n: (last[n], names.index(n)))
-    return {n: qdict[n] for n in order}
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     no_agg = AggregatorConfig(aggregate=False)
 
-    # Declaration order is historical (grouped by when entries landed);
-    # _rotate() derives the adjudication-window order from the recorded
-    # CORRECTNESS_r*.json files (policy comment above _last_adjudicated).
-    return _rotate({
-        # ---- (1) last adjudicated in round 1 ----
+    return {
         # --- generic relational layer (TPC-H-style) ---
         "tpch_pricing_summary": tpch.pricing_summary,
         "tpch_region_revenue": tpch.region_revenue,
@@ -294,7 +91,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_lang_id": ftext.lang_id,
         "text_fingerprints": ftext.fingerprints,
         "text_regex_tokens": ftext.regex_tokens,
-        # ---- (2) code changed or new in round 3 ----
         # oracle type fix: window sum cast to BIGINT (DuckDB HUGEINT)
         "events_rolling_hour": evan.rolling_hour_stats,
         # round 4: accuracy-bound form — sketches vs exact aggregates as
@@ -868,7 +664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 s, d, queries=prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY")
             )
         ),
-        # ---- (3) round-2 green, code untouched this round ----
         # --- sources / projections (P1-P7 over the canonical mapping) ---
         "dns_query_stream": lambda s, d: dns_query_stream(s, d),
         "dns_response_stream": lambda s, d: dns_response_stream(s, d),
@@ -924,8 +719,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # new in round 4 (batch 2): iterative ML on the engine — two
         # unrolled Lloyd iterations with exact-integer centroid state
         "sim_kmeans": fsim.kmeans_assign,
-        # ---- tail (below the 50-entry window this round; freshest green
-        # ---- rows, untouched code; rotate forward next round) ----
         "dedup_exact": fdedup.exact_dedup,
         # r9: the deliberately-quadratic ground-truth verifiers now run
         # on the deterministic 1/7 pair sample (functions/ground_truth.py
@@ -948,14 +741,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_distinct_users": evan.distinct_users,
         # set-operation surface (INTERSECT / EXCEPT cohorts)
         "events_user_set_ops": evan.user_set_ops,
-        # ---- (3) round 5 (single addition: contract otherwise frozen
-        # per the r4 verdict so driver evidence catches up) ----
         # IVF-style two-level assignment — the coarse-quantizer form of
         # the Lloyd assignment step (n·(k1 + nprobe·k/k1) folds, never
-        # the flat n·k cross join); declared LAST so it sorts behind the
-        # never-adjudicated backlog in the rotation window
+        # the flat n·k cross join)
         "sim_kmeans_twolevel": fsim.kmeans_assign_twolevel,
-    })
+    }
 
 def oracle_sql() -> dict[str, str]:
     no_agg = AggregatorConfig(aggregate=False)

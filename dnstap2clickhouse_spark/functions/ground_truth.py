@@ -28,7 +28,7 @@ Two properties make this the right fix rather than a smaller lie:
    deterministic function of the PAIR KEY alone, applied before any
    scoring: the sampled output equals the full relation filtered by the
    predicate row-for-row (pinned at sf0.01 by
-   ``tests/test_round9_fixes.py``), and the recall entry's numerator and
+   ``tests/test_tools.py``), and the recall entry's numerator and
    denominator are both restricted to the same sampled pair population,
    so the quotient is the true recall ON that deterministic sample.
    Per-pair scores (jaccard counts, cosine folds) are computed exactly —

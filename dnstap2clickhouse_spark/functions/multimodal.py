@@ -456,8 +456,11 @@ def _image_ahash_sql(dialect: str) -> str:
     cycled ``element_at``; and the old 4-matched-band
     ``sum(bit_count(bval_a ^ bval_b))`` equals ``bit_count(sig_a ^
     sig_b)`` on the packed 64 bits. DuckDB keeps the r10 form
-    byte-for-byte (independent referee). Replica: oracle-exact and
-    exceptAll vs the r10 Spark form = 0 both ways.
+    byte-for-byte (independent referee), except that both forms drop
+    NULL-text documents in ``img``: unfiltered, Spark's NULL signature
+    joins nothing while DuckDB's NULL pixels become all-zero bands that
+    pair at hamming 0. Replica: oracle-exact and exceptAll vs the r10
+    Spark form = 0 both ways.
     """
     from .text import _hash_tok, _toks
 
@@ -470,7 +473,8 @@ def _image_ahash_sql(dialect: str) -> str:
         mean = "aggregate(arr, CAST(0 AS BIGINT), (acc, p) -> acc + p)"
         return f"""
 WITH img AS (
-  SELECT doc_id, {toks} AS toks FROM documents WHERE doc_id % 3 = 0),
+  SELECT doc_id, {toks} AS toks FROM documents
+  WHERE doc_id % 3 = 0 AND text IS NOT NULL),
 sigs AS (
   SELECT doc_id,
          aggregate(
@@ -503,7 +507,8 @@ ORDER BY doc_a, doc_b
     px = f"{_hash_tok(dialect, elem)} % 256"
     return f"""
 WITH img AS (
-  SELECT doc_id, {toks} AS toks FROM documents WHERE doc_id % 3 = 0),
+  SELECT doc_id, {toks} AS toks FROM documents
+  WHERE doc_id % 3 = 0 AND text IS NOT NULL),
 px AS (
   SELECT doc_id, i AS pos, {px} AS p
   FROM (SELECT doc_id, toks, {series} AS i FROM img)),

@@ -26,8 +26,9 @@ behaviors preserved:
   pure-Python codecs (``dnstap_proto`` for the protobuf, ``dnswire`` for
   the embedded DNS message) into the decode chain's raw-frame row. JSON
   and a binary stand-in for events rows ride the same frame layer. A
-  frame that fails to decode is dropped and counted in
-  ``decode_errors``; ``frames_read`` counts the frames decoded into rows;
+  frame that fails to decode, or whose row fails to cast to its chunk
+  schema, is dropped and counted in ``decode_errors``; ``frames_read``
+  counts the rows written;
 - S5: a bounded pool of reader threads drains accepted connections from
   one queue (the reference's conn channel, cap 1 — dnstap.go:72).
 
@@ -209,6 +210,14 @@ def _decode_frame(payload: bytes) -> dict:
         return decode_binary_frame(payload)
     return decode_dnstap_protobuf(payload)
 
+#: what casting decoded rows to a chunk schema raises on a row whose
+#: values do not fit it: a wrong value type (Arrow), a column missing
+#: from every row (``select``), an integer wider than 64 bits
+_UNCASTABLE_ROW_ERRORS = (pa.ArrowException, KeyError, OverflowError)
+
+def _cast_rows(rows: list[dict], schema: pa.Schema) -> pa.Table:
+    return pa.Table.from_pylist(rows).select(schema.names).cast(schema)
+
 class SocketBridge:
     """Unix-socket -> parquet-chunk bridge daemon."""
 
@@ -234,7 +243,8 @@ class SocketBridge:
         self._threads: list[threading.Thread] = []
         self._server: socket.socket | None = None
         # A11-style stage counters (dnstap.go:380-386): frames decoded into
-        # rows, and frames dropped because they failed to decode
+        # rows that were written, and frames dropped because they failed to
+        # decode or to cast
         self.frames_read = 0
         self.decode_errors = 0
 
@@ -277,13 +287,17 @@ class SocketBridge:
 
         READY -> reply ACCEPT with our content types; START -> begin data
         (sender must have picked an overlapping type); STOP -> reply
-        FINISH and end the stream. Returns False when the stream is done.
+        FINISH and end the stream. Returns False when the stream is done,
+        also when a reply cannot be sent because the peer already left.
         Reference behavior: dnstap.go:192-203 (golang-framestream
         NewDecoder performs exactly this exchange).
         """
         ctype, cts = parse_control_frame(payload)
         if ctype == FSTRM_READY:
-            conn.sendall(encode_control_frame(FSTRM_ACCEPT, ACCEPTED_CONTENT_TYPES))
+            try:
+                conn.sendall(encode_control_frame(FSTRM_ACCEPT, ACCEPTED_CONTENT_TYPES))
+            except OSError:
+                return False
         elif ctype == FSTRM_START:
             if cts and cts[0] not in ACCEPTED_CONTENT_TYPES:
                 return False  # protocol error: sender ignored our ACCEPT
@@ -422,12 +436,18 @@ class SocketBridge:
         frames and events rows never mix schemas within a file). Each file
         is written under a dot-prefixed temp name, which Spark's file
         source never lists, and then renamed to ``chunk-<uuid>.parquet``,
-        so a reader sees a chunk whole or not at all."""
+        so a reader sees a chunk whole or not at all. A chunk that does
+        not cast to its schema is salvaged row by row (``_salvage``)."""
         for shape, schema in (("dnstap", self._DNSTAP_SCHEMA), ("events", self._EVENTS_SCHEMA)):
             part = [r for r in rows if ("frameType" in r) == (shape == "dnstap")]
             if not part:
                 continue
-            table = pa.Table.from_pylist(part).select(schema.names).cast(schema)
+            try:
+                table = _cast_rows(part, schema)
+            except _UNCASTABLE_ROW_ERRORS:
+                table = self._salvage(part, schema)
+                if table is None:
+                    continue
             if shape == "events":
                 # micros -> timestamp column matching the events table schema
                 # UTC-tagged (isAdjustedToUTC=true) so Spark reads TIMESTAMP
@@ -445,6 +465,21 @@ class SocketBridge:
                     os.unlink(tmp)
                 raise
             os.replace(tmp, os.path.join(self.out_dir, name))
+
+    def _salvage(self, rows: list[dict], schema: pa.Schema) -> pa.Table | None:
+        """Failure path of ``_write_chunk``: cast the chunk's rows one at a
+        time and keep those that cast. Each row that does not is moved
+        from ``frames_read`` to ``decode_errors``, so ``frames_read``
+        stays equal to the rows written. Returns None when no row casts."""
+        tables = []
+        for row in rows:
+            with contextlib.suppress(*_UNCASTABLE_ROW_ERRORS):
+                tables.append(_cast_rows([row], schema))
+        bad = len(rows) - len(tables)
+        with self._rows_lock:
+            self.frames_read -= bad
+            self.decode_errors += bad
+        return pa.concat_tables(tables) if tables else None
 
     def flush(self) -> None:
         """Write every buffered row now, however few."""

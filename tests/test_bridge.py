@@ -423,3 +423,44 @@ def test_chunks_are_published_whole(live_bridge, monkeypatch):
     assert sorted(seen.values()) == [10] * 6
     bridge.stop()
     assert all(f.startswith("chunk-") for f in os.listdir(out))  # no temp file left
+
+
+def test_peer_leaving_during_handshake_keeps_the_reader(live_bridge):
+    """A peer that sends READY and is gone before the ACCEPT reply must not
+    kill the only reader: the next fstrm sender is still served whole."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=5)
+    with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as blocker:
+        blocker.connect(sock)  # holds the one reader until it closes
+        with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as quitter:
+            quitter.connect(sock)
+            quitter.sendall(br.encode_control_frame(br.FSTRM_READY, (_DNSTAP_CT,)))
+    # the reader now takes the quitter, which closed before any reply
+    frames = [f"0.{k}" for k in range(7)]
+    assert _send_session(sock, [_dnstap(t) for t in frames]) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert all(t.is_alive() for t in bridge._threads)
+    bridge.stop()
+    assert bridge.frames_read == len(frames)
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(frames)
+
+
+def test_uncastable_row_is_counted_and_its_chunk_salvaged(live_bridge):
+    """A JSON row whose values do not cast to the events schema sinks only
+    itself: the good row of its chunk is written, the bad one moves from
+    ``frames_read`` to ``decode_errors``, and the reader lives on."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=2)
+    rows = _sample_rows(4)
+    rows[1]["event_id"] = "abc"
+    rows[3]["event_id"] = 2**70
+    send_frames(sock, rows[:2])
+    send_frames(sock, rows[2:])
+    deadline = time.time() + 10
+    while bridge.frames_read + bridge.decode_errors < 4 and time.time() < deadline:
+        time.sleep(0.01)
+    bridge.stop()
+    assert (bridge.frames_read, bridge.decode_errors) == (2, 2)
+    written = [
+        i for f in sorted(os.listdir(out))
+        for i in pq.read_table(os.path.join(out, f)).column("event_id").to_pylist()
+    ]
+    assert sorted(written) == [0, 2]
+    assert len(written) == bridge.frames_read

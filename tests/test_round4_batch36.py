@@ -4,7 +4,8 @@ replays of the sketch (cells, probes, min-estimate), the linear-IDF
 scoring, and the pixel-stub aHash; the CM one-sided guarantee
 (overestimate >= 0 on every audited row); banding completeness (result
 == brute-force hamming <= 3 pairs); and an engineered identical-image
-frame producing a hamming-0 pair.
+frame producing a hamming-0 pair, with NULL-text documents dropped alike
+by the Spark and DuckDB forms.
 """
 
 from __future__ import annotations
@@ -145,21 +146,28 @@ def test_image_ahash_python_replay_and_banding_complete(spark):
 
 
 def test_image_ahash_identical_images_pair(spark):
-    """Two byte-identical images must surface as a hamming-0 pair."""
+    """Two byte-identical images must surface as a hamming-0 pair, and two
+    NULL-text documents pair with nothing: both dialects drop them."""
+    import duckdb
+
     docs = load_table(spark, SF, "documents")
+    schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     rows = [
         (0, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "s", 40),
         (3, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "s", 40),
         (6, "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10", "en", "s", 40),
+        (9, None, "en", "s", 0),
+        (12, None, "en", "s", 0),
     ]
     try:
-        spark.createDataFrame(
-            rows,
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
-        ).createOrReplaceTempView("documents")
+        spark.createDataFrame(rows, schema).createOrReplaceTempView("documents")
         got = [(r.doc_a, r.doc_b, r.hamming)
                for r in spark.sql(fmm._image_ahash_sql("spark")).collect()]
     finally:
         docs.createOrReplaceTempView("documents")
     assert (0, 3, 0) in got
     assert all(p[:2] == (0, 3) for p in got)
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE documents ({schema.replace('STRING', 'VARCHAR')})")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?, ?, ?)", rows)
+    assert con.execute(fmm.image_ahash_sql()).fetchall() == got

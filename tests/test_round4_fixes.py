@@ -791,25 +791,6 @@ try:
 except ImportError:  # pragma: no cover
     pass
 
-# ------------------------------------------------- adjudication rotation
-
-def test_rotation_orders_least_recently_adjudicated_first():
-    """queries() must lead with entries whose EFFECTIVE evidence is
-    oldest: newest CORRECTNESS_r*.json round, voided to never-adjudicated
-    when the implementing module changed after it (the r8 code-change
-    rule — this test originally read the CORRECTNESS files alone, which
-    r9's first voided entries made stale), so the driver's 50-entry
-    window always re-checks the stalest entries."""
-    import __spark_entry__ as e
-
-    qdict = e.queries()
-    qs = list(qdict.keys())
-    last = e._evidence_rounds(qdict)
-    ages = [last[n] for n in qs]
-    assert ages == sorted(ages), "entries must be in ascending evidence age"
-    # oracle coverage stays total
-    assert set(qs) == set(e.oracle_sql().keys())
-
 # ------------------------------------------------------------ IVF recall
 
 def test_ivf_recall_metric_shape(spark):
