@@ -35,38 +35,18 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from .config import EngineConfig
 from .operators.columns import apply_column_config
+from .operators.dns_pipeline import client_query_table, client_response_table
 from .session import get_spark
-from .sinks.writers import foreach_batch_parquet
 from .sources.bridge import SocketBridge
-from .streaming.pipeline import (
-    streaming_client_query_agg,
-    streaming_client_response_agg,
-)
+from .sources.events import BRIDGE_SCHEMA, dns_query_stream, dns_response_stream
 from .streaming.stats import EngineStatsListener
 from .toml_config import load_config
 
-#: schema of the bridge's chunk files (events-shaped rows)
-BRIDGE_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+#: event-time delay before a window's state is evicted
+STREAM_WATERMARK = "10 minutes"
 
 def read_events_source(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
@@ -91,14 +71,26 @@ def build_streams(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
 ) -> dict[str, DataFrame]:
     """F3 static plan gating (dnstap.go:253-255; aggregator.go:553-573):
-    construct only the enabled branches, streaming flavor."""
+    construct only the enabled branches. Each table is its batch builder
+    run over the stream, plus a watermark that bounds the window state,
+    so ``[aggregator]`` options such as ``aggregate = false`` apply here
+    exactly as in batch. The response watermark is declared before the
+    builder's F5 filter, so as written it tracks every response; Catalyst
+    pushes F5 below it (F5 does not read the event-time column), so the
+    executed plan's watermark sees the non-OK responses only."""
     events = read_events_source(spark, cfg, bridge_dir)
     out: dict[str, DataFrame] = {}
     agg = cfg.aggregator
     if agg.client_queries:
-        out["clientQuery"] = streaming_client_query_agg(events, agg)
+        q = dns_query_stream(spark, "", events=events)
+        out["clientQuery"] = client_query_table(
+            spark, "", agg, queries=q.withWatermark("queryTime", STREAM_WATERMARK)
+        )
     if agg.non_ok_client_responses:
-        out["clientResponse"] = streaming_client_response_agg(events, agg)
+        r = dns_response_stream(spark, "", events=events)
+        out["clientResponse"] = client_response_table(
+            spark, "", agg, responses=r.withWatermark("responseTime", STREAM_WATERMARK)
+        )
     return out
 
 SINK_COLUMNS = {"clientQuery": "query_columns", "clientResponse": "response_columns"}

@@ -6,9 +6,10 @@ builder has a ``*_sql`` twin producing the DuckDB-oracle equivalent from
 the same shared SQL fragments — the correctness gate runs them
 side-by-side.
 
-Streaming gets the exact same operator chain via
-``streaming.pipeline`` (the functions below are pure
-DataFrame -> DataFrame and streaming-safe).
+The builders are pure DataFrame -> DataFrame and streaming-safe, so the
+daemon (``__main__.build_streams``) and ``streaming.pipeline`` run them
+unchanged over a watermarked stream passed as ``queries=`` /
+``responses=``: a stream query is the batch query over a prefix.
 """
 
 from __future__ import annotations

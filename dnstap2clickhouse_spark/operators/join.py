@@ -26,7 +26,7 @@ both sides are event-scale. AQE handles residual skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 JOIN_KEYS = ["identity", "queryAddress", "queryPort", "id"]
@@ -55,6 +55,30 @@ def _interval_us(spec: str) -> int:
             f"max_delay {spec!r} not understood: expected '<n> <unit>' "
             f"with unit one of {units}"
         ) from e
+
+def _j1_pair(max_delay: str, cond: Column | None = None) -> tuple[Column, list[Column]]:
+    """(predicate, projection) of a J1 pair over sides aliased ``q`` and
+    ``r`` -- the one Spark definition every J1 join shares.
+
+    The predicate is ``cond`` (a caller's extra equality, if any) AND
+    equality on the 4-part key AND ``r.responseTime`` within
+    ``[q.queryTime, q.queryTime + max_delay]``. The projection is
+    ``(responseTime, identity, delta_us)``.
+    """
+    for k in JOIN_KEYS:
+        eq = F.col(f"q.{k}") == F.col(f"r.{k}")
+        cond = eq if cond is None else cond & eq
+    cond = (
+        cond
+        & (F.col("r.responseTime") >= F.col("q.queryTime"))
+        & (F.col("r.responseTime") <= F.col("q.queryTime") + F.expr(f"INTERVAL '{max_delay}'"))
+    )
+    pair = [
+        F.col("r.responseTime").alias("responseTime"),
+        F.col("q.identity").alias("identity"),
+        (F.unix_micros("r.responseTime") - F.unix_micros("q.queryTime")).alias("delta_us"),
+    ]
+    return cond, pair
 
 def match_response_times(
     queries: DataFrame,
@@ -99,19 +123,8 @@ def match_response_times(
         .hint("shuffle_hash")
         .alias("r")
     )
-    cond = F.col("q.__band") == F.col("r.__band")
-    for k in JOIN_KEYS:
-        cond = cond & (F.col(f"q.{k}") == F.col(f"r.{k}"))
-    cond = (
-        cond
-        & (F.col("r.responseTime") >= F.col("q.queryTime"))
-        & (F.col("r.responseTime") <= F.col("q.queryTime") + F.expr(f"INTERVAL '{max_delay}'"))
-    )
-    return q.join(r, cond, "inner").select(
-        F.col("r.responseTime").alias("responseTime"),
-        F.col("q.identity").alias("identity"),
-        (F.unix_micros("r.responseTime") - F.unix_micros("q.queryTime")).alias("delta_us"),
-    )
+    cond, pair = _j1_pair(max_delay, F.col("q.__band") == F.col("r.__band"))
+    return q.join(r, cond, "inner").select(*pair)
 
 def avg_response_time_samples(
     matched: DataFrame,
@@ -176,19 +189,8 @@ def match_response_times_once(
     wr = Window.partitionBy(*JOIN_KEYS).orderBy("responseTime")
     q = queries.withColumn("seq", F.row_number().over(wq)).alias("q")
     r = responses.withColumn("seq", F.row_number().over(wr)).hint("shuffle_hash").alias("r")
-    cond = F.col("q.seq") == F.col("r.seq")
-    for k in JOIN_KEYS:
-        cond = cond & (F.col(f"q.{k}") == F.col(f"r.{k}"))
-    cond = (
-        cond
-        & (F.col("r.responseTime") >= F.col("q.queryTime"))
-        & (F.col("r.responseTime") <= F.col("q.queryTime") + F.expr(f"INTERVAL '{max_delay}'"))
-    )
-    return q.join(r, cond, "inner").select(
-        F.col("r.responseTime").alias("responseTime"),
-        F.col("q.identity").alias("identity"),
-        (F.unix_micros("r.responseTime") - F.unix_micros("q.queryTime")).alias("delta_us"),
-    )
+    cond, pair = _j1_pair(max_delay, F.col("q.seq") == F.col("r.seq"))
+    return q.join(r, cond, "inner").select(*pair)
 
 def match_response_times_once_sql(
     query_sql: str,

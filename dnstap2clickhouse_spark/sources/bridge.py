@@ -9,8 +9,8 @@ connection channel (S5, dnstap.go:164-210, cap MAX_READERS=32).
 
 Structured Streaming has no unix-socket source, and none is the idiomatic
 answer: the Spark-native shape is a small *bridge daemon* that tails the
-socket into parquet chunk files (or Kafka), which
-``streaming.read_events_stream`` consumes with exactly-once file-source
+socket into parquet chunk files (or Kafka), which the daemon's
+``__main__.read_events_source`` consumes with exactly-once file-source
 semantics. This module is that daemon, with the reference's operational
 behaviors preserved:
 
@@ -319,6 +319,8 @@ class SocketBridge:
 
         Also accepts bare length-prefixed data with no handshake (a
         degenerate framestream session), so simple senders keep working.
+        A frame cut short by EOF, a socket error or ``stop()`` is counted
+        in ``decode_errors``.
         """
         hdr = _FRAME_HEADER.size
         unpack = _FRAME_HEADER.unpack_from
@@ -330,9 +332,9 @@ class SocketBridge:
             except TimeoutError:
                 continue
             except OSError:
-                return
+                break
             if not chunk:
-                return
+                break
             buf += chunk
             frames: list[bytes] = []
             off, end = 0, len(buf)
@@ -359,6 +361,9 @@ class SocketBridge:
             if frames:
                 yield frames
             del buf[:off]
+        if buf:
+            with self._rows_lock:
+                self.decode_errors += 1
 
     def _read_loop(self) -> None:
         while not self._stop.is_set():

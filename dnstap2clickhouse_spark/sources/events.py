@@ -25,8 +25,30 @@ Two key derivations exist:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from .tables import load_table
+
+#: schema of an events row as Spark reads it: the ``events`` table after
+#: ``load_table`` and the bridge's events chunk files. File streams must
+#: not infer their schema, so every events stream pins this one.
+BRIDGE_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
+)
 
 # questionType: fixed 5-way mapping over event_type (alphabetical)
 _QTYPE_CASE = (

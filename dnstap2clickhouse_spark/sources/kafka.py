@@ -5,8 +5,8 @@ in for the dnstap unix socket in tests; a production deployment tails the
 socket into Kafka (via the bridge daemon) and reads it here. This module
 makes the "one-line swap" claim concrete code: :func:`read_events_kafka`
 returns a stream with the SAME projected schema as the parquet chunk
-stream, so every downstream operator
-(``streaming_client_query_agg`` etc.) binds unchanged.
+stream, so every downstream operator (the batch table builders in
+``operators.dns_pipeline`` etc.) binds unchanged.
 
 Record contract: each Kafka record's ``value`` is one frame payload in a
 bridge codec — JSON events row (the normal case), or the binary/dnstap

@@ -35,16 +35,18 @@ TABLES = (
 #: (``window``, ``withWatermark``, ``unix_micros``) see one type.
 _NORM_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
-#: session zone ids under which the NTZ->LTZ cast is a pure micros
-#: reinterpretation (fixed offset ZERO, no DST): the cast fast path below
-#: is exact for these and ONLY these — any non-zero offset or region zone
-#: must take the zone-independent field rebuild (r10 ADVICE: the r10 gate
-#: was the literal string "UTC", silently sending equivalent ids like
-#: Etc/UTC down the ~0.14 s/1M-row rebuild path).
-_UTC_ALIASES = frozenset(
-    {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "GMT0", "Greenwich", "Z",
-     "+00:00", "+0:00", "+00", "UTC+00:00", "GMT+00:00"}
-)
+def _session_zone_is_utc(spark: SparkSession) -> bool:
+    """True when the session zone is a fixed offset of zero (no DST),
+    read from the zone's own rules through the session's JVM: the
+    NTZ->LTZ cast is then a pure micros reinterpretation. Any failure
+    (no JVM, unreadable conf, unknown id) answers False, which takes the
+    exact field rebuild."""
+    try:
+        jt = spark.sparkContext._jvm.java.time
+        rules = jt.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")).getRules()
+        return rules.isFixedOffset() and rules.getOffset(jt.Instant.EPOCH).getTotalSeconds() == 0
+    except Exception:
+        return False
 
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Make table reads independent of who built the SparkSession.
@@ -94,11 +96,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             #   NTZ arithmetic, zone-free) and rebuilding with
             #   make_timestamp(..., 'UTC') is exact under ANY session
             #   zone, DST included; microseconds ride date_part('SECOND').
-            try:
-                tz = spark.conf.get("spark.sql.session.timeZone")
-            except Exception:
-                tz = None
-            if tz in _UTC_ALIASES:
+            if _session_zone_is_utc(spark):
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
             else:
                 df = df.withColumn(

@@ -1,8 +1,5 @@
 from .pipeline import (
     read_events_stream,
-    streaming_client_query_agg,
-    streaming_client_response_agg,
-    streaming_passthrough,
     streaming_response_time_join,
     streaming_exact_dedup,
     streaming_curation_filter,
@@ -13,9 +10,6 @@ from .match_state import stateful_match_once, tag_pair_streams, simulate_match
 
 __all__ = [
     "read_events_stream",
-    "streaming_client_query_agg",
-    "streaming_client_response_agg",
-    "streaming_passthrough",
     "streaming_response_time_join",
     "streaming_exact_dedup",
     "streaming_curation_filter",

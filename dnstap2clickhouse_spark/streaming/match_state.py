@@ -184,85 +184,3 @@ def tag_pair_streams(queries: DataFrame, responses: DataFrame) -> DataFrame:
         F.lit(True).alias("is_response"),
     )
     return q.unionByName(r)
-
-# ------------------------- transformWithState flavor (Spark 4 state API)
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` execution needs the
-    ``google.protobuf`` package in the Python workers (the state-server
-    protocol is protobuf-encoded); absent it, query start crashes with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE. Gate runtime use on
-    this (the operator definition itself has no such dependency)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-class MatchProcessor(StatefulProcessor):
-    """The same single-slot state machine on Spark 4's
-    ``transformWithStateInPandas`` API (the successor of
-    ``applyInPandasWithState``: named state variables on a
-    StatefulProcessor instead of one opaque tuple). Kept semantically
-    IDENTICAL to :func:`_make_match_fn` — both flavors share
-    ``_step``, and a test pins output equality — so the engine's two
-    arbitrary-state APIs are interchangeable carriers of the J1
-    machine.
-
-    State is one ValueState holding ``(pending_us, pending_is_response)``
-    per 4-part key; scale properties are the applyInPandasWithState
-    flavor's (per-key slot, Arrow batches, RocksDB-backed in
-    production)."""
-
-    def init(self, handle) -> None:
-        self._pending = handle.getValueState("pending", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        pending: tuple[int, bool] | None = None
-        if self._pending.exists():
-            pu, pr = self._pending.get()
-            pending = (int(pu), bool(pr))
-        parts = [p for p in rows if not p.empty]
-        if not parts:
-            return
-        batch = pd.concat(parts, ignore_index=True).sort_values("ts_us", kind="stable")
-        emitted: list[tuple[int, int]] = []
-        for ts_us, is_resp in zip(batch["ts_us"], batch["is_response"]):
-            pending, delta = _step(pending, int(ts_us), bool(is_resp))
-            if delta is not None:
-                emitted.append((int(ts_us) if is_resp else int(ts_us) + delta, delta))
-        if pending is None:
-            self._pending.clear()
-        else:
-            self._pending.update(pending)
-        if emitted:
-            identity, query_address, query_port, dns_id = key
-            yield pd.DataFrame(
-                {
-                    "identity": identity,
-                    "queryAddress": query_address,
-                    "queryPort": query_port,
-                    "id": dns_id,
-                    "responseTime": pd.to_datetime(
-                        [ts for ts, _ in emitted], unit="us", utc=True
-                    ).tz_localize(None),
-                    "delta_us": [d for _, d in emitted],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-def stateful_match_tws(tagged: DataFrame) -> DataFrame:
-    """The streaming operator via ``transformWithStateInPandas``
-    (unbounded state — the TTL flavor lives on the
-    applyInPandasWithState form, :func:`stateful_match_once`)."""
-    return tagged.groupBy(*JOIN_KEYS).transformWithStateInPandas(
-        MatchProcessor(),
-        OUTPUT_SCHEMA,
-        "Append",
-        "None",
-    )

@@ -1,9 +1,10 @@
 """Structured Streaming binding of the batch operator library.
 
 Design stance (SURVEY.md section 7): every pipeline stage is a pure
-DataFrame -> DataFrame function, so the streaming flavor REUSES the exact
-batch operators — ``dns_query_stream``/``expand_grouping_sets``/
-``window_dedup_count``/``match_response_times`` — under ``readStream``.
+DataFrame -> DataFrame function, so a stream query is the batch query
+over a prefix: the batch builders (``operators.dns_pipeline``) and the
+shared J1 pair predicate (``operators.join._j1_pair``) run unchanged over
+a watermarked ``readStream``; this module holds no copy of them.
 This is the engine's equivalent of the reference's goroutine pipeline
 (main.go:121-153), with these deliberate semantic upgrades (SURVEY.md
 section 2.9):
@@ -31,68 +32,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import AggregatorConfig
-from ..operators.grouping_sets import expand_grouping_sets
-from ..operators.join import JOIN_KEYS
-from ..operators.windows import window_dedup_count
-from ..operators.dns_pipeline import QUERY_KEYS, RESPONSE_KEYS
-from ..sources.events import _exprs
+from ..operators.join import _j1_pair
+from ..sources.events import BRIDGE_SCHEMA, dns_pair_streams
 from ..sources.tables import load_table
 
-def read_events_stream(spark: SparkSession, events_dir: str, ref_sf_dir: str) -> DataFrame:
+def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """File-source stream over events-shaped parquet chunks.
 
-    Schema is pinned from the batch table (file streams must not infer).
+    Schema is pinned to ``BRIDGE_SCHEMA`` (file streams must not infer).
     ``maxFilesPerTrigger=1`` makes each file one micro-batch, mirroring
     the reference's framed micro-batching.
     """
-    schema = load_table(spark, ref_sf_dir, "events").schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(BRIDGE_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(events_dir)
-    )
-
-def _project(ev: DataFrame, time_col: str, with_status: bool, pair_keys: bool, parity: int) -> DataFrame:
-    return ev.filter(f"event_id % 2 = {parity}").selectExpr(
-        *_exprs("spark", time_col, with_status, pair_keys)
-    )
-
-def streaming_client_query_agg(
-    events: DataFrame,
-    cfg: AggregatorConfig | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming clientQuery table: same operators as the batch builder,
-    plus a watermark for state eviction. Use outputMode('update') — the
-    reference's flush-every-interval behavior — or 'append' to emit only
-    finalized windows."""
-    cfg = cfg or AggregatorConfig()
-    q = _project(events, "queryTime", False, False, 0)
-    q = q.select("queryTime", *QUERY_KEYS, "counter").withWatermark("queryTime", watermark)
-    expanded = expand_grouping_sets(q, cfg)
-    return window_dedup_count(expanded, "queryTime", QUERY_KEYS, f"{cfg.write_interval_s} seconds")
-
-def streaming_client_response_agg(
-    events: DataFrame,
-    cfg: AggregatorConfig | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    cfg = cfg or AggregatorConfig()
-    r = _project(events, "responseTime", True, False, 1)
-    r = r.filter(F.col("responseStatus") != "NOERROR")  # F5
-    r = r.select("responseTime", *RESPONSE_KEYS, "counter").withWatermark(
-        "responseTime", watermark
-    )
-    expanded = expand_grouping_sets(r, cfg)
-    return window_dedup_count(
-        expanded, "responseTime", RESPONSE_KEYS, f"{cfg.write_interval_s} seconds"
-    )
-
-def streaming_passthrough(events: DataFrame) -> DataFrame:
-    """A8 (aggregate=false): raw non-OK response rows, no state at all."""
-    r = _project(events, "responseTime", True, False, 1)
-    return r.filter(F.col("responseStatus") != "NOERROR").select(
-        "responseTime", *RESPONSE_KEYS, "counter"
     )
 
 def streaming_response_time_join(
@@ -110,31 +64,12 @@ def streaming_response_time_join(
     join in one query.
     """
     cfg = cfg or AggregatorConfig()
-    q = _project(events, "queryTime", False, True, 0).withWatermark("queryTime", watermark)
-    r = _project(events, "responseTime", True, True, 1).withWatermark("responseTime", watermark)
-    q = q.alias("q")
-    r = r.alias("r")
-    cond = F.lit(True)
-    for k in JOIN_KEYS:
-        cond = cond & (F.col(f"q.{k}") == F.col(f"r.{k}"))
-    cond = (
-        cond
-        & (F.col("r.responseTime") >= F.col("q.queryTime"))
-        & (
-            F.col("r.responseTime")
-            <= F.col("q.queryTime") + F.expr(f"INTERVAL '{cfg.max_response_delay}'")
-        )
-    )
-    return q.join(r, cond, "inner").select(
-        F.col("r.responseTime").alias("responseTime"),
-        F.col("q.identity").alias("identity"),
-        (F.unix_micros("r.responseTime") - F.unix_micros("q.queryTime")).alias("delta_us"),
-    )
+    q, r, cond, pair = _pair_join_inputs(events, watermark, cfg.max_response_delay)
+    return q.join(r, cond, "inner").select(*pair)
 
 def streaming_response_time_avg(
     spark: SparkSession,
     events_dir: str,
-    ref_sf_dir: str,
     samples_dir: str,
     cfg: AggregatorConfig | None = None,
 ) -> DataFrame:
@@ -152,7 +87,7 @@ def streaming_response_time_avg(
     from ..operators.join import avg_response_time_samples
 
     cfg = cfg or AggregatorConfig()
-    sdf = streaming_response_time_join(read_events_stream(spark, events_dir, ref_sf_dir), cfg)
+    sdf = streaming_response_time_join(read_events_stream(spark, events_dir), cfg)
     q = (
         sdf.writeStream.outputMode("append")
         .foreachBatch(lambda df, _eid: df.write.mode("append").parquet(samples_dir))
@@ -216,9 +151,7 @@ def stateful_match_query(spark: SparkSession, sf_dir: str, n_chunks: int = 4) ->
         for f in sorted(glob.glob(os.path.join(d, "part-*.parquet"))):
             ordinal = os.path.basename(f).split("-")[1]
             os.rename(f, os.path.join(d, f"chunk_{ordinal}.parquet"))
-        stream = read_events_stream(spark, d, sf_dir)
-        q = _project(stream, "queryTime", False, True, 0)
-        r = _project(stream, "responseTime", True, True, 1)
+        q, r = dns_pair_streams(spark, "", events=read_events_stream(spark, d))
         matched = stateful_match_once(tag_pair_streams(q, r))
         return run_stream_to_memory(matched, "append", spark)
     finally:
@@ -410,7 +343,8 @@ def streaming_query_agg_query(spark: SparkSession, sf_dir: str, n_chunks: int = 
     import shutil
     import tempfile
 
-    from ..operators.dns_pipeline import QUERY_KEYS
+    from ..operators.dns_pipeline import QUERY_KEYS, client_query_table
+    from ..sources.events import dns_query_stream
 
     ev = load_table(spark, sf_dir, "events")
     d = tempfile.mkdtemp(prefix="agg_stream_")
@@ -418,8 +352,9 @@ def streaming_query_agg_query(spark: SparkSession, sf_dir: str, n_chunks: int = 
         # ascending time ranges -> in-order micro-batches (file source
         # processes by path order for equal mtimes)
         ev.repartitionByRange(n_chunks, "ts").write.mode("overwrite").parquet(d)
-        stream = read_events_stream(spark, d, sf_dir)
-        agg = streaming_client_query_agg(stream, watermark="30 days")
+        stream = read_events_stream(spark, d)
+        q = dns_query_stream(spark, "", events=stream).withWatermark("queryTime", "30 days")
+        agg = client_query_table(spark, "", queries=q)
         updates = run_stream_to_memory(agg, "update", spark)
         return (
             updates.groupBy("windowStart", *QUERY_KEYS)
@@ -743,53 +678,15 @@ def streaming_response_join_sql() -> str:
     inner = match_response_times_sql(PAIR_QUERY_SQL, PAIR_RESPONSE_SQL)
     return f"SELECT * FROM ({inner})\nORDER BY responseTime, identity, delta_us"
 
-def stateful_match_tws_query(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
-    """Driver-contract wrapper for the ``transformWithStateInPandas``
-    flavor of the exact stateful match (Spark 4's named-state API) —
-    same chunked delivery and oracle as ``stateful_match_query``, so the
-    two arbitrary-state APIs are certified interchangeable."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from .match_state import stateful_match_tws, tag_pair_streams
-
-    d = tempfile.mkdtemp(prefix="stateful_tws_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.repartitionByRange(n_chunks, "event_id").write.mode("overwrite").parquet(d)
-        for f in sorted(glob.glob(os.path.join(d, "part-*.parquet"))):
-            ordinal = os.path.basename(f).split("-")[1]
-            os.rename(f, os.path.join(d, f"chunk_{ordinal}.parquet"))
-        stream = read_events_stream(spark, d, sf_dir)
-        q = _project(stream, "queryTime", False, True, 0)
-        r = _project(stream, "responseTime", True, True, 1)
-        matched = stateful_match_tws(tag_pair_streams(q, r))
-        return run_stream_to_memory(matched, "append", spark)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-def _pair_join_inputs(stream: DataFrame):
-    """(q, r, cond): the watermarked pair streams and the J1 interval
-    condition — the SINGLE definition shared by the left-outer and
-    full-outer stream-join entries (the inner entry keeps its
-    config-driven bound via ``streaming_response_time_join``)."""
-    q = _project(stream, "queryTime", False, True, 0).withWatermark(
-        "queryTime", SJOIN_WM
-    ).alias("q")
-    r = _project(stream, "responseTime", True, True, 1).withWatermark(
-        "responseTime", SJOIN_WM
-    ).alias("r")
-    cond = F.lit(True)
-    for k in JOIN_KEYS:
-        cond = cond & (F.col(f"q.{k}") == F.col(f"r.{k}"))
-    cond = (
-        cond
-        & (F.col("r.responseTime") >= F.col("q.queryTime"))
-        & (F.col("r.responseTime") <= F.col("q.queryTime") + F.expr(f"INTERVAL '{SJOIN_WM}'"))
-    )
-    return q, r, cond
+def _pair_join_inputs(stream: DataFrame, watermark: str, max_delay: str):
+    """(q, r, cond, pair): the pair streams of ``stream``, each with
+    ``watermark``, aliased ``q`` and ``r``, plus the J1 predicate and
+    projection (``_j1_pair``) with bound ``max_delay`` — shared by the
+    inner, left-outer and full-outer stream-stream joins."""
+    q, r = dns_pair_streams(stream.sparkSession, "", events=stream)
+    q = q.withWatermark("queryTime", watermark).alias("q")
+    r = r.withWatermark("responseTime", watermark).alias("r")
+    return (q, r, *_j1_pair(max_delay))
 
 def _sjoin_oracle_parts() -> tuple[str, str, str]:
     """(on, interval_pred, wm_cte): the shared oracle text for the
@@ -839,7 +736,7 @@ def streaming_outer_join_df(spark: SparkSession, ev: DataFrame) -> DataFrame:
     """Core of :func:`streaming_outer_join_query` over an injected
     events frame (fixture tests engineer boundary-straddling rows)."""
     with _time_chunked_stream(spark, ev, SJOIN_CHUNKS) as stream:
-        q, r, cond = _pair_join_inputs(stream)
+        q, r, cond, _ = _pair_join_inputs(stream, SJOIN_WM, SJOIN_WM)
         joined = q.join(r, cond, "leftOuter").select(
             F.col("q.queryTime").alias("queryTime"),
             F.col("q.identity").alias("identity"),
@@ -905,7 +802,7 @@ def streaming_full_outer_join_df(spark: SparkSession, ev: DataFrame) -> DataFram
     """Core of :func:`streaming_full_outer_join_query` over an injected
     events frame (fixture tests engineer per-side boundary rows)."""
     with _time_chunked_stream(spark, ev, SJOIN_CHUNKS) as stream:
-        q, r, cond = _pair_join_inputs(stream)
+        q, r, cond, _ = _pair_join_inputs(stream, SJOIN_WM, SJOIN_WM)
         joined = q.join(r, cond, "fullOuter").select(
             F.coalesce(F.col("q.queryTime"), F.col("r.responseTime")).alias("t"),
             F.coalesce(F.col("q.identity"), F.col("r.identity")).alias("identity"),

@@ -22,6 +22,8 @@ from dnstap2clickhouse_spark.sources.bridge import SocketBridge, backoff_delays,
 from dnstap2clickhouse_spark.sources.dnstap_proto import encode_dnstap
 from dnstap2clickhouse_spark.sources.dnswire import encode_message
 from dnstap2clickhouse_spark import streaming as st
+from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table
+from dnstap2clickhouse_spark.sources.events import dns_query_stream
 
 def _sample_rows(n: int) -> list[dict]:
     base_us = 1_704_067_200_000_000
@@ -68,7 +70,8 @@ def test_socket_to_parquet_to_spark(spark):
     assert df.count() == 200
     assert set(df.columns) == {"event_id", "ts", "user_id", "event_type", "value", "props"}
     # the bridge output feeds the SAME streaming pipeline as driver data
-    sdf = st.streaming_client_query_agg(st.read_events_stream(spark, out, "/root/testdata/sf0.001"))
+    q = dns_query_stream(spark, "", events=st.read_events_stream(spark, out))
+    sdf = client_query_table(spark, "", queries=q.withWatermark("queryTime", "10 minutes"))
     mem = st.run_stream_to_memory(sdf, "update", spark)
     assert mem.count() > 0
     shutil.rmtree(d, ignore_errors=True)
@@ -378,6 +381,21 @@ def test_malformed_frame_is_counted_and_contained(live_bridge):
     bridge.stop()
     assert not any(t.is_alive() for t in bridge._threads)
     assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(good + more)
+
+
+def test_frame_cut_short_by_disconnect_is_counted(live_bridge):
+    """A bare sender sends one whole frame and half of the next, then
+    closes: the whole frame lands and the cut one is counted."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=5)
+    whole, cut = (br._FRAME_HEADER.pack(len(p)) + p for p in (_dnstap("0.0"), _dnstap("0.1")))
+    with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as c:
+        c.connect(sock)
+        c.sendall(whole + cut[: len(cut) // 2])
+    deadline = time.time() + 10
+    while bridge.decode_errors < 1 and time.time() < deadline:
+        time.sleep(0.01)
+    assert (bridge.frames_read, bridge.decode_errors) == (1, 1)
+    assert all(t.is_alive() for t in bridge._threads)
 
 
 def test_chunks_are_published_whole(live_bridge, monkeypatch):

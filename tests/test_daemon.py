@@ -8,12 +8,35 @@ import os
 import shutil
 import sys
 import tempfile
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.__main__ import build_streams, start_queries
 from dnstap2clickhouse_spark.config import EngineConfig
 from dnstap2clickhouse_spark.sources.bridge import SocketBridge, send_frames
+
+def _event_rows(n: int) -> list[dict]:
+    """Queries (even ids) and responses (odd) incl. non-NOERROR ones."""
+    return [
+        {
+            "event_id": i,
+            "ts_us": 1_760_000_000_000_000 + i * 1_000_000,
+            "user_id": i % 5,
+            "event_type": ["click", "error", "purchase", "signup", "view"][i % 5],
+            "value": float(i),
+            "props": "{}",
+        }
+        for i in range(n)
+    ]
+
+def _send_and_flush(bridge: SocketBridge, sock: str, rows: list[dict]) -> None:
+    send_frames(sock, rows)
+    deadline = time.time() + 10
+    while bridge.frames_read < len(rows) and time.time() < deadline:
+        time.sleep(0.1)
+    assert bridge.frames_read == len(rows)
+    bridge.flush()
 
 def test_socket_to_tables_end_to_end(spark):
     work = tempfile.mkdtemp(prefix="daemon_")
@@ -23,26 +46,7 @@ def test_socket_to_tables_end_to_end(spark):
     bridge = SocketBridge(sock, bridge_dir, flush_rows=10)
     bridge.start()
     try:
-        # queries (even ids) and responses (odd) incl. non-NOERROR ones
-        rows = [
-            {
-                "event_id": i,
-                "ts_us": 1_760_000_000_000_000 + i * 1_000_000,
-                "user_id": i % 5,
-                "event_type": ["click", "error", "purchase", "signup", "view"][i % 5],
-                "value": float(i),
-                "props": "{}",
-            }
-            for i in range(60)
-        ]
-        send_frames(sock, rows)
-        import time
-
-        deadline = time.time() + 10
-        while bridge.frames_read < len(rows) and time.time() < deadline:
-            time.sleep(0.1)
-        assert bridge.frames_read == len(rows)
-        bridge.flush()
+        _send_and_flush(bridge, sock, _event_rows(60))
 
         cfg = EngineConfig()
         cfg.sink.query_columns = {
@@ -70,13 +74,45 @@ def test_socket_to_tables_end_to_end(spark):
         bridge.stop()
         shutil.rmtree(work, ignore_errors=True)
 
+def test_daemon_honours_aggregate_false(spark):
+    """[aggregator] aggregate = false: the clientResponse sink holds the raw
+    non-OK response rows -- the same multiset as the batch builder over the
+    same chunks -- and no windowed counts."""
+    from dnstap2clickhouse_spark.config import AggregatorConfig
+    from dnstap2clickhouse_spark.operators.dns_pipeline import client_response_table
+    from dnstap2clickhouse_spark.sources.events import BRIDGE_SCHEMA, dns_response_stream
+
+    work = tempfile.mkdtemp(prefix="daemon_passthrough_")
+    sock = os.path.join(work, "dnstap.sock")
+    bridge_dir = os.path.join(work, "bridge")
+    out_dir = os.path.join(work, "tables")
+    bridge = SocketBridge(sock, bridge_dir, flush_rows=10)
+    bridge.start()
+    try:
+        _send_and_flush(bridge, sock, _event_rows(60))
+        cfg = EngineConfig(aggregator=AggregatorConfig(aggregate=False))
+        queries = start_queries(
+            spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir, available_now=True
+        )
+        for q in queries:
+            q.awaitTermination(timeout=60)
+
+        got = spark.read.parquet(os.path.join(out_dir, "clientResponse")).drop("__epoch")
+        ev = spark.read.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
+        want = client_response_table(
+            spark, "", cfg.aggregator, responses=dns_response_stream(spark, "", events=ev)
+        ).select(*got.columns)
+        assert want.count() > 0
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    finally:
+        bridge.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
 def test_update_mode_reemissions_collapse_to_final_counts(spark):
     """Two availableNow runs over one checkpoint re-emit the same window
     with a larger cumulative counter; raw parquet keeps both versions, so
     summing raw rows overcounts — read_output_table must collapse to the
     latest epoch's value per key (ADVICE r1)."""
-    import time
-
     from pyspark.sql import functions as F
 
     from dnstap2clickhouse_spark.__main__ import read_output_table
@@ -92,12 +128,7 @@ def test_update_mode_reemissions_collapse_to_final_counts(spark):
         bridge = SocketBridge(sock, bridge_dir, flush_rows=10)
         bridge.start()
         try:
-            send_frames(sock, rows)
-            deadline = time.time() + 10
-            while bridge.frames_read < len(rows) and time.time() < deadline:
-                time.sleep(0.1)
-            assert bridge.frames_read == len(rows)
-            bridge.flush()
+            _send_and_flush(bridge, sock, rows)
         finally:
             bridge.stop()
         queries = start_queries(

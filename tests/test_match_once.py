@@ -159,11 +159,7 @@ def test_stateful_match_equals_batch_on_one_to_one(spark, events_dir):
     """The exact state machine agrees with sequence pairing on
     collision-free input, across micro-batch boundaries (state carried
     between batches)."""
-    from dnstap2clickhouse_spark.streaming.pipeline import _project
-
-    ev = st.read_events_stream(spark, events_dir, SF)
-    q = _project(ev, "queryTime", False, True, 0)
-    r = _project(ev, "responseTime", True, True, 1)
+    q, r = dns_pair_streams(spark, "", events=st.read_events_stream(spark, events_dir))
     sdf = stateful_match_once(tag_pair_streams(q, r))
     mem = st.run_stream_to_memory(sdf, "append", spark)
 

@@ -122,6 +122,7 @@ def test_ntz_cast_fast_path_covers_utc_aliases(spark, tmp_path):
     try:
         t._ensure_session_confs = lambda s: None  # keep our zone pin
         for tz, fast in (("Etc/UTC", True), ("GMT", True), ("+00:00", True),
+                         ("UCT", True), ("Etc/GMT0", True), ("Zulu", True),
                          ("+05:30", False), ("America/New_York", False)):
             spark.conf.set("spark.sql.session.timeZone", tz)
             df = t.load_table(spark, str(tmp_path), "events")

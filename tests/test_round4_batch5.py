@@ -670,25 +670,3 @@ def test_variant_shred_type_dispatch(spark):
             assert r.vtype == "OBJECT<n: BIGINT>"
             assert r.as_int is None and r.obj_n == r.event_id % 50
             assert r.as_str is None
-
-
-def test_tws_flavor_matches_apply_flavor(spark):
-    """transformWithStateInPandas carries the same J1 state machine as
-    applyInPandasWithState — identical emitted samples. Skipped where
-    the container lacks google.protobuf (the TWS state-server protocol
-    dependency); the operator definition is still importable and the
-    gate itself is asserted."""
-    import pytest
-
-    from dnstap2clickhouse_spark.streaming import match_state as ms
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    # the gate must be consistent with reality: if it claims available,
-    # the query must actually run
-    if not ms.tws_available():
-        with pytest.raises(Exception):
-            stp.stateful_match_tws_query(spark, SF).collect()
-        pytest.skip("google.protobuf not in this container (TWS protocol dep)")
-    a = stp.stateful_match_query(spark, SF).select("responseTime", "identity", "delta_us").collect()
-    b = stp.stateful_match_tws_query(spark, SF).select("responseTime", "identity", "delta_us").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -456,24 +456,6 @@ def test_kafka_bad_codec_rejected(spark):
     with pytest.raises(ValueError, match="codec"):
         decode_event_values(raw, codec="avro")
 
-# ------------------------------------------- streaming core-agg contract
-
-def test_streaming_agg_equals_batch_any_chunking(spark):
-    """The update-mode stream collapsed to final state must equal the
-    batch clientQuery table regardless of micro-batch boundaries (1 chunk
-    == single batch, 7 chunks == many trigger updates per key)."""
-    from dnstap2clickhouse_spark.operators import dns_pipeline as dp
-    from dnstap2clickhouse_spark.streaming.pipeline import streaming_query_agg_query
-
-    want = sorted(
-        tuple(r) for r in dp.client_query_table(spark, SF).collect()
-    )
-    for n_chunks in (1, 7):
-        got = sorted(
-            tuple(r) for r in streaming_query_agg_query(spark, SF, n_chunks).collect()
-        )
-        assert got == want, f"n_chunks={n_chunks}: {len(got)} vs {len(want)} rows"
-
 # ---------------------------------------------- new round-4 text operators
 
 def test_pii_scrub_redacts_every_class(spark):

@@ -35,11 +35,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from dnstap2clickhouse_spark.__main__ import BRIDGE_SCHEMA, build_streams, start_queries
 from dnstap2clickhouse_spark.config import EngineConfig
 from dnstap2clickhouse_spark.sources.bridge import SocketBridge, send_frames
+from dnstap2clickhouse_spark.sources.events import dns_pair_streams
 from dnstap2clickhouse_spark.streaming.match_state import (
     stateful_match_once,
     tag_pair_streams,
 )
-from dnstap2clickhouse_spark.streaming.pipeline import _project
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -101,10 +101,7 @@ def test_daemon_soak_rocksdb_bounded_state(spark):
         # plus the J1 stateful match on the same bridge source, with the
         # event-time TTL driving state expiry
         events = spark.readStream.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
-        tagged = tag_pair_streams(
-            _project(events, "queryTime", False, True, 0),
-            _project(events, "responseTime", True, True, 1),
-        )
+        tagged = tag_pair_streams(*dns_pair_streams(spark, "", events=events))
         mq = (
             stateful_match_once(tagged, ttl=WATERMARK)
             .writeStream.outputMode("append")
