@@ -12,9 +12,7 @@ ClickHouse writer through channels. Here the same dataflow is:
                 -> parquet chunk files
                 -> Structured Streaming file source
                 -> the enabled aggregation branches (F3 plan gating)
-                -> foreachBatch sinks with K1 column mapping
-                   (parquet by default; ClickHouse JDBC via
-                   sinks.writers.clickhouse_writer when configured)
+                -> foreachBatch parquet sinks with K1 column mapping
 
 Each output table is one streaming query triggered every WriteInterval —
 the reference's flush timer (aggregator.go:535, 595-619) becomes the

@@ -1,3 +1,3 @@
-from .writers import foreach_batch_parquet, clickhouse_writer
+from .writers import clickhouse_writer
 
-__all__ = ["foreach_batch_parquet", "clickhouse_writer"]
+__all__ = ["clickhouse_writer"]

@@ -26,22 +26,6 @@ from pyspark.sql import functions as F
 
 from ..operators.columns import apply_column_config
 
-def foreach_batch_parquet(
-    path: str, mapping: dict[str, str] | None = None
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer: apply K1 column config, append parquet.
-
-    Appending parquet keyed by epoch is idempotent under Spark's
-    micro-batch replay when the target dedups on (epoch_id) — the test
-    sink simply appends, which is at-least-once.
-    """
-
-    def write(df: DataFrame, epoch_id: int) -> None:
-        out = apply_column_config(df, mapping) if mapping else df
-        out.write.mode("append").parquet(path)
-
-    return write
-
 def jdbc_writer(
     url: str,
     table: str,

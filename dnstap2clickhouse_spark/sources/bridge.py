@@ -29,24 +29,38 @@ behaviors preserved:
   frame that fails to decode, or whose row fails to cast to its chunk
   schema, is dropped and counted in ``decode_errors``; ``frames_read``
   counts the rows written;
-- S5: a bounded pool of reader threads drains accepted connections from
-  one queue (the reference's conn channel, cap 1 — dnstap.go:72).
+- S5: a bounded pool of readers drains accepted connections from one
+  queue (the reference's conn channel, cap 1 — dnstap.go:72). A reader is
+  a socket thread plus a decode process of its own, forked by ``start()``
+  before any bridge thread runs, so the readers decode in parallel as the
+  reference's goroutines do instead of taking turns on one interpreter
+  lock. A decode process that dies is replaced; the frames of the batch it
+  held are counted in ``decode_errors``.
 
-Hand-off and chunk files: a reader decodes its batch without holding a
-lock, appends the rows to the shared buffer in one lock hold, cuts off
-chunks of exactly ``flush_rows`` rows, and writes them after releasing
-the lock, so one reader's parquet write never stalls another. Only
-``flush()`` and ``stop()`` write a shorter chunk. Each file is written
-under a dot-prefixed temp name, which Spark's file source skips, and
-renamed to ``chunk-<uuid>.parquet`` once complete.
+Hand-off and chunk files: the socket thread frames each ``recv`` and sends
+its payloads down its decode process's pipe, which sends back the row
+dicts and the count of frames that failed. One batch is in flight while
+the thread reads the next, so results come back in order; before it
+handles any control frame, and whenever a ``recv`` times out, the thread
+takes in every batch still in flight, so FINISH follows every row sent
+before STOP and an idle connection's rows are not held back. Taking in
+appends the rows to the shared buffer in one lock hold, cuts off chunks of
+exactly ``flush_rows`` rows, and writes them after releasing the lock, so
+one reader's parquet write never stalls another. Only ``flush()`` and
+``stop()`` write a shorter chunk. Each file is written under a dot-prefixed
+temp name, which Spark's file source skips, and renamed to
+``chunk-<uuid>.parquet`` once complete.
 """
 
 from __future__ import annotations
 
 import contextlib
 import json
+import multiprocessing
 import os
+import pickle
 import queue
+import signal
 import socket
 import stat
 import struct
@@ -54,11 +68,20 @@ import threading
 import time
 import uuid
 from collections.abc import Iterator
+from multiprocessing.connection import Connection
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from . import dnstap_proto, dnswire
+
 MAX_READERS = 32  # dnstap.go:38
+#: decode processes are forked, not spawned: a spawned one would import the
+#: package and pyarrow afresh (about half a second), also when it replaces
+#: one that died mid-stream. A forked one uses nothing of the bridge but
+#: its pipe and the pure-Python decoders, so it never takes a lock that
+#: another thread held at the fork.
+_FORK = multiprocessing.get_context("fork")
 _FRAME_HEADER = struct.Struct(">I")  # 4-byte big-endian length prefix
 #: what the frame decoders raise on a malformed frame (truncated fields,
 #: bad varints or wire types, bad UTF-8/ASCII or JSON, wrong value types)
@@ -170,8 +193,6 @@ def decode_dnstap_protobuf(payload: bytes) -> dict:
     jar). Reference: dnstap.go:205-233 (protobuf), 275-281/331-337 (DNS
     unpack), 289-307/352-372 (projection).
     """
-    from . import dnstap_proto, dnswire
-
     frame = dnstap_proto.decode_dnstap(payload)
     row = {
         "frameType": frame["frameType"],
@@ -210,6 +231,38 @@ def _decode_frame(payload: bytes) -> dict:
         return decode_binary_frame(payload)
     return decode_dnstap_protobuf(payload)
 
+def _decode_process(pipe: Connection) -> None:
+    """Body of a forked decode process: a list of payloads in, ``(rows,
+    frames that failed to decode)`` out, in order, until the bridge's end
+    of the pipe closes. It builds no Arrow: the first pyarrow conversion in
+    a fresh process costs about half a second, and row dicts pickle faster
+    than a small table.
+
+    It first closes every socket the fork copied but its own pipe (the
+    bridge's listener and connections, other decode processes' pipe
+    ends): a peer then sees the bridge close a connection, and a decode
+    process sees EOF once the bridge is gone. SIGINT is the bridge's to
+    handle, not its decode processes'."""
+    signal.signal(signal.SIGINT, signal.SIG_IGN)
+    for name in os.listdir("/dev/fd"):
+        fd = int(name)
+        with contextlib.suppress(OSError):  # the listing's own descriptor is gone
+            if fd > 2 and fd != pipe.fileno() and stat.S_ISSOCK(os.fstat(fd).st_mode):
+                os.close(fd)
+    while True:
+        try:
+            payloads = pipe.recv()
+        except (EOFError, OSError):
+            return
+        rows: list[dict] = []
+        errors = 0
+        for payload in payloads:
+            try:
+                rows.append(_decode_frame(payload))
+            except _MALFORMED_FRAME_ERRORS:
+                errors += 1
+        pipe.send((rows, errors))
+
 #: what casting decoded rows to a chunk schema raises on a row whose
 #: values do not fit it: a wrong value type (Arrow), a column missing
 #: from every row (``select``), an integer wider than 64 bits
@@ -242,6 +295,9 @@ class SocketBridge:
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
         self._server: socket.socket | None = None
+        #: reader i's decode process and the bridge's end of its pipe
+        self._workers: list[tuple[multiprocessing.process.BaseProcess, Connection]] = []
+        self._spawn_lock = threading.Lock()
         # A11-style stage counters (dnstap.go:380-386): frames decoded into
         # rows that were written, and frames dropped because they failed to
         # decode or to cast
@@ -257,6 +313,8 @@ class SocketBridge:
                 break
             if self._stop.wait(delay):  # S1 backoff while dir absent
                 return
+        # fork before any bridge thread runs or the socket is bound
+        self._workers = [self._spawn() for _ in range(self.readers)]
         if os.path.exists(self.socket_path):
             os.unlink(self.socket_path)
         self._server = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
@@ -265,8 +323,8 @@ class SocketBridge:
         self._server.listen()
         self._server.settimeout(0.2)
         self._threads.append(threading.Thread(target=self._accept_loop, daemon=True))
-        for _ in range(self.readers):  # S5 fan-in pool
-            self._threads.append(threading.Thread(target=self._read_loop, daemon=True))
+        for i in range(self.readers):  # S5 fan-in pool
+            self._threads.append(threading.Thread(target=self._read_loop, args=(i,), daemon=True))
         for t in self._threads:
             t.start()
 
@@ -280,6 +338,53 @@ class SocketBridge:
             except OSError:
                 break
             self._conns.put(conn)
+
+    # ------------------------------------------------------------- decode
+    def _spawn(self) -> tuple[multiprocessing.process.BaseProcess, Connection]:
+        """Fork one decode process; returns it with the bridge's end of
+        its pipe."""
+        here, there = _FORK.Pipe()
+        proc = _FORK.Process(target=_decode_process, args=(there,), daemon=True)
+        proc.start()
+        there.close()
+        return proc, here
+
+    def _replace_worker(self, i: int, lost: int) -> None:
+        """Reader ``i``'s decode process is gone: count the ``lost``
+        frames it held in ``decode_errors``, reap it and fork a replacement
+        (unless the bridge is stopping)."""
+        with self._rows_lock:
+            self.decode_errors += lost
+        with self._spawn_lock:
+            proc, pipe = self._workers[i]
+            pipe.close()
+            proc.kill()
+            proc.join()
+            if not self._stop.is_set():
+                self._workers[i] = self._spawn()
+
+    def _send(self, i: int, payloads: list[bytes]) -> int:
+        """Send a batch to reader ``i``'s decode process; returns the
+        frames now in flight. A batch that finds the process gone goes to
+        its replacement."""
+        for _ in range(2):
+            try:
+                self._workers[i][1].send(payloads)
+                return len(payloads)
+            except OSError:
+                self._replace_worker(i, 0)
+        with self._rows_lock:
+            self.decode_errors += len(payloads)
+        return 0
+
+    def _take_back(self, i: int, in_flight: int) -> bytes | None:
+        """The pickled result of the batch in flight at reader ``i``'s
+        decode process, or None when the process died with it."""
+        try:
+            return self._workers[i][1].recv_bytes()
+        except (EOFError, OSError):
+            self._replace_worker(i, in_flight)
+            return None
 
     # ------------------------------------------------------------- read
     def _handle_control(self, conn: socket.socket, payload: bytes) -> bool:
@@ -317,6 +422,10 @@ class SocketBridge:
         buffer is parsed with an offset cursor and compacted once per
         ``recv``, never per frame.
 
+        An empty list is a barrier: the reader takes in every batch it
+        has in flight. One is yielded before each control frame, on each
+        ``recv`` timeout and when the stream ends.
+
         Also accepts bare length-prefixed data with no handshake (a
         degenerate framestream session), so simple senders keep working.
         A frame cut short by EOF, a socket error or ``stop()`` is counted
@@ -330,6 +439,7 @@ class SocketBridge:
             try:
                 chunk = conn.recv(65536)
             except TimeoutError:
+                yield []
                 continue
             except OSError:
                 break
@@ -355,17 +465,25 @@ class SocketBridge:
                 if frames:
                     yield frames
                     frames = []
+                yield frames
                 if not self._handle_control(conn, bytes(buf[off + 2 * hdr : off + 2 * hdr + clen])):
                     return
                 off += 2 * hdr + clen
             if frames:
                 yield frames
             del buf[:off]
+        yield []
         if buf:
             with self._rows_lock:
                 self.decode_errors += 1
 
-    def _read_loop(self) -> None:
+    def _read_loop(self, i: int) -> None:
+        """Reader ``i``: frames each connection's batches and keeps one
+        batch in flight at its decode process while it reads the next. A
+        result is unpickled and taken in after the next batch is sent, so
+        the decode process does not wait on that; the pipe still carries
+        one message each way at a time, so neither end can block the
+        other."""
         while not self._stop.is_set():
             try:
                 conn = self._conns.get(timeout=0.2)
@@ -374,24 +492,20 @@ class SocketBridge:
             if conn is None:
                 return
             with conn:
+                in_flight = 0
                 for payloads in self._read_frames(conn):
-                    self._take_in(payloads)
+                    result = self._take_back(i, in_flight) if in_flight else None
+                    in_flight = self._send(i, payloads) if payloads else 0
+                    if result is not None:
+                        self._take_in(*pickle.loads(result))
 
-    def _take_in(self, payloads: list[bytes]) -> None:
-        """Decode one batch of frames outside the lock, append its rows to
-        the shared buffer in one lock hold, cut every full chunk of exactly
-        ``flush_rows`` rows off the buffer's head, and write those chunks
-        after releasing the lock, so one reader's write never stalls
-        another reader. A frame that fails to decode is counted in
-        ``decode_errors`` and dropped alone: the rest of its batch and its
-        reader carry on."""
-        rows: list[dict] = []
-        errors = 0
-        for payload in payloads:
-            try:
-                rows.append(_decode_frame(payload))
-            except _MALFORMED_FRAME_ERRORS:
-                errors += 1
+    def _take_in(self, rows: list[dict], errors: int) -> None:
+        """Append one decoded batch's rows to the shared buffer in one lock
+        hold, cut every full chunk of exactly ``flush_rows`` rows off the
+        buffer's head, and write those chunks after releasing the lock, so
+        one reader's write never stalls another reader. ``errors`` frames
+        of the batch failed to decode; each was dropped alone, and the rest
+        of its batch and its reader carry on."""
         n = self.flush_rows
         with self._rows_lock:
             buffered = self._rows
@@ -494,9 +608,16 @@ class SocketBridge:
             self._write_chunk(rows)
 
     def stop(self) -> None:
+        """Stop reading, reap every decode process and write what is
+        buffered. Safe to call more than once."""
         self._stop.set()
         for t in self._threads:
             t.join(timeout=5)
+        with self._spawn_lock:
+            for proc, pipe in self._workers:
+                pipe.close()
+                proc.kill()
+                proc.join()
         if self._server is not None:
             self._server.close()
         if os.path.exists(self.socket_path):

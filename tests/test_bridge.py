@@ -482,3 +482,186 @@ def test_uncastable_row_is_counted_and_its_chunk_salvaged(live_bridge):
     ]
     assert sorted(written) == [0, 2]
     assert len(written) == bridge.frames_read
+
+
+# ------------------------------------------- decode processes and faults
+#
+# Each reader decodes in a forked process of its own. A forked process does
+# not see a monkeypatch applied after ``start()``, so faults are injected by
+# patching before it or by acting on a decode process's pid.
+
+
+def _wait_for(cond, timeout: float = 10.0) -> bool:
+    deadline = time.time() + timeout
+    while not cond() and time.time() < deadline:
+        time.sleep(0.01)
+    return cond()
+
+
+def _open_fstrm(path: str) -> socket.socket:
+    """A live fstrm connection, READY/ACCEPT/START done."""
+    c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+    c.connect(path)
+    c.sendall(br.encode_control_frame(br.FSTRM_READY, (_DNSTAP_CT,)))
+    assert br._recv_control(c)[0] == br.FSTRM_ACCEPT
+    c.sendall(br.encode_control_frame(br.FSTRM_START, (_DNSTAP_CT,)))
+    return c
+
+
+def _data(tags: list[str]) -> bytes:
+    return b"".join(br._FRAME_HEADER.pack(len(p)) + p for p in map(_dnstap, tags))
+
+
+def _finish(c: socket.socket) -> int:
+    c.sendall(br.encode_control_frame(br.FSTRM_STOP))
+    return br._recv_control(c)[0]
+
+
+def _gone(pid: int) -> bool:
+    """True once ``pid`` has exited and been reaped."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    return False
+
+
+def test_killed_decode_process_is_replaced(live_bridge):
+    """SIGKILL the only decode process in the middle of a stream: the
+    reader forks a replacement, and the frames sent after the kill land."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=1000)
+    before, after = [f"0.{k}" for k in range(5)], [f"0.{k}" for k in range(5, 12)]
+    with _open_fstrm(sock) as c:
+        c.sendall(_data(before))
+        assert _wait_for(lambda: bridge.frames_read == len(before))
+        proc = bridge._workers[0][0]
+        os.kill(proc.pid, 9)
+        proc.join(timeout=10)
+        assert not proc.is_alive()
+        c.sendall(_data(after))
+        assert _finish(c) == br.FSTRM_FINISH
+        assert c.recv(1) == b""  # the replacement holds no copy of the connection
+    assert (bridge.frames_read, bridge.decode_errors) == (len(before) + len(after), 0)
+    replacement = bridge._workers[0][0]
+    assert replacement.pid != proc.pid and replacement.is_alive()
+    assert all(t.is_alive() for t in bridge._threads)
+    bridge.stop()
+    assert _gone(proc.pid) and _gone(replacement.pid)
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(before + after)
+
+
+def test_decode_process_dying_on_a_batch_counts_its_frames(live_bridge, monkeypatch):
+    """A decode process that dies while it holds a batch: that batch's
+    frames are counted in ``decode_errors``, and the same reader carries on
+    with a replacement process."""
+    real = br._decode_frame
+
+    def die_on_poison(payload: bytes) -> dict:
+        if payload == b"poison":
+            os._exit(1)
+        return real(payload)
+
+    monkeypatch.setattr(br, "_decode_frame", die_on_poison)  # before start: forks copy it
+    bridge, sock, out = live_bridge(readers=1, flush_rows=1000)
+    first = bridge._workers[0][0]
+    good = [f"0.{k}" for k in range(6)]
+    with _open_fstrm(sock) as c:
+        c.sendall(_data(good[:3]))
+        assert _wait_for(lambda: bridge.frames_read == 3)
+        c.sendall(br._FRAME_HEADER.pack(6) + b"poison")
+        assert _wait_for(lambda: bridge.decode_errors == 1)
+        c.sendall(_data(good[3:]))
+        assert _finish(c) == br.FSTRM_FINISH
+    assert (bridge.frames_read, bridge.decode_errors) == (len(good), 1)
+    assert bridge._workers[0][0].pid != first.pid
+    assert all(t.is_alive() for t in bridge._threads)
+    bridge.stop()
+    assert _gone(first.pid)
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(good)
+
+
+def test_stop_reaps_every_decode_process(live_bridge):
+    """No decode process outlives ``stop()``, and calling it again is
+    harmless."""
+    bridge, sock, out = live_bridge(readers=3, flush_rows=4)
+    pids = [proc.pid for proc, _ in bridge._workers]
+    assert len(set(pids)) == 3 and os.getpid() not in pids
+    tags = [f"0.{k}" for k in range(10)]
+    assert _send_session(sock, [_dnstap(t) for t in tags]) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    bridge.stop()
+    bridge.stop()
+    assert all(_gone(pid) for pid in pids)
+    assert not any(t.is_alive() for t in bridge._threads)
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(tags)
+
+
+def test_stop_without_start_is_answered_with_finish(live_bridge):
+    """A sender that never sends START: its data frames are still taken
+    in, and FINISH goes out only once every one of them is in the buffer."""
+    bridge, sock, out = live_bridge(readers=2, flush_rows=1000)
+    tags = [f"0.{k}" for k in range(40)]
+    with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as c:
+        c.settimeout(10)
+        c.connect(sock)
+        c.sendall(br.encode_control_frame(br.FSTRM_READY, (_DNSTAP_CT,)))
+        assert br._recv_control(c)[0] == br.FSTRM_ACCEPT
+        c.sendall(_data(tags) + br.encode_control_frame(br.FSTRM_STOP))
+        assert br._recv_control(c)[0] == br.FSTRM_FINISH
+        assert bridge.frames_read == len(tags)
+        assert sorted(r["identity"] for r in bridge._rows) == sorted(tags)
+    bridge.stop()
+
+
+def test_malformed_frame_then_good_frames_on_a_live_connection(live_bridge):
+    """A truncated dnstap frame on an open connection is counted, and the
+    good frames sent after it on the same connection land, through the
+    same reader thread and the same decode process."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=1000)
+    truncated = _dnstap("0.x")[:20]
+    with pytest.raises(br._MALFORMED_FRAME_ERRORS):
+        br._decode_frame(truncated)
+    proc, reader = bridge._workers[0][0], bridge._threads[1]
+    tags = [f"0.{k}" for k in range(8)]
+    with _open_fstrm(sock) as c:
+        c.sendall(_data(tags[:4]))
+        assert _wait_for(lambda: bridge.frames_read == 4)
+        c.sendall(br._FRAME_HEADER.pack(len(truncated)) + truncated)
+        assert _wait_for(lambda: bridge.decode_errors == 1)
+        c.sendall(_data(tags[4:]))
+        assert _finish(c) == br.FSTRM_FINISH
+    assert (bridge.frames_read, bridge.decode_errors) == (len(tags), 1)
+    assert bridge._workers[0][0] is proc and proc.is_alive() and reader.is_alive()
+    bridge.stop()
+    assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(tags)
+
+
+def _exited(pid: int) -> bool:
+    """True once ``pid`` is gone or a zombie (its parent may be dead)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] == "Z"
+    except FileNotFoundError:
+        return True
+
+
+def test_decode_processes_exit_when_the_bridge_is_killed(tmp_path):
+    """A bridge process killed outright leaves no decode process behind:
+    each one holds no copy of another's pipe end, so each sees EOF."""
+    import subprocess
+
+    script = (
+        "import sys, time\n"
+        f"sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})\n"
+        "from dnstap2clickhouse_spark.sources.bridge import SocketBridge\n"
+        f"b = SocketBridge({str(tmp_path / 'b.sock')!r}, {str(tmp_path / 'out')!r}, readers=3)\n"
+        "b.start()\n"
+        "print(*[p.pid for p, _ in b._workers], flush=True)\n"
+        "time.sleep(60)\n"
+    )
+    with subprocess.Popen([sys.executable, "-c", script], stdout=subprocess.PIPE, text=True) as proc:
+        try:
+            pids = [int(p) for p in proc.stdout.readline().split()]
+        finally:
+            proc.kill()
+    assert len(pids) == 3
+    assert _wait_for(lambda: all(_exited(pid) for pid in pids))

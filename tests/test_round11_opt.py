@@ -153,6 +153,10 @@ def test_aqe_skew_split_applies_to_hinted_shuffle_hash(spark, tmp_path):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8k",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+        # the session default is one shuffle partition per core; at 4 the
+        # hot keys spread evenly (largest join partition 1.18x the median,
+        # under the 1.2 factor), so there is no skewed partition to split
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k, None) for k in skew_confs}
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -21,6 +21,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark import streaming as st
+from dnstap2clickhouse_spark.__main__ import _mapped_writer
 from dnstap2clickhouse_spark.config import AggregatorConfig
 from dnstap2clickhouse_spark.operators import dns_pipeline as dp
 from dnstap2clickhouse_spark.operators.join import match_response_times
@@ -30,7 +31,6 @@ from dnstap2clickhouse_spark.sources.events import (
     dns_response_stream,
 )
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.sinks import foreach_batch_parquet
 from dnstap2clickhouse_spark.streaming.adaptive_sampler import (
     MAX_SAMPLES,
     MIN_SAMPLES,
@@ -129,19 +129,21 @@ def test_streaming_avg_equals_batch_table(spark, events_dir):
         shutil.rmtree(os.path.dirname(samples), ignore_errors=True)
 
 def test_foreach_batch_sink_with_column_config(spark, events_dir):
+    """The daemon's foreachBatch sink applies the K1 column mapping and
+    tags each micro-batch with its ``__epoch``."""
     out = tempfile.mkdtemp(prefix="sink_out_")
     try:
         mapping = {"responseTime": "ts", "identity": "ident", "counter": "hits"}
         sdf = _passthrough(st.read_events_stream(spark, events_dir))
         q = (
             sdf.writeStream.outputMode("append")
-            .foreachBatch(foreach_batch_parquet(out, mapping))
+            .foreachBatch(_mapped_writer(out, mapping))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
         written = spark.read.parquet(out)
-        assert set(written.columns) == {"ts", "ident", "hits"}
+        assert set(written.columns) == {"ts", "ident", "hits", "__epoch"}
         assert written.count() > 0
     finally:
         shutil.rmtree(out, ignore_errors=True)
