@@ -49,20 +49,7 @@ STREAM_WATERMARK = "10 minutes"
 def read_events_source(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
 ) -> DataFrame:
-    """The configured input transport: bridge chunk files (default) or a
-    Kafka topic carrying the same frames ([source] kind = 'kafka')."""
-    if cfg.source.kind == "kafka":
-        from .sources.kafka import read_events_kafka
-
-        return read_events_kafka(
-            spark,
-            cfg.source.bootstrap,
-            cfg.source.topic,
-            starting_offsets=cfg.source.starting_offsets,
-            codec=cfg.source.codec,
-        )
-    if cfg.source.kind != "files":
-        raise ValueError(f"source.kind {cfg.source.kind!r}: expected 'files' or 'kafka'")
+    """The input stream: the socket bridge's chunk files."""
     return spark.readStream.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
 
 def build_streams(
@@ -156,26 +143,15 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="dnstap2clickhouse_spark")
     p.add_argument("-config", dest="config", default=None, help="TOML config path")
     p.add_argument("-loglevel", dest="loglevel", default="WARN")
-    p.add_argument(
-        "--socket",
-        default=None,
-        help="dnstap unix-socket path (required unless [source] kind = 'kafka')",
-    )
+    p.add_argument("--socket", required=True, help="dnstap unix-socket path")
     p.add_argument("--work-dir", required=True, help="bridge + output root")
     args = p.parse_args(argv)
 
     cfg = load_config(args.config)
     bridge_dir = os.path.join(args.work_dir, "bridge")
     out_dir = os.path.join(args.work_dir, "tables")
-    # the socket bridge exists to feed the file source; under a kafka
-    # source it would tail the socket into chunks nobody reads (and grow
-    # the disk unboundedly), so it only runs for kind='files'
-    bridge = None
-    if cfg.source.kind == "files":
-        if not args.socket:
-            p.error("--socket is required when [source] kind = 'files'")
-        bridge = SocketBridge(args.socket, bridge_dir)
-        bridge.start()
+    bridge = SocketBridge(args.socket, bridge_dir)
+    bridge.start()
 
     spark = get_spark("dnstap2clickhouse_spark")
     spark.sparkContext.setLogLevel(args.loglevel)
@@ -197,8 +173,7 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         for q in queries:
             q.stop()
-        if bridge is not None:
-            bridge.stop()
+        bridge.stop()
         print("stats:", listener.read_and_reset(), file=sys.stderr)
         spark.stop()
     return 0

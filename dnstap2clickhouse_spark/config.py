@@ -90,20 +90,6 @@ class SinkConfig:
     )
 
 @dataclass
-class SourceConfig:
-    """Input transport. ``files`` (default) tails the SocketBridge's
-    parquet chunk dir — the test/sandbox shape; ``kafka`` reads the same
-    frames off a topic (``sources.kafka``) — the production shape the
-    reference reaches via its unix socket (dnstap.go:60-88)."""
-
-    kind: str = "files"  # 'files' | 'kafka'
-    bootstrap: str = ""  # kafka bootstrap servers, comma-separated
-    topic: str = "dnstap-events"
-    starting_offsets: str = "latest"
-    codec: str = "json"  # value decode: 'json' (JVM) | 'auto' (sniffing)
-
-@dataclass
 class EngineConfig:
     aggregator: AggregatorConfig = field(default_factory=AggregatorConfig)
     sink: SinkConfig = field(default_factory=SinkConfig)
-    source: SourceConfig = field(default_factory=SourceConfig)

@@ -9,7 +9,7 @@ connection channel (S5, dnstap.go:164-210, cap MAX_READERS=32).
 
 Structured Streaming has no unix-socket source, and none is the idiomatic
 answer: the Spark-native shape is a small *bridge daemon* that tails the
-socket into parquet chunk files (or Kafka), which the daemon's
+socket into parquet chunk files, which the daemon's
 ``__main__.read_events_source`` consumes with exactly-once file-source
 semantics. This module is that daemon, with the reference's operational
 behaviors preserved:
@@ -24,11 +24,11 @@ behaviors preserved:
   frames go on as one batch;
 - S3/S4: frames are ``protobuf:dnstap.Dnstap``, decoded by the in-repo
   pure-Python codecs (``dnstap_proto`` for the protobuf, ``dnswire`` for
-  the embedded DNS message) into the decode chain's raw-frame row. JSON
-  and a binary stand-in for events rows ride the same frame layer. A
-  frame that fails to decode, or whose row fails to cast to its chunk
-  schema, is dropped and counted in ``decode_errors``; ``frames_read``
-  counts the rows written;
+  the embedded DNS message) into the decode chain's raw-frame row, a
+  tuple in chunk-schema order. JSON and a binary stand-in for events
+  rows ride the same frame layer. A frame that fails to decode, or whose
+  row fails to cast to its chunk schema, is dropped and counted in
+  ``decode_errors``; ``frames_read`` counts the rows written;
 - S5: a bounded pool of readers drains accepted connections from one
   queue (the reference's conn channel, cap 1 — dnstap.go:72). A reader is
   a socket thread plus a decode process of its own, forked by ``start()``
@@ -38,8 +38,11 @@ behaviors preserved:
   held are counted in ``decode_errors``.
 
 Hand-off and chunk files: the socket thread frames each ``recv`` and sends
-its payloads down its decode process's pipe, which sends back the row
-dicts and the count of frames that failed. One batch is in flight while
+its payloads down its decode process's pipe, which sends back the decoded
+rows and the count of frames that failed. A dnstap row comes back as one
+tuple in ``_DNSTAP_SCHEMA`` order, so the socket thread builds no dict
+per frame when it loads a result and builds each chunk one typed column at a time (events rows
+from the stand-in codecs stay dicts). One batch is in flight while
 the thread reads the next, so results come back in order; before it
 handles any control frame, and whenever a ``recv`` times out, the thread
 takes in every batch still in flight, so FINISH follows every row sent
@@ -56,9 +59,9 @@ from __future__ import annotations
 
 import contextlib
 import json
+import marshal
 import multiprocessing
 import os
-import pickle
 import queue
 import signal
 import socket
@@ -177,12 +180,46 @@ def decode_binary_frame(payload: bytes) -> dict:
         "props": props,
     }
 
+def _dnstap_row(payload: bytes) -> tuple:
+    """S3+S4 decode of one ``dnstap.Dnstap`` protobuf frame into a tuple in
+    ``SocketBridge._DNSTAP_SCHEMA`` order, read straight off the protobuf
+    fields (``dnstap_proto._decode_fields``) and the embedded DNS message
+    (``dnswire.decode_message``). Fields are read in the order
+    ``dnstap_proto.decode_dnstap`` reads them, so a malformed frame raises
+    what it raises."""
+    top = dnstap_proto._decode_fields(payload)
+    frame_type = "MESSAGE" if top.get(15, 0) == dnstap_proto.DNSTAP_TYPE_MESSAGE else "OTHER"
+    identity = top.get(1, b"").decode(errors="replace")
+    if 14 not in top:
+        return (frame_type, "", False, None, None, identity, "", None, None, None, None, [], b"")
+    msg = dnstap_proto._decode_fields(top[14])
+    mtype = msg.get(1, 0)
+    message_type = dnstap_proto.MESSAGE_TYPES.get(mtype) or f"TYPE{mtype}"
+    if message_type.endswith("_RESPONSE"):
+        sec, nsec, dns_message = msg.get(12), msg.get(13), msg.get(14, b"")
+    else:
+        sec, nsec, dns_message = msg.get(8), msg.get(9), msg.get(10, b"")
+    addr = msg.get(4, b"")
+    address = socket.inet_ntoa(addr) if len(addr) == 4 else ".".join(map(str, addr))
+    port = msg.get(6)
+    if not dns_message:
+        return (frame_type, message_type, False, sec, nsec, identity, address, port,
+                None, None, None, [], addr)
+    dns = dnswire.decode_message(dns_message)
+    questions = dns["questions"]
+    return (
+        frame_type, message_type, True, sec, nsec, identity, address, port,
+        questions[0][1] if questions else None, dns["rcode"], dns["id"],
+        [name for name, _ in questions], addr,
+    )
+
 def decode_dnstap_protobuf(payload: bytes) -> dict:
     """Production S3+S4 decode: a ``dnstap.Dnstap`` protobuf frame ->
     one raw-frame row in the decode chain's input schema
     (``operators.prep._frame_exprs``): frameType, messageType,
     hasPayload, timeSec/timeNsec, identity, queryAddress, queryPort,
-    qtypeCode, rcode, id, questionNames, addrBytes.
+    qtypeCode, rcode, id, questionNames, addrBytes. The bridge itself
+    keeps the tuple (``_dnstap_row``); this is its row-dict form.
 
     Uses the in-repo pure-Python wire codecs (``sources.dnstap_proto``
     for the protobuf layer, ``sources.dnswire`` for the embedded DNS
@@ -193,50 +230,33 @@ def decode_dnstap_protobuf(payload: bytes) -> dict:
     jar). Reference: dnstap.go:205-233 (protobuf), 275-281/331-337 (DNS
     unpack), 289-307/352-372 (projection).
     """
-    frame = dnstap_proto.decode_dnstap(payload)
-    row = {
-        "frameType": frame["frameType"],
-        "messageType": frame["messageType"] or "",
-        "hasPayload": frame["hasPayload"],
-        "timeSec": frame["timeSec"],
-        "timeNsec": frame["timeNsec"],
-        "identity": frame["identity"],
-        "queryAddress": frame["queryAddress"] or "",
-        "queryPort": frame["queryPort"],
-        "qtypeCode": None,
-        "rcode": None,
-        "id": None,
-        "questionNames": [],
-        "addrBytes": frame.get("addrBytes", b""),
-    }
-    if frame["hasPayload"]:
-        dns = dnswire.decode_message(frame["dnsMessage"])
-        row["id"] = dns["id"]
-        row["rcode"] = dns["rcode"]
-        row["questionNames"] = [name for name, _ in dns["questions"]]
-        if dns["questions"]:
-            row["qtypeCode"] = dns["questions"][0][1]
-    return row
+    return dict(zip(SocketBridge._DNSTAP_NAMES, _dnstap_row(payload)))
 
-def _decode_frame(payload: bytes) -> dict:
-    """S3/S4 plug point: frame bytes -> row dict.
+def _decode_frame(payload: bytes) -> tuple | dict:
+    """S3/S4 plug point: frame bytes -> one decoded row.
 
-    Sniffs the frame format: ``{`` -> JSON row; magic 0x01 -> the binary
-    layout above; anything else is parsed as a dnstap protobuf frame
-    (``decode_dnstap_protobuf``).
+    Sniffs the frame format: ``{`` -> a JSON events row (dict); magic
+    0x01 -> the binary events layout above (dict); anything else is
+    parsed as a dnstap protobuf frame into a ``_DNSTAP_SCHEMA``-order
+    tuple (``_dnstap_row``).
     """
     if payload[:1] == b"{":
         return json.loads(payload)
     if payload[:1] == bytes([_BIN_MAGIC]):
         return decode_binary_frame(payload)
-    return decode_dnstap_protobuf(payload)
+    return _dnstap_row(payload)
 
 def _decode_process(pipe: Connection) -> None:
     """Body of a forked decode process: a list of payloads in, ``(rows,
     frames that failed to decode)`` out, in order, until the bridge's end
-    of the pipe closes. It builds no Arrow: the first pyarrow conversion in
-    a fresh process costs about half a second, and row dicts pickle faster
-    than a small table.
+    of the pipe closes. A dnstap row is a tuple in ``_DNSTAP_SCHEMA``
+    order, which the bridge loads without building a dict per frame. The
+    result goes back in ``marshal`` form, which both ends handle faster
+    than pickle's for plain tuples, lists, strings and numbers, and which
+    only this process writes. It builds no Arrow: the first pyarrow
+    conversion in a fresh process costs about half a second, and at a
+    paced rate a batch is often one frame, too small to pay for a table of
+    its own.
 
     It first closes every socket the fork copied but its own pipe (the
     bridge's listener and connections, other decode processes' pipe
@@ -254,22 +274,28 @@ def _decode_process(pipe: Connection) -> None:
             payloads = pipe.recv()
         except (EOFError, OSError):
             return
-        rows: list[dict] = []
+        rows: list[tuple | dict] = []
         errors = 0
         for payload in payloads:
             try:
                 rows.append(_decode_frame(payload))
             except _MALFORMED_FRAME_ERRORS:
                 errors += 1
-        pipe.send((rows, errors))
+        pipe.send_bytes(marshal.dumps((rows, errors)))
 
 #: what casting decoded rows to a chunk schema raises on a row whose
 #: values do not fit it: a wrong value type (Arrow), a column missing
-#: from every row (``select``), an integer wider than 64 bits
+#: from every events row (``select``), an integer wider than 64 bits
 _UNCASTABLE_ROW_ERRORS = (pa.ArrowException, KeyError, OverflowError)
 
-def _cast_rows(rows: list[dict], schema: pa.Schema) -> pa.Table:
-    return pa.Table.from_pylist(rows).select(schema.names).cast(schema)
+def _cast_rows(rows: list[tuple] | list[dict], schema: pa.Schema) -> pa.Table:
+    """Decoded rows of one shape -> a table of ``schema``. Dnstap tuples
+    are already in schema order and go in one typed column at a time;
+    events dicts are matched to the schema by name."""
+    if isinstance(rows[0], dict):
+        return pa.Table.from_pylist(rows).select(schema.names).cast(schema)
+    arrays = [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)]
+    return pa.Table.from_arrays(arrays, schema=schema)
 
 class SocketBridge:
     """Unix-socket -> parquet-chunk bridge daemon."""
@@ -283,14 +309,17 @@ class SocketBridge:
     ) -> None:
         if flush_rows < 1:
             raise ValueError(f"flush_rows must be at least 1, got {flush_rows}")
+        if readers < 1:
+            raise ValueError(f"readers must be at least 1, got {readers}")
         if readers > MAX_READERS:
             readers = MAX_READERS  # dnstap.go:38 hard cap
         self.socket_path = socket_path
         self.out_dir = out_dir
         self.readers = readers
         self.flush_rows = flush_rows
-        self._conns: queue.Queue[socket.socket | None] = queue.Queue(maxsize=1)  # dnstap.go:72
-        self._rows: list[dict] = []
+        self._conns: queue.Queue[socket.socket] = queue.Queue(maxsize=1)  # dnstap.go:72
+        #: decoded rows not yet in a chunk: dnstap tuples, events dicts
+        self._rows: list[tuple | dict] = []
         self._rows_lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
@@ -329,6 +358,9 @@ class SocketBridge:
             t.start()
 
     def _accept_loop(self) -> None:
+        """Hand each accepted connection to the reader pool. While every
+        reader is busy and the queue is full, it waits for room, and closes
+        the connection if the bridge stops first."""
         assert self._server is not None
         while not self._stop.is_set():
             try:
@@ -337,7 +369,14 @@ class SocketBridge:
                 continue
             except OSError:
                 break
-            self._conns.put(conn)
+            while not self._stop.is_set():
+                try:
+                    self._conns.put(conn, timeout=0.2)
+                    break
+                except queue.Full:
+                    continue
+            else:
+                conn.close()
 
     # ------------------------------------------------------------- decode
     def _spawn(self) -> tuple[multiprocessing.process.BaseProcess, Connection]:
@@ -378,7 +417,7 @@ class SocketBridge:
         return 0
 
     def _take_back(self, i: int, in_flight: int) -> bytes | None:
-        """The pickled result of the batch in flight at reader ``i``'s
+        """The marshalled result of the batch in flight at reader ``i``'s
         decode process, or None when the process died with it."""
         try:
             return self._workers[i][1].recv_bytes()
@@ -480,7 +519,7 @@ class SocketBridge:
     def _read_loop(self, i: int) -> None:
         """Reader ``i``: frames each connection's batches and keeps one
         batch in flight at its decode process while it reads the next. A
-        result is unpickled and taken in after the next batch is sent, so
+        result is loaded and taken in after the next batch is sent, so
         the decode process does not wait on that; the pipe still carries
         one message each way at a time, so neither end can block the
         other."""
@@ -489,17 +528,15 @@ class SocketBridge:
                 conn = self._conns.get(timeout=0.2)
             except queue.Empty:
                 continue
-            if conn is None:
-                return
             with conn:
                 in_flight = 0
                 for payloads in self._read_frames(conn):
                     result = self._take_back(i, in_flight) if in_flight else None
                     in_flight = self._send(i, payloads) if payloads else 0
                     if result is not None:
-                        self._take_in(*pickle.loads(result))
+                        self._take_in(*marshal.loads(result))
 
-    def _take_in(self, rows: list[dict], errors: int) -> None:
+    def _take_in(self, rows: list[tuple | dict], errors: int) -> None:
         """Append one decoded batch's rows to the shared buffer in one lock
         hold, cut every full chunk of exactly ``flush_rows`` rows off the
         buffer's head, and write those chunks after releasing the lock, so
@@ -549,16 +586,19 @@ class SocketBridge:
             ("addrBytes", pa.binary()),
         ]
     )
+    #: its column names once (``Schema.names`` builds a new list per call)
+    _DNSTAP_NAMES = tuple(_DNSTAP_SCHEMA.names)
 
-    def _write_chunk(self, rows: list[dict]) -> None:
+    def _write_chunk(self, rows: list[tuple | dict]) -> None:
         """Write rows as parquet chunk files, one per row shape (dnstap raw
-        frames and events rows never mix schemas within a file). Each file
-        is written under a dot-prefixed temp name, which Spark's file
-        source never lists, and then renamed to ``chunk-<uuid>.parquet``,
-        so a reader sees a chunk whole or not at all. A chunk that does
-        not cast to its schema is salvaged row by row (``_salvage``)."""
+        frames, which are tuples, and events rows, which are dicts, never
+        mix schemas within a file). Each file is written under a
+        dot-prefixed temp name, which Spark's file source never lists, and
+        then renamed to ``chunk-<uuid>.parquet``, so a reader sees a chunk
+        whole or not at all. A chunk that does not cast to its schema is
+        salvaged row by row (``_salvage``)."""
         for shape, schema in (("dnstap", self._DNSTAP_SCHEMA), ("events", self._EVENTS_SCHEMA)):
-            part = [r for r in rows if ("frameType" in r) == (shape == "dnstap")]
+            part = [r for r in rows if isinstance(r, tuple) == (shape == "dnstap")]
             if not part:
                 continue
             try:
@@ -585,7 +625,7 @@ class SocketBridge:
                 raise
             os.replace(tmp, os.path.join(self.out_dir, name))
 
-    def _salvage(self, rows: list[dict], schema: pa.Schema) -> pa.Table | None:
+    def _salvage(self, rows: list[tuple] | list[dict], schema: pa.Schema) -> pa.Table | None:
         """Failure path of ``_write_chunk``: cast the chunk's rows one at a
         time and keep those that cast. Each row that does not is moved
         from ``frames_read`` to ``decode_errors``, so ``frames_read``
@@ -608,11 +648,15 @@ class SocketBridge:
             self._write_chunk(rows)
 
     def stop(self) -> None:
-        """Stop reading, reap every decode process and write what is
-        buffered. Safe to call more than once."""
+        """Stop reading, close every connection no reader took, reap every
+        decode process and write what is buffered. Safe to call more than
+        once."""
         self._stop.set()
         for t in self._threads:
             t.join(timeout=5)
+        with contextlib.suppress(queue.Empty):
+            while True:
+                self._conns.get_nowait().close()
         with self._spawn_lock:
             for proc, pipe in self._workers:
                 pipe.close()

@@ -42,17 +42,18 @@ def encode_name(name: str) -> bytes:
 def decode_name(payload: bytes, off: int) -> tuple[str, int]:
     """Wire labels at ``off`` -> (presentation name with trailing dot,
     offset after the name). Follows compression pointers (0b11-prefixed
-    16-bit offsets) without ever re-visiting an offset (loop guard)."""
+    16-bit offsets) without ever following one twice (loop guard: offsets
+    only grow between pointers, so every loop passes one pointer again)."""
     labels: list[str] = []
     jumped = False
     end = off
-    seen: set[int] = set()
+    pointers: set[int] = set()
     while True:
-        if off in seen:
-            raise ValueError("compression pointer loop")
-        seen.add(off)
         n = payload[off]
         if n & 0xC0 == 0xC0:  # compression pointer
+            if off in pointers:
+                raise ValueError("compression pointer loop")
+            pointers.add(off)
             (ptr,) = _U16.unpack_from(payload, off)
             if not jumped:
                 end = off + 2

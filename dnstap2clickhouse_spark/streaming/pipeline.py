@@ -16,11 +16,9 @@ section 2.9):
 - checkpointed at-least-once delivery instead of the crash-lossy
   in-memory maps + retry-queue drop (clickhouse.go:376-380).
 
-The file source here stands in for the dnstap unix socket (a bridge
-daemon would tail the socket into files/Kafka — SURVEY.md section 2.1);
-the Kafka transport is concrete code, not a comment:
-``sources.kafka.read_events_kafka`` returns the same projected schema,
-so it swaps in for ``read_events_stream`` with no downstream change.
+The file source here stands in for the dnstap unix socket: the socket
+bridge (``sources.bridge``) tails the socket into the files it reads
+(SURVEY.md section 2.1).
 """
 
 from __future__ import annotations

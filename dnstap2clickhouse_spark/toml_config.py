@@ -22,7 +22,7 @@ import tomllib
 from dataclasses import fields
 from typing import Any
 
-from .config import AggregatorConfig, EngineConfig, SinkConfig, SourceConfig
+from .config import AggregatorConfig, EngineConfig, SinkConfig
 
 #: TOML key -> AggregatorConfig field (reference names, toml.go:43-61)
 _AGG_KEYS = {
@@ -46,16 +46,6 @@ _SINK_KEYS = {
     "response_time_columns": "response_time_columns",
 }
 
-#: [source] section (engine extension — the reference has no transport
-#: choice; its unix socket maps to kind='files' via the bridge)
-_SOURCE_KEYS = {
-    "kind": "kind",
-    "bootstrap": "bootstrap",
-    "topic": "topic",
-    "starting_offsets": "starting_offsets",
-    "codec": "codec",
-}
-
 def _patch(obj: Any, mapping: dict[str, str], values: dict[str, Any]) -> None:
     """patchStructFields analogue: set known fields, ignore unknown keys
     (the reference warns and continues — toml.go:150-156)."""
@@ -72,7 +62,6 @@ def load_config(
     """defaults -> TOML overlay -> CLI patch -> propagation -> derived."""
     agg = AggregatorConfig()
     sink = SinkConfig()
-    source = SourceConfig()
     doc: dict[str, Any] = {}
     if path:
         with open(path, "rb") as f:
@@ -81,13 +70,11 @@ def load_config(
     dnstap_sec = doc.get("dnstap", {})
     _patch(agg, _AGG_KEYS, doc.get("aggregator", {}))
     _patch(sink, _SINK_KEYS, doc.get("clickhouse", {}))
-    _patch(source, _SOURCE_KEYS, doc.get("source", {}))
 
     # CLI args win over file values (toml.go:165-173 ordering)
     for key, val in (cli_overrides or {}).items():
         _patch(agg, _AGG_KEYS, {key: val})
         _patch(sink, _SINK_KEYS, {key: val})
-        _patch(source, _SOURCE_KEYS, {key: val})
 
     # cross-section propagation (toml.go:181-187): dnstap-level gates are
     # visible to the aggregation stage so the plan builder can gate itself
@@ -102,4 +89,4 @@ def load_config(
     ):
         agg.response_time_interval_s = max(1, agg.write_interval_s // 2)
 
-    return EngineConfig(aggregator=agg, sink=sink, source=source)
+    return EngineConfig(aggregator=agg, sink=sink)

@@ -484,6 +484,54 @@ def test_uncastable_row_is_counted_and_its_chunk_salvaged(live_bridge):
     assert len(written) == bridge.frames_read
 
 
+def test_uncastable_dnstap_row_is_counted_and_its_chunk_salvaged(live_bridge):
+    """A dnstap frame whose time does not fit ``timeSec`` (int64) sinks
+    only itself: the other rows of its chunk are written, it moves from
+    ``frames_read`` to ``decode_errors``, and the reader serves the next
+    connection."""
+    bridge, sock, out = live_bridge(readers=1, flush_rows=3)
+    bad = encode_dnstap(message_type="CLIENT_QUERY", identity="0.bad", time_sec=2**63 + 1)
+    good = ["0.0", "0.1"]
+    assert _send_session(sock, [_dnstap(good[0]), bad, _dnstap(good[1])]) == [
+        br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert (bridge.frames_read, bridge.decode_errors) == (2, 1)
+    more = [f"1.{k}" for k in range(3)]
+    assert _send_session(sock, [_dnstap(t) for t in more]) == [br.FSTRM_ACCEPT, br.FSTRM_FINISH]
+    assert all(t.is_alive() for t in bridge._threads)
+    bridge.stop()
+    written = [t for ids in _chunk_identities(out).values() for t in ids]
+    assert sorted(written) == sorted(good + more)
+    assert (len(written), bridge.decode_errors) == (bridge.frames_read, 1)
+
+
+def test_bridge_needs_a_reader(tmp_path):
+    """With no reader, connections would be accepted and never answered."""
+    with pytest.raises(ValueError, match="readers"):
+        SocketBridge(str(tmp_path / "b.sock"), str(tmp_path / "out"), readers=0)
+
+
+def test_stop_closes_connections_no_reader_took(live_bridge):
+    """One reader and three idle peers: one peer holds the reader, one
+    waits in the queue and one in the accept thread. ``stop()`` returns at
+    once, leaves no bridge thread behind and closes every peer."""
+    bridge, sock, out = live_bridge(readers=1)
+    peers = []
+    for _ in range(3):
+        c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+        c.connect(sock)
+        c.settimeout(5)
+        peers.append(c)
+    assert _wait_for(bridge._conns.full)
+    time.sleep(0.3)  # the accept thread takes the third peer and waits for room
+    t0 = time.monotonic()
+    bridge.stop()
+    assert time.monotonic() - t0 < 1
+    assert not any(t.is_alive() for t in bridge._threads)
+    for c in peers:
+        with c:
+            assert c.recv(1) == b""
+
+
 # ------------------------------------------- decode processes and faults
 #
 # Each reader decodes in a forked process of its own. A forked process does
@@ -608,7 +656,8 @@ def test_stop_without_start_is_answered_with_finish(live_bridge):
         c.sendall(_data(tags) + br.encode_control_frame(br.FSTRM_STOP))
         assert br._recv_control(c)[0] == br.FSTRM_FINISH
         assert bridge.frames_read == len(tags)
-        assert sorted(r["identity"] for r in bridge._rows) == sorted(tags)
+        identity = br.SocketBridge._DNSTAP_SCHEMA.get_field_index("identity")
+        assert sorted(r[identity] for r in bridge._rows) == sorted(tags)
     bridge.stop()
 
 

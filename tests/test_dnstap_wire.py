@@ -16,12 +16,17 @@ from __future__ import annotations
 
 import os
 import tempfile
-from unittest import mock
 
+import pyarrow as pa
 import pytest
 
-from dnstap2clickhouse_spark.sources import dnstap_proto, dnswire
-from dnstap2clickhouse_spark.sources.bridge import decode_dnstap_protobuf
+from dnstap2clickhouse_spark.sources import dnswire
+from dnstap2clickhouse_spark.sources.bridge import (
+    SocketBridge,
+    _cast_rows,
+    _decode_frame,
+    decode_dnstap_protobuf,
+)
 from dnstap2clickhouse_spark.sources.dnstap_proto import (
     _FIXED32,
     DNSTAP_TYPE_MESSAGE,
@@ -59,6 +64,15 @@ def test_dns_name_compression_pointer():
     name, end = dnswire.decode_name(payload, len(base))
     assert name == "mail.example.com."
     assert end == len(payload)
+
+@pytest.mark.parametrize("payload", [
+    b"\xc0\x00",  # a pointer to itself
+    b"\xc0\x02\xc0\x00",  # two pointers to each other
+    b"\x01a\x01b\xc0\x02",  # labels, then a pointer back into them
+])
+def test_dns_name_compression_loop_raises(payload):
+    with pytest.raises(ValueError, match="loop"):
+        dnswire.decode_name(payload, 0)
 
 def test_dns_message_round_trip():
     wire = dnswire.encode_message(
@@ -122,10 +136,12 @@ def test_dnstap_unknown_fields_skipped():
 
 # -------------------------------------------- decoder equivalence (oracle)
 #
-# The dict-of-lists walker and the ``decode_dnstap`` body that used it,
-# kept verbatim as the reference the single-pass walker must match. The
-# perfbench ingest check derives its expected rows from the same
-# ``decode_dnstap_protobuf``, so this is the only guard on its output.
+# The dict-of-lists walker, the ``decode_dnstap`` body that used it and the
+# row-dict ``decode_dnstap_protobuf`` body composed over them, kept
+# verbatim as the reference the single-pass walker and the bridge's tuple
+# rows must match. The perfbench ingest check derives its expected rows
+# from the same ``decode_dnstap_protobuf``, so this is the only guard on
+# its output.
 
 
 def _oracle_decode_fields(payload: bytes) -> dict[int, list]:
@@ -192,9 +208,30 @@ def _oracle_decode_dnstap(payload: bytes) -> dict:
 
 
 def _oracle_decode_row(payload: bytes) -> dict:
-    """``decode_dnstap_protobuf`` composed over the oracle walker."""
-    with mock.patch.object(dnstap_proto, "decode_dnstap", _oracle_decode_dnstap):
-        return decode_dnstap_protobuf(payload)
+    frame = _oracle_decode_dnstap(payload)
+    row = {
+        "frameType": frame["frameType"],
+        "messageType": frame["messageType"] or "",
+        "hasPayload": frame["hasPayload"],
+        "timeSec": frame["timeSec"],
+        "timeNsec": frame["timeNsec"],
+        "identity": frame["identity"],
+        "queryAddress": frame["queryAddress"] or "",
+        "queryPort": frame["queryPort"],
+        "qtypeCode": None,
+        "rcode": None,
+        "id": None,
+        "questionNames": [],
+        "addrBytes": frame.get("addrBytes", b""),
+    }
+    if frame["hasPayload"]:
+        dns = dnswire.decode_message(frame["dnsMessage"])
+        row["id"] = dns["id"]
+        row["rcode"] = dns["rcode"]
+        row["questionNames"] = [name for name, _ in dns["questions"]]
+        if dns["questions"]:
+            row["qtypeCode"] = dns["questions"][0][1]
+    return row
 
 
 def _assert_matches_oracle(payload: bytes) -> None:
@@ -262,6 +299,23 @@ _EQUIVALENCE_CASES = {
 @pytest.mark.parametrize("case", sorted(_EQUIVALENCE_CASES))
 def test_decoder_matches_oracle(case):
     _assert_matches_oracle(_EQUIVALENCE_CASES[case])
+
+
+def _dict_rows_table(rows: list[dict]) -> pa.Table:
+    """The row-dict-to-Arrow step perfbench's ingest check uses."""
+    schema = SocketBridge._DNSTAP_SCHEMA
+    return pa.Table.from_pylist(rows).select(schema.names).cast(schema)
+
+
+@pytest.mark.parametrize("case", sorted(_EQUIVALENCE_CASES))
+def test_tuple_rows_cast_to_the_dict_rows_table(case):
+    """A chunk the bridge builds from its tuple rows equals the table of
+    the oracle's row dicts, for the frame alone and in one chunk with
+    every other case."""
+    schema = SocketBridge._DNSTAP_SCHEMA
+    for payloads in ([_EQUIVALENCE_CASES[case]], list(_EQUIVALENCE_CASES.values())):
+        got = _cast_rows([_decode_frame(p) for p in payloads], schema)
+        assert got.equals(_dict_rows_table([_oracle_decode_row(p) for p in payloads]))
 
 
 @pytest.mark.parametrize("payload", [

@@ -14,8 +14,6 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-import pytest
-
 from dnstap2clickhouse_spark.sources.tables import load_table
 from dnstap2clickhouse_spark.streaming.adaptive_sampler import (
     MAX_EXCEEDS,
@@ -340,122 +338,6 @@ def test_audit_plan_detects_hazards():
     )
     assert "nested-loop" in audit_plan(nl)
 
-# --------------------------------------------------- kafka-shaped source
-
-def _kafka_wire_rows(spark, sf_dir):
-    """Events rows -> Kafka record doubles (value = JSON frame payload)."""
-    import json as _json
-
-    ev = load_table(spark, sf_dir, "events").selectExpr(
-        "event_id", "unix_micros(ts) AS ts_us", "user_id", "event_type", "value", "props"
-    )
-    return [
-        (
-            None,
-            _json.dumps(r.asDict()).encode(),
-            "events",
-            0,
-            i,
-        )
-        for i, r in enumerate(ev.collect())
-    ]
-
-_KAFKA_DDL = "key BINARY, value BINARY, topic STRING, partition INT, offset BIGINT"
-
-def test_kafka_json_decode_matches_events_table(spark):
-    """read_events_kafka(codec='json') over a wire-schema double must
-    reproduce the events table exactly — the schema contract that makes
-    the file->kafka swap a drop-in."""
-    from dnstap2clickhouse_spark.sources.kafka import read_events_kafka
-
-    raw = spark.createDataFrame(_kafka_wire_rows(spark, SF), _KAFKA_DDL)
-    got = read_events_kafka(spark, "unused:9092", "events", source_df=raw)
-    want = load_table(spark, SF, "events")
-    assert got.schema.simpleString() == want.schema.simpleString()
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-def test_kafka_auto_codec_streams_through_pipeline(spark):
-    """codec='auto' (sniffing mapInPandas path) under a REAL streaming
-    source double: same rows out, and the stream binds to a downstream
-    aggregation unchanged."""
-    from dnstap2clickhouse_spark.sources.kafka import read_events_kafka
-
-    d = tempfile.mkdtemp(prefix="kafka_")
-    try:
-        spark.createDataFrame(_kafka_wire_rows(spark, SF), _KAFKA_DDL).coalesce(
-            1
-        ).write.mode("append").parquet(d)
-        sdf = spark.readStream.schema(_KAFKA_DDL).parquet(d)
-        ev = read_events_kafka(spark, "unused:9092", "events", codec="auto", source_df=sdf)
-        assert ev.isStreaming
-        agg = ev.groupBy("event_type").count()
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory").queryName("kafka_auto_agg")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            r.event_type: r["count"]
-            for r in spark.sql("SELECT * FROM kafka_auto_agg").collect()
-        }
-        want = {
-            r.event_type: r["count"]
-            for r in load_table(spark, SF, "events").groupBy("event_type").count().collect()
-        }
-        assert got == want
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-def test_kafka_dnstap_frames_decode_to_bridge_schema(spark):
-    """read_dnstap_kafka over real dnstap protobuf frame values yields the
-    bridge's raw-frame chunk schema with full field fidelity — the DNS
-    chain's Kafka transport."""
-    from dnstap2clickhouse_spark.sources import dnswire
-    from dnstap2clickhouse_spark.sources.dnstap_proto import encode_dnstap
-    from dnstap2clickhouse_spark.sources.kafka import read_dnstap_kafka
-
-    def frame(kind, dns_id, rcode=0):
-        dns = dnswire.encode_message(
-            dns_id,
-            [("host9.example.com.", 28)],
-            is_response=kind.endswith("_RESPONSE"),
-            rcode=rcode,
-        )
-        return encode_dnstap(
-            message_type=kind,
-            identity="ns1",
-            query_address=bytes([10, 0, 3, 7]),
-            query_port=5353,
-            time_sec=1_760_000_000,
-            time_nsec=250_000_000,
-            dns_message=dns,
-        )
-
-    wire = [
-        (None, frame("CLIENT_QUERY", 11), "dnstap", 0, 0),
-        (None, frame("CLIENT_RESPONSE", 11, rcode=3), "dnstap", 0, 1),
-    ]
-    raw = spark.createDataFrame(wire, _KAFKA_DDL)
-    rows = {
-        r.messageType: r
-        for r in read_dnstap_kafka(spark, "unused:9092", "dnstap", source_df=raw).collect()
-    }
-    assert set(rows) == {"CLIENT_QUERY", "CLIENT_RESPONSE"}
-    for r in rows.values():
-        assert r.identity == "ns1" and r.queryAddress == "10.0.3.7"
-        assert r.queryPort == 5353 and r.id == 11
-        assert r.questionNames == ["host9.example.com."]
-    assert rows["CLIENT_RESPONSE"].rcode == 3
-
-def test_kafka_bad_codec_rejected(spark):
-    from dnstap2clickhouse_spark.sources.kafka import decode_event_values
-
-    raw = spark.createDataFrame([], _KAFKA_DDL)
-    with pytest.raises(ValueError, match="codec"):
-        decode_event_values(raw, codec="avro")
-
 # ---------------------------------------------- new round-4 text operators
 
 def test_pii_scrub_redacts_every_class(spark):
@@ -611,51 +493,6 @@ def test_compact_dataset_merges_small_files(spark, tmp_path):
     ranges.sort()
     for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
         assert a_hi < b_lo, "sorted compaction must leave disjoint key ranges"
-
-# ------------------------------------------------ daemon source config
-
-def test_toml_source_section_selects_kafka(tmp_path):
-    """[source] kind='kafka' parses and survives CLI-override patching;
-    default stays the bridge file source."""
-    from dnstap2clickhouse_spark.toml_config import load_config
-
-    cfgfile = tmp_path / "engine.toml"
-    cfgfile.write_text(
-        '[source]\nkind = "kafka"\nbootstrap = "k1:9092,k2:9092"\n'
-        'topic = "frames"\ncodec = "auto"\n'
-        "[aggregator]\nwrite_interval = 30\n"
-    )
-    cfg = load_config(str(cfgfile))
-    assert cfg.source.kind == "kafka"
-    assert cfg.source.bootstrap == "k1:9092,k2:9092"
-    assert cfg.source.topic == "frames" and cfg.source.codec == "auto"
-    assert cfg.aggregator.write_interval_s == 30
-    assert load_config(None).source.kind == "files"
-
-def test_daemon_kafka_source_binds_pipeline(spark, tmp_path, monkeypatch):
-    """build_streams with kind='kafka' routes through read_events_kafka
-    and still constructs the gated aggregation branches (source doubled
-    with a wire-schema batch frame)."""
-    from dnstap2clickhouse_spark import __main__ as daemon
-    from dnstap2clickhouse_spark.sources import kafka as ksrc
-    from dnstap2clickhouse_spark.toml_config import load_config
-
-    raw = spark.createDataFrame(_kafka_wire_rows(spark, SF), _KAFKA_DDL)
-    calls = {}
-
-    def fake_kafka(spark_, bootstrap, topic, starting_offsets="latest", codec="json", source_df=None):
-        calls["args"] = (bootstrap, topic, starting_offsets, codec)
-        return ksrc.decode_event_values(raw, codec="json")
-
-    monkeypatch.setattr("dnstap2clickhouse_spark.sources.kafka.read_events_kafka", fake_kafka)
-    cfgfile = tmp_path / "engine.toml"
-    cfgfile.write_text('[source]\nkind = "kafka"\nbootstrap = "k:9092"\ntopic = "t"\n')
-    cfg = load_config(str(cfgfile))
-    streams = daemon.build_streams(spark, cfg, str(tmp_path))
-    assert calls["args"] == ("k:9092", "t", "latest", "json")
-    assert set(streams) == {"clientQuery", "clientResponse"}
-    # the doubled source is batch, so the branch is directly collectable
-    assert streams["clientQuery"].count() > 0
 
 # ----------------------------------------------------- simhash pair gen
 
