@@ -11,13 +11,18 @@ ClickHouse writer through channels. Here the same dataflow is:
     unix socket -> SocketBridge daemon (sources/bridge.py, S1-S5)
                 -> parquet chunk files
                 -> Structured Streaming file source
-                -> the enabled aggregation branches (F3 plan gating)
-                -> foreachBatch parquet sinks with K1 column mapping
+                -> one foreachBatch fan-out per micro-batch: the batch
+                   builders of the enabled tables (F3 plan gating)
+                -> per-epoch partial counts with K1 column mapping
 
-Each output table is one streaming query triggered every WriteInterval —
-the reference's flush timer (aggregator.go:535, 595-619) becomes the
-trigger cadence; crash recovery is checkpointed (an upgrade over the
-reference's in-memory maps, documented in ARCHITECTURE.md).
+The count tables keep no window state across triggers, as the reference
+keeps none across flushes: every WriteInterval it drains and clears its
+count maps (aggregator.go:595-619) and ClickHouse adds the partial rows
+up. Here every trigger is one micro-batch; its partial counts land in
+``<table>/__epoch=<N>/`` and ``read_output_table`` sums them, as a
+SummingMergeTree would. Crash recovery is checkpointed, and a replayed
+epoch overwrites its own partial counts (an upgrade over the reference's
+in-memory maps, documented in ARCHITECTURE.md).
 
 Usage:
     python -m dnstap2clickhouse_spark -config engine.toml \
@@ -30,9 +35,11 @@ import argparse
 import os
 import signal
 import sys
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from .config import EngineConfig
 from .operators.columns import apply_column_config
@@ -43,8 +50,13 @@ from .sources.events import BRIDGE_SCHEMA, dns_query_stream, dns_response_stream
 from .streaming.stats import EngineStatsListener
 from .toml_config import load_config
 
-#: event-time delay before a window's state is evicted
-STREAM_WATERMARK = "10 minutes"
+#: the one streaming query that writes every count table
+COUNT_QUERY = "countTables"
+#: partition column of the per-epoch partial counts
+EPOCH_COL = "__epoch"
+#: hidden window key of a partial count row: K1 drops ``windowStart`` and
+#: may prune every other column that tells two windows apart
+WINDOW_COL = "__windowStart"
 
 def read_events_source(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
@@ -54,90 +66,101 @@ def read_events_source(
 
 def build_streams(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
-) -> dict[str, DataFrame]:
-    """F3 static plan gating (dnstap.go:253-255; aggregator.go:553-573):
-    construct only the enabled branches. Each table is its batch builder
-    run over the stream, plus a watermark that bounds the window state,
-    so ``[aggregator]`` options such as ``aggregate = false`` apply here
-    exactly as in batch. The response watermark is declared before the
-    builder's F5 filter, so as written it tracks every response; Catalyst
-    pushes F5 below it (F5 does not read the event-time column), so the
-    executed plan's watermark sees the non-OK responses only."""
-    events = read_events_source(spark, cfg, bridge_dir)
-    out: dict[str, DataFrame] = {}
-    agg = cfg.aggregator
+) -> tuple[DataFrame, dict[str, Callable[[DataFrame], DataFrame]]]:
+    """The bridge stream, and F3 static plan gating (dnstap.go:253-255;
+    aggregator.go:553-573): for each enabled table only, a function from
+    one events batch to its K1-mapped rows. Each is the table's batch
+    builder, unchanged, so ``[aggregator]`` options such as
+    ``aggregate = false`` apply exactly as in batch."""
+    agg, sink = cfg.aggregator, cfg.sink
+    tables: dict[str, Callable[[DataFrame], DataFrame]] = {}
     if agg.client_queries:
-        q = dns_query_stream(spark, "", events=events)
-        out["clientQuery"] = client_query_table(
-            spark, "", agg, queries=q.withWatermark("queryTime", STREAM_WATERMARK)
+        tables["clientQuery"] = lambda ev: _k1(
+            client_query_table(spark, "", agg, queries=dns_query_stream(spark, "", events=ev)),
+            sink.query_columns,
         )
     if agg.non_ok_client_responses:
-        r = dns_response_stream(spark, "", events=events)
-        out["clientResponse"] = client_response_table(
-            spark, "", agg, responses=r.withWatermark("responseTime", STREAM_WATERMARK)
+        tables["clientResponse"] = lambda ev: _k1(
+            client_response_table(spark, "", agg, responses=dns_response_stream(spark, "", events=ev)),
+            sink.response_columns,
         )
-    return out
+    return read_events_source(spark, cfg, bridge_dir), tables
 
-SINK_COLUMNS = {"clientQuery": "query_columns", "clientResponse": "response_columns"}
+def _k1(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+    """K1 column mapping, plus the window start of windowed counts as the
+    hidden ``WINDOW_COL``."""
+    mapping = {k: v for k, v in mapping.items() if k in df.columns}
+    if "windowStart" in df.columns:
+        df = df.withColumn(WINDOW_COL, F.col("windowStart"))
+        mapping[WINDOW_COL] = WINDOW_COL
+    return apply_column_config(df, mapping)
 
 def start_queries(
     spark: SparkSession,
     cfg: EngineConfig,
-    streams: dict[str, DataFrame],
+    streams: tuple[DataFrame, dict[str, Callable[[DataFrame], DataFrame]]],
     out_dir: str,
     available_now: bool = False,
 ) -> list:
-    """One checkpointed streaming query per output table, each flushed on
-    the WriteInterval cadence with the K1 column mapping applied."""
-    queries = []
-    for table, sdf in streams.items():
-        mapping = getattr(cfg.sink, SINK_COLUMNS[table])
-        writer = (
-            sdf.writeStream.outputMode("update")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(out_dir, f"_chk_{table}"))
-            .foreachBatch(
-                _mapped_writer(os.path.join(out_dir, table), mapping)
-            )
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(
-                processingTime=f"{cfg.aggregator.write_interval_s} seconds"
-            )
-        queries.append(writer.start())
-    return queries
+    """One checkpointed streaming query for all count tables, triggered on
+    the WriteInterval cadence; ``_mapped_writer`` writes each micro-batch.
+    Returns the queries started: none when F3 disables every table."""
+    events, tables = streams
+    if not tables:
+        return []
+    writer = (
+        events.writeStream.queryName(COUNT_QUERY)
+        .option("checkpointLocation", os.path.join(out_dir, f"_chk_{COUNT_QUERY}"))
+        .foreachBatch(_mapped_writer(out_dir, tables))
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{cfg.aggregator.write_interval_s} seconds")
+    return [writer.start()]
 
-def _mapped_writer(path: str, mapping: dict[str, str]):
-    """K1-mapped append writer, versioned per epoch.
+def _mapped_writer(out_dir: str, tables: dict[str, Callable[[DataFrame], DataFrame]]):
+    """foreachBatch fan-out: one micro-batch's partial counts for every
+    table, drained and cleared per trigger as the reference drains its
+    count maps per flush (aggregator.go:595-619).
 
-    Update mode re-emits a window's *cumulative* counters every trigger it
-    changes in, and parquet append keeps every version — summing raw files
-    would overcount (the reference instead drains-and-clears per flush,
-    aggregator.go:595-619). Writing ``__epoch`` makes the re-emission
-    explicit so ``read_output_table`` (or a ClickHouse ReplacingMergeTree,
-    the production sink for exactly this shape) collapses to the latest
-    version per key.
+    The batch is persisted once and every table's builder reads it. Each
+    table's K1-mapped rows go to ``<out_dir>/<table>/__epoch=<N>/`` with
+    overwrite, so an epoch that Spark replays after a crash replaces its
+    partial counts instead of adding them a second time.
     """
 
-    def write(df: DataFrame, epoch_id: int) -> None:
-        mapped = apply_column_config(df, {k: v for k, v in mapping.items() if k in df.columns})
-        mapped.withColumn("__epoch", F.lit(epoch_id)).write.mode("append").parquet(path)
+    def write(batch: DataFrame, epoch_id: int) -> None:
+        batch.persist()
+        try:
+            for table, build in tables.items():
+                build(batch).write.mode("overwrite").parquet(
+                    os.path.join(out_dir, table, f"{EPOCH_COL}={epoch_id}")
+                )
+        finally:
+            batch.unpersist()
 
     return write
 
 def read_output_table(spark: SparkSession, path: str, counter_col: str = "counter") -> DataFrame:
-    """Collapse update-mode re-emissions to the final value per key.
-
-    Every column except the counter and ``__epoch`` is part of the key
-    (window bounds + grouping-set dimensions); the latest epoch's counter
-    is the cumulative truth for that key. One hash-shuffle on the key —
-    at scale this is the same collapse ClickHouse's ReplacingMergeTree
-    performs at merge time, done here engine-side for plain parquet."""
+    """Combine the per-epoch partial counts: one row per window and
+    dimensions, with the sum of the counter and the earliest timestamp.
+    That is what ClickHouse's SummingMergeTree does at merge time with the
+    partial rows the reference inserts every flush; one hash shuffle on
+    the key does it here for plain parquet. Returns exactly the K1-mapped
+    columns. Rows written with ``aggregate = false`` carry no window and
+    come back as written."""
     df = spark.read.parquet(path)
-    keys = [c for c in df.columns if c not in (counter_col, "__epoch")]
-    return df.groupBy(*keys).agg(F.max_by(counter_col, "__epoch").alias(counter_col))
+    cols = [c for c in df.columns if c not in (EPOCH_COL, WINDOW_COL)]
+    if WINDOW_COL not in df.columns:
+        return df.select(*cols)
+    times = [f.name for f in df.schema.fields if f.name in cols and isinstance(f.dataType, TimestampType)]
+    keys = [c for c in cols if c != counter_col and c not in times]
+    return (
+        df.groupBy(WINDOW_COL, *keys)
+        .agg(*(F.min(t).alias(t) for t in times), F.sum(counter_col).alias(counter_col))
+        .select(*cols)
+    )
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="dnstap2clickhouse_spark")

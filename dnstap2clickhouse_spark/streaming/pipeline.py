@@ -56,10 +56,11 @@ def streaming_response_time_join(
 
     Watermarks on both sides bound the join state (replacing the
     reference's TTL + 8-entry cap); the time-range condition is the
-    structural negative-delta guard. Returns matched pairs with delta_us;
-    A9's windowed average runs downstream (e.g. in foreachBatch) because
-    Spark disallows chaining a second stateful agg after a stream-stream
-    join in one query.
+    structural negative-delta guard. Returns matched pairs with delta_us.
+    A9's windowed average can follow in the same append-mode query
+    (``avg_response_time_samples`` over this stream): Spark 4 accepts a
+    windowed aggregation after a stream-stream join, and emits each
+    window once the watermark closes it.
     """
     cfg = cfg or AggregatorConfig()
     q, r, cond, pair = _pair_join_inputs(events, watermark, cfg.max_response_delay)
@@ -71,16 +72,17 @@ def streaming_response_time_avg(
     samples_dir: str,
     cfg: AggregatorConfig | None = None,
 ) -> DataFrame:
-    """A9+A10 streaming binding — the two-timer interplay.
+    """A9+A10 streaming binding — the two-timer interplay, in two stages.
 
-    Spark disallows a second stateful aggregation after a stream-stream
-    join in one query, so the reference's two-timer structure
-    (aggregator.go:589-619: samples *computed* every
-    ResponseTimeAggregationInterval, *shipped* on WriteInterval) maps to
-    the idiomatic two-stage form: the join streams matched pairs into an
-    append-only samples sink (K2, micro-batch = flush), and the windowed
-    integer-division average (A9) is computed over the sink — same rows,
-    same integer math as the batch `response_time_table`.
+    The reference's two-timer structure (aggregator.go:589-619: samples
+    *computed* every ResponseTimeAggregationInterval, *shipped* on
+    WriteInterval) maps here to two stages: the join streams matched
+    pairs into an append-only samples sink (K2, micro-batch = flush), and
+    the windowed integer-division average (A9) is computed over the sink
+    — same rows, same integer math as the batch `response_time_table`,
+    every window included. Spark 4 also accepts the average after the
+    join in one append-mode query, which emits only the windows the
+    watermark has closed (see ``streaming_response_time_join``).
     """
     from ..operators.join import avg_response_time_samples
 

@@ -108,16 +108,31 @@ def test_daemon_honours_aggregate_false(spark):
         bridge.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-def test_update_mode_reemissions_collapse_to_final_counts(spark):
-    """Two availableNow runs over one checkpoint re-emit the same window
-    with a larger cumulative counter; raw parquet keeps both versions, so
-    summing raw rows overcounts — read_output_table must collapse to the
-    latest epoch's value per key (ADVICE r1)."""
+def _mapped_builder(spark, cfg, bridge_dir):
+    """clientQuery's batch builder over every chunk, K1-mapped."""
+    from dnstap2clickhouse_spark.operators.columns import apply_column_config
+    from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table
+    from dnstap2clickhouse_spark.sources.events import BRIDGE_SCHEMA, dns_query_stream
+
+    ev = spark.read.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
+    q = dns_query_stream(spark, "", events=ev)
+    return apply_column_config(client_query_table(spark, "", cfg.aggregator, queries=q), cfg.sink.query_columns)
+
+def _assert_same_rows(got, want):
+    assert want.count() > 0
+    assert got.exceptAll(want.select(*got.columns)).count() == 0
+    assert want.select(*got.columns).exceptAll(got).count() == 0
+
+def test_two_waves_partial_counts_sum_to_final_counts(spark):
+    """Two availableNow runs over one checkpoint, both waves inside ONE
+    event-time window: each run writes that window's partial counts under
+    its own ``__epoch``, and read_output_table sums them to the counts of
+    the batch builder over both waves, one row per key."""
     from pyspark.sql import functions as F
 
     from dnstap2clickhouse_spark.__main__ import read_output_table
 
-    work = tempfile.mkdtemp(prefix="daemon_collapse_")
+    work = tempfile.mkdtemp(prefix="daemon_partials_")
     sock = os.path.join(work, "dnstap.sock")
     bridge_dir = os.path.join(work, "bridge")
     out_dir = os.path.join(work, "tables")
@@ -138,7 +153,6 @@ def test_update_mode_reemissions_collapse_to_final_counts(spark):
             q.awaitTermination(timeout=60)
 
     def rows_at(start, n):
-        # all inside ONE event-time window so wave 2 re-emits wave 1's window
         return [
             {
                 "event_id": i,
@@ -153,20 +167,63 @@ def test_update_mode_reemissions_collapse_to_final_counts(spark):
 
     try:
         run_wave(rows_at(0, 20))
-        run_wave(rows_at(20, 20))  # same window, same keys, larger counters
+        run_wave(rows_at(20, 20))  # same window, same keys
 
-        raw = spark.read.parquet(os.path.join(out_dir, "clientQuery"))
-        collapsed = read_output_table(spark, os.path.join(out_dir, "clientQuery"))
+        path = os.path.join(out_dir, "clientQuery")
+        raw = spark.read.parquet(path)
+        assert raw.select("__epoch").distinct().count() == 2
+        collapsed = read_output_table(spark, path)
+        # keys counted in both waves have a partial row in each epoch
+        assert raw.count() > collapsed.count()
         # queries are even event_ids: 20 of 40 rows, x3 grouping-set variants
-        total = (
-            collapsed.agg(F.sum("counter").alias("s")).collect()[0]["s"]
-        )
+        total = collapsed.agg(F.sum("counter").alias("s")).collect()[0]["s"]
         assert total == 20 * 3, f"collapsed total {total} != 60"
-        # raw parquet holds the wave-1 versions too -> strictly more
-        raw_total = raw.agg(F.sum("counter").alias("s")).collect()[0]["s"]
-        assert raw_total > total
-        # collapse is unique per key
+        _assert_same_rows(collapsed, _mapped_builder(spark, cfg, bridge_dir))
         keys = [c for c in collapsed.columns if c != "counter"]
         assert collapsed.groupBy(*keys).count().filter("count > 1").count() == 0
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+def test_replayed_epoch_overwrites_its_partial_counts(spark):
+    """foreachBatch may run an epoch again after a crash: deleting the
+    last commit makes the restarted query replay it. Its partial counts
+    must replace, not add to, the first run's, so the combined table is
+    unchanged and equals the batch builder over all chunks."""
+    from dnstap2clickhouse_spark.__main__ import COUNT_QUERY, read_output_table
+    from dnstap2clickhouse_spark.sources.tables import load_table
+
+    work = tempfile.mkdtemp(prefix="daemon_replay_")
+    bridge_dir = os.path.join(work, "bridge")
+    out_dir = os.path.join(work, "tables")
+    cfg = EngineConfig()
+    cfg.aggregator.non_ok_client_responses = False
+    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    for i in range(3):
+        ev.filter(f"event_id % 3 = {i}").coalesce(1).write.mode("append").parquet(bridge_dir)
+
+    def run():
+        (q,) = start_queries(
+            spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir, available_now=True
+        )
+        assert q.awaitTermination(timeout=120)
+        return [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+    def totals():
+        return sorted(map(tuple, read_output_table(spark, os.path.join(out_dir, "clientQuery")).collect()))
+
+    try:
+        assert run() == [0]
+        first = totals()
+        commits = os.path.join(out_dir, f"_chk_{COUNT_QUERY}", "commits")
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, f)):
+                os.remove(os.path.join(commits, f))
+        assert run() == [last]  # the epoch really ran again
+        assert totals() == first
+        _assert_same_rows(
+            read_output_table(spark, os.path.join(out_dir, "clientQuery")),
+            _mapped_builder(spark, cfg, bridge_dir),
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -2,9 +2,8 @@
 
 - J1 joins: the SHUFFLE_HASH hints keep Catalyst from broadcasting a
   corpus-sized stream side through the driver (round-3 bench regression).
-- Adaptive sampler: one evaluation per micro-batch (persisted tap) and a
-  controller driven by a REAL StreamingQuery progress event, not
-  caller-fed booleans.
+- The daemon's foreachBatch fan-out: one evaluation per micro-batch
+  (persisted batch) for both count tables.
 - events_sketch_stats: accuracy-bound form is self-certifying (booleans
   all true ⇒ the DuckDB hash match proves sketch accuracy, not row count).
 """
@@ -15,12 +14,6 @@ import shutil
 import tempfile
 
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.streaming.adaptive_sampler import (
-    MAX_EXCEEDS,
-    MIN_SAMPLES,
-    AdaptiveSampler,
-    sampled_foreach_batch,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -43,14 +36,20 @@ def test_match_joins_never_broadcast(spark):
         assert "BroadcastHashJoin" not in plan, plan[:800]
         assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
 
-# ------------------------------------------------------- adaptive sampler
+# ------------------------------------------------- daemon foreachBatch fan-out
 
 def test_foreach_batch_evaluates_once(spark):
-    """The tap's count() and the sink must share ONE materialization of
-    the filtered batch (round-3 verdict: every micro-batch was computed
-    twice). A row-side-effect accumulator counts evaluations."""
+    """Both count tables must read ONE materialization of the micro-batch
+    (round-3 verdict: every micro-batch was computed twice). A
+    row-side-effect accumulator counts evaluations."""
+    import os
+
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
+
+    from dnstap2clickhouse_spark.__main__ import _mapped_writer, build_streams
+    from dnstap2clickhouse_spark.config import EngineConfig
+    from dnstap2clickhouse_spark.sources.events import BRIDGE_SCHEMA
 
     acc = spark.sparkContext.accumulator(0)
 
@@ -61,67 +60,25 @@ def test_foreach_batch_evaluates_once(spark):
 
     d = tempfile.mkdtemp(prefix="once_")
     try:
-        n_rows = 100
-        spark.range(n_rows).selectExpr("id").coalesce(1).write.mode("append").parquet(d)
-        sdf = (
-            spark.readStream.schema("id BIGINT").parquet(d)
-            .withColumn("id", tick("id"))
-        )
-        sampler = AdaptiveSampler()  # mask 0: filter keeps everything
-        sunk: list[int] = []
+        src, out = os.path.join(d, "src"), os.path.join(d, "out")
+        ev = load_table(spark, SF, "events")
+        n_rows = ev.count()
+        ev.coalesce(1).write.parquet(src)
+        sdf = spark.readStream.schema(BRIDGE_SCHEMA).parquet(src).withColumn("event_id", tick("event_id"))
+        _, tables = build_streams(spark, EngineConfig(), src)
+        assert set(tables) == {"clientQuery", "clientResponse"}
         q = (
-            sdf.writeStream.outputMode("append")
-            .foreachBatch(sampled_foreach_batch(sampler, lambda df, _e: sunk.append(df.count())))
+            sdf.writeStream.foreachBatch(_mapped_writer(out, tables))
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        assert sunk == [n_rows]
-        assert sampler.last_batch_rows == n_rows
-        # one pass for the persisted count; the sink's count hits the cache.
+        assert q.awaitTermination(timeout=120)
+        assert [p["numInputRows"] for p in q.recentProgress] == [n_rows]
+        for table in tables:
+            assert spark.read.parquet(os.path.join(out, table)).count() > 0
+        # one pass fills the persisted batch; the second table reads it.
         # (allow a few task-retry stragglers, forbid the 2x signature)
         assert acc.value < 2 * n_rows, f"batch evaluated twice: {acc.value} ticks"
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-def test_observe_progress_from_real_streaming_state(spark):
-    """Drive tuneMask's overflow input from an actual stateful streaming
-    query's lastProgress (stateOperators.numRowsTotal), not a
-    caller-supplied boolean (reference signal: aggregator.go:455-460)."""
-    d = tempfile.mkdtemp(prefix="prog_")
-    try:
-        ev = load_table(spark, SF, "events").selectExpr("event_id % 64 AS k")
-        ev.coalesce(1).write.mode("append").parquet(d)
-        sdf = spark.readStream.schema("k BIGINT").parquet(d)
-        q = (
-            sdf.groupBy("k").count()
-            .writeStream.outputMode("update")
-            .format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.lastProgress
-        spark  # keep flake quiet
-        # the real event must carry state rows (64 distinct keys)
-        from dnstap2clickhouse_spark.streaming.adaptive_sampler import _progress_dict
-
-        p = _progress_dict(progress)
-        state_rows = sum(op["numRowsTotal"] for op in p["stateOperators"])
-        assert state_rows >= 64
-
-        # cap below the observed pressure: repeated progress events must
-        # widen the mask through the exceeds ladder
-        tight = AdaptiveSampler(state_rows_cap=state_rows - 1)
-        for _ in range(MAX_EXCEEDS + 1):
-            tight.observe_progress(progress, n_samples=MIN_SAMPLES)
-        assert tight.mask > 0, "observed state pressure must widen the mask"
-
-        # cap above the pressure: same events, no overflow, mask untouched
-        loose = AdaptiveSampler(state_rows_cap=state_rows + 1)
-        for _ in range(MAX_EXCEEDS + 1):
-            loose.observe_progress(progress, n_samples=MIN_SAMPLES)
-        assert loose.mask == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -1,21 +1,24 @@
 """Daemon soak at rate (r4 verdict item 8): the full S1-S5 x A1-A10 x K2
-interaction — unix socket -> bridge -> THREE concurrent processing-time
-streaming queries (clientQuery agg, clientResponse agg, the J1 stateful
-match) — under sustained multi-wave load with the RocksDB state store
-enabled, asserting from real ``lastProgress`` signals that
+interaction — unix socket -> bridge -> TWO concurrent processing-time
+streaming queries (the daemon's stateless fan-out into clientQuery and
+clientResponse, and the J1 stateful match) — under sustained multi-wave
+load with the RocksDB state store enabled, asserting from real
+``lastProgress`` signals that
 
-- state stays BOUNDED: ``stateOperators[].numRowsTotal`` does not grow
-  across waves (watermark eviction works under RocksDB exactly as under
-  the default HDFS-backed provider), and the final state is far below
-  cumulative input, and
-- the trigger backlog DRAINS: the event-time watermark of every query
-  advances past each wave (no batch pile-up), with zero input rows
-  pending at the end.
+- the match query's state stays BOUNDED: ``stateOperators[].numRowsTotal``
+  does not grow across waves (watermark eviction works under RocksDB
+  exactly as under the default HDFS-backed provider), and the final state
+  is far below cumulative input, while the fan-out keeps no state at all;
+- the trigger backlog DRAINS: the fan-out has processed every row sent
+  and the match query's event-time watermark advances past each wave (no
+  batch pile-up);
+- the partial counts sum to the batch builders over every chunk.
 
 Reference behavior being soaked: main.go:95-115 run-until-signal with
-aggregator flush timers (aggregator.go:535,595-619) and the TTL-evicting
-match map (aggregator.go:111-121) — here as watermarked window state and
-an ``applyInPandasWithState`` state machine over RocksDB.
+aggregator flush timers that drain and clear the counts
+(aggregator.go:535,595-619) and the TTL-evicting match map
+(aggregator.go:111-121) — here as per-epoch partial counts and an
+``applyInPandasWithState`` state machine over RocksDB.
 """
 
 from __future__ import annotations
@@ -32,10 +35,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dnstap2clickhouse_spark.__main__ import BRIDGE_SCHEMA, build_streams, start_queries
+from dnstap2clickhouse_spark.__main__ import BRIDGE_SCHEMA, build_streams, read_output_table, start_queries
 from dnstap2clickhouse_spark.config import EngineConfig
+from dnstap2clickhouse_spark.operators.columns import apply_column_config
+from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table, client_response_table
 from dnstap2clickhouse_spark.sources.bridge import SocketBridge, send_frames
-from dnstap2clickhouse_spark.sources.events import dns_pair_streams
+from dnstap2clickhouse_spark.sources.events import dns_pair_streams, dns_query_stream, dns_response_stream
 from dnstap2clickhouse_spark.streaming.match_state import (
     stateful_match_once,
     tag_pair_streams,
@@ -76,6 +81,10 @@ def _watermark_us(q) -> int:
     return int(dt.timestamp() * 1_000_000)
 
 
+def _rows_processed(q) -> int:
+    return sum(p["numInputRows"] for p in q.recentProgress)
+
+
 def _state_rows(q) -> int:
     p = q.lastProgress or {}
     return sum(op.get("numRowsTotal", 0) for op in p.get("stateOperators", []))
@@ -94,8 +103,8 @@ def test_daemon_soak_rocksdb_bounded_state(spark):
     queries = []
     try:
         cfg = EngineConfig()
-        # the two aggregation branches, live processing-time cadence
-        queries = start_queries(
+        # the fan-out into both count tables, live processing-time cadence
+        (fanout,) = start_queries(
             spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir
         )
         # plus the J1 stateful match on the same bridge source, with the
@@ -111,10 +120,10 @@ def test_daemon_soak_rocksdb_bounded_state(spark):
             .trigger(processingTime="1 seconds")
             .start()
         )
-        queries = list(queries) + [mq]
+        queries = [fanout, mq]
 
         sent = 0
-        state_by_wave: list[dict[str, int]] = []
+        match_state: list[int] = []
         for wave in range(N_WAVES):
             rows = _wave_rows(wave)
             send_frames(sock, rows)
@@ -125,58 +134,68 @@ def test_daemon_soak_rocksdb_bounded_state(spark):
             assert bridge.frames_read == sent, f"bridge stalled in wave {wave}"
             bridge.flush()
 
-            # drain signal: every query's watermark must pass this
-            # wave's base (event time minus the 10-minute delay) — the
-            # proof the wave was ingested AND eviction-relevant batches
-            # ran; a growing backlog would never get there
+            # drain signal: the fan-out has processed every row sent, and
+            # the match query's watermark has passed this wave's base
+            # (event time minus the 10-minute delay) — the proof the wave
+            # was ingested AND eviction-relevant batches ran; a growing
+            # backlog would never get there
             want_wm = BASE_US + wave * WAVE_GAP_US - 10 * 60 * 1_000_000
             deadline = time.time() + 90
             while time.time() < deadline:
-                if all(_watermark_us(q) >= want_wm for q in queries):
+                if _rows_processed(fanout) >= sent and _watermark_us(mq) >= want_wm:
                     break
                 for q in queries:
                     assert q.exception() is None, f"query died: {q.exception()}"
                 time.sleep(0.5)
             else:
-                wms = {q.name: _watermark_us(q) for q in queries}
                 raise AssertionError(
-                    f"backlog did not drain in wave {wave}: watermarks {wms} "
-                    f"never reached {want_wm}"
+                    f"backlog did not drain in wave {wave}: fan-out rows "
+                    f"{_rows_processed(fanout)} of {sent}, match watermark "
+                    f"{_watermark_us(mq)} never reached {want_wm}"
                 )
-            state_by_wave.append({q.name: _state_rows(q) for q in queries})
+            match_state.append(_state_rows(mq))
+            assert _rows_processed(fanout) == sent
+
+        # the fan-out keeps no state: no state operator in any batch
+        assert all(not p.get("stateOperators") for p in fanout.recentProgress)
 
         # RocksDB is genuinely in play: the provider surfaces its own
-        # custom metrics in every stateful query's progress
-        for q in queries:
-            ops = (q.lastProgress or {}).get("stateOperators", [])
-            assert ops, f"{q.name}: no state operators in progress"
-            metrics = json.dumps([op.get("customMetrics", {}) for op in ops])
-            assert "rocksdb" in metrics.lower(), (
-                f"{q.name}: no RocksDB metrics — provider not active?"
-            )
+        # custom metrics in the stateful query's progress
+        ops = (mq.lastProgress or {}).get("stateOperators", [])
+        assert ops, "soakMatch: no state operators in progress"
+        metrics = json.dumps([op.get("customMetrics", {}) for op in ops])
+        assert "rocksdb" in metrics.lower(), "soakMatch: no RocksDB metrics — provider not active?"
 
         # bounded state: constant per-wave load + 30-min wave spacing
-        # means earlier waves' windows/pending entries are past the
-        # watermark when a later wave lands — steady state, not growth.
+        # means earlier waves' pending entries are past the watermark
+        # when a later wave lands — steady state, not growth.
         # (generous 2x guard band over the first steady snapshot; an
         # eviction failure accumulates ~N_WAVES x and trips this)
-        for q in queries:
-            first, last = state_by_wave[1][q.name], state_by_wave[-1][q.name]
-            assert last <= max(first, 1) * 2, (
-                f"{q.name}: state grew {state_by_wave}"
-            )
+        assert match_state[-1] <= max(match_state[1], 1) * 2, f"state grew {match_state}"
+        # and state is far below cumulative input — eviction happened at all
+        assert match_state[-1] < sent
 
-        # and state is far below cumulative input — eviction happened at
-        # all (total input rows across waves is N_WAVES * WAVE_ROWS per
-        # branch input; grouping sets inflate clientQuery state by a
-        # constant factor per LIVE window only)
-        total_last = sum(state_by_wave[-1].values())
-        assert total_last < sent * 2
-
-        # outputs actually flowed (K2): both agg tables materialized
-        for table in ("clientQuery", "clientResponse"):
-            path = os.path.join(out_dir, table)
-            assert os.path.isdir(path) and spark.read.parquet(path).count() > 0
+        # outputs actually flowed (K2): both count tables equal their
+        # batch builder over every chunk once the partials are summed
+        fanout.stop()
+        ev = spark.read.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
+        want = {
+            "clientQuery": apply_column_config(
+                client_query_table(spark, "", cfg.aggregator, queries=dns_query_stream(spark, "", events=ev)),
+                cfg.sink.query_columns,
+            ),
+            "clientResponse": apply_column_config(
+                client_response_table(
+                    spark, "", cfg.aggregator, responses=dns_response_stream(spark, "", events=ev)
+                ),
+                cfg.sink.response_columns,
+            ),
+        }
+        for table, exp in want.items():
+            got = read_output_table(spark, os.path.join(out_dir, table))
+            assert exp.count() > 0
+            assert got.exceptAll(exp.select(*got.columns)).count() == 0
+            assert exp.select(*got.columns).exceptAll(got).count() == 0
     finally:
         for q in queries:
             try:

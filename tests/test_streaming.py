@@ -5,7 +5,7 @@
   (Structured Streaming's correctness story, SURVEY.md section 5).
 - Streaming sinks, redelivery dedup, checkpoint restart, session windows
   and the stateless curation filter.
-- The A11 stats listener and the O4 adaptive sampler controller.
+- The A11 stats listener.
 """
 
 from __future__ import annotations
@@ -21,8 +21,8 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark import streaming as st
-from dnstap2clickhouse_spark.__main__ import _mapped_writer
-from dnstap2clickhouse_spark.config import AggregatorConfig
+from dnstap2clickhouse_spark.__main__ import _mapped_writer, build_streams, read_output_table
+from dnstap2clickhouse_spark.config import AggregatorConfig, EngineConfig
 from dnstap2clickhouse_spark.operators import dns_pipeline as dp
 from dnstap2clickhouse_spark.operators.join import match_response_times
 from dnstap2clickhouse_spark.sources.events import (
@@ -31,12 +31,6 @@ from dnstap2clickhouse_spark.sources.events import (
     dns_response_stream,
 )
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.streaming.adaptive_sampler import (
-    MAX_SAMPLES,
-    MIN_SAMPLES,
-    AdaptiveSampler,
-    sampled_foreach_batch,
-)
 from dnstap2clickhouse_spark.streaming.stats import EngineStatsListener, stats_intervals
 
 SF = "/root/testdata/sf0.001"
@@ -107,6 +101,42 @@ def test_stream_join_equals_batch(spark, events_dir):
     cols = ["responseTime", "identity", "delta_us"]
     assert _rows(mem, cols) == _rows(batch, cols)
 
+def test_stream_join_then_window_avg_is_one_query(spark, events_dir):
+    """A windowed aggregation after the stream-stream join runs as ONE
+    append-mode availableNow query, and equals the batch
+    clientQueryResponseTime table on every window the final watermark
+    closed. The chunks form one micro-batch, so no row arrives late."""
+    from pyspark.sql import functions as F
+
+    from dnstap2clickhouse_spark.__main__ import read_events_source
+    from dnstap2clickhouse_spark.operators.join import avg_response_time_samples
+
+    cfg = AggregatorConfig()
+    interval = cfg.response_time_interval_s
+    joined = st.streaming_response_time_join(
+        read_events_source(spark, None, events_dir), cfg, watermark=WATERMARK
+    )
+    sdf = avg_response_time_samples(joined, f"{interval} seconds")
+    q = (
+        sdf.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("rt_one_query")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(timeout=120)
+        got = spark.table("rt_one_query")
+        wm = q.lastProgress["eventTime"]["watermark"]
+        closed = F.col("windowStart") + F.expr(f"INTERVAL {interval} SECONDS") <= F.to_timestamp(F.lit(wm))
+        want = dp.response_time_table(spark, SF).filter(closed)
+        cols = ["windowStart", "identity", "responseTimeDelta", "nSamples"]
+        assert got.count() > 0
+        assert _rows(got, cols) == _rows(want, cols)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("rt_one_query")
+
 def test_stream_passthrough_counts(spark, events_dir):
     sdf = _passthrough(st.read_events_stream(spark, events_dir))
     mem = st.run_stream_to_memory(sdf, "append", spark)
@@ -129,22 +159,30 @@ def test_streaming_avg_equals_batch_table(spark, events_dir):
         shutil.rmtree(os.path.dirname(samples), ignore_errors=True)
 
 def test_foreach_batch_sink_with_column_config(spark, events_dir):
-    """The daemon's foreachBatch sink applies the K1 column mapping and
-    tags each micro-batch with its ``__epoch``."""
+    """The daemon's foreachBatch fan-out writes every enabled table from
+    each micro-batch: K1-mapped partial counts under one ``__epoch`` per
+    batch, with the window start kept as a hidden column that
+    read_output_table drops."""
     out = tempfile.mkdtemp(prefix="sink_out_")
     try:
-        mapping = {"responseTime": "ts", "identity": "ident", "counter": "hits"}
-        sdf = _passthrough(st.read_events_stream(spark, events_dir))
+        cfg = EngineConfig()
+        cfg.sink.response_columns = {"responseTime": "ts", "identity": "ident", "counter": "hits"}
+        _, tables = build_streams(spark, cfg, events_dir)
         q = (
-            sdf.writeStream.outputMode("append")
-            .foreachBatch(_mapped_writer(out, mapping))
+            st.read_events_stream(spark, events_dir)  # one chunk per micro-batch
+            .writeStream.foreachBatch(_mapped_writer(out, tables))
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        written = spark.read.parquet(out)
-        assert set(written.columns) == {"ts", "ident", "hits", "__epoch"}
+        assert q.awaitTermination(timeout=120)
+        written = spark.read.parquet(os.path.join(out, "clientResponse"))
+        assert set(written.columns) == {"ts", "ident", "hits", "__epoch", "__windowStart"}
         assert written.count() > 0
+        epochs = spark.read.parquet(os.path.join(out, "clientQuery")).select("__epoch").distinct()
+        assert sorted(r[0] for r in epochs.collect()) == list(range(N_CHUNKS))
+        got = read_output_table(spark, os.path.join(out, "clientQuery"))
+        want = dp.client_query_table(spark, SF).drop("windowStart")
+        assert _rows(got) == _rows(want, got.columns)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -302,7 +340,7 @@ def test_streaming_agg_equals_batch_any_chunking(spark):
         assert got == want, f"n_chunks={n_chunks}: {len(got)} vs {len(want)} rows"
 
 
-# --------------------- A11 stats listener + O4 adaptive sampler controller
+# ------------------------------------------------------ A11 stats listener
 
 def test_stats_interval_ladder():
     # 10, 15, 22.5, ... capped at 4h (main.go:38, 155-164)
@@ -333,49 +371,3 @@ def test_listener_counts_rows(spark, tmp_path):
         assert sum(s["rows"] for s in listener.read_and_reset().values()) == 0
     finally:
         spark.streams.removeListener(listener)
-
-def test_tune_mask_widens_and_narrows():
-    s = AdaptiveSampler()
-    # flood: repeated over-MAX intervals widen the mask (halve rate)
-    s.observe(10_000)
-    s.observe(10_000)
-    assert s.mask == 0b11
-    # starve: under-MIN intervals narrow it back (double rate)
-    s.observe(MIN_SAMPLES - 1)
-    s.observe(MIN_SAMPLES - 1)
-    assert s.mask == 0
-    # overflow pressure alone widens after MAX_EXCEEDS
-    for _ in range(5):
-        s.observe(100, state_overflowed=True)
-    assert s.mask > 0
-
-def test_adaptive_foreach_batch_controls_rate(spark):
-    """Drive the controller from an actual streaming query: a flood of
-    ids must leave the controller with a widened mask and later batches
-    smaller than earlier ones."""
-    d = tempfile.mkdtemp(prefix="adapt_")
-    try:
-        ev = load_table(spark, SF, "events").selectExpr("event_id % 65536 AS id")
-        for i in range(3):  # 3 micro-batches of ~1600 rows each
-            ev.filter(f"id % 3 = {i}").coalesce(1).write.mode("append").parquet(d)
-        schema = "id BIGINT"
-        sdf = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-        )
-        sampler = AdaptiveSampler()
-        seen: list[int] = []
-        q = (
-            sdf.writeStream.outputMode("append")
-            .foreachBatch(
-                sampled_foreach_batch(sampler, lambda df, _e: seen.append(df.count()))
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert len(seen) == 3
-        assert sampler.mask > 0, "flood must widen the mask"
-        assert seen[-1] < seen[0], "later batches must be sampled down"
-        assert seen[-1] <= MAX_SAMPLES * 2  # rate heading into the band
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
