@@ -9,11 +9,17 @@ The reference wires unix socket -> decoder goroutines -> aggregator ->
 ClickHouse writer through channels. Here the same dataflow is:
 
     unix socket -> SocketBridge daemon (sources/bridge.py, S1-S5)
-                -> parquet chunk files
+                -> parquet chunk files of raw dnstap frames
                 -> Structured Streaming file source
-                -> one foreachBatch fan-out per micro-batch: the batch
-                   builders of the enabled tables (F3 plan gating)
+                -> one foreachBatch fan-out per micro-batch: per enabled
+                   table (F3 plan gating), the F1-F4/P1-P7 decode chain
+                   (operators/prep.py) and the table's batch builder
                 -> per-epoch partial counts with K1 column mapping
+
+The chunk directory may also hold events-shaped chunks (the ``events``
+table's columns, as a replayed backlog is written): they go through the
+canonical events mapping instead of the decode chain, and both kinds of
+row are counted together.
 
 The count tables keep no window state across triggers, as the reference
 keeps none across flushes: every WriteInterval it drains and clears its
@@ -35,15 +41,18 @@ import argparse
 import os
 import signal
 import sys
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 from .config import EngineConfig
 from .operators.columns import apply_column_config
 from .operators.dns_pipeline import client_query_table, client_response_table
+from .operators.prep import decode_frames
 from .session import get_spark
 from .sources.bridge import SocketBridge
 from .sources.events import BRIDGE_SCHEMA, dns_query_stream, dns_response_stream
@@ -58,33 +67,50 @@ EPOCH_COL = "__epoch"
 #: may prune every other column that tells two windows apart
 WINDOW_COL = "__windowStart"
 
+#: the one schema of the chunk directory: the events columns plus the
+#: bridge's dnstap raw-frame columns. A chunk reads the columns it lacks
+#: as NULL, so an events row has no ``frameType`` and a dnstap row no
+#: ``event_id``.
+CHUNK_SCHEMA = StructType(BRIDGE_SCHEMA.fields + from_arrow_schema(SocketBridge._DNSTAP_SCHEMA).fields)
+
 def read_events_source(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
 ) -> DataFrame:
-    """The input stream: the socket bridge's chunk files."""
-    return spark.readStream.schema(BRIDGE_SCHEMA).parquet(bridge_dir)
+    """The input stream: the chunk files, in ``CHUNK_SCHEMA``."""
+    return spark.readStream.schema(CHUNK_SCHEMA).parquet(bridge_dir)
 
 def build_streams(
     spark: SparkSession, cfg: EngineConfig, bridge_dir: str
 ) -> tuple[DataFrame, dict[str, Callable[[DataFrame], DataFrame]]]:
-    """The bridge stream, and F3 static plan gating (dnstap.go:253-255;
+    """The chunk stream, and F3 static plan gating (dnstap.go:253-255;
     aggregator.go:553-573): for each enabled table only, a function from
-    one events batch to its K1-mapped rows. Each is the table's batch
-    builder, unchanged, so ``[aggregator]`` options such as
+    one batch of chunk rows to its K1-mapped rows. Each is the table's
+    batch builder, unchanged, so ``[aggregator]`` options such as
     ``aggregate = false`` apply exactly as in batch."""
     agg, sink = cfg.aggregator, cfg.sink
     tables: dict[str, Callable[[DataFrame], DataFrame]] = {}
     if agg.client_queries:
         tables["clientQuery"] = lambda ev: _k1(
-            client_query_table(spark, "", agg, queries=dns_query_stream(spark, "", events=ev)),
+            client_query_table(spark, "", agg, queries=_rows(spark, ev, dns_query_stream, "CLIENT_QUERY")),
             sink.query_columns,
         )
     if agg.non_ok_client_responses:
         tables["clientResponse"] = lambda ev: _k1(
-            client_response_table(spark, "", agg, responses=dns_response_stream(spark, "", events=ev)),
+            client_response_table(
+                spark, "", agg, responses=_rows(spark, ev, dns_response_stream, "CLIENT_RESPONSE")
+            ),
             sink.response_columns,
         )
     return read_events_source(spark, cfg, bridge_dir), tables
+
+def _rows(
+    spark: SparkSession, ev: DataFrame, events_mapping: Callable[..., DataFrame], kind: str
+) -> DataFrame:
+    """The query or response rows of one batch: events rows through the
+    canonical mapping (a dnstap row's NULL ``event_id`` drops it there)
+    and dnstap rows through the decode chain (an events row's NULL
+    ``frameType`` drops it at F1)."""
+    return events_mapping(spark, "", events=ev).unionByName(decode_frames(ev, kind))
 
 def _k1(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """K1 column mapping, plus the window start of windowed counts as the
@@ -173,32 +199,30 @@ def main(argv: list[str] | None = None) -> int:
     cfg = load_config(args.config)
     bridge_dir = os.path.join(args.work_dir, "bridge")
     out_dir = os.path.join(args.work_dir, "tables")
+
+    # main.go:95-115. The handlers go in before the bridge starts: a
+    # signal during the seconds Spark takes to start must still stop the
+    # bridge, which writes every frame it has acknowledged.
+    stop = threading.Event()
+    signal.signal(signal.SIGINT, lambda signum, frame: stop.set())
+    signal.signal(signal.SIGTERM, lambda signum, frame: stop.set())
     bridge = SocketBridge(args.socket, bridge_dir)
-    bridge.start()
-
-    spark = get_spark("dnstap2clickhouse_spark")
-    spark.sparkContext.setLogLevel(args.loglevel)
-    listener = EngineStatsListener()
-    spark.streams.addListener(listener)
-
-    queries = start_queries(spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir)
-
-    stop = {"flag": False}
-
-    def _shutdown(signum, frame):  # main.go:95-115
-        stop["flag"] = True
-
-    signal.signal(signal.SIGINT, _shutdown)
-    signal.signal(signal.SIGTERM, _shutdown)
+    spark, listener, queries = None, EngineStatsListener(), []
     try:
-        while not stop["flag"]:
-            signal.pause()
+        bridge.start()
+        spark = get_spark("dnstap2clickhouse_spark")
+        spark.sparkContext.setLogLevel(args.loglevel)
+        spark.streams.addListener(listener)
+        if not stop.is_set():
+            queries = start_queries(spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir)
+        stop.wait()
     finally:
         for q in queries:
             q.stop()
         bridge.stop()
-        print("stats:", listener.read_and_reset(), file=sys.stderr)
-        spark.stop()
+        if spark is not None:
+            print("stats:", listener.read_and_reset(), file=sys.stderr)
+            spark.stop()
     return 0
 
 if __name__ == "__main__":

@@ -11,10 +11,6 @@ column mapping is a select/alias (operators.columns); task retries +
 streaming checkpoints give at-least-once into an idempotent target —
 strictly stronger than K4's drop semantics, a documented upgrade
 (SURVEY.md section 2.8). The drop behavior is intentionally NOT ported.
-
-The ClickHouse JDBC writer is gated: the driver jar is not in this
-environment, so ``clickhouse_writer`` builds the writer function but its
-use requires a reachable server + jar (documented, import-safe).
 """
 
 from __future__ import annotations
@@ -79,69 +75,6 @@ def insert_statement(table: str, mapping: dict[str, str]) -> str:
         raise ValueError("column mapping prunes every column")
     placeholders = ", ".join("?" for _ in cols)
     return f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({placeholders})"
-
-def clickhouse_url(hosts: list[str], database: str) -> str:
-    """Multi-host ClickHouse JDBC URL (the reference passes the full host
-    list to clickhouse.Options.Addr for failover — clickhouse.go:94-104);
-    the JDBC driver takes the same comma-separated list."""
-    if not hosts:
-        raise ValueError("at least one host required")
-    return f"jdbc:clickhouse://{','.join(hosts)}/{database}"
-
-def clickhouse_properties(
-    lz4: bool = True,
-    max_execution_time_s: int = 60,
-    socket_timeout_ms: int = 30_000,
-    dial_timeout_ms: int = 5_000,
-    secure: bool = False,
-    insecure_skip_verify: bool = False,
-) -> dict[str, str]:
-    """Connection properties mirroring the reference's client options
-    (clickhouse.go:86-110): LZ4 compression, ``max_execution_time=60``,
-    5 s dial timeout, and the Secure/InsecureSkipVerify TLS pair
-    (clickhouse.go:107-110). Keys are the public clickhouse-jdbc property
-    names; they ride the generic JDBC ``properties`` passthrough."""
-    props = {
-        "max_execution_time": str(max_execution_time_s),
-        "socket_timeout": str(socket_timeout_ms),
-        "connect_timeout": str(dial_timeout_ms),
-    }
-    if lz4:
-        props["compress_algorithm"] = "lz4"
-    if secure:
-        props["ssl"] = "true"
-        if insecure_skip_verify:
-            props["sslmode"] = "NONE"  # skip chain verification
-    return props
-
-#: clickhouse.go:101 MaxOpenConns — one JDBC connection per write
-#: partition, so capping partitions caps the pool
-CLICKHOUSE_MAX_OPEN_CONNS = 2
-
-def clickhouse_writer(
-    url: str,
-    table: str,
-    mapping: dict[str, str] | None = None,
-    batchsize: int = 100_000,
-    properties: dict[str, str] | None = None,
-    max_open_conns: int = CLICKHOUSE_MAX_OPEN_CONNS,
-) -> Callable[[DataFrame, int], None]:
-    """ClickHouse flavor of ``jdbc_writer`` (requires the ClickHouse JDBC
-    jar on the classpath + a reachable server; clickhouse.go:86-114).
-    Defaults the connection properties to :func:`clickhouse_properties`
-    (LZ4 + max_execution_time + dial timeout) and connection count to the
-    reference's pool size, both overridable per call."""
-    props = clickhouse_properties()
-    props.update(properties or {})
-    return jdbc_writer(
-        url,
-        table,
-        mapping,
-        batchsize,
-        driver="com.clickhouse.jdbc.ClickHouseDriver",
-        properties=props,
-        num_partitions=max_open_conns,
-    )
 
 def write_sorted_parquet(
     df: DataFrame,

@@ -25,10 +25,11 @@ behaviors preserved:
 - S3/S4: frames are ``protobuf:dnstap.Dnstap``, decoded by the in-repo
   pure-Python codecs (``dnstap_proto`` for the protobuf, ``dnswire`` for
   the embedded DNS message) into the decode chain's raw-frame row, a
-  tuple in chunk-schema order. JSON and a binary stand-in for events
-  rows ride the same frame layer. A frame that fails to decode, or whose
-  row fails to cast to its chunk schema, is dropped and counted in
-  ``decode_errors``; ``frames_read`` counts the rows written;
+  tuple in chunk-schema order. It is the only frame format the bridge
+  takes, so every chunk it writes has the one ``_DNSTAP_SCHEMA``. A frame
+  that fails to decode, or whose row fails to cast to that schema, is
+  dropped and counted in ``decode_errors``; ``frames_read`` counts the
+  rows written;
 - S5: a bounded pool of readers drains accepted connections from one
   queue (the reference's conn channel, cap 1 — dnstap.go:72). A reader is
   a socket thread plus a decode process of its own, forked by ``start()``
@@ -39,26 +40,24 @@ behaviors preserved:
 
 Hand-off and chunk files: the socket thread frames each ``recv`` and sends
 its payloads down its decode process's pipe, which sends back the decoded
-rows and the count of frames that failed. A dnstap row comes back as one
-tuple in ``_DNSTAP_SCHEMA`` order, so the socket thread builds no dict
-per frame when it loads a result and builds each chunk one typed column at a time (events rows
-from the stand-in codecs stay dicts). One batch is in flight while
-the thread reads the next, so results come back in order; before it
-handles any control frame, and whenever a ``recv`` times out, the thread
-takes in every batch still in flight, so FINISH follows every row sent
-before STOP and an idle connection's rows are not held back. Taking in
-appends the rows to the shared buffer in one lock hold, cuts off chunks of
-exactly ``flush_rows`` rows, and writes them after releasing the lock, so
-one reader's parquet write never stalls another. Only ``flush()`` and
-``stop()`` write a shorter chunk. Each file is written under a dot-prefixed
-temp name, which Spark's file source skips, and renamed to
-``chunk-<uuid>.parquet`` once complete.
+rows and the count of frames that failed. A row comes back as one tuple
+in ``_DNSTAP_SCHEMA`` order, so the socket thread builds no dict per frame
+when it loads a result and builds each chunk one typed column at a time.
+One batch is in flight while the thread reads the next, so results come
+back in order; before it handles any control frame, and whenever a
+``recv`` times out, the thread takes in every batch still in flight, so
+FINISH follows every row sent before STOP and an idle connection's rows
+are not held back. Taking in appends the rows to the shared buffer in one
+lock hold, cuts off chunks of exactly ``flush_rows`` rows, and writes them
+after releasing the lock, so one reader's parquet write never stalls
+another. Only ``flush()`` and ``stop()`` write a shorter chunk. Each file
+is written under a dot-prefixed temp name, which Spark's file source
+skips, and renamed to ``chunk-<uuid>.parquet`` once complete.
 """
 
 from __future__ import annotations
 
 import contextlib
-import json
 import marshal
 import multiprocessing
 import os
@@ -86,8 +85,8 @@ MAX_READERS = 32  # dnstap.go:38
 #: another thread held at the fork.
 _FORK = multiprocessing.get_context("fork")
 _FRAME_HEADER = struct.Struct(">I")  # 4-byte big-endian length prefix
-#: what the frame decoders raise on a malformed frame (truncated fields,
-#: bad varints or wire types, bad UTF-8/ASCII or JSON, wrong value types)
+#: what the frame decoder raises on a malformed frame (truncated fields,
+#: bad varints or wire types, bad UTF-8/ASCII, wrong value types)
 _MALFORMED_FRAME_ERRORS = (ValueError, IndexError, TypeError, AttributeError, struct.error)
 
 # --------------------------------------------------------------- framestream
@@ -104,13 +103,8 @@ FSTRM_STOP = 0x03
 FSTRM_READY = 0x04
 FSTRM_FINISH = 0x05
 FSTRM_FIELD_CONTENT_TYPE = 0x01
-#: content types this bridge accepts: real dnstap protobuf plus the two
-#: local stand-in encodings carried by the same frame layer
-ACCEPTED_CONTENT_TYPES = (
-    b"protobuf:dnstap.Dnstap",
-    b"application/json",
-    b"application/x-bridge-binary",
-)
+#: the one content type this bridge accepts (dnstap.go:192-203)
+ACCEPTED_CONTENT_TYPES = (b"protobuf:dnstap.Dnstap",)
 
 def encode_control_frame(ctype: int, content_types: tuple[bytes, ...] = ()) -> bytes:
     """Escape + length + control payload (type and CONTENT_TYPE fields)."""
@@ -139,46 +133,6 @@ def backoff_delays(cap: int = 60) -> Iterator[int]:
     while True:
         yield d
         d = min(d * 2 + 1, cap)
-
-#: binary frame layout: magic 0x01, then event_id/ts_us/user_id (int64) +
-#: value (float64), then two length-prefixed UTF-8 strings. Stands in for
-#: the dnstap protobuf wire encoding (dnstap.go:205-233) with the same
-#: shape: fixed header + variable-length payload fields.
-_BIN_MAGIC = 0x01
-_BIN_FIXED = struct.Struct(">qqqd")
-_BIN_STR = struct.Struct(">H")
-
-def encode_binary_frame(row: dict) -> bytes:
-    """Encode an event row in the bridge's binary frame format."""
-    et = row["event_type"].encode()
-    pr = row["props"].encode()
-    return (
-        bytes([_BIN_MAGIC])
-        + _BIN_FIXED.pack(row["event_id"], row["ts_us"], row["user_id"], row["value"])
-        + _BIN_STR.pack(len(et))
-        + et
-        + _BIN_STR.pack(len(pr))
-        + pr
-    )
-
-def decode_binary_frame(payload: bytes) -> dict:
-    event_id, ts_us, user_id, value = _BIN_FIXED.unpack_from(payload, 1)
-    off = 1 + _BIN_FIXED.size
-    (n,) = _BIN_STR.unpack_from(payload, off)
-    off += _BIN_STR.size
-    event_type = payload[off : off + n].decode()
-    off += n
-    (n,) = _BIN_STR.unpack_from(payload, off)
-    off += _BIN_STR.size
-    props = payload[off : off + n].decode()
-    return {
-        "event_id": event_id,
-        "ts_us": ts_us,
-        "user_id": user_id,
-        "event_type": event_type,
-        "value": value,
-        "props": props,
-    }
 
 def _dnstap_row(payload: bytes) -> tuple:
     """S3+S4 decode of one ``dnstap.Dnstap`` protobuf frame into a tuple in
@@ -232,28 +186,14 @@ def decode_dnstap_protobuf(payload: bytes) -> dict:
     """
     return dict(zip(SocketBridge._DNSTAP_NAMES, _dnstap_row(payload)))
 
-def _decode_frame(payload: bytes) -> tuple | dict:
-    """S3/S4 plug point: frame bytes -> one decoded row.
-
-    Sniffs the frame format: ``{`` -> a JSON events row (dict); magic
-    0x01 -> the binary events layout above (dict); anything else is
-    parsed as a dnstap protobuf frame into a ``_DNSTAP_SCHEMA``-order
-    tuple (``_dnstap_row``).
-    """
-    if payload[:1] == b"{":
-        return json.loads(payload)
-    if payload[:1] == bytes([_BIN_MAGIC]):
-        return decode_binary_frame(payload)
-    return _dnstap_row(payload)
-
 def _decode_process(pipe: Connection) -> None:
     """Body of a forked decode process: a list of payloads in, ``(rows,
     frames that failed to decode)`` out, in order, until the bridge's end
-    of the pipe closes. A dnstap row is a tuple in ``_DNSTAP_SCHEMA``
-    order, which the bridge loads without building a dict per frame. The
-    result goes back in ``marshal`` form, which both ends handle faster
-    than pickle's for plain tuples, lists, strings and numbers, and which
-    only this process writes. It builds no Arrow: the first pyarrow
+    of the pipe closes. A row is a tuple in ``_DNSTAP_SCHEMA`` order
+    (``_dnstap_row``), which the bridge loads without building a dict per
+    frame. The result goes back in ``marshal`` form, which both ends
+    handle faster than pickle's for plain tuples, lists, strings and
+    numbers, and which only this process writes. It builds no Arrow: the first pyarrow
     conversion in a fresh process costs about half a second, and at a
     paced rate a batch is often one frame, too small to pay for a table of
     its own.
@@ -261,9 +201,10 @@ def _decode_process(pipe: Connection) -> None:
     It first closes every socket the fork copied but its own pipe (the
     bridge's listener and connections, other decode processes' pipe
     ends): a peer then sees the bridge close a connection, and a decode
-    process sees EOF once the bridge is gone. SIGINT is the bridge's to
-    handle, not its decode processes'."""
+    process sees EOF once the bridge is gone. SIGINT and SIGTERM are the
+    bridge's to handle, not its decode processes'."""
     signal.signal(signal.SIGINT, signal.SIG_IGN)
+    signal.signal(signal.SIGTERM, signal.SIG_IGN)
     for name in os.listdir("/dev/fd"):
         fd = int(name)
         with contextlib.suppress(OSError):  # the listing's own descriptor is gone
@@ -274,26 +215,23 @@ def _decode_process(pipe: Connection) -> None:
             payloads = pipe.recv()
         except (EOFError, OSError):
             return
-        rows: list[tuple | dict] = []
+        rows: list[tuple] = []
         errors = 0
         for payload in payloads:
             try:
-                rows.append(_decode_frame(payload))
+                rows.append(_dnstap_row(payload))
             except _MALFORMED_FRAME_ERRORS:
                 errors += 1
         pipe.send_bytes(marshal.dumps((rows, errors)))
 
-#: what casting decoded rows to a chunk schema raises on a row whose
-#: values do not fit it: a wrong value type (Arrow), a column missing
-#: from every events row (``select``), an integer wider than 64 bits
-_UNCASTABLE_ROW_ERRORS = (pa.ArrowException, KeyError, OverflowError)
+#: what casting decoded rows to the chunk schema raises on a row whose
+#: values do not fit it: a wrong value type (Arrow), an integer wider
+#: than 64 bits
+_UNCASTABLE_ROW_ERRORS = (pa.ArrowException, OverflowError)
 
-def _cast_rows(rows: list[tuple] | list[dict], schema: pa.Schema) -> pa.Table:
-    """Decoded rows of one shape -> a table of ``schema``. Dnstap tuples
-    are already in schema order and go in one typed column at a time;
-    events dicts are matched to the schema by name."""
-    if isinstance(rows[0], dict):
-        return pa.Table.from_pylist(rows).select(schema.names).cast(schema)
+def _cast_rows(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """Decoded rows -> a table of ``schema``. The tuples are already in
+    schema order and go in one typed column at a time."""
     arrays = [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)]
     return pa.Table.from_arrays(arrays, schema=schema)
 
@@ -318,8 +256,8 @@ class SocketBridge:
         self.readers = readers
         self.flush_rows = flush_rows
         self._conns: queue.Queue[socket.socket] = queue.Queue(maxsize=1)  # dnstap.go:72
-        #: decoded rows not yet in a chunk: dnstap tuples, events dicts
-        self._rows: list[tuple | dict] = []
+        #: decoded rows not yet in a chunk
+        self._rows: list[tuple] = []
         self._rows_lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
@@ -536,7 +474,7 @@ class SocketBridge:
                     if result is not None:
                         self._take_in(*marshal.loads(result))
 
-    def _take_in(self, rows: list[tuple | dict], errors: int) -> None:
+    def _take_in(self, rows: list[tuple], errors: int) -> None:
         """Append one decoded batch's rows to the shared buffer in one lock
         hold, cut every full chunk of exactly ``flush_rows`` rows off the
         buffer's head, and write those chunks after releasing the lock, so
@@ -556,19 +494,8 @@ class SocketBridge:
             self._write_chunk(chunk)
 
     # ------------------------------------------------------------- write
-    #: events-row chunks (JSON / binary bridge codecs)
-    _EVENTS_SCHEMA = pa.schema(
-        [
-            ("event_id", pa.int64()),
-            ("ts_us", pa.int64()),
-            ("user_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-            ("props", pa.string()),
-        ]
-    )
-    #: dnstap raw-frame chunks (protobuf codec) — the decode chain's
-    #: input schema (operators.prep._frame_exprs, minus synthetic event_id)
+    #: the chunk schema: the decode chain's raw-frame input schema
+    #: (operators.prep._frame_exprs, minus synthetic event_id)
     _DNSTAP_SCHEMA = pa.schema(
         [
             ("frameType", pa.string()),
@@ -589,43 +516,29 @@ class SocketBridge:
     #: its column names once (``Schema.names`` builds a new list per call)
     _DNSTAP_NAMES = tuple(_DNSTAP_SCHEMA.names)
 
-    def _write_chunk(self, rows: list[tuple | dict]) -> None:
-        """Write rows as parquet chunk files, one per row shape (dnstap raw
-        frames, which are tuples, and events rows, which are dicts, never
-        mix schemas within a file). Each file is written under a
-        dot-prefixed temp name, which Spark's file source never lists, and
-        then renamed to ``chunk-<uuid>.parquet``, so a reader sees a chunk
-        whole or not at all. A chunk that does not cast to its schema is
-        salvaged row by row (``_salvage``)."""
-        for shape, schema in (("dnstap", self._DNSTAP_SCHEMA), ("events", self._EVENTS_SCHEMA)):
-            part = [r for r in rows if isinstance(r, tuple) == (shape == "dnstap")]
-            if not part:
-                continue
-            try:
-                table = _cast_rows(part, schema)
-            except _UNCASTABLE_ROW_ERRORS:
-                table = self._salvage(part, schema)
-                if table is None:
-                    continue
-            if shape == "events":
-                # micros -> timestamp column matching the events table schema
-                # UTC-tagged (isAdjustedToUTC=true) so Spark reads TIMESTAMP
-                # (LTZ), the type event-time watermarks require — untagged
-                # micros would surface as TIMESTAMP_NTZ
-                table = table.set_column(
-                    1, "ts", table.column("ts_us").cast(pa.timestamp("us", tz="UTC"))
-                )
-            name = f"chunk-{uuid.uuid4().hex}.parquet"
-            tmp = os.path.join(self.out_dir, "." + name)
-            try:
-                pq.write_table(table, tmp)
-            except BaseException:
-                with contextlib.suppress(OSError):
-                    os.unlink(tmp)
-                raise
-            os.replace(tmp, os.path.join(self.out_dir, name))
+    def _write_chunk(self, rows: list[tuple]) -> None:
+        """Write rows as one parquet chunk file, under a dot-prefixed temp
+        name, which Spark's file source never lists, and then renamed to
+        ``chunk-<uuid>.parquet``, so a reader sees a chunk whole or not at
+        all. A chunk that does not cast to the schema is salvaged row by
+        row (``_salvage``)."""
+        try:
+            table = _cast_rows(rows, self._DNSTAP_SCHEMA)
+        except _UNCASTABLE_ROW_ERRORS:
+            table = self._salvage(rows)
+            if table is None:
+                return
+        name = f"chunk-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.out_dir, "." + name)
+        try:
+            pq.write_table(table, tmp)
+        except BaseException:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
+            raise
+        os.replace(tmp, os.path.join(self.out_dir, name))
 
-    def _salvage(self, rows: list[tuple] | list[dict], schema: pa.Schema) -> pa.Table | None:
+    def _salvage(self, rows: list[tuple]) -> pa.Table | None:
         """Failure path of ``_write_chunk``: cast the chunk's rows one at a
         time and keep those that cast. Each row that does not is moved
         from ``frames_read`` to ``decode_errors``, so ``frames_read``
@@ -633,7 +546,7 @@ class SocketBridge:
         tables = []
         for row in rows:
             with contextlib.suppress(*_UNCASTABLE_ROW_ERRORS):
-                tables.append(_cast_rows([row], schema))
+                tables.append(_cast_rows([row], self._DNSTAP_SCHEMA))
         bad = len(rows) - len(tables)
         with self._rows_lock:
             self.frames_read -= bad
@@ -668,26 +581,26 @@ class SocketBridge:
             os.unlink(self.socket_path)
         self.flush()
 
-def send_frames(
-    socket_path: str, rows: list[dict], retries: int = 20, codec: str = "json"
-) -> None:
-    """Test client: connect and send rows as length-prefixed frames
-    (``codec``: 'json' or 'binary')."""
-    last: Exception | None = None
-    for _ in range(retries):
+def _connect(socket_path: str, retries: int) -> socket.socket:
+    """A test client's connection, retried every 0.1 s while the bridge
+    is not yet listening."""
+    for attempt in range(retries):
+        c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
         try:
-            c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
             c.connect(socket_path)
-            break
-        except OSError as exc:
-            last = exc
+            return c
+        except OSError:
+            c.close()
+            if attempt == retries - 1:
+                raise
             time.sleep(0.1)
-    else:
-        raise last or OSError("connect failed")
-    enc = encode_binary_frame if codec == "binary" else (lambda r: json.dumps(r).encode())
-    with c:
-        for row in rows:
-            payload = enc(row)
+    raise OSError("connect failed")
+
+def send_frames(socket_path: str, payloads: list[bytes], retries: int = 20) -> None:
+    """Test client: connect and send payloads as bare length-prefixed
+    frames, with no handshake."""
+    with _connect(socket_path, retries) as c:
+        for payload in payloads:
             c.sendall(_FRAME_HEADER.pack(len(payload)) + payload)
 
 def _recv_control(c: socket.socket, timeout: float = 5.0) -> tuple[int, list[bytes]]:
@@ -710,31 +623,14 @@ def _recv_control(c: socket.socket, timeout: float = 5.0) -> tuple[int, list[byt
 
 def send_frames_fstrm(
     socket_path: str,
-    rows: list[dict],
-    content_type: bytes = b"application/json",
+    payloads: list[bytes],
+    content_type: bytes = b"protobuf:dnstap.Dnstap",
     retries: int = 20,
 ) -> None:
     """Test client speaking the full bidirectional framestream protocol:
     READY -> (ACCEPT) -> START -> data frames -> STOP -> (FINISH).
     Raises if the receiver's ACCEPT doesn't offer ``content_type``."""
-    last: Exception | None = None
-    for _ in range(retries):
-        try:
-            c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
-            c.connect(socket_path)
-            break
-        except OSError as exc:
-            last = exc
-            time.sleep(0.1)
-    else:
-        raise last or OSError("connect failed")
-    if content_type == b"application/x-bridge-binary":
-        enc = encode_binary_frame
-    elif content_type == b"protobuf:dnstap.Dnstap":
-        enc = lambda r: r  # rows are pre-encoded Dnstap frames (bytes)
-    else:
-        enc = lambda r: json.dumps(r).encode()
-    with c:
+    with _connect(socket_path, retries) as c:
         c.sendall(encode_control_frame(FSTRM_READY, (content_type,)))
         ctype, cts = _recv_control(c)
         if ctype != FSTRM_ACCEPT:
@@ -742,8 +638,7 @@ def send_frames_fstrm(
         if content_type not in cts:
             raise ConnectionError(f"receiver does not accept {content_type!r}: {cts}")
         c.sendall(encode_control_frame(FSTRM_START, (content_type,)))
-        for row in rows:
-            payload = enc(row)
+        for payload in payloads:
             c.sendall(_FRAME_HEADER.pack(len(payload)) + payload)
         c.sendall(encode_control_frame(FSTRM_STOP))
         ctype, _ = _recv_control(c)

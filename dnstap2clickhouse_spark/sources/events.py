@@ -37,8 +37,9 @@ from pyspark.sql.types import (
 from .tables import load_table
 
 #: schema of an events row as Spark reads it: the ``events`` table after
-#: ``load_table`` and the bridge's events chunk files. File streams must
-#: not infer their schema, so every events stream pins this one.
+#: ``load_table`` and events-shaped chunk files (a replayed backlog). File
+#: streams must not infer their schema, so every events stream pins this
+#: one; the daemon's ``__main__.CHUNK_SCHEMA`` extends it.
 BRIDGE_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),

@@ -17,113 +17,70 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dnstap2clickhouse_spark import streaming as st
+from dnstap2clickhouse_spark.__main__ import read_events_source
+from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table
+from dnstap2clickhouse_spark.operators.prep import decode_frames
 from dnstap2clickhouse_spark.sources import bridge as br
-from dnstap2clickhouse_spark.sources.bridge import SocketBridge, backoff_delays, send_frames
+from dnstap2clickhouse_spark.sources.bridge import (
+    SocketBridge,
+    backoff_delays,
+    decode_dnstap_protobuf,
+    send_frames,
+    send_frames_fstrm,
+)
 from dnstap2clickhouse_spark.sources.dnstap_proto import encode_dnstap
 from dnstap2clickhouse_spark.sources.dnswire import encode_message
-from dnstap2clickhouse_spark import streaming as st
-from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table
-from dnstap2clickhouse_spark.sources.events import dns_query_stream
+from tests.dnstap_frames import dnstap_frames
 
-def _sample_rows(n: int) -> list[dict]:
-    base_us = 1_704_067_200_000_000
-    types = ["click", "error", "purchase", "signup", "view"]
-    return [
-        {
-            "event_id": i,
-            "ts_us": base_us + i * 1_000_000,
-            "user_id": i % 50,
-            "event_type": types[i % 5],
-            "value": float(i) / 10.0,
-            "props": "{}",
-        }
-        for i in range(n)
-    ]
+
+def _chunk_rows(out: str) -> list[dict]:
+    """Every chunk row, in a canonical order."""
+    return sorted(pq.read_table(out).to_pylist(), key=repr)
+
+
+def _decoded(frames: list[bytes]) -> list[dict]:
+    return sorted(map(decode_dnstap_protobuf, frames), key=repr)
 
 def test_backoff_ladder_matches_reference():
     # dnstap.go:112-124: 1, 3, 7, 15, 31, 60, 60, ...
     assert list(itertools.islice(backoff_delays(), 7)) == [1, 3, 7, 15, 31, 60, 60]
 
 def test_socket_to_parquet_to_spark(spark):
+    """Bare dnstap frames over two connections land as chunk rows equal to
+    their decode, and the chunk directory feeds the streaming decode
+    chain and count pipeline."""
     d = tempfile.mkdtemp(prefix="bridge_")
     sock = os.path.join(d, "dnstap.sock")
     out = os.path.join(d, "chunks")
     bridge = SocketBridge(sock, out, readers=2, flush_rows=64)
     bridge.start()
+    frames = dnstap_frames(200)
     try:
-        rows = _sample_rows(200)
-        send_frames(sock, rows[:100])
-        send_frames(sock, rows[100:])  # second connection exercises fan-in
-        deadline = 50
-        while bridge.frames_read < 200 and deadline:
-            import time
-
+        send_frames(sock, frames[:100])
+        send_frames(sock, frames[100:])  # second connection exercises fan-in
+        deadline = time.time() + 10
+        while bridge.frames_read < 200 and time.time() < deadline:
             time.sleep(0.1)
-            deadline -= 1
         assert bridge.frames_read == 200
     finally:
         bridge.stop()
     # socket file removed on stop; 0660 was applied while live
     assert not os.path.exists(sock)
+    assert pq.read_schema(os.path.join(out, os.listdir(out)[0])).names == br.SocketBridge._DNSTAP_SCHEMA.names
+    assert _chunk_rows(out) == _decoded(frames)
 
-    df = spark.read.parquet(out)
-    assert df.count() == 200
-    assert set(df.columns) == {"event_id", "ts", "user_id", "event_type", "value", "props"}
-    # the bridge output feeds the SAME streaming pipeline as driver data
-    q = dns_query_stream(spark, "", events=st.read_events_stream(spark, out))
+    q = decode_frames(read_events_source(spark, None, out), "CLIENT_QUERY")
     sdf = client_query_table(spark, "", queries=q.withWatermark("queryTime", "10 minutes"))
     mem = st.run_stream_to_memory(sdf, "update", spark)
     assert mem.count() > 0
     shutil.rmtree(d, ignore_errors=True)
 
-def test_binary_frame_codec_round_trip():
-    from dnstap2clickhouse_spark.sources.bridge import (
-        decode_binary_frame,
-        encode_binary_frame,
-    )
-
-    for row in _sample_rows(5):
-        assert decode_binary_frame(encode_binary_frame(row)) == row
-
-def test_binary_frames_over_socket(spark):
-    """S2/S3: the protobuf-shaped binary wire format through the real
-    socket path — frames sniffed per-frame, mixed with JSON."""
-    d = tempfile.mkdtemp(prefix="bridge_bin_")
-    sock = os.path.join(d, "dnstap.sock")
-    out = os.path.join(d, "chunks")
-    bridge = SocketBridge(sock, out, readers=2, flush_rows=32)
-    bridge.start()
-    try:
-        rows = _sample_rows(64)
-        send_frames(sock, rows[:32], codec="binary")
-        send_frames(sock, rows[32:], codec="json")
-        deadline = 50
-        while bridge.frames_read < 64 and deadline:
-            import time
-
-            time.sleep(0.1)
-            deadline -= 1
-        assert bridge.frames_read == 64
-    finally:
-        bridge.stop()
-    df = spark.read.parquet(out)
-    assert df.count() == 64
-    got = sorted(
-        (r.event_id, r.event_type, r.value) for r in df.collect()
-    )
-    want = sorted((r["event_id"], r["event_type"], r["value"]) for r in _sample_rows(64))
-    assert got == want
-
 def test_unknown_frame_format_raises():
-    """Non-JSON/non-binary frames parse as dnstap protobuf; garbage that
-    isn't valid protobuf raises a wire-format error rather than yielding
-    a bogus row."""
-    import pytest
-
-    from dnstap2clickhouse_spark.sources.bridge import _decode_frame
-
+    """Garbage that isn't valid dnstap protobuf raises a wire-format error
+    rather than yielding a bogus row."""
     with pytest.raises(ValueError):
-        _decode_frame(b"\x7fGARBAGE")
+        br._dnstap_row(b"\x7fGARBAGE")
 
 def test_fstrm_control_frame_codec():
     from dnstap2clickhouse_spark.sources.bridge import (
@@ -141,49 +98,43 @@ def test_fstrm_control_frame_codec():
     assert cts == [b"protobuf:dnstap.Dnstap", b"application/json"]
 
 
-def test_fstrm_bidirectional_handshake(spark):
+def test_fstrm_bidirectional_handshake():
     """S2: the real framestream exchange — READY/ACCEPT content-type
     negotiation, START, data frames, STOP/FINISH — through the live
-    socket, both local content types, mixed with a no-handshake sender."""
-    import time
-
-    from dnstap2clickhouse_spark.sources.bridge import send_frames_fstrm
-
+    socket, mixed with a no-handshake sender."""
     d = tempfile.mkdtemp(prefix="bridge_fstrm_")
     sock = os.path.join(d, "dnstap.sock")
     out = os.path.join(d, "chunks")
     bridge = SocketBridge(sock, out, readers=2, flush_rows=16)
     bridge.start()
+    frames = dnstap_frames(48)
     try:
-        rows = _sample_rows(48)
-        send_frames_fstrm(sock, rows[:16], content_type=b"application/json")
-        send_frames_fstrm(sock, rows[16:32], content_type=b"application/x-bridge-binary")
-        send_frames(sock, rows[32:])  # degenerate session still accepted
+        send_frames_fstrm(sock, frames[:16])
+        send_frames_fstrm(sock, frames[16:32])
+        assert bridge.frames_read == 32  # FINISH follows every frame before STOP
+        send_frames(sock, frames[32:])  # degenerate session still accepted
         deadline = time.time() + 10
         while bridge.frames_read < 48 and time.time() < deadline:
             time.sleep(0.1)
         assert bridge.frames_read == 48
     finally:
         bridge.stop()
-    df = spark.read.parquet(out)
-    got = sorted((r.event_id, r.event_type, r.value) for r in df.collect())
-    want = sorted((r["event_id"], r["event_type"], r["value"]) for r in _sample_rows(48))
-    assert got == want
+    assert _chunk_rows(out) == _decoded(frames)
     shutil.rmtree(d, ignore_errors=True)
 
 
 def test_fstrm_rejects_unaccepted_content_type():
-    import pytest
-
-    from dnstap2clickhouse_spark.sources.bridge import send_frames_fstrm
-
+    """dnstap protobuf is the one content type: any other, JSON included,
+    is refused at the handshake."""
     d = tempfile.mkdtemp(prefix="bridge_rej_")
     sock = os.path.join(d, "dnstap.sock")
     bridge = SocketBridge(sock, os.path.join(d, "chunks"), readers=1)
     bridge.start()
     try:
-        with pytest.raises(ConnectionError, match="does not accept"):
-            send_frames_fstrm(sock, _sample_rows(1), content_type=b"text/unknown")
+        for ct in (b"text/unknown", b"application/json"):
+            with pytest.raises(ConnectionError, match="does not accept"):
+                send_frames_fstrm(sock, dnstap_frames(1), content_type=ct)
+        assert br.ACCEPTED_CONTENT_TYPES == (_DNSTAP_CT,)
     finally:
         bridge.stop()
         shutil.rmtree(d, ignore_errors=True)
@@ -461,29 +412,6 @@ def test_peer_leaving_during_handshake_keeps_the_reader(live_bridge):
     assert sorted(t for ids in _chunk_identities(out).values() for t in ids) == sorted(frames)
 
 
-def test_uncastable_row_is_counted_and_its_chunk_salvaged(live_bridge):
-    """A JSON row whose values do not cast to the events schema sinks only
-    itself: the good row of its chunk is written, the bad one moves from
-    ``frames_read`` to ``decode_errors``, and the reader lives on."""
-    bridge, sock, out = live_bridge(readers=1, flush_rows=2)
-    rows = _sample_rows(4)
-    rows[1]["event_id"] = "abc"
-    rows[3]["event_id"] = 2**70
-    send_frames(sock, rows[:2])
-    send_frames(sock, rows[2:])
-    deadline = time.time() + 10
-    while bridge.frames_read + bridge.decode_errors < 4 and time.time() < deadline:
-        time.sleep(0.01)
-    bridge.stop()
-    assert (bridge.frames_read, bridge.decode_errors) == (2, 2)
-    written = [
-        i for f in sorted(os.listdir(out))
-        for i in pq.read_table(os.path.join(out, f)).column("event_id").to_pylist()
-    ]
-    assert sorted(written) == [0, 2]
-    assert len(written) == bridge.frames_read
-
-
 def test_uncastable_dnstap_row_is_counted_and_its_chunk_salvaged(live_bridge):
     """A dnstap frame whose time does not fit ``timeSec`` (int64) sinks
     only itself: the other rows of its chunk are written, it moves from
@@ -602,14 +530,14 @@ def test_decode_process_dying_on_a_batch_counts_its_frames(live_bridge, monkeypa
     """A decode process that dies while it holds a batch: that batch's
     frames are counted in ``decode_errors``, and the same reader carries on
     with a replacement process."""
-    real = br._decode_frame
+    real = br._dnstap_row
 
-    def die_on_poison(payload: bytes) -> dict:
+    def die_on_poison(payload: bytes) -> tuple:
         if payload == b"poison":
             os._exit(1)
         return real(payload)
 
-    monkeypatch.setattr(br, "_decode_frame", die_on_poison)  # before start: forks copy it
+    monkeypatch.setattr(br, "_dnstap_row", die_on_poison)  # before start: forks copy it
     bridge, sock, out = live_bridge(readers=1, flush_rows=1000)
     first = bridge._workers[0][0]
     good = [f"0.{k}" for k in range(6)]
@@ -668,7 +596,7 @@ def test_malformed_frame_then_good_frames_on_a_live_connection(live_bridge):
     bridge, sock, out = live_bridge(readers=1, flush_rows=1000)
     truncated = _dnstap("0.x")[:20]
     with pytest.raises(br._MALFORMED_FRAME_ERRORS):
-        br._decode_frame(truncated)
+        br._dnstap_row(truncated)
     proc, reader = bridge._workers[0][0], bridge._threads[1]
     tags = [f"0.{k}" for k in range(8)]
     with _open_fstrm(sock) as c:

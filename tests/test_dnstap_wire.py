@@ -24,7 +24,7 @@ from dnstap2clickhouse_spark.sources import dnswire
 from dnstap2clickhouse_spark.sources.bridge import (
     SocketBridge,
     _cast_rows,
-    _decode_frame,
+    _dnstap_row,
     decode_dnstap_protobuf,
 )
 from dnstap2clickhouse_spark.sources.dnstap_proto import (
@@ -314,7 +314,7 @@ def test_tuple_rows_cast_to_the_dict_rows_table(case):
     every other case."""
     schema = SocketBridge._DNSTAP_SCHEMA
     for payloads in ([_EQUIVALENCE_CASES[case]], list(_EQUIVALENCE_CASES.values())):
-        got = _cast_rows([_decode_frame(p) for p in payloads], schema)
+        got = _cast_rows([_dnstap_row(p) for p in payloads], schema)
         assert got.equals(_dict_rows_table([_oracle_decode_row(p) for p in payloads]))
 
 

@@ -86,44 +86,3 @@ def test_insert_statement_prunes_empty_names():
     )
     with pytest.raises(ValueError, match="prunes every column"):
         insert_statement("t", {"a": "", "b": ""})
-
-
-def test_clickhouse_url_and_properties():
-    """Multi-host URL + LZ4/max_execution_time properties — the
-    ClickHouse-specific client options the reference sets
-    (clickhouse.go:94-104), now concrete instead of passthrough."""
-    from dnstap2clickhouse_spark.sinks.writers import (
-        clickhouse_properties,
-        clickhouse_url,
-    )
-
-    url = clickhouse_url(["ch1:8123", "ch2:8123"], "dns")
-    assert url == "jdbc:clickhouse://ch1:8123,ch2:8123/dns"
-    props = clickhouse_properties(lz4=True, max_execution_time_s=45)
-    assert props["compress_algorithm"] == "lz4"
-    assert props["max_execution_time"] == "45"
-    assert "socket_timeout" in props
-    assert "compress_algorithm" not in clickhouse_properties(lz4=False)
-
-
-def test_clickhouse_writer_builds_derby_compatible_plan(spark, tmp_path):
-    """clickhouse_writer wires the driver class + default properties into
-    the same jdbc path; swapping the driver/URL for Derby proves the
-    writer function itself is sound (the jar-specific part is only the
-    class name)."""
-    from dnstap2clickhouse_spark.sinks import writers
-
-    df = spark.createDataFrame([(1, "a")], "id long, name string")
-    url = f"jdbc:derby:{tmp_path}/chdb;create=true"
-    # Derby rejects ClickHouse-only properties; strip them the way a
-    # dialect adapter would, keeping the writer construction identical
-    fn = writers.jdbc_writer(url, "t1", driver=DERBY_DRIVER)
-    fn(df, 0)
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "t1")
-        .option("driver", DERBY_DRIVER)
-        .load()
-    )
-    assert back.count() == 1

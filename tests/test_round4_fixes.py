@@ -47,9 +47,8 @@ def test_foreach_batch_evaluates_once(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from dnstap2clickhouse_spark.__main__ import _mapped_writer, build_streams
+    from dnstap2clickhouse_spark.__main__ import CHUNK_SCHEMA, _mapped_writer, build_streams
     from dnstap2clickhouse_spark.config import EngineConfig
-    from dnstap2clickhouse_spark.sources.events import BRIDGE_SCHEMA
 
     acc = spark.sparkContext.accumulator(0)
 
@@ -64,7 +63,7 @@ def test_foreach_batch_evaluates_once(spark):
         ev = load_table(spark, SF, "events")
         n_rows = ev.count()
         ev.coalesce(1).write.parquet(src)
-        sdf = spark.readStream.schema(BRIDGE_SCHEMA).parquet(src).withColumn("event_id", tick("event_id"))
+        sdf = spark.readStream.schema(CHUNK_SCHEMA).parquet(src).withColumn("event_id", tick("event_id"))
         _, tables = build_streams(spark, EngineConfig(), src)
         assert set(tables) == {"clientQuery", "clientResponse"}
         q = (
@@ -105,75 +104,7 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     assert set(out.values()) == {0} and len(out) == n
     assert rounds[0] <= math.ceil(math.log2(n - 1)) + 3, rounds  # 9 measured
 
-# ----------------------------------------- ClickHouse dialect end-to-end
-
-class _RecordingWriter:
-    """DataFrameWriter stand-in: records the exact option surface the
-    writer function pushes, so ClickHouse-only options are asserted
-    end-to-end without a server/jar."""
-
-    def __init__(self):
-        self.fmt = None
-        self.opts: dict[str, str] = {}
-        self.mode_ = None
-        self.saves = 0
-
-    def format(self, f):
-        self.fmt = f
-        return self
-
-    def option(self, k, v):
-        self.opts[k] = v
-        return self
-
-    def options(self, **kw):
-        self.opts.update(kw)
-        return self
-
-    def mode(self, m):
-        self.mode_ = m
-        return self
-
-    def save(self):
-        self.saves += 1
-
-def test_clickhouse_writer_options_reach_dataframewriter(spark, monkeypatch):
-    """Every reference client option (clickhouse.go:86-110) must reach the
-    DataFrameWriter: multi-host URL, driver class, LZ4, max_execution_time,
-    dial timeout, pool cap (numPartitions), caller overrides."""
-    from dnstap2clickhouse_spark.sinks import writers
-
-    rec = _RecordingWriter()
-    df = spark.createDataFrame([(1, "a")], "id long, name string")
-    # patch the CONCRETE class (pyspark.sql.classic.dataframe.DataFrame) —
-    # its own `write` property shadows the abstract base's
-    monkeypatch.setattr(type(df), "write", property(lambda self: rec))
-    url = writers.clickhouse_url(["ch1:8123", "ch2:8123"], "dns")
-    fn = writers.clickhouse_writer(
-        url, "clientQuery", batchsize=5000, properties={"socket_timeout": "1234"}
-    )
-    fn(df, 0)
-    assert rec.saves == 1 and rec.fmt == "jdbc" and rec.mode_ == "append"
-    assert rec.opts["url"] == "jdbc:clickhouse://ch1:8123,ch2:8123/dns"
-    assert rec.opts["dbtable"] == "clientQuery"
-    assert rec.opts["driver"] == "com.clickhouse.jdbc.ClickHouseDriver"
-    assert rec.opts["batchsize"] == "5000"
-    assert rec.opts["compress_algorithm"] == "lz4"
-    assert rec.opts["max_execution_time"] == "60"
-    assert rec.opts["connect_timeout"] == "5000"  # 5 s dial timeout
-    assert rec.opts["socket_timeout"] == "1234"  # caller override wins
-    assert rec.opts["numPartitions"] == str(writers.CLICKHOUSE_MAX_OPEN_CONNS)
-
-def test_clickhouse_tls_properties():
-    """Secure / InsecureSkipVerify pair (clickhouse.go:107-110)."""
-    from dnstap2clickhouse_spark.sinks.writers import clickhouse_properties
-
-    plain = clickhouse_properties()
-    assert "ssl" not in plain and "sslmode" not in plain
-    tls = clickhouse_properties(secure=True)
-    assert tls["ssl"] == "true" and "sslmode" not in tls
-    lax = clickhouse_properties(secure=True, insecure_skip_verify=True)
-    assert lax["ssl"] == "true" and lax["sslmode"] == "NONE"
+# ------------------------------------------- JDBC sink: INSERTs and the pool cap
 
 def test_insert_statement_reference_table_shapes():
     """The three INSERTs the reference synthesizes (initQueryStmt /

@@ -21,7 +21,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark import streaming as st
-from dnstap2clickhouse_spark.__main__ import _mapped_writer, build_streams, read_output_table
+from dnstap2clickhouse_spark.__main__ import CHUNK_SCHEMA, _mapped_writer, build_streams, read_output_table
 from dnstap2clickhouse_spark.config import AggregatorConfig, EngineConfig
 from dnstap2clickhouse_spark.operators import dns_pipeline as dp
 from dnstap2clickhouse_spark.operators.join import match_response_times
@@ -169,7 +169,9 @@ def test_foreach_batch_sink_with_column_config(spark, events_dir):
         cfg.sink.response_columns = {"responseTime": "ts", "identity": "ident", "counter": "hits"}
         _, tables = build_streams(spark, cfg, events_dir)
         q = (
-            st.read_events_stream(spark, events_dir)  # one chunk per micro-batch
+            spark.readStream.schema(CHUNK_SCHEMA)  # the daemon's chunk schema
+            .option("maxFilesPerTrigger", 1)  # one chunk per micro-batch
+            .parquet(events_dir)
             .writeStream.foreachBatch(_mapped_writer(out, tables))
             .trigger(availableNow=True)
             .start()
