@@ -41,7 +41,7 @@ import argparse
 import os
 import signal
 import sys
-import threading
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -202,20 +202,29 @@ def main(argv: list[str] | None = None) -> int:
 
     # main.go:95-115. The handlers go in before the bridge starts: a
     # signal during the seconds Spark takes to start must still stop the
-    # bridge, which writes every frame it has acknowledged.
-    stop = threading.Event()
-    signal.signal(signal.SIGINT, lambda signum, frame: stop.set())
-    signal.signal(signal.SIGTERM, lambda signum, frame: stop.set())
+    # bridge, which writes every frame it has acknowledged. They only note
+    # the signal; the main thread polls for it, so no lock is taken inside
+    # a handler. SparkContext installs its own SIGINT handler, which raises
+    # KeyboardInterrupt, so ours go in again once Spark is up.
+    signals: list[int] = []
+
+    def install_handlers() -> None:
+        for sig in (signal.SIGINT, signal.SIGTERM):
+            signal.signal(sig, lambda signum, frame: signals.append(signum))
+
+    install_handlers()
     bridge = SocketBridge(args.socket, bridge_dir)
     spark, listener, queries = None, EngineStatsListener(), []
     try:
         bridge.start()
         spark = get_spark("dnstap2clickhouse_spark")
+        install_handlers()
         spark.sparkContext.setLogLevel(args.loglevel)
         spark.streams.addListener(listener)
-        if not stop.is_set():
+        if not signals:
             queries = start_queries(spark, cfg, build_streams(spark, cfg, bridge_dir), out_dir)
-        stop.wait()
+        while not signals:
+            time.sleep(0.2)
     finally:
         for q in queries:
             q.stop()

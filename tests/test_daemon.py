@@ -263,10 +263,15 @@ def test_chunk_directory_of_both_shapes(spark, tmp_path, with_events):
             assert want[table].exceptAll(alone[table]).count() > 0
 
 
-@pytest.mark.parametrize("when", ["starting", "running"])
-def test_sigterm_keeps_acknowledged_frames(tmp_path, when):
+@pytest.mark.parametrize(
+    "when,sig",
+    [("starting", signal.SIGTERM), ("running", signal.SIGTERM), ("running", signal.SIGINT)],
+    ids=["starting", "running", "running-sigint"],
+)
+def test_sigterm_keeps_acknowledged_frames(tmp_path, when, sig):
     """SIGTERM to the daemon, while Spark is still starting or once the
-    count query runs: the process exits 0, every frame the bridge
+    count query runs, or SIGINT once it runs (after SparkContext has put in
+    its own SIGINT handler): the process exits 0, every frame the bridge
     acknowledged with FINISH is in a chunk, and the socket is removed."""
     sock, work = str(tmp_path / "dnstap.sock"), str(tmp_path / "work")
     log = open(tmp_path / "daemon.log", "w")
@@ -280,7 +285,7 @@ def test_sigterm_keeps_acknowledged_frames(tmp_path, when):
             chk = os.path.join(work, "tables", f"_chk_{COUNT_QUERY}")
             assert _wait_for(lambda: os.path.isdir(chk), 120), "the count query never started"
         send_frames_fstrm(sock, dnstap_frames(10))
-        proc.send_signal(signal.SIGTERM)
+        proc.send_signal(sig)
         code = proc.wait(timeout=120)
     finally:
         if proc.poll() is None:
