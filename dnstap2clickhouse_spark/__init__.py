@@ -18,8 +18,6 @@ This package re-expresses every operator Spark-first:
                    search, text analysis, multimodal column plumbing
 - ``plans``      — generic relational analytics (TPC-H-style)
 - ``streaming``  — Structured Streaming binding of the same operators
-- ``sinks``      — foreachBatch writers with config-driven column
-                   mapping/pruning (reference clickhouse.go semantics)
 
 Design stance (SURVEY.md section 7): batch core first — every operator is a
 pure DataFrame -> DataFrame function — and streaming binds the same

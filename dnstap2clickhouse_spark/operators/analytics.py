@@ -40,23 +40,6 @@ def top_query_addresses_sql(client_query_sql: str, limit: int = 10) -> str:
         f"GROUP BY queryAddress ORDER BY values DESC, queryAddress LIMIT {limit}"
     )
 
-def top_query_addresses_salted(client_query: DataFrame, limit: int = 10) -> DataFrame:
-    """Q1 through the skew-spread two-stage aggregation
-    (``operators.skew.salted_agg``) — identical results by construction
-    (sum is associative), shares Q1's oracle. The variant a 100 TB
-    deployment uses when one address dominates the traffic."""
-    from .skew import salted_agg
-
-    filtered = client_query.filter(
-        (F.col("questionName") == GROUPBY_TAG) & (F.col("queryAddress") != GROUPBY_TAG)
-    )
-    return (
-        salted_agg(filtered, ["queryAddress"], {"counter": "sum"})
-        .select("queryAddress", F.col("counter").alias("values"))
-        .orderBy(F.desc("values"), "queryAddress")
-        .limit(limit)
-    )
-
 def top_nxdomain_names(client_response: DataFrame, limit: int = 10) -> DataFrame:
     """Q2 (quickstart.md:114-127): top NXDOMAIN names, concat display key."""
     return (

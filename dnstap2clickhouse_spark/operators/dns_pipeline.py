@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import AggregatorConfig, GROUPBY_TAG
+from ..config import AggregatorConfig
 from ..sources.events import (
     QUERY_STREAM_SQL,
     RESPONSE_STREAM_SQL,
@@ -113,60 +113,6 @@ def response_time_table(
     r = sample_by_dns_id(r, cfg.sample_mask, cfg.sample_match)
     matched = match_response_times(q, r, cfg.max_response_delay)
     return avg_response_time_samples(matched, f"{cfg.response_time_interval_s} seconds")
-
-def client_query_table_native(
-    spark: SparkSession,
-    sf_dir: str,
-    cfg: AggregatorConfig | None = None,
-) -> DataFrame:
-    """clientQuery via native ``GROUP BY GROUPING SETS`` — the batch-only
-    alternative SURVEY.md section 2.4 describes (streaming cannot use it,
-    which is why the engine's default is the explode-variant expansion).
-    ``coalesce(col, '__ANY__')`` maps the grouping-set NULL markers onto
-    the reference's sentinel (aggregator.go:32). Identical output to
-    ``client_query_table`` — shares its oracle.
-
-    Scale note: Catalyst plans grouping sets as a single Expand (3x rows)
-    + one hash aggregation — the same physical shape as the explode
-    trick; both are one shuffle.
-    """
-    cfg = cfg or AggregatorConfig()
-    dns_query_stream(spark, sf_dir).createOrReplaceTempView("__qstream")
-    w = f"window(queryTime, '{cfg.write_interval_s} seconds')"
-    return spark.sql(f"""
-SELECT window.start AS windowStart,
-       identity,
-       coalesce(queryAddress, '{GROUPBY_TAG}') AS queryAddress,
-       coalesce(questionName, '{GROUPBY_TAG}') AS questionName,
-       coalesce(questionType, '{GROUPBY_TAG}') AS questionType,
-       min(queryTime) AS queryTime,
-       sum(counter) AS counter
-FROM __qstream
-GROUP BY GROUPING SETS (
-  ({w}, identity, queryAddress, questionName, questionType),
-  ({w}, identity, queryAddress),
-  ({w}, identity, questionName, questionType))
-""")
-
-def build_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    cfg: AggregatorConfig | None = None,
-) -> dict[str, DataFrame]:
-    """F3 static plan construction (dnstap.go:253-255, 309-311;
-    aggregator.go:553-573): only the branches the config enables are
-    built — the Spark analogue of the reference's config gating, applied
-    at plan time so disabled paths cost nothing (no scan, no shuffle).
-    """
-    cfg = cfg or AggregatorConfig()
-    out: dict[str, DataFrame] = {}
-    if cfg.client_queries:
-        out["clientQuery"] = client_query_table(spark, sf_dir, cfg)
-    if cfg.non_ok_client_responses:
-        out["clientResponse"] = client_response_table(spark, sf_dir, cfg)
-    if cfg.client_response_time_samples:
-        out["clientQueryResponseTime"] = response_time_table(spark, sf_dir, cfg)
-    return out
 
 def response_time_table_sql(cfg: AggregatorConfig | None = None) -> str:
     cfg = cfg or AggregatorConfig()

@@ -1,4 +1,4 @@
-"""Skew-resistant aggregation and join (salting).
+"""Skew-resistant aggregation (salting).
 
 The reference never needs this — a single process has no shuffle — but a
 100 TB deployment does: a hot grouping key (one identity producing most
@@ -10,11 +10,6 @@ reducer. Salting is the standard Spark remedy alongside AQE skew-join:
   partials on the real keys. Associative aggregates (sum/count/min/max)
   are exactly invariant under the two-stage split, so results are
   bit-identical to the direct groupBy — the oracle is the plain SQL.
-- **salted broadcast-replicate join**: the skewed fact side gets a
-  random-ish salt, the small side is exploded ``buckets`` times so every
-  (key, salt) pair still finds its match. Only needed when the small
-  side is too big to broadcast outright; with a true broadcast join
-  skew doesn't matter, so that's the default path elsewhere.
 
 The salt is ``xxhash64(all columns) pmod buckets`` — deterministic per
 row (replay-safe), uniform for non-identical rows, and correct even for
@@ -23,7 +18,7 @@ fully duplicate rows (they just share a bucket).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -60,24 +55,3 @@ def salted_agg(
     return stage1.groupBy(*keys).agg(
         *[getattr(F, merge_fn.get(fn, fn))(c).alias(c) for c, fn in aggs.items()]
     )
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-spread equi-join: salt the (large, skewed) fact side and
-    replicate the dim side ``buckets``× so the shuffle key becomes
-    (join keys, salt). Row multiplicity identical to ``fact.join(dim,
-    on, how)`` for fact-preserving hows only: with 'right'/'full_outer'
-    an unmatched dim row would surface once per salt replica, so those
-    are rejected."""
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti", "semi", "anti"):
-        raise ValueError(f"salted_join supports fact-preserving hows only, got {how!r}")
-    f = with_salt(fact, buckets)
-    d = dim.withColumn(
-        SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<long>"))
-    )
-    return f.join(d, on + [SALT_COL], how).drop(SALT_COL)

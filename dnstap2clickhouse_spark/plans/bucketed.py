@@ -60,11 +60,14 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact tables are written ``bucketBy(8, key) sortBy(key)`` (external
     tables in a temp dir so repeated driver runs overwrite cleanly),
     then revenue per order priority runs as a sort-merge join whose
-    scans are bucket-aligned — ZERO Exchange on either fact side
-    (pinned by ``tests/test_skew.py::test_bucketed_join_is_shuffle_free``).
-    At 100 TB this is the layout decision: the orders×lineitem shuffle
-    is paid once at write time, and every downstream join on the key
-    reads co-located buckets.
+    scans are bucket-aligned — ZERO Exchange on either fact side.
+    ``tests/test_skew.py::test_bucketed_join_is_shuffle_free`` checks
+    that plan shape on ``bucketed_order_revenue`` (the same
+    orders×lineitem join over ``write_bucketed`` tables, 4 buckets), not
+    on this entry; the oracle checks this entry's values. At 100 TB
+    this is the layout decision: the orders×lineitem shuffle is paid
+    once at write time, and every downstream join on the key reads
+    co-located buckets.
 
     The result is evaluated eagerly and the catalog entries + files are
     dropped before returning (the contract query is self-cleaning);

@@ -1252,8 +1252,8 @@ def _zorder_layout_sql(dialect: str) -> str:
 
     Scale: the z-value is mapper-side integer arithmetic off ONE
     broadcast global min/max row; the zone map is ONE hash aggregate on
-    the bucket id. The physical rewrite is ``compact_dataset(...,
-    sort_by=[zvalue])`` -> repartitionByRange, whose cost is the one
+    the bucket id. The physical rewrite would be a
+    ``repartitionByRange`` on the z-value, whose cost is the one
     total-order shuffle every layout pass pays. Reference scope: beyond
     dnstap2clickhouse; the engine-side equivalent of ClickHouse
     ORDER BY-key data skipping generalized to 2 dimensions.

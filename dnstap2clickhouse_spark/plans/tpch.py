@@ -1175,12 +1175,11 @@ def salted_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed via `operators/skew.salted_agg`'s two-stage spread
     (per-(key, salt) partials, then the ``buckets``-way merge), so no
     single reducer owns a priority. The join side stays a plain
-    equi-join: both sides are fact tables here, and `salted_join`'s
-    dim-replication trick is for SMALL dims with hot join keys (its
-    semantics are pinned in test_skew; a first draft of THIS entry
-    replicated the 6M-row orders side 16x at the scale replica — the
-    exact misuse the function's docstring warns about, caught by the
-    10x timing gate and removed). Oracle = the plain one-stage
+    equi-join: both sides are fact tables here, and salting a join
+    (replicating one side once per salt) only pays for SMALL dims with
+    hot join keys (a first draft of THIS entry replicated the 6M-row
+    orders side 16x at the scale replica, caught by the 10x timing gate
+    and removed). Oracle = the plain one-stage
     aggregate: salting must be answer-invariant, and the driver hash
     certifies it. Revenue in exact cents.
     """

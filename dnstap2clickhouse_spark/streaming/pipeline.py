@@ -66,38 +66,6 @@ def streaming_response_time_join(
     q, r, cond, pair = _pair_join_inputs(events, watermark, cfg.max_response_delay)
     return q.join(r, cond, "inner").select(*pair)
 
-def streaming_response_time_avg(
-    spark: SparkSession,
-    events_dir: str,
-    samples_dir: str,
-    cfg: AggregatorConfig | None = None,
-) -> DataFrame:
-    """A9+A10 streaming binding — the two-timer interplay, in two stages.
-
-    The reference's two-timer structure (aggregator.go:589-619: samples
-    *computed* every ResponseTimeAggregationInterval, *shipped* on
-    WriteInterval) maps here to two stages: the join streams matched
-    pairs into an append-only samples sink (K2, micro-batch = flush), and
-    the windowed integer-division average (A9) is computed over the sink
-    — same rows, same integer math as the batch `response_time_table`,
-    every window included. Spark 4 also accepts the average after the
-    join in one append-mode query, which emits only the windows the
-    watermark has closed (see ``streaming_response_time_join``).
-    """
-    from ..operators.join import avg_response_time_samples
-
-    cfg = cfg or AggregatorConfig()
-    sdf = streaming_response_time_join(read_events_stream(spark, events_dir), cfg)
-    q = (
-        sdf.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _eid: df.write.mode("append").parquet(samples_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    samples = spark.read.parquet(samples_dir)
-    return avg_response_time_samples(samples, f"{cfg.response_time_interval_s} seconds")
-
 def streaming_exact_dedup(
     events: DataFrame,
     key_cols: tuple[str, ...] = ("event_id",),

@@ -7,13 +7,14 @@ import os
 import sys
 import tempfile
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dnstap2clickhouse_spark.config import AggregatorConfig
+from dnstap2clickhouse_spark.__main__ import build_streams, start_queries
+from dnstap2clickhouse_spark.config import AggregatorConfig, EngineConfig
+from dnstap2clickhouse_spark.operators.columns import apply_column_config
 from dnstap2clickhouse_spark.toml_config import load_config
-from dnstap2clickhouse_spark.operators.dns_pipeline import build_pipeline
-
-SF = "/root/testdata/sf0.001"
 
 TOML = """
 [aggregator]
@@ -42,7 +43,7 @@ def test_defaults_match_reference():
     assert cfg.aggregator.response_time_interval_s == 10  # toml.go:189-191
     assert cfg.aggregator.groupby_question and cfg.aggregator.write_ungrouped
 
-def test_toml_overlay_and_derivation():
+def test_toml_overlay_and_derivation(spark):
     cfg = load_config(_write(TOML))
     assert cfg.aggregator.write_interval_s == 40
     assert cfg.aggregator.response_time_interval_s == 20  # derived w/2
@@ -52,6 +53,8 @@ def test_toml_overlay_and_derivation():
     assert cfg.aggregator.client_response_time_samples is True
     # column config with empty-name pruning payload intact
     assert cfg.sink.query_columns["identity"] == ""
+    with pytest.raises(ValueError, match="prunes every column"):
+        apply_column_config(spark.range(1), {k: "" for k in cfg.sink.query_columns})
 
 def test_cli_overrides_win():
     cfg = load_config(_write(TOML), cli_overrides={"write_interval": 60})
@@ -62,13 +65,22 @@ def test_unknown_keys_ignored():
     cfg = load_config(_write("[aggregator]\nbogus_key = 1\n"))
     assert cfg.aggregator.write_interval_s == 20
 
-def test_f3_static_plan_gating(spark):
-    cfg = AggregatorConfig(non_ok_client_responses=False)
-    out = build_pipeline(spark, SF, cfg)
-    assert set(out) == {"clientQuery", "clientQueryResponseTime"}
-    cfg_all = AggregatorConfig()
-    assert set(build_pipeline(spark, SF, cfg_all)) == {
-        "clientQuery",
-        "clientResponse",
-        "clientQueryResponseTime",
-    }
+def test_f3_static_plan_gating(spark, tmp_path):
+    """F3 (dnstap.go:253-255; aggregator.go:553-573): the daemon builds a
+    count table only when its option enables it, and starts no query when
+    none is enabled."""
+    bridge_dir, out_dir = str(tmp_path / "bridge"), str(tmp_path / "tables")
+    os.makedirs(bridge_dir)
+
+    def tables(cfg):
+        return set(build_streams(spark, cfg, bridge_dir)[1])
+
+    assert tables(EngineConfig(AggregatorConfig(non_ok_client_responses=False))) == {"clientQuery"}
+    assert tables(EngineConfig()) == {"clientQuery", "clientResponse"}
+    off = EngineConfig(AggregatorConfig(client_queries=False, non_ok_client_responses=False))
+    streams = build_streams(spark, off, bridge_dir)
+    assert streams[1] == {}
+    active = len(spark.streams.active)
+    assert start_queries(spark, off, streams, out_dir) == []
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(out_dir)

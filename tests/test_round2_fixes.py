@@ -17,7 +17,7 @@ from dnstap2clickhouse_spark.operators.grouping_sets import (
     grouping_sets_sql_union,
 )
 from dnstap2clickhouse_spark.operators import prep
-from dnstap2clickhouse_spark.operators.skew import salted_agg, salted_join
+from dnstap2clickhouse_spark.operators.skew import salted_agg
 
 
 def _sample(spark):
@@ -125,14 +125,6 @@ def test_mapped_codes_unchanged(spark):
     assert row.questionType == "A"
     assert row.responseStatus == "NOERROR"
     assert row.isSuccess is True
-
-
-def test_salted_join_rejects_dim_preserving_hows(spark):
-    df = _sample(spark)
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(df, df, ["questionName"], how="full_outer")
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(df, df, ["questionName"], how="right")
 
 
 def test_salted_agg_rejects_non_associative_fns(spark):

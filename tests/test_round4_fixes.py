@@ -104,62 +104,6 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     assert set(out.values()) == {0} and len(out) == n
     assert rounds[0] <= math.ceil(math.log2(n - 1)) + 3, rounds  # 9 measured
 
-# ------------------------------------------- JDBC sink: INSERTs and the pool cap
-
-def test_insert_statement_reference_table_shapes():
-    """The three INSERTs the reference synthesizes (initQueryStmt /
-    initResponseStmt / initResponseTimeStmt, clickhouse.go:139-175), with
-    mid-list pruning in each shape."""
-    from dnstap2clickhouse_spark.sinks.writers import insert_statement
-
-    q = insert_statement(
-        "clientQuery",
-        {
-            "queryTime": "ts",
-            "identity": "identity",
-            "queryAddress": "",
-            "questionName": "qname",
-            "questionType": "qtype",
-            "counter": "c",
-        },
-    )
-    assert q == "INSERT INTO clientQuery (ts, identity, qname, qtype, c) VALUES (?, ?, ?, ?, ?)"
-    r = insert_statement(
-        "clientResponse",
-        {
-            "responseTime": "ts",
-            "identity": "",
-            "responseStatus": "status",
-            "queryAddress": "addr",
-            "questionName": "",
-            "questionType": "qtype",
-            "counter": "c",
-        },
-    )
-    assert r == "INSERT INTO clientResponse (ts, status, addr, qtype, c) VALUES (?, ?, ?, ?, ?)"
-    rt = insert_statement(
-        "clientQueryResponseTime",
-        {"responseTime": "ts", "identity": "identity", "responseTimeDelta": "delta"},
-    )
-    assert rt == "INSERT INTO clientQueryResponseTime (ts, identity, delta) VALUES (?, ?, ?)"
-
-def test_jdbc_num_partitions_round_trip(spark, tmp_path):
-    """numPartitions (the MaxOpenConns analogue) rides the real JDBC path:
-    a multi-partition frame written with a 1-connection cap lands intact
-    in embedded Derby."""
-    from dnstap2clickhouse_spark.sinks import writers
-
-    df = spark.range(0, 40, 1, 8).selectExpr("id", "CAST(id AS STRING) AS name")
-    url = f"jdbc:derby:{tmp_path}/npdb;create=true"
-    derby = "org.apache.derby.jdbc.EmbeddedDriver"
-    writers.jdbc_writer(url, "t1", driver=derby, num_partitions=1)(df, 0)
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url).option("dbtable", "t1").option("driver", derby)
-        .load()
-    )
-    assert back.count() == 40
-
 # ------------------------------------------------------ plan-hazard audit
 
 def test_plan_auditor_subset():
@@ -340,47 +284,6 @@ def test_pack_token_chunks_invariants(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert sorted(map(tuple, rows3)) == sorted(map(tuple, rows))
-
-# ---------------------------------------------------------- compaction
-
-def test_compact_dataset_merges_small_files(spark, tmp_path):
-    """20 micro-batch-sized files compact to the computed bin count with
-    identical rows; sorted flavor leaves non-overlapping file key ranges."""
-    import glob
-
-    from dnstap2clickhouse_spark.sinks.writers import compact_dataset
-
-    src = str(tmp_path / "src")
-    for i in range(20):
-        spark.range(i * 50, (i + 1) * 50).selectExpr(
-            "id", "CAST(id % 7 AS STRING) AS k"
-        ).coalesce(1).write.mode("append").parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 20
-
-    dst = str(tmp_path / "dst")
-    n = compact_dataset(spark, src, dst, target_file_mb=256)
-    assert n == 1  # 20 tiny files ≪ 256 MB -> one bin
-    assert len(glob.glob(f"{dst}/*.parquet")) == 1
-    assert spark.read.parquet(dst).orderBy("id").collect() == (
-        spark.read.parquet(src).orderBy("id").collect()
-    )
-
-    dst2 = str(tmp_path / "dst2")
-    compact_dataset(spark, src, dst2, sort_cols=["id"], n_files=4)
-    files = sorted(glob.glob(f"{dst2}/*.parquet"))
-    assert len(files) == 4
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        col = md.row_group(0).column(0).statistics
-        lo = min(md.row_group(g).column(0).statistics.min for g in range(md.num_row_groups))
-        hi = max(md.row_group(g).column(0).statistics.max for g in range(md.num_row_groups))
-        ranges.append((lo, hi))
-    ranges.sort()
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
-        assert a_hi < b_lo, "sorted compaction must leave disjoint key ranges"
 
 # ----------------------------------------------------- simhash pair gen
 

@@ -1,4 +1,4 @@
-"""Scale machinery: salting (skew-spread agg/join) and bucketed
+"""Scale machinery: salting (skew-spread aggregation) and bucketed
 co-located joins. Correctness = exact equality with the direct form;
 the bucketing test also asserts the plan is shuffle-free."""
 
@@ -11,7 +11,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dnstap2clickhouse_spark.operators.skew import salted_agg, salted_join
+from dnstap2clickhouse_spark.operators.skew import salted_agg
 from dnstap2clickhouse_spark.plans.bucketed import (
     bucketed_order_revenue,
     write_bucketed,
@@ -47,16 +47,6 @@ def test_salted_count_merges_as_sum(spark):
     df = spark.range(1000).selectExpr("CAST(id % 3 AS STRING) AS k", "id AS v")
     got = {r.k: r.v for r in salted_agg(df, ["k"], {"v": "count"}).collect()}
     assert got == {"0": 334, "1": 333, "2": 333}
-
-def test_salted_join_equals_plain(spark):
-    ev = load_table(spark, SF, "events").select("event_id", "user_id", "event_type")
-    dim = spark.createDataFrame(
-        [("click", 1.0), ("view", 0.1), ("purchase", 10.0)], "event_type string, w double"
-    )
-    plain = ev.join(dim, ["event_type"])
-    salted = salted_join(ev, dim, ["event_type"], buckets=4)
-    cols = ["event_id", "user_id", "event_type", "w"]
-    assert _rows(salted.select(cols)) == _rows(plain.select(cols))
 
 def test_bucketed_join_is_shuffle_free(spark):
     ot, lt = write_bucketed(spark, SF, buckets=4)

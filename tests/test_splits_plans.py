@@ -66,30 +66,6 @@ def test_curation_single_plan_no_collects(spark):
     assert _n_nodes(plan, "Window") == 1
     assert _n_nodes(plan, "Exchange") <= 2, plan
 
-def test_write_sorted_parquet_nonoverlapping_ranges(spark, tmp_path):
-    """Range-partitioned sorted layout: per-file key ranges must not
-    overlap and each file must be internally sorted (that's what makes
-    parquet zone-map pruning effective at scale)."""
-    from dnstap2clickhouse_spark.sinks.writers import write_sorted_parquet
-
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    out = str(tmp_path / "sorted")
-    write_sorted_parquet(li, out, ["l_orderkey"], n_files=4)
-
-    import glob
-
-    ranges = []
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        pdf = spark.read.parquet(f).toPandas()
-        if len(pdf):
-            assert pdf["l_orderkey"].is_monotonic_increasing
-            ranges.append((pdf["l_orderkey"].min(), pdf["l_orderkey"].max()))
-    ranges.sort()
-    assert len(ranges) >= 2  # actually split into multiple files
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo  # non-overlapping key ranges across files
-    assert spark.read.parquet(out).count() == li.count()
-
 def test_curate_v2_respects_every_gate(spark):
     """Every v2 survivor passes each gate individually; every gated-out
     doc is absent."""
@@ -111,48 +87,3 @@ def test_curate_v2_respects_every_gate(spark):
         assert d not in dropped
         assert d in resampled
         assert row.quality == quality[d]
-
-def test_write_partitioned_dataset_prunes_split_reads(spark, tmp_path):
-    """The curated corpus lands as split=... directories and a split
-    filter becomes a partition filter (no data read from other splits)."""
-    import os
-    from dnstap2clickhouse_spark.plans import curation as pc
-    from dnstap2clickhouse_spark.sinks.writers import write_partitioned_dataset
-
-    out = str(tmp_path / "curated")
-    df = pc.curate_corpus_v2(spark, "/root/testdata/sf0.001")
-    write_partitioned_dataset(df, out, ["split"], sort_cols=["doc_id"])
-    subdirs = {d for d in os.listdir(out) if d.startswith("split=")}
-    assert subdirs == {"split=train", "split=val", "split=test"}
-
-    back = spark.read.parquet(out).filter("split = 'train'")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(split" in plan
-    got = {r.doc_id for r in back.collect()}
-    expect = {r.doc_id for r in df.collect() if r.split == "train"}
-    assert got == expect and got
-
-def test_write_partitioned_dataset_spreads_without_sort(spark, tmp_path):
-    """The no-sort path must still parallelize within a partition value
-    (hash-spread column): a dominant partition lands as multiple files,
-    and round-trip content is intact."""
-    import glob
-    from dnstap2clickhouse_spark.sinks.writers import write_partitioned_dataset
-
-    df = spark.range(0, 2000).selectExpr(
-        "id", "CASE WHEN id % 10 = 0 THEN 'small' ELSE 'big' END AS part"
-    )
-    out = str(tmp_path / "spread")
-    # at test scale AQE's advisory size coalesces the whole shuffle into
-    # one partition (the right small-data behavior); disable it to
-    # observe the at-scale spread
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        write_partitioned_dataset(df, out, ["part"])
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    big_files = glob.glob(f"{out}/part=big/*.parquet")
-    assert len(big_files) > 1, "dominant partition must not be a single file"
-    back = spark.read.parquet(out)
-    assert back.count() == 2000
-    assert back.filter("part = 'big'").count() == 1800
