@@ -125,32 +125,14 @@ def exact_dedup_sql() -> str:
 
 # --------------------------------------------------- n-gram Jaccard (exact)
 
-def _jaccard_sql(dialect: str, max_shingle_freq: int | None = None) -> str:
-    """``max_shingle_freq`` is the hot-shingle skew guard (r5 verdict
-    item 4): the self-join shuffles on the shingle, so one shingle
-    appearing in ``f`` documents contributes O(f^2) candidate rows — a
-    boilerplate shingle shared by 1% of a 100 TB corpus is a straggler
-    task that never finishes. With the cap set, shingles whose global
-    document frequency exceeds it are dropped BEFORE the join (from both
-    the intersection and the per-doc sizes, so the score stays a true
-    Jaccard over the capped shingle sets) — the same effect banding has
-    on the MinHash path, where a universal shingle lands every document
-    in one bucket and the band key's other rows dilute it. The contract
-    default (None) is the EXACT ground-truth verifier the oracle pins —
-    deliberately quadratic-risk, quarantined from the production chain
-    and named in ``tools/audit_plans.py``'s DECLARED waivers."""
-    sh = _shingle_rows(dialect)
-    if max_shingle_freq is None:
-        s_cte = f"s AS ({sh})"
-    else:
-        s_cte = (
-            f"s_all AS ({sh}),\n"
-            f"freq AS (SELECT sh, count(*) AS df FROM s_all GROUP BY sh),\n"
-            f"s AS (SELECT a.doc_id, a.sh FROM s_all a JOIN freq f ON a.sh = f.sh\n"
-            f"      WHERE f.df <= {max_shingle_freq})"
-        )
+def _jaccard_sql(dialect: str) -> str:
+    """The EXACT ground-truth verifier the oracle pins: the self-join
+    shuffles on the shingle, so one shingle appearing in ``f`` documents
+    contributes O(f^2) candidate rows — deliberately quadratic-risk,
+    quarantined from the production chain and named in
+    ``tools/audit_plans.py``'s DECLARED waivers."""
     return f"""
-WITH {s_cte},
+WITH s AS ({_shingle_rows(dialect)}),
 n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
 pair AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
@@ -163,17 +145,12 @@ WHERE CAST(common AS DOUBLE) / (x.ns + y.ns - common) >= {JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
-def ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, max_shingle_freq: int | None = None
-) -> DataFrame:
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs by 3-gram Jaccard — ground truth / verifier.
     Shuffle key is the shingle; hot shingles are the skew risk the LSH
-    path avoids. Pass ``max_shingle_freq`` to drop shingles above that
-    global document frequency before the self-join (the scale-safe
-    deployment form — see ``_jaccard_sql``); the contract default (None)
-    is the exact verifier."""
+    path avoids."""
     _register(spark, sf_dir)
-    return spark.sql(_jaccard_sql("spark", max_shingle_freq))
+    return spark.sql(_jaccard_sql("spark"))
 
 def ngram_jaccard_pairs_sql() -> str:
     return _jaccard_sql("duckdb")

@@ -655,29 +655,6 @@ def kmeans_k(n_vectors: int) -> int:
     return max(KMEANS_MIN_K, -(-int(n_vectors) // KMEANS_TARGET_OCCUPANCY))
 
 
-#: ``assignment='auto'`` switches to the two-level coarse-pruned form
-#: once the corpus-derived k reaches this bound. SCALING.md round 6
-#: measured the crossover on the 10x replica with the aggregate argmin:
-#: flat still WINS at k=400 (22.43 vs 25.43 s) and loses 3.4x at
-#: k=2,000 (109.45 vs 32.00 s) — the boundary is recorded at the
-#: measured win cell. With k = ceil(n/500) this trips at ~1M vectors,
-#: so a 100 TB caller on 'auto' cannot ship the flat n*k form by
-#: default (r6 verdict item 5).
-KMEANS_AUTO_TWOLEVEL_K = 2_000
-
-
-def resolve_assignment(spark: SparkSession, assignment: str) -> str:
-    """Resolve ``'auto'`` to ``'flat'`` / ``'twolevel'`` from the SAME
-    corpus-derived k the plan itself computes (`kmeans_k` mirrors the
-    in-SQL ``kk`` CTE bit-for-bit): one ``count(*)`` over the registered
-    ``embeddings`` view — parquet footer statistics, no payload scan —
-    then the SCALING.md deployment rule ``KMEANS_AUTO_TWOLEVEL_K``.
-    Explicit ``'flat'``/``'twolevel'`` pass through untouched (the
-    contract entries pin ``'flat'`` for oracle stability)."""
-    if assignment != "auto":
-        return assignment
-    k = kmeans_k(spark.table("embeddings").count())
-    return "twolevel" if k >= KMEANS_AUTO_TWOLEVEL_K else "flat"
 _E9 = 1_000_000_000
 
 def _qarr_sql(dialect: str) -> str:
@@ -695,8 +672,8 @@ def _cdist_cols(dialect: str, qcol: str, ca: str) -> str:
     integer vector column ``qcol`` and the integer-sum centroid aliased
     ``ca`` (columns ``sv``, ``n``). ``_cdist_cols(d, "q.qv", "c")`` is
     byte-identical to the historical ``_cdist_sql`` output; the aliases
-    exist for the two-level assignment's extra joins (centroid-vs-seed,
-    vector-vs-centroid under different FROM aliases)."""
+    exist for `_twolevel_assign_sql`'s joins (vector-vs-seed under
+    different FROM aliases)."""
     nd = KMEANS_DIMS
     if dialect == "spark":
         return (
@@ -717,12 +694,11 @@ def _argmin_over(
     cand: str,
     out: str,
     inner: str,
-    key_out: str | None = None,
 ) -> str:
     """Lowest-``cand`` argmin of ``d`` per ``key`` over the ``inner``
     relation — the module's ONE definition of the Lloyd-assignment
-    argmin (flat, two-level in-cell, and centroid-vs-seed all splice
-    it, so the tie-break semantics cannot drift between sites).
+    argmin (`_kmeans_sql` and `_twolevel_assign_sql` both splice it, so
+    the tie-break semantics cannot drift between sites).
 
     Spark emits a single ``min_by(cand, struct(d, cand))`` HASH
     AGGREGATE: the (key, cand, d) cross-product rows are partially
@@ -741,14 +717,13 @@ def _argmin_over(
     sf0.01 where the sort is irrelevant) — both dialects compute the
     same argmin over the same exact doubles.
     """
-    sel = key if key_out is None else f"{key} AS {key_out}"
     if dialect == "spark":
         return f"""
-  SELECT {sel}, min_by(CAST({cand} AS BIGINT), struct(d, {cand})) AS {out}
+  SELECT {key}, min_by(CAST({cand} AS BIGINT), struct(d, {cand})) AS {out}
   FROM ({inner})
   GROUP BY {key}"""
     return f"""
-  SELECT {sel}, CAST(min({cand}) FILTER (WHERE d = md) AS BIGINT) AS {out}
+  SELECT {key}, CAST(min({cand}) FILTER (WHERE d = md) AS BIGINT) AS {out}
   FROM (
     SELECT {key}, {cand}, d, min(d) OVER (PARTITION BY {key}) AS md
     FROM ({inner}))
@@ -765,32 +740,8 @@ def _cdist_sql(dialect: str) -> str:
     return _cdist_cols(dialect, "q.qv", "c")
 
 
-def _kmeans_sql(dialect: str, assignment: str = "flat") -> str:
+def _kmeans_sql(dialect: str) -> str:
     """Two unrolled Lloyd iterations of k-means, bit-deterministic.
-
-    ``assignment`` selects the per-iteration assignment strategy (r5
-    verdict item 3):
-
-    - ``'flat'`` (default, the contract-pinned form): every vector
-      scores every centroid — n·k exact-integer distance folds per
-      iteration. With k ∝ n this is the documented residual quadratic
-      (n²/occupancy FLOPs); correct at every scale, optimal at oracle
-      scale, and what the 8 cell-pruned contract entries pin for oracle
-      stability.
-    - ``'twolevel'``: BOTH Lloyd assignment steps route through an IVF
-      coarse quantizer — k1 = ceil(n/KMEANS_COARSE_OCCUPANCY) corpus
-      seeds partition the centroids into cells, each vector probes its
-      KMEANS_COARSE_NPROBE nearest OCCUPIED cells and scores only those
-      cells' centroids: n·(k1 + nprobe·k/k1) ≈ O(n·sqrt(k)) folds.
-      Probing only occupied cells makes completeness structural (every
-      probed cell has >= 1 centroid, so every vector always emits one
-      row — no duplicate-seed fallback needed). When nprobe >= the
-      occupied-cell count the candidate set is every centroid and the
-      result is BIT-IDENTICAL to 'flat' (same exact folds, same
-      lowest-id tie-break) — true at every oracle scale (k1=2), pinned
-      by ``tests/test_round6_kmeans_assignment.py``; at larger n it is
-      the standard IVF approximation, dialect-agreement-pinned in the
-      pruned regime.
 
     The iterative-ML pattern on the engine: centroids live as EXACT
     per-dimension integer sums ``(sv, n)`` (embeddings quantized once at
@@ -851,8 +802,7 @@ def _kmeans_sql(dialect: str, assignment: str = "flat") -> str:
     GROUP BY cluster, dim)
   GROUP BY cluster"""
 
-    if assignment == "flat":
-        return f"""
+    return f"""
 WITH q AS (SELECT vec_id, {qarr} AS qv FROM embeddings),
 kk AS (SELECT greatest(CAST({KMEANS_MIN_K} AS BIGINT), CAST({kexpr} AS BIGINT)) AS k
        FROM embeddings),
@@ -863,101 +813,11 @@ c1 AS ({update("a1")}),
 a2 AS ({assign("c1")})
 SELECT vec_id, cluster FROM a2 ORDER BY vec_id
 """
-    if assignment != "twolevel":
-        raise ValueError(
-            "assignment must be 'flat' or 'twolevel' (resolve 'auto' via "
-            f"resolve_assignment before building SQL): {assignment!r}"
-        )
 
-    # ---- twolevel: each Lloyd assignment step is coarse-pruned (IVF).
-    # Same exact-integer distance folds and lowest-id tie-breaks as the
-    # flat path; the only new arithmetic is centroid-vs-seed distance,
-    # which is the SAME _cdist fold with the n=1 seed on the qv side.
-    cocc = KMEANS_COARSE_OCCUPANCY
-    npb = KMEANS_COARSE_NPROBE
-    idiv = "div" if dialect == "spark" else "//"
-    k1expr = f"(count(*) + {cocc - 1}) {idiv} {cocc}"
-    shint = "/*+ BROADCAST(s) */ " if dialect == "spark" else ""
-
-    def cell_of_cent(cent: str) -> str:
-        # each centroid of `cent` -> its nearest coarse seed (k·k1
-        # folds; the k1-row seed table is the inherent IVF broadcast)
-        d = _cdist_cols(dialect, "s.sv", "x")
-        return _argmin_over(
-            dialect,
-            "cluster",
-            "cand",
-            "coarse",
-            f"""
-      SELECT {shint}x.cluster, s.coarse AS cand, {d} AS d
-      FROM {cent} x CROSS JOIN cz s""",
-            key_out="fine",
-        )
-
-    def probes(cc: str) -> str:
-        # each vector's nprobe nearest OCCUPIED cells (n·k1 folds):
-        # restricting the rank to cells holding >= 1 centroid makes
-        # every probe yield candidates — completeness by construction
-        d = _cdist_cols(dialect, "q.qv", "s")
-        return f"""
-  SELECT vec_id, coarse
-  FROM (
-    SELECT vec_id, coarse,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d, coarse) AS rk
-    FROM (
-      SELECT {shint}q.vec_id, s.coarse, {d} AS d
-      FROM q CROSS JOIN (
-        SELECT z.coarse, z.sv, z.n
-        FROM cz z JOIN (SELECT DISTINCT coarse FROM {cc}) o
-          ON o.coarse = z.coarse) s))
-  WHERE rk <= {npb}"""
-
-    def assign2(cent: str, cc: str, vc: str) -> str:
-        # in-cell scoring: equi-join on the coarse id — the corpus
-        # never cross-joins the centroid table (n·nprobe·k/k1 folds)
-        d = _cdist_cols(dialect, "q0.qv", "x")
-        return _argmin_over(
-            dialect,
-            "vec_id",
-            "cand",
-            "cluster",
-            f"""
-      SELECT v.vec_id, x.cluster AS cand, {d} AS d
-      FROM {vc} v
-      JOIN q q0 ON q0.vec_id = v.vec_id
-      JOIN {cc} f ON f.coarse = v.coarse
-      JOIN {cent} x ON x.cluster = f.fine""",
-        )
-
-    return f"""
-WITH q AS (SELECT vec_id, {qarr} AS qv FROM embeddings),
-kk AS (SELECT greatest(CAST({KMEANS_MIN_K} AS BIGINT), CAST({kexpr} AS BIGINT)) AS k,
-              greatest(CAST(2 AS BIGINT), CAST({k1expr} AS BIGINT)) AS k1
-       FROM embeddings),
-cz AS (SELECT CAST(vec_id AS BIGINT) AS coarse, qv AS sv, CAST(1 AS BIGINT) AS n
-       FROM q WHERE vec_id < (SELECT k1 FROM kk)),
-c0 AS (SELECT CAST(vec_id AS BIGINT) AS cluster, qv AS sv, CAST(1 AS BIGINT) AS n
-       FROM q WHERE vec_id < (SELECT k FROM kk)),
-cc1 AS ({cell_of_cent("c0")}),
-vc1 AS ({probes("cc1")}),
-a1 AS ({assign2("c0", "cc1", "vc1")}),
-c1 AS ({update("a1")}),
-cc2 AS ({cell_of_cent("c1")}),
-vc2 AS ({probes("cc2")}),
-a2 AS ({assign2("c1", "cc2", "vc2")})
-SELECT vec_id, cluster FROM a2 ORDER BY vec_id
-"""
-
-def kmeans_assign(
-    spark: SparkSession, sf_dir: str, assignment: str = "flat"
-) -> DataFrame:
-    """Cluster assignment after two Lloyd iterations (corpus-derived k).
-    ``assignment='twolevel'`` routes both Lloyd assignment steps through
-    the IVF coarse quantizer (see ``_kmeans_sql``); ``'auto'`` derives
-    the choice from the corpus-derived k (`resolve_assignment`); the
-    contract entry pins the default ``'flat'`` for oracle stability."""
+def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster assignment after two Lloyd iterations (corpus-derived k)."""
     _register(spark, sf_dir)
-    return spark.sql(_kmeans_sql("spark", resolve_assignment(spark, assignment)))
+    return spark.sql(_kmeans_sql("spark"))
 
 def kmeans_assign_sql() -> str:
     return _kmeans_sql("duckdb")
@@ -970,12 +830,12 @@ def kmeans_assign_sql() -> str:
 #: averages COARSE_OCC / KMEANS_TARGET_OCCUPANCY (= 16) and total
 #: distance work is n·(k1 + k/k1) ≈ 2n·sqrt(k) instead of flat Lloyd's
 #: n·k. This is the documented replacement for the residual quadratic
-#: assignment term (see KMEANS_TARGET_OCCUPANCY): NOT a contract entry —
-#: it is an approximation (a vector whose true nearest fine seed lives
-#: in a different coarse cell gets its best in-cell seed instead, the
-#: standard IVF coarse-quantizer trade) — but the structural
-#: demonstration that growing k never requires a corpus x centroid
-#: cross join.
+#: assignment term (see KMEANS_TARGET_OCCUPANCY). It is an approximation
+#: (a vector whose true nearest fine seed lives in a different coarse
+#: cell gets its best in-cell seed instead, the standard IVF
+#: coarse-quantizer trade), kept as the ``sim_kmeans_twolevel`` entry:
+#: the structural demonstration that growing k never requires a corpus
+#: x centroid cross join.
 KMEANS_COARSE_OCCUPANCY = 8_000
 #: coarse cells probed per vector (the IVF nprobe knob): cost
 #: n·(k1 + nprobe·k/k1), recall rises steeply with each probe
@@ -986,7 +846,7 @@ def _twolevel_assign_sql(dialect: str) -> str:
     """Coarse-pruned nearest-seed assignment (both dialects — the
     ``sim_kmeans_twolevel`` contract entry; its exhaustive-probe
     equality with the flat argmin and its plan shape are additionally
-    pinned by ``tests/test_round5_twolevel.py``).
+    pinned by ``tests/test_similarity.py``).
 
     Shape: (1) the k1-row coarse seed table cross-joins the corpus once
     (n·k1 folds, k1 broadcast) and each vector keeps its
@@ -1334,7 +1194,7 @@ def ivfpq_recall_sql() -> str:
 SEMANTIC_DUP_THRESHOLD = COSINE_DUP_THRESHOLD
 
 
-def _semantic_dedup_sql(dialect: str, assignment: str = "flat") -> str:
+def _semantic_dedup_sql(dialect: str) -> str:
     """SemDeDup (Abbas et al. 2023): k-means clusters quarantine the
     quadratic, cosine de-dups WITHIN each cluster only.
 
@@ -1355,14 +1215,8 @@ def _semantic_dedup_sql(dialect: str, assignment: str = "flat") -> str:
     Both the cosine fold and the assignment arithmetic carry the
     module's bit-determinism contract, so the oracle hash certifies the
     whole cluster -> pair -> verdict chain.
-
-    ``assignment`` passes straight through to ``_kmeans_sql`` (r5
-    verdict item 3): ``'twolevel'`` swaps the clustering stage's n·k
-    assignment for the IVF coarse-pruned form while the dedup stage is
-    untouched (it keys on the cluster id either way). The contract
-    entry pins the default ``'flat'``.
     """
-    km = _kmeans_sql(dialect, assignment)
+    km = _kmeans_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -1384,17 +1238,11 @@ ORDER BY m.vec_id
 """
 
 
-def semantic_dedup(
-    spark: SparkSession, sf_dir: str, assignment: str = "flat"
-) -> DataFrame:
+def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDeDup verdict: cluster id, kept flag, and the
-    lower-id intra-cluster near-duplicate it defers to (or -1).
-    ``assignment='twolevel'`` runs the clustering stage coarse-pruned
-    (see ``_kmeans_sql``); ``'auto'`` derives the choice from the
-    corpus-derived k (`resolve_assignment`); the contract entry pins
-    ``'flat'``."""
+    lower-id intra-cluster near-duplicate it defers to (or -1)."""
     _register(spark, sf_dir)
-    return spark.sql(_semantic_dedup_sql("spark", resolve_assignment(spark, assignment)))
+    return spark.sql(_semantic_dedup_sql("spark"))
 
 
 def semantic_dedup_sql() -> str:
@@ -1433,13 +1281,6 @@ def _ood_centroid_sql(dialect: str) -> str:
     the corpus scan (the kmeans assignment shape), then one
     cluster-keyed aggregate of 2 integers joins back by cluster id —
     nothing corpus-sized shuffles beyond the assignment itself.
-
-    Deliberately NOT parameterized by ``assignment``: unlike the
-    a2-reusing consumers this entry re-scores the corpus against ``c1``
-    itself because it needs the distance VALUE (``md`` → ``dist_e6``),
-    not just the argmin — a two-level variant would have to thread the
-    pruned candidates' distances out of ``_kmeans_sql``, which the flat
-    scoring scan here would then duplicate anyway.
     """
     km = _kmeans_sql(dialect)
     prefix = km[: km.index("a2 AS (")].rstrip().rstrip(",") + ","
@@ -2617,7 +2458,7 @@ def ivf_balance_sql() -> str:
 KNN_K = 3  # neighbors kept per vector
 
 
-def _knn_graph_sql(dialect: str, assignment: str = "flat") -> str:
+def _knn_graph_sql(dialect: str) -> str:
     """k-NN GRAPH construction, cell-pruned: every vector's top-k
     same-cluster neighbors by exact cosine — the build step for
     graph-based ANN (the base layer HNSW/NSG descend) and the
@@ -2634,10 +2475,8 @@ def _knn_graph_sql(dialect: str, assignment: str = "flat") -> str:
     verbatim (string surgery, the ``_semantic_dedup_sql`` idiom) and
     the module's bit-deterministic cosine fold, so ranks and ties
     (cosine DESC, then neighbor id) are identical in both engines.
-    ``assignment`` passes through to ``_kmeans_sql`` (the clustering
-    stage only; contract default 'flat').
     """
-    km = _kmeans_sql(dialect, assignment)
+    km = _kmeans_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -2660,16 +2499,10 @@ ORDER BY src, rank
 """
 
 
-def knn_graph(
-    spark: SparkSession, sf_dir: str, assignment: str = "flat"
-) -> DataFrame:
-    """Top-``KNN_K`` same-cell neighbors per vector (exact cosine).
-    ``assignment='twolevel'`` runs the clustering stage coarse-pruned
-    (see ``_kmeans_sql``); ``'auto'`` derives the choice from the
-    corpus-derived k (`resolve_assignment`); the contract entry pins
-    ``'flat'``."""
+def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``KNN_K`` same-cell neighbors per vector (exact cosine)."""
     _register(spark, sf_dir)
-    return spark.sql(_knn_graph_sql("spark", resolve_assignment(spark, assignment)))
+    return spark.sql(_knn_graph_sql("spark"))
 
 
 def knn_graph_sql() -> str:
@@ -2841,7 +2674,7 @@ def nn_descent_round_sql() -> str:
 HARDNEG_K = 3  # negatives kept per anchor
 
 
-def _hard_negatives_sql(dialect: str, assignment: str = "flat") -> str:
+def _hard_negatives_sql(dialect: str) -> str:
     """Hard-negative mining for contrastive training (the DPR/SimCSE
     data-prep step): for every anchor vector, the top-``HARDNEG_K``
     most-similar vectors with a DIFFERENT label — near-misses the loss
@@ -2856,10 +2689,8 @@ def _hard_negatives_sql(dialect: str, assignment: str = "flat") -> str:
     enumeration, vec-keyed fetch joins, per-anchor top-k window);
     the label filter only shrinks the pair set. Output is the
     (anchor, negative) training-pair table a contrastive run reads.
-    ``assignment`` passes through to ``_kmeans_sql`` (the clustering
-    stage only; contract default 'flat').
     """
-    km = _kmeans_sql(dialect, assignment)
+    km = _kmeans_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -2885,16 +2716,10 @@ ORDER BY anchor, rank
 """
 
 
-def hard_negatives(
-    spark: SparkSession, sf_dir: str, assignment: str = "flat"
-) -> DataFrame:
-    """Top cross-label in-cell negatives per anchor (exact cosine).
-    ``assignment='twolevel'`` runs the clustering stage coarse-pruned
-    (see ``_kmeans_sql``); ``'auto'`` derives the choice from the
-    corpus-derived k (`resolve_assignment`); the contract entry pins
-    ``'flat'``."""
+def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top cross-label in-cell negatives per anchor (exact cosine)."""
     _register(spark, sf_dir)
-    return spark.sql(_hard_negatives_sql("spark", resolve_assignment(spark, assignment)))
+    return spark.sql(_hard_negatives_sql("spark"))
 
 
 def hard_negatives_sql() -> str:

@@ -1,11 +1,12 @@
 """As-of join — a custom temporal operator Spark has no native form of.
 
 For each left row, find the single nearest right row on the same key with
-``right_ts <= left_ts`` (backward, the default) or ``right_ts >= left_ts``
-(forward). The reference engine has no such operator; it belongs to the
-beyond-reference temporal surface (same family as the J1 interval join,
-``operators/join.py``) and is table stakes for event attribution /
-point-in-time feature lookup in a training-data pipeline.
+``right_ts <= left_ts`` (backward); left rows with no such right row are
+dropped (inner, DuckDB ``ASOF JOIN``). The reference engine has no such
+operator; it belongs to the beyond-reference temporal surface (same
+family as the J1 interval join, ``operators/join.py``) and is table
+stakes for event attribution / point-in-time feature lookup in a
+training-data pipeline.
 
 Spark-first plan — the *union + running-last* form, NOT a range
 cross-join:
@@ -42,21 +43,9 @@ def asof_join(
     on: Sequence[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    direction: str = "backward",
-    how: str = "inner",
-    tolerance_us: int | None = None,
 ) -> DataFrame:
-    """All left columns plus each right non-key column as ``right_<name>``.
-
-    ``how='inner'`` drops unmatched left rows (DuckDB ``ASOF JOIN``);
-    ``how='left'`` keeps them with nulls (``ASOF LEFT JOIN``).
-    ``tolerance_us`` additionally bounds ``|left_ts - right_ts|`` —
-    matches outside it are treated as no-match.
-    """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
+    """All left columns plus each right non-key column as ``right_<name>``,
+    for the left rows that have a match."""
     on = list(on)
     right_payload = [c for c in right.columns if c not in on]
 
@@ -73,34 +62,22 @@ def asof_join(
         if c not in on and c not in ("__ts", "__right"):
             r_tagged = r_tagged.withColumn(c, F.lit(None).cast(dict(l_tagged.dtypes)[c]))
     # at equal ts the right row must sort BEFORE the left row so that
-    # <=/>= (not strict <) semantics hold; __side encodes that
+    # <= (not strict <) semantics hold; __side encodes that
     l_tagged = l_tagged.withColumn("__side", F.lit(1))
     r_tagged = r_tagged.withColumn("__side", F.lit(0))
     u = l_tagged.unionByName(r_tagged.select(*l_tagged.columns))
 
-    if direction == "backward":
-        order = [F.col("__ts").asc(), F.col("__side").asc(), F.col("__right").asc()]
-    else:  # forward: nearest following right row
-        order = [F.col("__ts").desc(), F.col("__side").asc(), F.col("__right").asc()]
     w = (
         Window.partitionBy(*on)
-        .orderBy(*order)
+        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__right").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = (
         u.withColumn("__asof", F.last("__right", ignorenulls=True).over(w))
         .filter(F.col("__side") == 1)
         .drop("__right", "__side", "__ts")
+        .filter(F.col("__asof").isNotNull())
     )
-    if tolerance_us is not None:
-        gap = F.abs(
-            F.unix_micros(F.col(left_ts)) - F.unix_micros(F.col("__asof").getField(right_ts))
-        )
-        matched = matched.withColumn(
-            "__asof", F.when(gap <= F.lit(tolerance_us), F.col("__asof"))
-        )
-    if how == "inner":
-        matched = matched.filter(F.col("__asof").isNotNull())
     out_cols = [F.col(c) for c in left.columns]
     out_cols += [F.col("__asof").getField(c).alias(f"right_{c}") for c in right_payload]
     return matched.select(*out_cols)

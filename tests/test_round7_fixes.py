@@ -18,9 +18,6 @@
 - ``audit_hints`` multi-name hints (r6 ADVICE 3): dropped-name detection
   counts hinted relation NAMES, not nodes — /*+ BROADCAST(a, zz) */
   with one bad name now reads 1 dropped, not 0.
-- k-means ``assignment='auto'`` (r6 verdict item 5): derives
-  flat/twolevel from the same corpus-derived k the plan computes, so a
-  100 TB caller cannot ship the flat n*k form by default.
 - materialize_scan retention (r6 ADVICE 2): double-staging entries use
   DISTINCT names per call site, so a held result survives one full
   re-invocation as the keep=2 contract promises.
@@ -37,7 +34,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.functions import splits as fsplit
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import events_analytics as ev
@@ -402,37 +398,6 @@ def test_audit_hints_eager_df_hint_not_counted(spark, _hint_views):
 
     df = spark.table("t_r7a").hint("broadcast").join(spark.table("t_r7b"), "k")
     assert audit_hints(df) == 0
-
-
-# --------------------------------------------- k-means assignment='auto'
-
-
-def test_resolve_assignment_rule_both_regimes(spark):
-    # small corpus -> k below the bound -> flat
-    spark.range(100).selectExpr("id AS vec_id").createOrReplaceTempView("embeddings")
-    assert fsim.resolve_assignment(spark, "auto") == "flat"
-    # k = ceil(n/500) >= 2000 at n = 1M -> twolevel (footer-stat count)
-    spark.range(1_000_000).selectExpr("id AS vec_id").createOrReplaceTempView(
-        "embeddings"
-    )
-    assert fsim.resolve_assignment(spark, "auto") == "twolevel"
-    # the boundary is exactly the mirrored k derivation
-    assert fsim.kmeans_k(1_000_000) >= fsim.KMEANS_AUTO_TWOLEVEL_K
-    assert fsim.kmeans_k(999_000) < fsim.KMEANS_AUTO_TWOLEVEL_K
-    # explicit values pass through untouched
-    assert fsim.resolve_assignment(spark, "flat") == "flat"
-    assert fsim.resolve_assignment(spark, "twolevel") == "twolevel"
-
-
-def test_kmeans_sql_rejects_unresolved_auto():
-    with pytest.raises(ValueError, match="resolve_assignment"):
-        fsim._kmeans_sql("spark", "auto")
-
-
-def test_kmeans_auto_equals_flat_at_test_scale(spark):
-    flat = fsim.kmeans_assign(spark, SF, "flat").collect()
-    auto = fsim.kmeans_assign(spark, SF, "auto").collect()
-    assert auto == flat
 
 
 # ------------------------------- staged-handle retention across reruns

@@ -3,10 +3,9 @@ can afford many examples (no JVM in the loop; the Spark side of each
 form is separately pinned bit-equal to DuckDB in
 `tests/test_round7_fixes.py`).
 
-- kmeans_k mirror: the Python mirror that `resolve_assignment` uses to
-  pick flat/twolevel must equal the in-SQL ``kk`` derivation for ANY
-  corpus size — if they drift, 'auto' could pick a strategy the plan's
-  own k contradicts.
+- kmeans_k mirror: the Python mirror that tests and sizing tools use
+  must equal the in-SQL ``kk`` derivation for ANY corpus size — if they
+  drift, a test's expected k contradicts the plan's own.
 - equidepth NULL law: with the portable nulls-last rank key, NULL
   values always occupy the top ranks (the last bucket region) and the
   bucket sizes are the exact equidepth partition of n (each floor(n/K)

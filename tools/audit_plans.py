@@ -106,9 +106,7 @@ DECLARED: dict[str, str] = {
         "on (shingle, pair-residue), spreading a hot shingle of document "
         "frequency f over GT_SAMPLE_MOD tasks of (f/M)^2 rows each "
         "(49x smaller stragglers, 7x less total pair state) — still a "
-        "verifier, not the scale path; the deployment form caps shingle "
-        "document frequency via ngram_jaccard_pairs(max_shingle_freq=F), "
-        "pinned by tests/test_round6_fixes.py"
+        "verifier, not the scale path"
     ),
 }
 

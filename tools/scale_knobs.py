@@ -53,24 +53,6 @@ def main() -> None:
     run(fsim._embedding_lsh_pairs_sql("spark"), SF01, "sf0.1  dedup_embedding_lsh nb=derived")
     run(fsim._embedding_lsh_pairs_sql("spark"), REPLICA, "sf1    dedup_embedding_lsh nb=derived")
 
-    # --- round 6: the Lloyd-assignment strategy is a parameter; time
-    # the twolevel (IVF coarse-pruned) form next to the flat rows above.
-    # NOTE these are SAME-SESSION comparative timings of the SHIPPED
-    # regime (replica k=40/k1=3 — where flat wins; see SCALING.md
-    # §Round 6). The crossover cell itself (k=400 via occ=50/cocc=800)
-    # and all protocol-grade numbers use fresh-session min-of-2 — this
-    # tool only sanity-checks that both paths run and scale sanely.
-    run(
-        fsim._semantic_dedup_sql("spark", assignment="twolevel"),
-        SF01,
-        "sf0.1  dedup_semantic assignment=twolevel",
-    )
-    run(
-        fsim._semantic_dedup_sql("spark", assignment="twolevel"),
-        REPLICA,
-        "sf1    dedup_semantic assignment=twolevel",
-    )
-
     spark.stop()
 
 
