@@ -857,8 +857,6 @@ def bloom_prescreen_sql() -> str:
 
 # ----------------------------------------------- online streaming dedup
 
-ONLINE_CHUNKS = 4
-
 
 def _online_bands(df: DataFrame) -> DataFrame:
     """(doc_id, band, sig, sh) band rows for one arriving batch — the
@@ -885,7 +883,7 @@ def _online_bands(df: DataFrame) -> DataFrame:
 
 def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE dedup with a LIVE index: documents arrive as
-    ``ONLINE_CHUNKS`` doc_id-ordered micro-batches; each batch PROBES
+    ``STREAM_CHUNKS`` doc_id-ordered micro-batches; each batch PROBES
     the LSH index accumulated from previously ADMITTED docs (banded
     candidates → exact-Jaccard verify) and the admitted survivors are
     APPENDED to the index before the next batch — the cross-batch
@@ -910,13 +908,9 @@ def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..streaming.pipeline import _chunked_file_stream
+    from ..streaming.pipeline import _range_chunked_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    if mn is None:
-        raise ValueError("cannot chunk an empty documents table")
-    chunk = f"CAST((doc_id - {mn}) * {ONLINE_CHUNKS} div ({mx} - {mn} + 1) AS INT)"
     idx_dir = tempfile.mkdtemp(prefix="online_idx_")  # narrow (doc_id, band, sig)
     sh_dir = tempfile.mkdtemp(prefix="online_sh_")  # (doc_id, sh) fetch relation
     out_dir = tempfile.mkdtemp(prefix="online_out_")
@@ -988,7 +982,7 @@ def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             dup.unpersist()
             b.unpersist()
 
-        with _chunked_file_stream(spark, docs, chunk, ONLINE_CHUNKS) as stream:
+        with _range_chunked_stream(spark, docs, "doc_id") as stream:
             q = (
                 stream.writeStream.foreachBatch(handle)
                 .trigger(availableNow=True)
@@ -1007,9 +1001,11 @@ def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _online_dedup_sql(dialect: str) -> str:
     """Unrolled replay of the online semantics: the verified near-dup
-    relation is computed once over all ordered pairs, then the 4
-    admitted sets fold left-to-right (reject iff a verified partner sits
-    in the PREVIOUS batches' admitted set)."""
+    relation is computed once over all ordered pairs, then the
+    ``STREAM_CHUNKS`` admitted sets fold left-to-right (reject iff a
+    verified partner sits in the PREVIOUS batches' admitted set)."""
+    from ..streaming.pipeline import STREAM_CHUNKS
+
     pairs = _lsh_pairs_sql(dialect)
     tail = pairs.index("SELECT /*+") if "SELECT /*+" in pairs else pairs.index("SELECT DISTINCT")
     prefix = pairs[:tail].rstrip() + ","
@@ -1019,7 +1015,7 @@ def _online_dedup_sql(dialect: str) -> str:
     idiv = "div" if dialect == "spark" else "//"
     mn = "(SELECT min(doc_id) FROM documents)"
     mx = "(SELECT max(doc_id) FROM documents)"
-    n = ONLINE_CHUNKS
+    n = STREAM_CHUNKS
     ix = f"{size}({inter}(a.sh, b.sh))"
     stages = []
     for b in range(1, n):

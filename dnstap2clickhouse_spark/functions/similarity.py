@@ -91,12 +91,6 @@ def _dot(a: str, b: str, dialect: str) -> str:
         )
     return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
 
-def _cosine(a: str, b: str, dialect: str) -> str:
-    return (
-        f"{_dot(a, b, dialect)} / "
-        f"sqrt({_dot(a, a, dialect)} * {_dot(b, b, dialect)})"
-    )
-
 def _register(spark: SparkSession, sf_dir: str, spread: bool = False) -> None:
     """Register ``embeddings``; optionally pre-spread an under-partitioned
     scan.
@@ -1540,10 +1534,6 @@ def embedding_lsh_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row pair-recall of the LSH embedding dedup vs exact all-pairs."""
     _register(spark, sf_dir, spread=True)
     return spark.sql(_embedding_lsh_recall_sql("spark"))
-
-
-def embedding_lsh_dup_recall_sql() -> str:
-    return _embedding_lsh_recall_sql("duckdb")
 
 
 # --------------------------------------------- MMR diversity re-ranking

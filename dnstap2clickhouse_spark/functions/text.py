@@ -740,7 +740,6 @@ def hashed_features_sql() -> str:
 
 # ----------------------------------------------------- BPE merge learning
 
-BPE_MERGES = 2  # unrolled merge rounds (each = one corpus pair count)
 BPE_TOP = 5  # pairs reported per round
 #: single-char placeholder for the round-1 merged symbol; the corpus is
 #: ASCII words, so '@' cannot collide with an existing symbol
@@ -785,6 +784,7 @@ def _bpe_merges_sql(dialect: str) -> str:
             "SELECT substring(word, i, 2) AS pair FROM {src}, "
             "LATERAL unnest(generate_series(1, length(word) - 1)) AS t(i)"
         )
+    # two merge rounds, unrolled (p1/m1, then p2; each = one corpus pair count)
     return f"""
 WITH w1 AS ({words}),
 p1 AS (SELECT pair, CAST(count(*) AS BIGINT) AS n FROM ({pairs.format(src='w1')}) GROUP BY pair),

@@ -466,9 +466,6 @@ def decontam_certificate_sql() -> str:
 
 # ------------------------------------------- temperature-scaled mixture
 
-MIX_TEMPERATURE_INV = 2  # tau = 1/2: weight = n^(1/2) (the LLaMA recipe)
-
-
 def _mixture_temperature_sql(dialect: str) -> str:
     """Temperature-scaled source mixture — the data-recipe move every
     modern pretraining run makes (LLaMA/Gopher report tau ~ 0.5-0.7):
@@ -488,6 +485,7 @@ def _mixture_temperature_sql(dialect: str) -> str:
     everything else is windows over that table.
     """
     idiv = "div" if dialect == "spark" else "//"
+    # sqrt below: tau = 1/2, weight = n^(1/2) (the LLaMA recipe)
     return f"""
 WITH counts AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs

@@ -1850,7 +1850,6 @@ def window_funnel_sql() -> str:
 # ------------------------------------------------ journey mining
 
 PATHS_TOP = 15  # top 3-step journeys surfaced
-PATHS_LEN = 3
 
 
 def _top_paths_sql(dialect: str) -> str:
@@ -1863,6 +1862,7 @@ def _top_paths_sql(dialect: str) -> str:
     partials + TakeOrderedAndProject. Output is type-domain³ bounded
     before the limit.
     """
+    # journey length 3: lags 2 and 1 plus the current event
     return f"""
 WITH seq AS (
   SELECT user_id,

@@ -6,10 +6,6 @@ oracle query (`events_asof_attribution`) doesn't exercise."""
 from __future__ import annotations
 
 import datetime as dt
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.operators.asof import asof_join
 

@@ -15,8 +15,6 @@ import time
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark import streaming as st
 from dnstap2clickhouse_spark.__main__ import read_events_source
 from dnstap2clickhouse_spark.operators.dns_pipeline import client_query_table

@@ -4,12 +4,9 @@ derived interval (toml.go semantics), and F3 static plan gating."""
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.__main__ import build_streams, start_queries
 from dnstap2clickhouse_spark.config import AggregatorConfig, EngineConfig

@@ -23,8 +23,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark.__main__ import (
     COUNT_QUERY,
     build_streams,

@@ -4,12 +4,7 @@ plumbing shape, and invariants."""
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.functions import dedup, multimodal, similarity
 

@@ -6,13 +6,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 import tempfile
 from datetime import datetime, timedelta
 
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark import streaming as st
 from dnstap2clickhouse_spark.operators.join import (

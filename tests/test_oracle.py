@@ -6,11 +6,8 @@ speed (set SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.01 for the full gate).
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from tests.oracle_harness import assert_match, run_oracle

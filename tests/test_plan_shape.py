@@ -7,11 +7,7 @@ pinned here so a refactor can't silently regress them.
 
 from __future__ import annotations
 
-import os
 import re
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

@@ -3,11 +3,6 @@ section 5) as property tests over the synthetic corpus."""
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 import pyspark.sql.functions as F
 
 from dnstap2clickhouse_spark.config import AggregatorConfig, GROUPBY_TAG

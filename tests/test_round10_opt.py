@@ -18,11 +18,7 @@ Pins the three r10 optimization-round changes:
 
 from __future__ import annotations
 
-import os
 import re
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

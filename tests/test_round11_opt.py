@@ -14,11 +14,6 @@ Pins the r11 optimization-round changes:
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark.functions import dedup as fd
 
 SF = "/root/testdata/sf0.001"

@@ -1,9 +1,9 @@
 """Round-4 batch-11 operators: mergeable HLL partials, Z-order layout,
-hashing-trick features, stream-static enrichment. The oracle gate proves
-value-exactness vs DuckDB; these tests pin what the operators MEAN — the
-merge identity really holding, a full Python replay of the Morton curve
-and of the feature hashes, and the exactly-once/no-duplication shape of
-the stream-static join.
+hashing-trick features. The oracle gate proves value-exactness vs
+DuckDB; these tests pin what the operators MEAN — the merge identity
+really holding, and a full Python replay of the Morton curve and of the
+feature hashes. The stream-static join's tests live in
+``test_streaming.py``.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.functions.splits import LEHMER_A, LEHMER_P
 from dnstap2clickhouse_spark.plans import events_analytics as evan
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.streaming import pipeline as stp
 
 SF = "/root/testdata/sf0.001"
 
@@ -140,20 +139,3 @@ def test_hashed_features_python_replay(spark):
     }
     assert got == dict(expect)
     assert all(0 <= b < ftext.HASHED_DIM for _, b in got)
-
-
-# ---------------------------------------------- stream-static enrich
-
-
-def test_static_enrich_exactly_once_and_mass(spark):
-    """Each event crosses the stream exactly once (n_distinct == n per
-    segment), and the total enriched mass equals the batch inner join —
-    dropped rows are exactly the users with no dimension row."""
-    out = stp.streaming_static_enrich_query(spark, SF).collect()
-    assert out, "no segments"
-    for r in out:
-        assert r.n_events == r.n_distinct_events, f"{r.segment}: duplicated events"
-    ev = load_table(spark, SF, "events")
-    dim = load_table(spark, SF, "customer").selectExpr("c_custkey AS user_id")
-    batch_n = ev.join(dim, "user_id").count()
-    assert sum(r.n_events for r in out) == batch_n

@@ -1,26 +1,20 @@
-"""Round-4 batch-34 operators: bigram LM scoring, resource-allocation
-link prediction, streaming CDC apply. Pins: full Python replays of the
-bigram conditional model and the RA wedge sum, the no-edges-predicted
-invariant, chunking-independence of the streaming MERGE loop (1 chunk
-== 4 chunks == batch), and the fluency direction of the LM score on an
-engineered frame (predictable continuations outscore word salad).
+"""Round-4 batch-34 operators: bigram LM scoring and resource-allocation
+link prediction. Pins: full Python replays of the bigram conditional
+model and the RA wedge sum, the no-edges-predicted invariant, and the
+fluency direction of the LM score on an engineered frame (predictable
+continuations outscore word salad). The streaming CDC apply's tests live
+in ``test_streaming.py``.
 """
 
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.streaming import pipeline as stp
 
 SF = "/root/testdata/sf0.001"
-
-
-def _e2(v: float) -> int:
-    return int((Decimal(v) * 100).quantize(Decimal(1), ROUND_HALF_UP))
 
 
 # ------------------------------------------------ bigram LM
@@ -114,33 +108,3 @@ def test_link_predict_excludes_existing_edges(spark):
     edges = _graph_edges(spark)
     for r in pgraph.link_predict(spark, SF).collect():
         assert (r.a, r.b) not in edges and (r.b, r.a) not in edges
-
-
-# ------------------------------------------------ streaming CDC apply
-
-
-def test_upsert_apply_matches_batch_argmax(spark):
-    ev = load_table(spark, SF, "events").collect()
-    best: dict = {}
-    n: Counter = Counter()
-    for r in ev:
-        us = int(r.ts.timestamp() * 1_000_000) if hasattr(r.ts, "timestamp") else r.ts
-        key = (us, r.event_id, _e2(r.value))
-        if r.user_id not in best or key > best[r.user_id]:
-            best[r.user_id] = key
-        n[r.user_id] += 1
-
-    out = stp.streaming_upsert_apply(spark, SF).collect()
-    assert len(out) == len(best)
-    for r in out:
-        assert (r.last_ts_us, r.last_event_id, r.last_ve2) == best[r.user_id]
-        assert r.n_changes == n[r.user_id]
-
-
-def test_upsert_apply_chunking_independent(spark, monkeypatch):
-    """The semilattice claim, executed: 1 micro-batch and 4 micro-
-    batches must produce identical final state."""
-    four = [tuple(r) for r in stp.streaming_upsert_apply(spark, SF).collect()]
-    monkeypatch.setattr(stp, "UPSERT_CHUNKS", 1)
-    one = [tuple(r) for r in stp.streaming_upsert_apply(spark, SF).collect()]
-    assert one == four

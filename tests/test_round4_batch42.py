@@ -1,9 +1,7 @@
-"""Round-4 batch-42 operators: tombstone CDC apply, hard-negative
-mining, tokenizer fertility. Pins: chunking-independence of the
-tombstone merge (1 chunk == 4 chunks == batch oracle, flag included in
-the argmax), tombstone semantics on an engineered resurrect/delete
-sequence, the cross-label invariant + hardest-negative replay, and the
-fertility identities (per-source ratios + corpus rollup).
+"""Round-4 batch-42 operators: hard-negative mining, tokenizer
+fertility. Pins: the cross-label invariant + hardest-negative replay,
+and the fertility identities (per-source ratios + corpus rollup). The
+tombstone CDC apply's tests live in ``test_streaming.py``.
 """
 
 from __future__ import annotations
@@ -13,84 +11,8 @@ from collections import defaultdict
 from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.sources.tables import load_table
-from dnstap2clickhouse_spark.streaming import pipeline as stp
 
 SF = "/root/testdata/sf0.001"
-
-
-# ------------------------------------------------ tombstone apply
-
-
-def test_tombstone_chunking_independence(spark):
-    """1-chunk and 4-chunk streaming runs must agree exactly (the
-    semilattice argument made measurable)."""
-    four = [tuple(r) for r in stp.streaming_tombstone_apply(spark, SF).collect()]
-    orig = stp.TOMBSTONE_CHUNKS
-    try:
-        stp.TOMBSTONE_CHUNKS = 1
-        one = [tuple(r) for r in stp.streaming_tombstone_apply(spark, SF).collect()]
-    finally:
-        stp.TOMBSTONE_CHUNKS = orig
-    assert four == one
-
-
-def test_tombstone_python_replay(spark):
-    rows = load_table(spark, SF, "events").selectExpr(
-        "event_id", "unix_micros(ts) AS us", "user_id", "event_type",
-        "CAST(round(value * 100) AS BIGINT) AS ve2").collect()
-    last: dict = {}
-    n: dict = defaultdict(int)
-    nd: dict = defaultdict(int)
-    for r in rows:
-        key = (r.us, r.event_id, r.event_type == "error", r.ve2)
-        n[r.user_id] += 1
-        if r.event_type == "error":
-            nd[r.user_id] += 1
-        if r.user_id not in last or key[:2] > last[r.user_id][:2]:
-            last[r.user_id] = key
-    expect = sorted(
-        (u, k[0], k[1], k[2], k[3], n[u], nd[u]) for u, k in last.items()
-    )
-    got = [tuple(r) for r in stp.streaming_tombstone_apply(spark, SF).collect()]
-    assert got == expect
-    assert any(r[3] for r in got) or all(nd[u] == 0 for u in nd)
-
-
-def test_tombstone_resurrection_semantics(spark):
-    """delete -> re-upsert leaves the key LIVE; upsert -> delete
-    leaves it DELETED — last-writer-wins on the flag."""
-    ev = load_table(spark, SF, "events")
-    rows = [
-        (0, 0, 1, "view", 1.0, "{}"),
-        (1, 1_000_000, 1, "error", 0.0, "{}"),   # user 1: ends deleted
-        (2, 0, 2, "error", 0.0, "{}"),
-        (3, 1_000_000, 2, "view", 2.0, "{}"),    # user 2: resurrected
-    ]
-    try:
-        spark.createDataFrame(
-            rows,
-            "event_id BIGINT, t_us BIGINT, user_id BIGINT,"
-            " event_type STRING, value DOUBLE, props STRING",
-        ).selectExpr(
-            "event_id", "timestamp_micros(t_us) AS ts", "user_id",
-            "event_type", "value", "props",
-        ).createOrReplaceTempView("events_fixture")
-        import dnstap2clickhouse_spark.sources.tables as tbl
-        orig = tbl.load_table
-        def fake(spark_, sf_dir, name):
-            if name == "events":
-                return spark_.table("events_fixture")
-            return orig(spark_, sf_dir, name)
-        stp.load_table, saved = fake, stp.load_table
-        try:
-            out = {r.user_id: (r.deleted, r.n_changes, r.n_tombstones)
-                   for r in stp.streaming_tombstone_apply(spark, SF).collect()}
-        finally:
-            stp.load_table = saved
-    finally:
-        ev.createOrReplaceTempView("events")
-    assert out[1] == (True, 2, 1)
-    assert out[2] == (False, 2, 1)
 
 
 # ------------------------------------------------ hard negatives

@@ -343,49 +343,6 @@ def test_pq_codes_match_numpy(spark):
     assert all(0 <= r.code < k for r in rows)
 
 
-def test_streaming_session_window_merges_across_batches(spark):
-    """A session engineered to straddle the chunk-1/chunk-2 time
-    boundary arrives split across two micro-batches and MUST come back
-    merged as one session (state-store merge), while the tail session
-    inside the watermark horizon MUST be withheld (append-mode
-    finalization)."""
-    import datetime
-
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    t0 = datetime.datetime(2001, 1, 1)
-    h = 3600
-
-    def ev(eid, uid, sec):
-        return (eid, t0 + datetime.timedelta(seconds=sec), uid, 1.0)
-
-    # corpus span 0..40000s → 4 chunks of 10000s each. User 1's pair
-    # brackets the 20000s boundary 10 min apart (< 30 min gap): the two
-    # events land in chunk 1 and chunk 2 micro-batches but form ONE
-    # session. User 2's tail event sits at the corpus max (inside the
-    # 1 h watermark horizon) and must not be emitted.
-    rows_in = [
-        ev(0, 1, 0),  # chunk 0 anchor (corpus min)
-        ev(1, 1, 20000 - 300),
-        ev(2, 1, 20000 + 300),
-        ev(3, 2, 5000),
-        ev(4, 2, 40000),  # corpus max; unfinalized tail
-    ]
-    df = spark.createDataFrame(
-        rows_in, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
-    )
-    out = stp.streaming_session_window_df(spark, df).collect()
-    got = {(r.user_id, r.n) for r in out}
-    # user 1: the boundary pair merged into one 2-event session + the anchor
-    assert (1, 2) in got and (1, 1) in got
-    # user 2: only the early session; the tail one is withheld
-    assert (2, 1) in got
-    assert len(out) == 3
-    gap = stp.SESSION_STREAM_GAP_S
-    for r in out:
-        assert (r.sessionEnd - r.sessionStart).total_seconds() >= gap
-
-
 def test_pq_adc_matches_numpy(spark):
     """ADC: the top-k per query reproduces a numpy reimplementation
     (same codebooks, same LUT distances, same in-order sums, same
@@ -481,42 +438,6 @@ def test_returned_items_only_returned_revenue(spark):
         assert _round_ha(r.revenue * 10000) == manual[r.c_custkey]
     revs = [(r.revenue, -r.c_custkey) for r in rows]
     assert revs == sorted(revs, reverse=True)
-
-
-def test_streaming_response_join_buffers_across_batches(spark):
-    """A query arriving in one micro-batch must be matched by its
-    response arriving in a LATER micro-batch (symmetric join state
-    buffering), and a response outside the 10-minute bound must not
-    match."""
-    import datetime
-
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    t0 = datetime.datetime(2001, 1, 1)
-
-    def ev(eid, sec):
-        return (eid, t0 + datetime.timedelta(seconds=sec), 1, "click", 1.0)
-
-    # span 0..40000s → 4 chunks of 10000s. Pair key = event_id div 2.
-    # key 5: query (id 10) at 9950s (chunk 0), response (id 11) at
-    # 10050s (chunk 1) — 100s apart, MUST match across the batch
-    # boundary. key 6: response (id 13) arrives 11 min after its query
-    # (id 12) — outside the bound, must NOT match. Anchors pin the
-    # corpus span.
-    rows = [
-        ev(0, 0),  # anchor min
-        ev(10, 9950),
-        ev(11, 10050),
-        ev(12, 20000),
-        ev(13, 20000 + 660),
-        ev(2, 40000),  # anchor max (even id: a query with no response)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
-    )
-    out = stp.streaming_response_join_df(spark, df).collect()
-    assert len(out) == 1
-    assert out[0].delta_us == 100 * 1_000_000
 
 
 def test_ivfpq_candidates_come_from_probed_cells(spark):

@@ -147,42 +147,6 @@ def test_hybrid_rrf_consistent_with_component_retrievers(spark):
             assert kw[r.kw_rank] == r.doc_id
 
 
-def test_streaming_outer_join_boundary_and_null_emission(spark):
-    """Stream-stream LEFT OUTER join: an unmatched query emits its
-    NULL-extended row only once the final watermark STRICTLY passes
-    qt + 10min. Engineered whole-ms fixture: wm = min(max_qt, max_rt)
-    − 10min lands EXACTLY on one query's qt + 10min (withheld — strict
-    boundary) and 1 ms past another's (emitted); matched pairs emit
-    regardless; unmatched RESPONSES never emit."""
-    import datetime
-
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    t0 = datetime.datetime(2001, 1, 1)
-    min10 = 600_000  # ms
-
-    def ev(eid, ms):
-        return (eid, t0 + datetime.timedelta(milliseconds=ms), 1, "click", 1.0)
-
-    rows = [
-        ev(20, -1),  # unmatched; qt+D = wm−1ms -> emitted (delta -1)
-        ev(0, 0),  # unmatched; qt+D == wm exactly -> withheld (strict)
-        ev(2, 2 * min10),  # matched pair straddling chunks; drives wm_q
-        ev(3, 2 * min10 + 7),
-        ev(5, 3 * min10),  # unmatched RESPONSE; drives wm_r; never emits
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
-    )
-    got = sorted(tuple(r) for r in stp.streaming_outer_join_df(spark, df).collect())
-    assert got == sorted(
-        [
-            (t0 + datetime.timedelta(milliseconds=-1), "ns1", -1),
-            (t0 + datetime.timedelta(milliseconds=2 * min10), "ns1", 7000),
-        ]
-    )
-
-
 def test_embedding_lsh_dups_precision_and_recall_consistency(spark):
     """LSH-bucketed pairs are a SUBSET of the exact all-pairs cosine-dup
     relation (precision 1.0, same threshold/fold), every found pair
@@ -205,35 +169,6 @@ def test_embedding_lsh_dups_precision_and_recall_consistency(spark):
     assert row.pair_recall == len(lsh) / len(exact)
 
 
-def test_streaming_outer_join_empty_response_side(spark):
-    """With no response-side rows the response watermark never leaves
-    epoch 0, so Spark evicts nothing and emits NOTHING — the oracle
-    models this via a NULL combined watermark (review fix: DuckDB's
-    least() would skip the NULL side and wrongly evict). Also pins the
-    empty-frame guard on the shared chunking helper."""
-    import datetime
-
-    import pytest
-
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    t0 = datetime.datetime(2001, 1, 1)
-    rows = [  # queries only (even ids), spanning >> the 10-min bound
-        (0, t0, 1, "click", 1.0),
-        (2, t0 + datetime.timedelta(hours=2), 1, "click", 1.0),
-    ]
-    schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
-    df = spark.createDataFrame(rows, schema)
-    assert stp.streaming_outer_join_df(spark, df).collect() == []
-    import duckdb
-
-    con = duckdb.connect()
-    con.register("events", df.toPandas())
-    assert len(con.sql(stp.streaming_outer_join_sql()).df()) == 0
-    with pytest.raises(ValueError, match="empty"):
-        stp._time_chunked_stream(spark, spark.createDataFrame([], schema), 4)
-
-
 def test_curate_v3_is_v2_minus_semantic_drops(spark):
     """The two-modality capstone: v3's survivor set is EXACTLY v2's
     minus the docs whose embedding the SemDeDup verdict drops — the
@@ -249,51 +184,6 @@ def test_curate_v3_is_v2_minus_semantic_drops(spark):
     assert set(v3) == set(v2) - sem_dropped
     for d, row in v3.items():
         assert row == v2[d]
-
-
-def test_streaming_full_outer_join_asymmetric_boundaries(spark):
-    """FULL OUTER: both orphan kinds emit at their own STRICT cuts —
-    queries once wm passes qt + bound, responses once wm passes rt
-    itself (queries later than rt can never match it). Whole-ms fixture
-    places one orphan response exactly ON the cut (withheld) and one
-    1 ms before it (emitted), alongside a matched pair and an
-    over-bound response that must surface as an orphan."""
-    import datetime
-
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    t0 = datetime.datetime(2001, 1, 1)
-    min10 = 600_000
-
-    def ev(eid, ms):
-        return (eid, t0 + datetime.timedelta(milliseconds=ms), 1, "click", 1.0)
-
-    rows = [
-        ev(21, -1),  # orphan response; rt = wm−1ms -> emitted
-        ev(1, 0),  # orphan response; rt == wm exactly -> withheld (strict)
-        ev(2, min10),  # query: drives wm_q = t0; pairs with event 3
-        ev(3, min10 + 11),  # its response, 11ms later -> match
-        ev(5, 2 * min10),  # response, drives wm_r; its query (4) absent
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
-    )
-    got = sorted(tuple(r) for r in stp.streaming_full_outer_join_df(spark, df).collect())
-    assert got == sorted(
-        [
-            (t0 + datetime.timedelta(milliseconds=-1), "ns1", -1, "orphan_response"),
-            (t0 + datetime.timedelta(milliseconds=min10), "ns1", 11000, "match"),
-        ]
-    )
-    # oracle agrees on the engineered frame (both cuts replayed in SQL)
-    import duckdb
-
-    con = duckdb.connect()
-    con.register("events", df.toPandas())
-    ora = sorted(map(tuple, con.sql(stp.streaming_full_outer_join_sql()).df().values))
-    assert [(str(a), b, c, d) for a, b, c, d in got] == [
-        (str(a), b, c, d) for a, b, c, d in ora
-    ]
 
 
 def test_online_dedup_chain_semantics(spark):

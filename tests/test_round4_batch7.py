@@ -413,67 +413,6 @@ def test_dataset_card_counts(spark):
     assert c2.dup_rate_e6 == 1_000_000 // 3
 
 
-# ----------------------------------------- batch 9: streaming hopping
-
-
-def test_streaming_hopping_cross_batch_merge(spark):
-    """One hopping window straddles the chunk boundary: its count must
-    merge events delivered in DIFFERENT micro-batches; the unfinalized
-    tail (windows whose end is inside the watermark horizon) stays
-    withheld."""
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    # corpus spans 4 hours; quartile chunks break at :00 boundaries.
-    # Window [00:45, 01:45) gets one event in chunk 0 (00:50) and one
-    # in chunk 1 (01:10) — merged only if pane state survives batches.
-    rows = [
-        (1, "2024-01-01 00:50:00", "click", 1.0),
-        (2, "2024-01-01 01:10:00", "click", 1.0),
-        (3, "2024-01-01 02:30:00", "view", 1.0),
-        (4, "2024-01-01 03:59:59", "view", 1.0),  # corpus max
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id BIGINT, ts STRING, event_type STRING, value DOUBLE"
-    ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "event_type", "value")
-    out = stp.streaming_hopping_window_df(spark, ev).collect()
-    got = {(str(r.windowStart), r.event_type): r.n for r in out}
-    assert got[("2024-01-01 00:45:00", "click")] == 2  # merged across chunks
-    # finalization: watermark = 03:59:59 - 1h => windows ending after
-    # 02:59:59 are withheld, so no 'view' window containing 02:30 with
-    # end > that cut may appear; the last emitted window end <= cut
-    import datetime
-
-    cut = datetime.datetime(2024, 1, 1, 2, 59, 59)
-    for r in out:
-        end = r.windowStart + datetime.timedelta(seconds=stp.HOP_WINDOW_S)
-        assert end <= cut
-    assert ("2024-01-01 03:45:00", "view") not in got  # corpus-max window withheld
-
-
-def test_streaming_hopping_pane_multiplicity(spark):
-    """Every corpus event lands in exactly window/slide = 4 emitted-or-
-    withheld panes; emitted totals equal 4x the events old enough to
-    have all their panes finalized plus partial panes of newer ones —
-    checked via the oracle identity sum(n) == pane count of the kept
-    windows recomputed in Python."""
-    from dnstap2clickhouse_spark.streaming import pipeline as stp
-
-    ev = load_table(spark, SF, "events").select("event_id", "ts", "event_type", "value")
-    out = stp.streaming_hopping_window_df(spark, ev).collect()
-    rows = ev.selectExpr("unix_micros(ts) AS tus", "event_type").collect()
-    mx = max(r.tus for r in rows)
-    cut = (mx // 1000) * 1000 - stp.HOP_WM_S * 1_000_000
-    slide = stp.HOP_SLIDE_S * 1_000_000
-    win = stp.HOP_WINDOW_S * 1_000_000
-    want = 0
-    for r in rows:
-        base = (r.tus // slide) * slide
-        for k in range(stp.HOP_WINDOW_S // stp.HOP_SLIDE_S):
-            if base - k * slide + win <= cut:
-                want += 1
-    assert sum(r.n for r in out) == want
-
-
 # ------------------------------------------- batch 10: token budget
 
 

@@ -14,12 +14,7 @@ never reaches) and asserts the fixed semantics.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.plans import events_analytics as evan
 from dnstap2clickhouse_spark.functions import splits as fsplit

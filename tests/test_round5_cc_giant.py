@@ -16,11 +16,6 @@ store) instead of growing with convergence.
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
 from dnstap2clickhouse_spark.functions import dedup

@@ -11,11 +11,6 @@ SQL against the mirrors row by row.
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark.functions import similarity as fsim
 
 

@@ -15,11 +15,6 @@ like an order-only one, so group counting misclassifies both ways).
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import events_analytics as ev
 from tools.audit_plans import _window_unpartitioned, audit_plan

@@ -17,12 +17,7 @@ scans with a pushdown-blocking scalar subquery).
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.functions import similarity as sim

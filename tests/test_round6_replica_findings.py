@@ -12,12 +12,7 @@ evaluate the identical double expression.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.plans import events_analytics as ev
 

@@ -10,12 +10,7 @@ bit-identical rows from both dialects, including recall's defined-as-
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 

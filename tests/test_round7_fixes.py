@@ -25,14 +25,10 @@
 
 from __future__ import annotations
 
-import os
-import sys
 import unittest.mock as mock
 
 import duckdb
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.functions import splits as fsplit
 from dnstap2clickhouse_spark.functions import text as ftext
@@ -373,7 +369,6 @@ def _hint_views(spark):
 
 
 def test_audit_hints_multiname_partial_drop(spark, _hint_views):
-    sys.path.insert(0, "/root/repo")
     from tools.audit_plans import audit_hints
 
     df = spark.sql(

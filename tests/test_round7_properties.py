@@ -22,13 +22,8 @@ form is separately pinned bit-equal to DuckDB in
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.functions import text as ftext

@@ -4,12 +4,7 @@ the bucketing test also asserts the plan is shuffle-free."""
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dnstap2clickhouse_spark.operators.skew import salted_agg
 from dnstap2clickhouse_spark.plans.bucketed import (

@@ -4,11 +4,6 @@ change degrades the strategy, not just the results)."""
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from dnstap2clickhouse_spark.functions import splits as fsplit
 from dnstap2clickhouse_spark.plans import curation, tpch
 from dnstap2clickhouse_spark.sources.tables import load_table
