@@ -1634,7 +1634,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank; one more selection step would double it again). The greedy
     steps' SQL text and the DuckDB oracle string stay byte-identical —
     DuckDB materializes CTEs, so the inline form was already single-pass
-    there (the `_run_with_cached_edges` discipline). Values are unchanged
+    there. Values are unchanged
     by construction: the materialized pool is the same relation the CTE
     declared, parquet round-trips its exact schema, and the downstream
     cosine folds never re-derive it.

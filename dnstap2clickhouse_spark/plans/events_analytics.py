@@ -2489,9 +2489,8 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤|type-domain|²-row) materialized parquet: the pure-SQL form's
     x1/x2/scalar-certificate references re-expanded the `pairs` chain
     per reference — 23 events scan leaves in one plan (the last census
-    item). NOT the `_run_with_cached_edges` persist idiom: the
-    CacheManager does not substitute a cached relation into a query
-    that contains a CTE (measured — plain consumer substitutes, any
+    item). NOT a persisted temp view: the CacheManager does not
+    substitute a cached relation into a query that contains a CTE (measured — plain consumer substitutes, any
     WITH-consumer does not), and this consumer keeps its x1/x2 CTEs.
     Splice is anchor-guarded; the DuckDB oracle string is untouched.
     """

@@ -152,9 +152,10 @@ def _copurchase_cte() -> str:
 
 def _copurchase_pairs_df(spark: SparkSession, sf_dir: str):
     """The distinct co-purchase edge list as a DataFrame — ONE
-    definition shared by every DataFrame-form graph entry (k-core, BFS)
-    and by `_run_with_cached_edges`: columns (a, b), a < b, the exact
-    relation `_copurchase_cte` declares."""
+    definition shared by the DataFrame-form graph entries (k-core,
+    BFS): columns (a, b), a < b, the exact relation `_copurchase_cte`
+    declares. The SQL-form entries inline `_copurchase_cte` and leave
+    its repeated references to Spark's exchange reuse."""
     from pyspark.sql import functions as F
 
     from ..sources.tables import load_table
@@ -174,48 +175,6 @@ def _copurchase_pairs_df(spark: SparkSession, sf_dir: str):
         .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
         .distinct()
     )
-
-
-#: the one live cached edge relation per view name (see the
-#: replace-and-unpersist note in `_run_with_cached_edges`)
-_EDGE_CACHE: dict[str, DataFrame] = {}
-
-
-def _run_with_cached_edges(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Run a graph entry's Spark SQL with its co-purchase CTE swapped
-    for a PERSISTED temp view: Spark inlines a CTE per reference, so
-    every `edges`/`sym`/`deg` consumer re-ran the lineitem self-join +
-    DISTINCT build (leaf census: triangle x36, clustering x34,
-    jaccard x16, link_predict x14 lineitem scan leaves). The view's
-    relation is exactly `_copurchase_cte`'s (same DISTINCT a < b
-    pairs), downstream CTEs still inline but read the cache
-    (InMemoryTableScan leaves), and the DuckDB oracle strings are
-    untouched — DuckDB materializes CTEs, so the inline form was
-    already single-pass there. The splice is anchor-guarded (the
-    `curate_v3` discipline): exactly ONE copurchase CTE must match, or
-    this raises rather than silently running the uncached form."""
-    anchor_a = f"copurchase AS ({_copurchase_cte()})"
-    anchor_b = f"edges AS ({_copurchase_cte()})"
-    n = sql.count(anchor_a) + sql.count(anchor_b)
-    if n != 1:
-        raise RuntimeError(f"copurchase splice anchor drifted: {n} matches")
-    view = "__copurchase_cached"
-    # replace-and-unpersist: without this every call leaks one cached
-    # relation for the session's lifetime (the view is replaced, the
-    # old cache is not). A previously RETURNED entry DataFrame that
-    # still referenced the old cache recomputes from parquet — correct,
-    # just uncached (the materialize_scan keep-window contract).
-    old = _EDGE_CACHE.pop(view, None)
-    if old is not None:
-        old.unpersist()
-    df = _copurchase_pairs_df(spark, sf_dir).persist()
-    _EDGE_CACHE[view] = df
-    df.createOrReplaceTempView(view)
-    sub = f"(SELECT a, b FROM {view})"
-    sql = sql.replace(anchor_a, f"copurchase AS {sub}").replace(
-        anchor_b, f"edges AS {sub}"
-    )
-    return spark.sql(sql)
 
 
 def _triangle_sql(dialect: str) -> str:
@@ -284,7 +243,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _triangle_sql("spark"))
+    return spark.sql(_triangle_sql("spark"))
 
 
 def triangle_count_sql() -> str:
@@ -350,15 +309,17 @@ def jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unlike ``pagerank_top`` (where CTE re-evaluation forced a persisted
     DataFrame form), the SQL form is fine here: the repeated
-    ``copurchase``/``adj`` references dedupe at the physical level —
-    the executed plan carries 6 ReusedExchange nodes (verified), so the
-    edge build runs once; a persist()-based variant measured SLOWER
-    (7.6 s vs 5.9 s at sf0.1, memoization overhead for no extra reuse).
+    ``copurchase``/``adj`` references dedupe at the physical level
+    (ReusedExchange nodes in the executed plan), so the edge build runs
+    once. A persisted edge view measured slower for every SQL-form
+    graph entry: each cached reference becomes its own AQE query stage
+    and no exchange is reused (SCALING.md, "The graph family shares
+    one edge build").
     """
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _jaccard_neighbors_sql("spark"))
+    return spark.sql(_jaccard_neighbors_sql("spark"))
 
 
 def jaccard_neighbors_sql() -> str:
@@ -664,7 +625,7 @@ def modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem", "part"))
-    return _run_with_cached_edges(spark, sf_dir, _modularity_sql("spark"))
+    return spark.sql(_modularity_sql("spark"))
 
 
 def modularity_sql() -> str:
@@ -719,7 +680,7 @@ def assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _assortativity_sql("spark"))
+    return spark.sql(_assortativity_sql("spark"))
 
 
 def assortativity_sql() -> str:
@@ -766,7 +727,7 @@ def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _degree_histogram_sql("spark"))
+    return spark.sql(_degree_histogram_sql("spark"))
 
 
 def degree_histogram_sql() -> str:
@@ -809,7 +770,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _clustering_sql("spark"))
+    return spark.sql(_clustering_sql("spark"))
 
 
 def clustering_coefficient_sql() -> str:
@@ -873,7 +834,7 @@ def link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return _run_with_cached_edges(spark, sf_dir, _link_predict_sql("spark"))
+    return spark.sql(_link_predict_sql("spark"))
 
 
 def link_predict_sql() -> str:

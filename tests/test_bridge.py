@@ -82,7 +82,6 @@ def test_unknown_frame_format_raises():
 
 def test_fstrm_control_frame_codec():
     from dnstap2clickhouse_spark.sources.bridge import (
-        FSTRM_FIELD_CONTENT_TYPE,
         FSTRM_READY,
         encode_control_frame,
         parse_control_frame,

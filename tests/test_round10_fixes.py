@@ -25,7 +25,6 @@ import os
 import subprocess
 import sys
 
-import pytest
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(HERE, "tools"))

@@ -18,7 +18,6 @@ Pins the three r10 optimization-round changes:
 
 from __future__ import annotations
 
-import re
 
 import __spark_entry__ as entrymod
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from dnstap2clickhouse_spark.config import GROUPBY_TAG, AggregatorConfig
 from dnstap2clickhouse_spark.operators.grouping_sets import (

@@ -1,11 +1,9 @@
-"""Round-4 batch-14 operators: WebDataset shard packing, GDPR batch
-erasure, k-core peeling. These pin the operators' meaning: a full
-Python replay of the prefix-sum shard layout plus partitioning
-independence of the distributed cumsum, the erasure cohort's exact
-membership + zero-residue proof recomputed in Python, and the k-core
-peel replayed to fixpoint on the real corpus plus an engineered
-cascade fixture that exercises the full unroll depth — including the
-honesty case where the certificate must report non-convergence.
+"""Round-4 batch-14 operators: WebDataset shard packing and GDPR batch
+erasure. These pin the operators' meaning: a full Python replay of the
+prefix-sum shard layout plus partitioning independence of the
+distributed cumsum, and the erasure cohort's exact membership +
+zero-residue proof recomputed in Python. The k-core tests live in
+``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -16,7 +14,6 @@ from dnstap2clickhouse_spark.functions import multimodal as fmm
 from dnstap2clickhouse_spark.functions import splits as fsplit
 from dnstap2clickhouse_spark.functions.splits import LEHMER_A, LEHMER_P
 from dnstap2clickhouse_spark.plans import events_analytics as evan
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -131,123 +128,3 @@ def test_user_erasure_is_broadcastable_anti_join_shape(spark):
     assert kept.count() + ev.where(
         F.expr(fsplit._bucket2_sql("user_id", evan.ERASURE_BUCKETS)) == 0
     ).count() == ev.count()
-
-
-# -------------------------------------------------------- k-core
-
-
-def _peel(edges: set[tuple[int, int]], k: int):
-    """Reference peeling to fixpoint: returns (members with in-core
-    degree, rounds-to-fixpoint). ``edges`` is undirected (a < b)."""
-    alive = {v for e in edges for v in e}
-    rounds = 0
-    while True:
-        deg: dict[int, int] = {}
-        for a, b in edges:
-            if a in alive and b in alive:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
-        keep = {v for v in alive if deg.get(v, 0) >= k}
-        rounds += 1
-        if keep == alive:
-            return {v: deg[v] for v in alive}, rounds
-        alive = keep
-
-
-def test_kcore_python_replay(spark):
-    """Peel the real sf0.001 co-purchase graph to fixpoint in Python;
-    the entry's member set, in-core degrees, and converged=True must
-    all agree."""
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem",))
-    edges = {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-    core, rounds = _peel(edges, pgraph.KCORE_K)
-    assert rounds <= pgraph.KCORE_ROUNDS  # the unroll really covers this corpus
-
-    out = pgraph.kcore(spark, SF).collect()
-    assert {r.part: r.core_degree for r in out} == core
-    assert all(r.converged for r in out)
-    assert all(r.core_degree >= pgraph.KCORE_K for r in out)
-
-
-def _edges_to_lineitem(spark, edges):
-    """Encode an undirected edge list as a minimal lineitem fixture:
-    one order per edge, both endpoints shipped at the qualifying
-    quantity, so the co-purchase CTE reproduces exactly ``edges``."""
-    rows = []
-    for i, (a, b) in enumerate(sorted(edges)):
-        rows.append((i, a, float(pgraph.TRIANGLE_MIN_QTY)))
-        rows.append((i, b, float(pgraph.TRIANGLE_MIN_QTY)))
-    return spark.createDataFrame(
-        rows, "l_orderkey BIGINT, l_partkey BIGINT, l_quantity DOUBLE"
-    )
-
-
-CLIQUE = {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
-
-
-def test_kcore_cascade_fixture(spark):
-    """A cascade engineered to need the FULL unroll: leaves peel in
-    round 0, then v6, then v5 — the 4-round unroll lands exactly on the
-    fixpoint and must certify converged=true with only the clique
-    surviving."""
-    edges = CLIQUE | {(1, 5), (2, 5), (5, 6), (6, 7), (6, 8)}
-    core, rounds = _peel(edges, pgraph.KCORE_K)
-    assert set(core) == {1, 2, 3, 4} and rounds == 4
-
-    orig = load_table(spark, SF, "lineitem")
-    try:
-        _edges_to_lineitem(spark, edges).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._kcore_sql("spark")).collect()
-        assert {r.part for r in out} == {1, 2, 3, 4}
-        assert all(r.core_degree == 3 for r in out)
-        assert all(r.converged for r in out)
-    finally:
-        orig.createOrReplaceTempView("lineitem")
-
-
-def test_kcore_certificate_honest_on_deep_cascade(spark):
-    """A cascade deeper than the unroll covers (the initial degree
-    filter plus 4 peel rounds): the fixed rounds have NOT reached the
-    fixpoint, and the certificate must say so (converged=false) rather
-    than silently presenting the last survivor set — whose degrees are
-    still inflated by the not-yet-peeled tail — as the core. The
-    oracle computes the same flag, so the hash stays green even on a
-    corpus needing more rounds — this pins that honesty."""
-    # Simultaneous peeling kills a plain chain in two rounds (every
-    # leaf-propped link drops at once), so depth needs BRANCHING: a
-    # binary tree hung off clique vertex 1 where each level-i node has
-    # two level-(i-1) children + its parent (degree exactly 3) and dies
-    # only after its children do. Depth 4 ⇒ the root dies in the very
-    # last unrolled round, so the k4-vs-k3 fixpoint check fails.
-    edges = set(CLIQUE)
-    nid = [100]
-
-    def build(level: int, parent: int) -> None:
-        v = nid[0]
-        nid[0] += 1
-        edges.add((min(parent, v), max(parent, v)))
-        if level > 0:
-            build(level - 1, v)
-            build(level - 1, v)
-
-    build(4, 1)
-    core, rounds = _peel(edges, pgraph.KCORE_K)
-    assert set(core) == {1, 2, 3, 4} and rounds == 6  # > unroll's 5 evals
-
-    orig = load_table(spark, SF, "lineitem")
-    try:
-        _edges_to_lineitem(spark, edges).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._kcore_sql("spark")).collect()
-        assert all(not r.converged for r in out)
-        # the survivor set happens to equal the true core here, but
-        # vertex 1's degree still counts the unpeeled tree root — the
-        # flag is what warns that these numbers aren't final
-        assert {r.part for r in out} == {1, 2, 3, 4}
-        assert {r.part: r.core_degree for r in out} == {1: 4, 2: 3, 3: 3, 4: 3}
-    finally:
-        orig.createOrReplaceTempView("lineitem")

@@ -3,7 +3,8 @@
 The oracle gate (tools/check_correctness.py and the driver) proves
 value-exactness; these tests pin the SEMANTIC invariants each operator
 exists to provide, so a refactor that stays hash-consistent with a
-changed oracle still can't silently change meaning.
+changed oracle still can't silently change meaning. The PageRank
+tests live in ``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -232,18 +233,6 @@ def test_anomaly_zscore_matches_numpy(spark):
         assert got[et].n_events == len(v)
         assert got[et].n_outliers == expect
 
-def test_pagerank_mass_and_shape(spark):
-    from dnstap2clickhouse_spark.plans import graph as pgraph
-
-    rows = pgraph.pagerank_top(spark, SF).collect()
-    assert len(rows) == pgraph.PAGERANK_TOP
-    ranks = [r.rank_e12 for r in rows]
-    assert ranks == sorted(ranks, reverse=True)
-    assert all(r.rank_e12 > 0 for r in rows)
-    assert [r.pos for r in rows] == list(range(1, pgraph.PAGERANK_TOP + 1))
-    # suppliers are far fewer than customers, so they concentrate rank:
-    # the top of the list should be supplier vertices
-    assert rows[0].vertex.startswith("s:")
 
 # ---------------------------------------------------- batch 4: search
 
@@ -289,24 +278,3 @@ def test_upsert_merge_op_counts(spark):
     assert ops.get("inserted", 0) == n_ins
     assert ops.get("unchanged", 0) == n_base - n_upd
     assert len(rows) == n_base + n_ins
-
-def test_pagerank_mass_conservation(spark):
-    """Integer PageRank loses only floor-division dust: after any round,
-    total rank is <= R_E12 and within |V| * (teleport dust + damping
-    dust + per-edge division dust) of it."""
-    from dnstap2clickhouse_spark.plans import graph as pgraph
-    from dnstap2clickhouse_spark.sources.tables import load_table, register_views
-
-    register_views(spark, SF, ("orders", "lineitem"))
-    full = spark.sql(
-        pgraph._pagerank_sql("spark").replace(
-            f"WHERE pos <= {pgraph.PAGERANK_TOP}", ""
-        )
-    )
-    total = full.agg(F.sum("rank_e12")).collect()[0][0]
-    n_v = full.count()
-    # every vertex floors at most ~1 unit in each of: base split, teleport
-    # term, damped term, and each of its out-contributions (bounded by
-    # total degree = 2 * |edges|; use a generous linear bound in |V|)
-    assert total <= pgraph.R_E12
-    assert total >= pgraph.R_E12 - 200 * n_v

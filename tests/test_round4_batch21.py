@@ -1,9 +1,8 @@
-"""Round-4 batch-21 operators: snapshot-diff change capture, multi-
-source BFS, and collocation mining. Each pinned by a full Python replay
-over the real corpus, plus the semantic edges: both CDC op kinds firing,
-the BFS convergence certificate on both sides (converged on the smoke
-corpus, honestly false on a chain deeper than the unroll), and the
-collocation lift ranking recomputed from raw counts.
+"""Round-4 batch-21 operators: snapshot-diff change capture and
+collocation mining. Each pinned by a full Python replay over the real
+corpus, plus the semantic edges: both CDC op kinds firing, and the
+collocation lift ranking recomputed from raw counts. The BFS tests live
+in ``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ from collections import Counter
 
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import events_analytics as evan
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -57,87 +55,6 @@ def test_change_capture_both_ops_fire(spark):
     ops = Counter(r.op for r in evan.change_capture(spark, SF).collect())
     assert ops["insert"] > 0 and ops["update"] > 0
     assert set(ops) == {"insert", "update"}
-
-
-# ------------------------------------------------ BFS distance
-
-
-def _corpus_edges(spark):
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem",))
-    return {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-
-
-def _bfs(edges, seeds, rounds):
-    adj: dict = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    dist = {s: 0 for s in seeds}
-    for _ in range(rounds):
-        new = dict(dist)
-        for u, d in dist.items():
-            for v in adj.get(u, ()):
-                if v not in new or d + 1 < new[v]:
-                    new[v] = d + 1
-        dist = new
-    return dist
-
-
-def test_bfs_python_replay(spark):
-    edges = _corpus_edges(spark)
-    deg: Counter = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    seeds = [u for u, _ in sorted(deg.items(), key=lambda kv: (-kv[1], kv[0]))
-             [: pgraph.BFS_SEEDS]]
-    expect = _bfs(edges, seeds, pgraph.BFS_ROUNDS)
-    fix = _bfs(edges, seeds, len(deg))
-
-    out = pgraph.bfs_distance(spark, SF).collect()
-    assert {r.u: r.dist for r in out} == expect
-    # certificate replay: converged iff one more round changes nothing
-    more = _bfs(edges, seeds, pgraph.BFS_ROUNDS + 1)
-    conv = len(more) == len(expect) and sum(more.values()) == sum(expect.values())
-    assert all(r.converged == conv for r in out)
-    if conv:
-        assert expect == fix  # certified fixpoint really is the full BFS
-
-
-def test_bfs_certificate_honest_on_long_chain(spark):
-    """A path graph longer than the unroll reaches: rounds 0..3 cover
-    only 4 hops from the hub end, so the certificate must be false."""
-    chain = {(i, i + 1) for i in range(1, 10)}  # path 1-2-...-10
-    orig = load_table(spark, SF, "lineitem")
-    try:
-        # degree-2 everywhere except the endpoints: seeds = 4 lowest-id
-        # degree-2 vertices (2,3,4,5) -> frontier still moving at round 3
-        rows = []
-        for i, (a, b) in enumerate(sorted(chain)):
-            rows.append((i, a, float(pgraph.TRIANGLE_MIN_QTY)))
-            rows.append((i, b, float(pgraph.TRIANGLE_MIN_QTY)))
-        spark.createDataFrame(
-            rows, "l_orderkey BIGINT, l_partkey BIGINT, l_quantity DOUBLE"
-        ).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._bfs_sql("spark")).collect()
-        deg = Counter()
-        for a, b in chain:
-            deg[a] += 1
-            deg[b] += 1
-        seeds = [u for u, _ in sorted(deg.items(), key=lambda kv: (-kv[1], kv[0]))
-                 [: pgraph.BFS_SEEDS]]
-        expect = _bfs(chain, seeds, pgraph.BFS_ROUNDS)
-        full = _bfs(chain, seeds, len(deg))
-        assert {r.u: r.dist for r in out} == expect
-        assert expect != full  # the unroll genuinely hasn't finished
-        assert all(not r.converged for r in out)
-    finally:
-        orig.createOrReplaceTempView("lineitem")
 
 
 # ------------------------------------------------ collocations

@@ -1,19 +1,16 @@
-"""Round-4 batch-22 operators: equi-depth histogram statistics,
-farthest-point (greedy k-center) seeding, and partition modularity.
-Each pinned by a full Python replay over the real corpus plus the
-defining invariant: depth balance, the non-increasing coverage-radius
-ladder / 2-approximation structure, and the degree/edge mass identities
-of the modularity decomposition.
+"""Round-4 batch-22 operators: equi-depth histogram statistics and
+farthest-point (greedy k-center) seeding. Each pinned by a full Python
+replay over the real corpus plus the defining invariant: depth balance,
+and the non-increasing coverage-radius ladder / 2-approximation
+structure. The modularity test lives in ``test_graph.py``.
 """
 
 from __future__ import annotations
 
-from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.plans import events_analytics as evan
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -77,42 +74,3 @@ def test_farthest_init_python_replay(spark):
     # the k-center ladder is non-increasing after the seed row
     radii = [r.radius_e6 for r in out[1:]]
     assert radii == sorted(radii, reverse=True)
-
-
-# ------------------------------------------------ modularity
-
-
-def test_modularity_python_replay(spark):
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem", "part"))
-    edges = {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-    brand = {r.p_partkey: r.p_brand
-             for r in load_table(spark, SF, "part").collect()}
-    m = len(edges)
-    m_c: Counter = Counter()
-    d_c: Counter = Counter()
-    for a, b in edges:
-        if brand[a] == brand[b]:
-            m_c[brand[a]] += 1
-        d_c[brand[a]] += 1
-        d_c[brand[b]] += 1
-
-    e6 = 1_000_000
-    out = {r.community: r for r in pgraph.modularity(spark, SF).collect()}
-    assert set(out) == set(d_c)
-    for c in d_c:
-        got = out[c]
-        assert (got.m_c, got.d_c) == (m_c.get(c, 0), d_c[c])
-        frac = (d_c[c] * e6) // (2 * m)
-        assert got.q_e12 == (m_c.get(c, 0) * e6 * e6) // m - frac * frac
-    # mass identities of the decomposition
-    assert sum(r.m_c for r in out.values()) <= m
-    assert sum(r.d_c for r in out.values()) == 2 * m
-    # random co-purchasing ⇒ Q ~ 0: the entry pins the metric, not a
-    # community structure the synthetic corpus doesn't have
-    q = sum(r.q_e12 for r in out.values()) / 1e12
-    assert abs(q) < 0.05

@@ -1,8 +1,8 @@
-"""Round-4 batch-23 operators: seasonal backtest, keyness, and degree
-assortativity. Full Python replays over the real corpus plus the
-defining structure of each: the bias-variance readout of the backtest
-(fitted-noise seasonal model vs global mean), ratio ranking consistency
-with raw counts, and the collapsed symmetric-Pearson identity.
+"""Round-4 batch-23 operators: seasonal backtest and keyness. Full
+Python replays over the real corpus plus the defining structure of
+each: the bias-variance readout of the backtest (fitted-noise seasonal
+model vs global mean), and ratio ranking consistency with raw counts.
+The assortativity test lives in ``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import events_analytics as evan
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -95,37 +94,3 @@ def test_keyness_python_replay(spark):
     assert [(r.tok, r.k_a, r.k_b, r.ratio_e3) for r in out] == expect
     ratios = [r.ratio_e3 for r in out]
     assert ratios == sorted(ratios, reverse=True)
-
-
-# ------------------------------------------------ assortativity
-
-
-def test_assortativity_python_replay(spark):
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem",))
-    edges = {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-    deg: Counter = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    xs, ys = [], []
-    for a, b in edges:
-        xs += [deg[a], deg[b]]
-        ys += [deg[b], deg[a]]
-    m = len(xs)
-    sx, sxx = sum(xs), sum(x * x for x in xs)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-
-    [row] = pgraph.assortativity(spark, SF).collect()
-    assert (row.m, row.sx, row.sxx, row.sxy) == (m, sx, sxx, sxy)
-    num, den = m * sxy - sx * sx, m * sxx - sx * sx
-    assert (row.num, row.den) == (num, den)
-    assert row.r_e6 == _r_e6(num / den * 1_000_000)
-    # the symmetric construction: marginal x and y moments coincide,
-    # so the collapsed single-denominator Pearson form is exact
-    assert sum(ys) == sx and sum(y * y for y in ys) == sxx
-    assert -1_000_000 <= row.r_e6 <= 1_000_000

@@ -1,9 +1,9 @@
-"""Round-4 batch-25 operators: BPE merge application, MinHash
+"""Round-4 batch-25 operators: BPE merge application and MinHash
 estimator certification (which exposed and now pins the fixed hash
-family), and the degree-distribution skew audit. Python replays plus:
-the apply entry's merges proven identical to the learned ones, the
-old degenerate family's failure mode demonstrated dead (distinct
-argmins across permutations), and the histogram's mass identity.
+family). Python replays plus: the apply entry's merges proven identical
+to the learned ones, and the old degenerate family's failure mode
+demonstrated dead (distinct argmins across permutations). The degree
+histogram test lives in ``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from collections import Counter
 
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.functions import text as ftext
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -105,33 +104,3 @@ def test_minhash_family_not_degenerate():
     # and the multipliers are the documented Lehmer powers
     assert fdedup._MH_A[0] == 48_271
     assert fdedup._MH_A[1] == 48_271 * 48_271 % P
-
-
-# ------------------------------------------------ degree histogram
-
-
-def test_degree_histogram_python_replay(spark):
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem",))
-    edges = {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-    deg: Counter = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    bins: dict = {}
-    for d in deg.values():
-        b = min(d.bit_length() - 1, pgraph.DEG_HIST_MAX_BIN)
-        bins.setdefault(b, []).append(d)
-
-    out = {r.log2_bin: r for r in pgraph.degree_histogram(spark, SF).collect()}
-    assert set(out) == set(bins)
-    for b, ds in bins.items():
-        got = out[b]
-        assert (got.n_vertices, got.min_deg, got.max_deg, got.degree_mass) == \
-            (len(ds), min(ds), max(ds), sum(ds))
-    # mass identity: total degree mass is exactly 2|E|
-    assert sum(r.degree_mass for r in out.values()) == 2 * len(edges)

@@ -12,7 +12,6 @@ from collections import Counter
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.functions import splits as fsplit
-from dnstap2clickhouse_spark.plans import events_analytics  # noqa: F401
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -1,18 +1,16 @@
-"""Round-4 batch-28 operators: text-LSH recall, clustering coefficient,
-and the per-source scorecard. Pins: recall consistency with the
-standalone pair entries, the transitivity identity against a Python
-triangle/wedge recount, and the scorecard's reconciliation with the
-yield funnel and v2 output.
+"""Round-4 batch-28 operators: text-LSH recall and the per-source
+scorecard. Pins: recall consistency with the standalone pair entries,
+and the scorecard's reconciliation with the yield funnel and v2
+output. The clustering-coefficient tests live in ``test_graph.py``.
 """
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
+from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.plans import curation as pcur
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -34,43 +32,6 @@ def test_minhash_recall_consistent_with_pair_entries(spark):
     assert row.pair_recall == row.n_found / row.n_true
     # the fixed hash family holds banding recall high on this corpus
     assert row.pair_recall >= 0.9
-
-
-# ------------------------------------------------ clustering coefficient
-
-
-def test_clustering_python_replay(spark):
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    register_views(spark, SF, ("lineitem",))
-    edges = {
-        (r.a, r.b)
-        for r in spark.sql(f"SELECT * FROM ({pgraph._copurchase_cte()})").collect()
-    }
-    adj: dict = defaultdict(set)
-    deg: Counter = Counter()
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-        deg[a] += 1
-        deg[b] += 1
-    triangles = sum(
-        1 for a, b in edges for c in adj[a] & adj[b] if c > b
-    )
-    wedges = sum(d * (d - 1) // 2 for d in deg.values())
-
-    [row] = pgraph.clustering_coefficient(spark, SF).collect()
-    assert row.n_triangles == triangles
-    assert row.n_wedges_total == wedges
-    assert row.transitivity_e6 == 3 * triangles * 1_000_000 // wedges
-    assert 0 < row.transitivity_e6 < 1_000_000
-
-
-def test_clustering_matches_triangle_census(spark):
-    """The spliced count must equal the standalone census entry."""
-    [tri] = pgraph.triangle_count(spark, SF).collect()
-    [cl] = pgraph.clustering_coefficient(spark, SF).collect()
-    assert cl.n_triangles == tri.n_triangles
 
 
 # ------------------------------------------------ source scorecard

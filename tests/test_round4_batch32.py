@@ -8,7 +8,7 @@ independence is the operator's whole claim).
 from __future__ import annotations
 
 import hashlib
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.functions import similarity as fsim

@@ -1,17 +1,15 @@
-"""Round-4 batch-34 operators: bigram LM scoring and resource-allocation
-link prediction. Pins: full Python replays of the bigram conditional
-model and the RA wedge sum, the no-edges-predicted invariant, and the
-fluency direction of the LM score on an engineered frame (predictable
-continuations outscore word salad). The streaming CDC apply's tests live
-in ``test_streaming.py``.
+"""Round-4 batch-34 operators: bigram LM scoring. Pins: a full Python
+replay of the bigram conditional model, and the fluency direction of
+the LM score on an engineered frame (predictable continuations
+outscore word salad). The streaming CDC apply's tests live in
+``test_streaming.py``, the link-prediction tests in ``test_graph.py``.
 """
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
+from collections import Counter
 
 from dnstap2clickhouse_spark.functions import text as ftext
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -66,45 +64,3 @@ def test_bigram_lm_scores_fluency_direction(spark):
     finally:
         docs.createOrReplaceTempView("documents")
     assert got[1] == got[2] > got[3]
-
-
-# ------------------------------------------------ link prediction
-
-
-def _graph_edges(spark):
-    return {(r.a, r.b) for r in spark.sql(
-        f"SELECT * FROM ({pgraph._copurchase_cte()}) e").collect()}
-
-
-def test_link_predict_python_replay(spark):
-    pgraph.link_predict(spark, SF)  # registers the lineitem view
-    edges = _graph_edges(spark)
-    adj: dict = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    scores = {}
-    for z, nb in adj.items():
-        for a in nb:
-            for b in nb:
-                if a < b:
-                    key = (a, b)
-                    n, ra = scores.get(key, (0, 0))
-                    scores[key] = (n + 1, ra + 1_000_000 // len(adj[z]))
-    ranked = sorted(
-        ((ra, a, b, n) for (a, b), (n, ra) in scores.items()
-         if n >= pgraph.LP_MIN_COMMON and (a, b) not in edges),
-        key=lambda t: (-t[0], t[1], t[2]),
-    )[: pgraph.LP_TOP]
-
-    out = [(r.ra_e6, r.a, r.b, r.n_common)
-           for r in pgraph.link_predict(spark, SF).collect()]
-    assert out == ranked
-    assert out  # the corpus graph must yield predictions
-
-
-def test_link_predict_excludes_existing_edges(spark):
-    pgraph.link_predict(spark, SF)
-    edges = _graph_edges(spark)
-    for r in pgraph.link_predict(spark, SF).collect():
-        assert (r.a, r.b) not in edges and (r.b, r.a) not in edges

@@ -77,8 +77,6 @@ def test_nn_descent_improves_recall_over_random_init(spark):
     dominate the init neighborhoods (the candidate set is a superset),
     (b) recover real edges (is_new > 0), and (c) strictly improve
     recall@k against the exact brute-force kNN computed in Python."""
-    import itertools
-
     embs = {r.vec_id: r.embedding for r in
             load_table(spark, SF, "embeddings").collect()}
     out = fsim.nn_descent_round(spark, SF).collect()

@@ -1,7 +1,7 @@
-"""Round-4 batch-44 operators: uncertainty sampling, butterfly census,
-temperature mixture. Pins: Python replays of the margin selection, the
-per-pair C(w,2) census, and the sqrt-flattened shares; the
-uncertainty-sample law (selected margins are a prefix of the global
+"""Round-4 batch-44 operators: uncertainty sampling and temperature
+mixture (the butterfly census test lives in ``test_graph.py``). Pins:
+Python replays of the margin selection and the sqrt-flattened shares;
+the uncertainty-sample law (selected margins are a prefix of the global
 margin order, both keep-sides represented when available); and the
 temperature law (upsample factor decreases as source size grows).
 """
@@ -13,7 +13,6 @@ from collections import defaultdict
 from dnstap2clickhouse_spark.functions import splits as fsplit
 from dnstap2clickhouse_spark.functions import text as ftext
 from dnstap2clickhouse_spark.plans import curation as pcur
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -35,34 +34,6 @@ def test_uncertainty_sample_is_margin_prefix(spark):
     # keep flag rides through consistently
     for r in fsplit.uncertainty_sample(spark, SF).collect():
         assert r.keep == (r.logit_e6 >= ftext.LOGIT_KEEP_E6)
-
-
-# ------------------------------------------------ butterfly census
-
-
-def test_butterfly_python_replay(spark):
-    lines = load_table(spark, SF, "lineitem").selectExpr(
-        "l_orderkey", "l_partkey", "l_quantity").collect()
-    by_order: dict = defaultdict(set)
-    for r in lines:
-        if r.l_quantity >= pgraph.TRIANGLE_MIN_QTY:
-            by_order[r.l_orderkey].add(r.l_partkey)
-    pair_w: dict = defaultdict(set)
-    for o, parts in by_order.items():
-        ps = sorted(parts)
-        for i, a in enumerate(ps):
-            for b in ps[i + 1:]:
-                pair_w[(a, b)].add(o)
-    bf = {p: len(os_) * (len(os_) - 1) // 2 for p, os_ in pair_w.items()}
-    total = sum(bf.values())
-    expect = sorted(((v, p) for p, v in bf.items() if v > 0),
-                    key=lambda t: (-t[0], t[1]))[: pgraph.BUTTERFLY_TOP]
-    out = pgraph.butterfly_count(spark, SF).collect()
-    got = [(r.butterflies, (r.a, r.b)) for r in out]
-    assert got == expect
-    assert all(r.total_butterflies == total for r in out)
-    for r in out:
-        assert r.butterflies == r.n_shared_orders * (r.n_shared_orders - 1) // 2
 
 
 # ------------------------------------------------ temperature mixture

@@ -1,10 +1,11 @@
-"""Round-4 batch-7 operators: time-series gap fill, triangle census,
-prefix-filtered containment dedup, and MMR diversity re-ranking. The
-oracle gate proves value-exactness vs DuckDB; these tests pin what the
-operators MEAN — the zero-fill spine invariants, a brute-force Python
-triangle count, the prefix filter's completeness theorem against an
-all-pairs Python recomputation (including the asymmetric case Jaccard
-misses), and a numpy replay of the greedy MMR loop.
+"""Round-4 batch-7 operators: time-series gap fill, prefix-filtered
+containment dedup, and MMR diversity re-ranking. The oracle gate proves
+value-exactness vs DuckDB; these tests pin what the operators MEAN —
+the zero-fill spine invariants, the prefix filter's completeness
+theorem against an all-pairs Python recomputation (including the
+asymmetric case Jaccard misses), and a numpy replay of the greedy MMR
+loop. The triangle census and neighbor-Jaccard tests live in
+``test_graph.py``.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ import itertools
 from dnstap2clickhouse_spark.functions import dedup as fdedup
 from dnstap2clickhouse_spark.functions import similarity as fsim
 from dnstap2clickhouse_spark.plans import events_analytics as evan
-from dnstap2clickhouse_spark.plans import graph as pgraph
 from dnstap2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -60,66 +60,6 @@ def test_gap_fill_injected_gap(spark):
         "2024-01-01 01:00:00": 0,
         "2024-01-01 02:00:00": 1,
     }
-
-
-# ------------------------------------------------------- triangle count
-
-
-def test_triangle_count_vs_bruteforce(spark):
-    """Degree-ordered wedge count equals a plain Python adjacency-set
-    count (sum over edges of |adj(a) & adj(b)|, each triangle counted
-    three times) on the real corpus graph."""
-    row = pgraph.triangle_count(spark, SF).collect()[0]
-    li = load_table(spark, SF, "lineitem").selectExpr(
-        "l_orderkey AS o", "l_partkey AS p", "l_quantity AS q"
-    ).where(f"q >= {pgraph.TRIANGLE_MIN_QTY}").collect()
-    by_order: dict[int, set[int]] = {}
-    for r in li:
-        by_order.setdefault(r.o, set()).add(r.p)
-    edges = set()
-    for parts in by_order.values():
-        for a, b in itertools.combinations(sorted(parts), 2):
-            edges.add((a, b))
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    tri3 = sum(len(adj[a] & adj[b]) for a, b in edges)
-    assert tri3 % 3 == 0
-    assert row.n_edges == len(edges)
-    assert row.n_nodes == len(adj)
-    assert row.n_triangles == tri3 // 3
-    assert row.n_triangles <= row.n_wedges
-
-
-def test_triangle_count_fixture(spark):
-    """One order shipping 3 qualifying parts = exactly one triangle; a
-    2-part order adds an edge but no triangle."""
-    q = float(pgraph.TRIANGLE_MIN_QTY)
-    rows = [
-        (1, 101, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (1, 102, 1, 2, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (1, 103, 1, 3, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (2, 104, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (2, 105, 1, 2, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        # below the quantity gate: contributes nothing
-        (3, 101, 1, 1, q - 1, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (3, 105, 1, 2, q - 1, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-    ]
-    orig = load_table(spark, SF, "lineitem")
-    try:
-        spark.createDataFrame(
-            rows,
-            "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
-            "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
-            "l_returnflag STRING, l_linestatus STRING, l_shipdate STRING",
-        ).selectExpr(
-            "* EXCEPT (l_shipdate)", "CAST(l_shipdate AS TIMESTAMP) AS l_shipdate"
-        ).createOrReplaceTempView("lineitem")
-        row = spark.sql(pgraph._triangle_sql("spark")).collect()[0]
-    finally:
-        orig.createOrReplaceTempView("lineitem")
-    assert (row.n_nodes, row.n_edges, row.n_triangles) == (5, 4, 1)
 
 
 # -------------------------------------------------- containment (prefix)
@@ -293,43 +233,6 @@ def test_caption_pairs_image_only_on_corpus(spark):
         assert r.pixels >= fmm.MIN_PIXELS and r.align_e6 >= fmm.ALIGN_MIN_E6
 
 
-# -------------------------------------------------- batch 8: neighbors
-
-
-def test_jaccard_neighbors_vs_bruteforce(spark):
-    """Top-k pairs equal a Python adjacency-set recomputation (same
-    floor, same exact-integer Jaccard, same tiebreak)."""
-    got = [
-        (r.a, r.b, r.n_common, r.jaccard_e6)
-        for r in pgraph.jaccard_neighbors(spark, SF).collect()
-    ]
-    li = load_table(spark, SF, "lineitem").selectExpr(
-        "l_orderkey AS o", "l_partkey AS p", "l_quantity AS q"
-    ).where(f"q >= {pgraph.TRIANGLE_MIN_QTY}").collect()
-    by_order: dict[int, set[int]] = {}
-    for r in li:
-        by_order.setdefault(r.o, set()).add(r.p)
-    adj: dict[int, set[int]] = {}
-    for parts in by_order.values():
-        for a, b in itertools.combinations(sorted(parts), 2):
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    cand = []
-    seen = set()
-    for v, nbrs in adj.items():
-        for a, b in itertools.combinations(sorted(nbrs), 2):
-            if (a, b) in seen:
-                continue
-            seen.add((a, b))
-            common = len(adj[a] & adj[b])
-            if common >= pgraph.JN_MIN_COMMON:
-                jac = common * 1_000_000 // (len(adj[a]) + len(adj[b]) - common)
-                cand.append((jac, a, b, common))
-    cand.sort(key=lambda t: (-t[0], t[1], t[2]))
-    want = [(a, b, c, j) for j, a, b, c in cand[: pgraph.JACCARD_NEIGHBORS_TOP]]
-    assert got == want
-
-
 # -------------------------------------------------- batch 8: code gate
 
 
@@ -471,33 +374,6 @@ def test_path_transitions_matches_python(spark):
     ranked = sorted(pairs.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
     want = [(f, t, n, n * 1_000_000 // total) for (f, t), n in ranked[: evan.PATH_TOP]]
     assert out == want
-
-
-def test_triangle_count_wedge_free_graph_reports_zero(spark):
-    """Review regression: a graph of disjoint edges (no wedges) must
-    report n_triangles = 0, not NULL (sum over the empty wedge relation
-    is NULL; the query uses count(o.src))."""
-    q = float(pgraph.TRIANGLE_MIN_QTY)
-    rows = [
-        (1, 101, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (1, 102, 1, 2, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (2, 103, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-        (2, 104, 1, 2, q, 1.0, 0.0, 0.0, "N", "O", "2024-01-01 00:00:00"),
-    ]
-    orig = load_table(spark, SF, "lineitem")
-    try:
-        spark.createDataFrame(
-            rows,
-            "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
-            "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
-            "l_returnflag STRING, l_linestatus STRING, l_shipdate STRING",
-        ).selectExpr(
-            "* EXCEPT (l_shipdate)", "CAST(l_shipdate AS TIMESTAMP) AS l_shipdate"
-        ).createOrReplaceTempView("lineitem")
-        row = spark.sql(pgraph._triangle_sql("spark")).collect()[0]
-    finally:
-        orig.createOrReplaceTempView("lineitem")
-    assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (4, 2, 0, 0)
 
 
 # --------------------------------------- batch 10: grouped-map minmax

@@ -124,57 +124,6 @@ def test_embedding_recall_single_pass_and_fps_df_form(spark):
     assert df_rows == sql_rows and len(df_rows) == fsim.FPS_K
 
 
-def test_bfs_df_form_equals_sql(spark):
-    """`graph_bfs_distance` was the family's worst inlining case: each
-    SQL round references the previous distance table TWICE, so the
-    unroll re-expands EXPONENTIALLY (leaf census: 236 static lineitem
-    scans at 3 rounds). The DataFrame form persists the edge list and
-    each round's distance table — pin bit-equality with the SQL form."""
-    from dnstap2clickhouse_spark.plans import graph as pg
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    sf = "/root/testdata/sf0.001"
-    register_views(spark, sf, ("lineitem",))
-    sql_rows = sorted(
-        (r.u, r.dist, r.converged) for r in spark.sql(pg._bfs_sql("spark")).collect()
-    )
-    df_rows = sorted(
-        (r.u, r.dist, r.converged) for r in pg.bfs_distance(spark, sf).collect()
-    )
-    assert df_rows == sql_rows and df_rows
-    assert all(c for (_, _, c) in df_rows)  # converged on the real corpus
-
-
-def test_cached_edges_splice_guard_and_equality(spark):
-    """`_run_with_cached_edges` swaps each graph entry's co-purchase
-    CTE for a persisted view (one edge build per entry instead of one
-    per CTE reference — triangle x36 / clustering x34 / jaccard x16 /
-    link_predict x14 lineitem leaves before). The splice is anchor-
-    guarded: a drifted copurchase CTE must raise, never silently run
-    the uncached form — and the cached form must equal the pure SQL."""
-    import pytest as _pytest
-
-    from dnstap2clickhouse_spark.plans import graph as pg
-    from dnstap2clickhouse_spark.sources.tables import register_views
-
-    with _pytest.raises(RuntimeError, match="anchor drifted"):
-        pg._run_with_cached_edges(spark, "/root/testdata/sf0.001", "SELECT 1")
-
-    sf = "/root/testdata/sf0.001"
-    register_views(spark, sf, ("lineitem",))
-    sql_rows = sorted(
-        tuple(r) for r in spark.sql(pg._triangle_sql("spark")).collect()
-    )
-    spark.catalog.clearCache()
-    tri = pg.triangle_count(spark, sf)
-    df_rows = sorted(tuple(r) for r in tri.collect())
-    assert df_rows == sql_rows and df_rows
-    # the cache substitution actually fired: the entry's plan reads the
-    # persisted edge view, not per-reference rebuilds of the edge join
-    plan = tri._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-
-
 def test_markov_pairs_materialized_once(spark):
     """`events_markov_stationary` evaluates its transition matrix once
     via materialize_scan (the CacheManager does not substitute a cached

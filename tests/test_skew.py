@@ -4,8 +4,6 @@ the bucketing test also asserts the plan is shuffle-free."""
 
 from __future__ import annotations
 
-import pytest
-
 from dnstap2clickhouse_spark.operators.skew import salted_agg
 from dnstap2clickhouse_spark.plans.bucketed import (
     bucketed_order_revenue,

@@ -172,13 +172,14 @@ def scan_census_df(df) -> dict[str, tuple[int, int]]:
     (InMemoryTableScan reads the cache). Leaf operators count each
     scan node exactly once; a duplicate subtree deduplicated by the
     physical ReuseExchange rule appears as a ReusedExchange leaf and
-    is correctly NOT counted. NOTE this is therefore the STATIC plan's
-    distinct-scan count (audit runs AQE-off) — a lower bound: AQE's
-    runtime stage reuse is weaker than static ReuseExchange for
-    inlined-CTE shapes (measured: the pre-fix yield funnel really did
-    re-run its gate pipeline per stage, 5x wall), which is exactly why
-    the sweep instruments carry one-pass Spark forms rather than
-    relying on reuse."""
+    is correctly NOT counted. Under AQE the walk reads the pre-AQE
+    input plan, so this is the STATIC plan's scan-leaf count, not the
+    number of scans that execute: AQE's run-time stage reuse can share
+    leaves the static plan repeats (the SQL-form graph entries count
+    lineitem x14-x36 and run 13-15 ReusedExchange stages in the triangle
+    census), and can also miss some (the pre-fix yield funnel re-ran
+    its gate pipeline per stage, 5x wall). A high count is a reason to
+    time the entry, not a cost by itself."""
     lines: list[str] = []
 
     def walk(p) -> None:
@@ -420,8 +421,10 @@ def main() -> int:
             census = {}
         # payload re-reads for the wide-column tables; TOTAL scan count
         # for the rest (lineitem/orders/events have no single payload
-        # column, but a plan re-building an expensive derived relation —
-        # the kcore/bfs edge build — shows up as scan multiplicity)
+        # column). A multiplicity tag marks a plan to time, not a cost:
+        # the census counts static-plan leaves, and AQE's run-time
+        # stage reuse can share them (the SQL-form graph entries carry
+        # lineitem x14-x36 and still run their edge build once)
         info = ", ".join(
             f"{t} x{heavy}" if t in HEAVY_COLS else f"{t} x{tot} total"
             for t, (tot, heavy) in sorted(census.items())
