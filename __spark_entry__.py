@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query (Q1 top-addresses over the full DNS
-pipeline) at sf0.001. ``queries()`` — one entry per implemented operator
-(SURVEY.md section 2). ``oracle_sql()`` — DuckDB-equivalent SQL per query;
-omitted only for genuinely non-SQL-expressible ops.
+pipeline) at sf0.001. ``_contract()`` is the one table of operator
+entries (SURVEY.md section 2): each name maps to its Spark form and a
+zero-argument builder of its DuckDB oracle SQL. ``queries()`` and
+``oracle_sql()`` are its two columns, in the same key order.
 """
 
 from __future__ import annotations
@@ -62,969 +63,413 @@ _PRUNE_CFG = {
     "counter": "hits",
 }
 
+SparkForm = Callable[[SparkSession, str], DataFrame]
+Oracle = Callable[[], str]
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ingest pipeline + Q1 top query addresses, sf0.001."""
     return an.top_query_addresses(dp.client_query_table(spark, SF0001))
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _contract() -> dict[str, tuple[SparkForm, Oracle]]:
+    """Every entry once: name -> (Spark form, oracle builder). The oracle
+    builders are called only by ``oracle_sql()``."""
     no_agg = AggregatorConfig(aggregate=False)
 
     return {
-        # --- generic relational layer (TPC-H-style) ---
-        "tpch_pricing_summary": tpch.pricing_summary,
-        "tpch_region_revenue": tpch.region_revenue,
-        "tpch_top_orders": tpch.top_orders,
-        "tpch_topk_parts_per_brand": tpch.topk_parts_per_brand,
-        "tpch_distinct_aggregates": tpch.distinct_aggregates,
-        "tpch_segment_semi_anti": tpch.segment_semi_anti,
-        # correlated-subquery surface (Catalyst decorrelation)
-        "tpch_exists_late_ship": tpch.exists_late_ship,
-        "tpch_small_qty_revenue": tpch.small_qty_revenue,
-        # deterministic train/val/test split + stratified sampling
-        "split_train_val_test": fsplit.split_assignments,
-        "split_stratified_sample": fsplit.stratified_sample,
-        # composed corpus-curation pipeline (stats→quality→dedup→split)
-        "curate_corpus_e2e": pcur.curate_corpus,
-        # --- training-data ops: text analysis ---
-        "text_stats": ftext.text_stats,
-        "text_quality": ftext.quality_scores,
-        "text_lang_id": ftext.lang_id,
-        "text_fingerprints": ftext.fingerprints,
-        "text_regex_tokens": ftext.regex_tokens,
-        # oracle type fix: window sum cast to BIGINT (DuckDB HUGEINT)
-        "events_rolling_hour": evan.rolling_hour_stats,
-        # round 4: accuracy-bound form — sketches vs exact aggregates as
-        # boolean columns, so the entry is fully oracle-checked (the
-        # sim_pandas_recall pattern); raw sketch output stays pinned in
-        # tests (test_extensions.py::test_sketch_stats_accuracy)
-        "events_sketch_stats": evan.sketch_accuracy,
-        # _bigrams hardened for 0/1-token docs (zip_with over slices)
-        "text_repetition": ftext.repetition_filter,
-        # J1 exact state machine via applyInPandasWithState, now
-        # oracle-checked: on the collision-free pair streams its output
-        # equals sequence pairing (match-once) with the same no-TTL bound
-        "dns_stateful_match": lambda s, d: stp.stateful_match_query(s, d).select(
-            "responseTime", "identity", "delta_us"
+        "tpch_pricing_summary": (tpch.pricing_summary, tpch.pricing_summary_sql),
+        "tpch_region_revenue": (tpch.region_revenue, tpch.region_revenue_sql),
+        "tpch_top_orders": (tpch.top_orders, tpch.top_orders_sql),
+        "tpch_topk_parts_per_brand": (tpch.topk_parts_per_brand, tpch.topk_parts_per_brand_sql),
+        "tpch_distinct_aggregates": (tpch.distinct_aggregates, tpch.distinct_aggregates_sql),
+        "tpch_segment_semi_anti": (tpch.segment_semi_anti, tpch.segment_semi_anti_sql),
+        "tpch_exists_late_ship": (tpch.exists_late_ship, tpch.exists_late_ship_sql),
+        "tpch_small_qty_revenue": (tpch.small_qty_revenue, tpch.small_qty_revenue_sql),
+        "split_train_val_test": (fsplit.split_assignments, fsplit.split_assignments_sql),
+        "split_stratified_sample": (fsplit.stratified_sample, fsplit.stratified_sample_sql),
+        "curate_corpus_e2e": (pcur.curate_corpus, pcur.curate_corpus_sql),
+        "text_stats": (ftext.text_stats, ftext.text_stats_sql),
+        "text_quality": (ftext.quality_scores, ftext.quality_scores_sql),
+        "text_lang_id": (ftext.lang_id, ftext.lang_id_sql),
+        "text_fingerprints": (ftext.fingerprints, ftext.fingerprints_sql),
+        "text_regex_tokens": (ftext.regex_tokens, ftext.regex_tokens_sql),
+        # the window sum is cast to BIGINT: DuckDB widens it to HUGEINT
+        "events_rolling_hour": (evan.rolling_hour_stats, evan.rolling_hour_stats_sql),
+        # sketches against exact aggregates as accuracy-bound booleans, so
+        # the oracle checks the entry exactly; raw sketch output is pinned
+        # in test_extensions.py::test_sketch_stats_accuracy
+        "events_sketch_stats": (evan.sketch_accuracy, evan.sketch_accuracy_sql),
+        "text_repetition": (ftext.repetition_filter, ftext.repetition_filter_sql),
+        # the exact state machine equals sequence pairing (match-once) on the
+        # collision-free pair streams; the streaming run is unbounded (no
+        # TTL), so the oracle uses the matching 30-day upper bound
+        "dns_stateful_match": (
+            lambda s, d: stp.stateful_match_query(s, d).select(
+                "responseTime", "identity", "delta_us"
+            ),
+            lambda: oj.match_response_times_once_sql(
+                PAIR_QUERY_SQL, PAIR_RESPONSE_SQL, "INTERVAL '30 days'"
+            ),
         ),
-        # numpy scorer driver-checked via top-k membership (recall == 1.0)
-        "sim_pandas_recall": fsim.pandas_recall,
-        # new in round 3: the rest of the production dedup pipeline —
-        # exact-Jaccard verification on LSH candidates only, connected
-        # components (iterative min-label propagation; recursive-CTE
-        # oracle), and the canonical deduplicated corpus
-        "dedup_lsh_verified": fdedup.lsh_verified_pairs,
-        "dedup_cc_clusters": fdedup.cc_clusters,
-        "dedup_canonical_corpus": fdedup.canonical_corpus,
-        # new in round 3: corpus-level boilerplate n-grams + benchmark
-        # decontamination (broadcast overlap vs a held-out eval split)
-        "text_top_ngrams": ftext.top_ngrams,
-        "text_decontaminate": ftext.decontaminate,
-        # new in round 4: C4-style PII redaction (self-certifying — the
-        # query injects deterministic PII, scrubs it, and proves zero
-        # residue) and the RefinedWeb-style duplicated-span fraction
-        "text_pii_scrub": ftext.pii_scrub,
-        "text_dup_span_fraction": ftext.dup_span_fraction,
-        # new in round 4 (batch 2): the span-dedup REWRITE (C4-style) —
-        # duplicated word segments keep only their first global
-        # occurrence; cleaned text reassembled per document
-        "text_segment_dedup": ftext.segment_dedup,
-        # new in round 4 (batch 4): keyword relevance search with
-        # exact-integer idf-monotone scoring (no libm logs)
-        "text_keyword_search": ftext.keyword_search,
-        # new in round 3: int8 storage quantization for the ANN scan path
-        # and deterministic quality-weighted corpus resampling
-        "sim_quantize_int8": fsim.quantize_int8,
-        "split_quality_resample": fsplit.quality_resample,
-        # new in round 3: the full modern curation chain in one plan
-        # (quality -> repetition -> decontam -> near-dup -> resample -> split)
-        "curate_corpus_v2": pcur.curate_corpus_v2,
-        # new in round 4 (batch 6): v2 + the SemDeDup gate over the
-        # embedding shard — the two-modality curation capstone
-        "curate_corpus_v3": pcur.curate_corpus_v3,
-        # new in round 3: the stateless curation gates as a REAL stream
-        # (micro-batch file source), oracle-checked because statelessness
-        # makes stream output == batch gate composition
-        "streaming_curation": stp.streaming_curation_query,
-        # new in round 4: the CORE aggregation (A1-A7) as a REAL
-        # update-mode stream, update log collapsed to final state
-        # (monotone per-key sum/min) — shares the batch clientQuery oracle
-        "dns_streaming_agg": stp.streaming_query_agg_query,
-        # new in round 4: exact dedup under double delivery (the
-        # at-least-once -> effectively-once upgrade, K4 replacement)
-        "streaming_dedup_redelivery": stp.streaming_dedup_query,
-        # new in round 4 (batch 4): watermark late-data DROP semantics —
-        # out-of-order delivery, oracle replays the eviction rule
-        "streaming_late_data": stp.streaming_late_data_query,
-        # new in round 4 (batch 5): append-mode session_window stream —
-        # cross-batch session merge + watermark finalization
-        "streaming_session_window": stp.streaming_session_window_query,
-        # new in round 4 (batch 9): hopping windows as a real append-mode
-        # stream — completes the tumbling/session/hopping matrix
-        "streaming_hopping_window": stp.streaming_hopping_window_query,
-        # new in round 4 (batch 5): the J1 match as a REAL stream-stream
-        # inner join (symmetric state buffering + watermark eviction)
-        "streaming_response_join": stp.streaming_response_join_query,
-        # new in round 4 (batch 6): LEFT OUTER flavor — NULL-extended
-        # emission of unmatched rows at watermark eviction, rule in-hash
-        "streaming_outer_join": stp.streaming_outer_join_query,
-        # new in round 4 (batch 6): FULL OUTER — both orphan kinds, each
-        # side's asymmetric eviction cut in the hash
-        "streaming_full_outer_join": stp.streaming_full_outer_join_query,
-        # new in round 4 (batch 6): online dedup with a LIVE cross-batch
-        # LSH index (probe -> admit -> append), oracle = unrolled replay
-        "streaming_online_dedup": fdedup.streaming_online_dedup,
-        # new in round 4 (batch 6): deterministic stand-in for CCNet's
-        # perplexity quality signal — mean token corpus frequency
-        "text_unigram_likelihood": ftext.unigram_likelihood,
-        # new in round 4 (batch 7): zero-filled dense hourly series (the
-        # ClickHouse WITH FILL / densification semantic, dimension-sized
-        # spine from sequence())
-        "events_gap_fill": evan.gap_fill,
-        # new in round 4 (batch 7): triangle census of the part
-        # co-purchase graph via degree-ordered wedge orientation (the
-        # O(E^1.5) formulation)
-        "graph_triangle_count": pgraph.triangle_count,
-        # new in round 4 (batch 7): asymmetric containment dedup — prefix
-        # -filtered candidates (PPJoin family), exact-integer verify
-        "dedup_containment_prefix": fdedup.containment_pairs,
-        # new in round 4 (batch 7): MMR diversity re-ranking — the
-        # post-retrieval stage of the RAG stack, greedy loop unrolled
-        "sim_mmr_rerank": fsim.mmr_rerank,
-        # new in round 4 (batch 7): LAION-style (image, caption) pair
-        # curation — id-keyed shard join + CLIP-data gates
-        "mm_caption_pairs": fmm.caption_pairs,
-        # new in round 4 (batch 8): "also bought" neighbor similarity —
-        # wedge-grouped common-neighbor counts, exact-integer Jaccard
-        "graph_jaccard_neighbors": pgraph.jaccard_neighbors,
-        # new in round 4 (batch 8): code-vs-prose routing gate (exact
-        # integer symbol density + keyword corroboration)
-        "text_code_detect": ftext.code_detect,
-        # new in round 4 (batch 8): one-pass corpus datasheet summary
-        "curate_dataset_card": pcur.dataset_card,
-        # new in round 4 (batch 10): token-budget corpus assembly —
-        # per-source running token total in deterministic hash order
-        "split_token_budget": fsplit.token_budget_sample,
-        # new in round 4 (batch 10): first-order user-journey transition
-        # matrix with exact-integer shares
-        "events_path_transitions": evan.path_transitions,
-        # new in round 4 (batch 11): mergeable HLL partials — per-day
-        # sketches unioned without re-scanning raw data; the hash
-        # certifies merge-exactness AND the accuracy bound
-        "events_hll_partials": evan.hll_partials,
-        # new in round 4 (batch 11): Z-order (Morton) layout pass —
-        # per-z-bucket zone map proving rectangle bounds on both dims
-        "events_zorder_layout": evan.zorder_layout,
-        # new in round 4 (batch 11): hashing-trick bag-of-words features
-        # (fixed dimension, no vocabulary state)
-        "text_hashed_features": ftext.hashed_features,
-        # new in round 4 (batch 11): stream-static broadcast enrichment
-        # (the stateless dimension-join streaming shape)
-        "streaming_static_enrich": stp.streaming_static_enrich_query,
-        # new in round 4 (batch 18): BPE merge learning — the
-        # tokenizer-training primitive (two unrolled corpus pair counts)
-        "text_bpe_merges": ftext.bpe_merges,
-        # new in round 4 (batch 18): top 3-step user journeys (n-gram
-        # extension of the 2-gram path transitions)
-        "events_top_paths": evan.top_paths,
-        # new in round 4 (batch 49): one-row dedup savings summary
-        # (docs/tokens/chars before vs after; the exec number)
-        "dedup_savings_report": fdedup.savings_report,
-        # new in round 4 (batch 49): discount-band effectiveness rollup
-        # (volume vs give-back per 2pp band)
-        "tpch_discount_bands": tpch.discount_bands,
-        # new in round 4 (batch 49): weekday activity profile
-        # (epoch-day DOW arithmetic, convention-proof)
-        "events_weekday_profile": evan.weekday_profile,
-        # new in round 4 (batch 48): weekly new-vs-returning user split
-        # (acquisition vs retention mix)
-        "events_new_returning": evan.new_returning,
-        # new in round 4 (batch 48): modality mix dataset-card table
-        # (row/byte shares + pixel budget per mime)
-        "mm_modality_mix": fmm.modality_mix,
-        # new in round 4 (batch 48): tombstone-filtered vector search
-        # with per-query index-decay counters
-        "sim_delete_aware_search": fsim.delete_aware_search,
-        # new in round 4 (batch 47): per-source duplicate-rate scorecard
-        # (crawl-budget observability off the CC labels)
-        "dedup_rate_by_source": fdedup.dup_rate_by_source,
-        # new in round 4 (batch 47): open-order aging report (stuck
-        # value per 30/90/365 bucket x priority)
-        "tpch_order_aging": tpch.order_aging,
-        # new in round 4 (batch 47): value-decile migration matrix
-        # between window halves (retention/churn movement)
-        "events_decile_migration": evan.decile_migration,
-        # new in round 4 (batch 46): best-quality canonical selection
-        # per near-dup cluster (+ divergence from the min-id rule)
-        "dedup_canonical_by_quality": fdedup.canonical_by_quality,
-        # new in round 4 (batch 46): median/MAD robust length-outlier
-        # gate (exact nearest-rank, cross-multiplied compare)
-        "text_length_outliers": ftext.length_outliers,
-        # new in round 4 (batch 46): per-client entity profile (volume,
-        # diversity, sightings — the SOC enrichment table)
-        "dns_client_profile": an.client_profile,
-        # new in round 4 (batch 45): decontamination gram-size sweep
-        # (the K tuning curve; monotone in k)
-        "text_decontam_sweep": ftext.decontam_sweep,
-        # new in round 4 (batch 45): v2-vs-v3 dataset release diff
-        # (kept/dropped/added per split + retention)
-        "curate_version_diff": pcur.version_diff,
-        # new in round 4 (batch 45): per-nation supplier-revenue HHI
-        # (exact-integer concentration index + DOJ-threshold flag)
-        "tpch_supplier_hhi": tpch.supplier_hhi,
-        # new in round 4 (batch 44): margin-based uncertainty sampling
-        # (the active-learning labeling queue off the quality logit)
-        "split_uncertainty_sample": fsplit.uncertainty_sample,
-        # new in round 4 (batch 44): bipartite butterfly census over
-        # order<->part (pre-projection cohesion motif)
-        "graph_butterfly_count": pgraph.butterfly_count,
-        # new in round 4 (batch 44): temperature-scaled source mixture
-        # (sqrt-flattened shares + upsample factors)
-        "curate_mixture_temperature": pcur.mixture_temperature,
-        # new in round 4 (batch 43): latency heatmap over the J1
-        # matched pairs ((hour, minute-band) distribution grid)
-        "dns_latency_heatmap": an.hit_latency_heatmap,
-        # new in round 4 (batch 43): name-hierarchy ROLLUP (TLD/SLD/
-        # FQDN grains in one pass, __ANY__ convention)
-        "dns_name_rollup": an.name_rollup,
-        # new in round 4 (batch 43): Lorenz curve + exact integer Gini
-        # of per-user value (concentration/whale analysis)
-        "events_lorenz_gini": evan.lorenz_gini,
-        # new in round 4 (batch 42): CDC apply with tombstones (the
-        # ReplacingMergeTree(ver, is_deleted) contract as a stream)
-        "streaming_tombstone_apply": stp.streaming_tombstone_apply,
-        # new in round 4 (batch 42): contrastive hard-negative mining
-        # (top cross-label in-cell cosine per anchor)
-        "sim_hard_negatives": fsim.hard_negatives,
-        # new in round 4 (batch 42): tokenizer fertility by source
-        # (tokens-per-word, the compute-share budgeting table)
-        "text_tokenizer_fertility": ftext.tokenizer_fertility,
-        # new in round 4 (batch 41): rendezvous/HRW sharding with the
-        # minimal-movement resharding certificate
-        "split_rendezvous_shards": fsplit.rendezvous_shards,
-        # new in round 4 (batch 41): source-pair similarity from MERGED
-        # MinHash sketches (union = elementwise min; corpus profiling)
-        "dedup_source_sketch_sim": fdedup.source_sketch_sim,
-        # new in round 4 (batch 41): numeric feature drift vs frozen
-        # reference-half decile edges (PSI setup, TVD form)
-        "events_value_drift": evan.value_drift,
-        # new in round 4 (batch 40): qtype mix drift (per-type TVD
-        # contribution between window halves, exact e6)
-        "dns_traffic_drift": an.traffic_drift,
-        # new in round 4 (batch 40): one NN-Descent gossip round over
-        # the bootstrap kNN graph (recovered-edge flags)
-        "sim_nn_descent_round": fsim.nn_descent_round,
-        # new in round 4 (batch 40): end-to-end eval-leakage certificate
-        # over the v2 pipeline's final output (release audit)
-        "curate_decontam_certificate": pcur.decontam_certificate,
-        # new in round 4 (batch 39): video scene-cut detection (frame
-        # intensity delta over the codec-stub stream)
-        "mm_scene_cuts": fmm.scene_cuts,
-        # new in round 4 (batch 39): classifier eval harness (confusion
-        # matrix + exact per-cell precision/recall of lang_id)
-        "text_langid_eval": ftext.langid_eval,
-        # new in round 4 (batch 39): zone-map pruning audit (per-bucket
-        # scan/skip for a 2-D range predicate over the Z-order map)
-        "events_zonemap_prune": evan.zonemap_prune,
-        # new in round 4 (batch 38): resolver-cache hit simulation
-        # (TTL lag replay; per-client hit ratio)
-        "dns_cache_hit_sim": an.cache_hit_sim,
-        # new in round 4 (batch 38): b-bit MinHash storage compression
-        # with collision-floor-corrected estimator audit
-        "dedup_minhash_bbit": fdedup.bbit_minhash,
-        # new in round 4 (batch 38): HNSW layer assignment via exact
-        # trailing-zero geometric draws (level capacity plan)
-        "sim_hnsw_layers": fsim.hnsw_layers,
-        # new in round 4 (batch 37): 2-iteration HITS authorities over
-        # the client->qname bipartite graph (mutual reinforcement)
-        "dns_hits_authority": an.hits_authority,
-        # new in round 4 (batch 37): content-defined chunking (Manber
-        # anchors; edit-resynchronizing segmentation + chunk-store counts)
-        "text_cdc_chunks": ftext.cdc_chunks,
-        # new in round 4 (batch 37): KMV bottom-k distinct sketch with
-        # row-by-row estimator audit (third mergeable summary)
-        "events_kmv_distinct": evan.kmv_distinct,
-        # new in round 4 (batch 36): Count-Min sketch heavy-hitter audit
-        # (fixed 256-cell mergeable summary; overestimate >= 0 guarantee)
-        "events_count_min": evan.count_min,
-        # new in round 4 (batch 36): per-doc TF-IDF top terms (linear-IDF
-        # exact rational; vocabulary-sized model relations)
-        "text_tfidf_terms": ftext.tfidf_terms,
-        # new in round 4 (batch 36): aHash perceptual image dedup
-        # (banded Hamming join over the locality-preserving pixel stub)
-        "mm_image_ahash": fmm.image_ahash,
-        # new in round 4 (batch 35): RFM quintile segmentation (one
-        # corpus aggregate + user-domain window sorts)
-        "events_rfm_segments": evan.rfm_segments,
-        # new in round 4 (batch 35): winnowing fingerprint selection
-        # (MOSS, SIGMOD'03 — rightmost-min window rule)
-        "text_winnow_fingerprints": ftext.winnow_fingerprints,
-        # new in round 4 (batch 35): cell-pruned kNN graph build (the
-        # graph-ANN/NN-Descent input; Σ cell² cost, SemDeDup knob)
-        "sim_knn_graph": fsim.knn_graph,
-        # new in round 4 (batch 34): Markov-1 conditional-frequency LM
-        # scoring (the bigram extension of unigram_likelihood)
-        "text_bigram_lm": ftext.bigram_lm,
-        # new in round 4 (batch 34): resource-allocation link prediction
-        # (non-edges only — the anti-join is what makes it a prediction)
-        "graph_link_predict": pgraph.link_predict,
-        # new in round 4 (batch 34): foreachBatch CDC MERGE maintenance
-        # loop (argmax-semilattice merge => chunk-free batch oracle)
-        "streaming_upsert_apply": stp.streaming_upsert_apply,
-        # new in round 4 (batch 33): M4 pixel-perfect chart downsampling
-        # (first/last/min/max per time bucket, VLDB'14)
-        "events_m4_downsample": evan.m4_downsample,
-        # new in round 4 (batch 33): windowed-energy audio VAD/trim
-        # flags (exact-integer mean-threshold, codec-stub boundary)
-        "mm_audio_vad": fmm.audio_vad,
-        # new in round 4 (batch 33): blocked Levenshtein record linkage
-        # (prefix blocking + exact built-in edit distance)
-        "text_fuzzy_match": ftext.fuzzy_match,
-        # new in round 4 (batch 32): IVF cell-occupancy balance audit
-        # (the hot-partition readout for vector search)
-        "sim_ivf_balance": fsim.ivf_balance,
-        # new in round 4 (batch 32): near-dup review surface (top pairs
-        # with snippets — the pre-drop human check)
-        "dedup_pair_examples": fdedup.pair_examples,
-        # new in round 4 (batch 32): per-split order-independent content
-        # checksums (the dataset-release reproducibility audit)
-        "split_manifest_checksums": fsplit.manifest_checksums,
-        # new in round 4 (batch 31): skew-salted join/agg as a contract
-        # entry (oracle = the plain join: salting is answer-invariant)
-        "tpch_salted_join": tpch.salted_revenue_join,
-        # new in round 4 (batch 31): embedding-distribution drift
-        # monitor (mean-vector shift between slices)
-        "sim_embedding_drift": fsim.embedding_drift,
-        # new in round 4 (batch 31): SLO error-budget burn-down
-        # (daily breach + cumulative budget share, exact integers)
-        "events_slo_burn": evan.slo_burn,
-        # new in round 4 (batch 30): MinHash banding operating curve
-        # (candidates/verified per band count, S-curve knob)
-        "dedup_band_sweep": fdedup.band_sweep,
-        # new in round 4 (batch 30): PQ distance-distortion report
-        # (ADC vs exact fold on the audited top-k pairs)
-        "sim_pq_distortion": fsim.pq_distortion,
-        # new in round 4 (batch 30): DAU/WAU stickiness via bounded
-        # pane-enumeration (no range self-join)
-        "events_dau_wau": evan.dau_wau,
-        # new in round 4 (batch 29): per-user feature-store matrix
-        # (fixed-width conditional-sum fan-out, exact integers)
-        "events_feature_matrix": evan.feature_matrix,
-        # new in round 4 (batch 29): declarative threshold alerting
-        # (rules dim × hourly metrics broadcast join)
-        "events_alert_eval": evan.alert_eval,
-        # new in round 4 (batch 29): Heaps-law vocabulary growth curve
-        # (first-occurrence quartiles; saturation = repetition signal)
-        "text_vocab_growth": ftext.vocab_growth,
-        # new in round 4 (batch 28): text-side LSH pair recall vs exact
-        # Jaccard truth (precision certified 1.0 in-hash)
-        "dedup_minhash_recall": fdedup.minhash_recall,
-        # new in round 4 (batch 28): global transitivity from the
-        # audited triangle census (exact e6 quotient)
-        "graph_clustering_coefficient": pgraph.clustering_coefficient,
-        # new in round 4 (batch 28): per-source gate-failure scorecard
-        # (the evidence table domain-mix proportions are set from)
-        "curate_source_scorecard": pcur.source_scorecard,
-        # new in round 4 (batch 27): IVF nprobe recall curve (one corpus
-        # pass, first-probe tagging; the partition-pruning tuning knob)
-        "sim_nprobe_sweep": fsim.nprobe_sweep,
-        # new in round 4 (batch 27): near-dup cluster size distribution
-        # (dedup observability; boilerplate-blowup detector)
-        "dedup_cluster_stats": fdedup.cluster_stats,
-        # new in round 4 (batch 27): purged temporal split with measured
-        # embargo-gap certificate (the time-leakage counterpart)
-        "split_temporal_embargo": fsplit.temporal_embargo,
-        # new in round 4 (batch 26): per-gate yield funnel of the v2
-        # curation pipeline (spliced from the audited gate relations)
-        "curate_yield_report": pcur.yield_report,
-        # new in round 4 (batch 26): leakage-safe splitting by near-dup
-        # cluster id, with measured naive-straddle certificate
-        "split_leakage_safe": fsplit.leakage_safe_split,
-        # new in round 4 (batch 26): stationary-mass power iteration of
-        # the event-type Markov chain (exact integer masses)
-        "events_markov_stationary": evan.markov_stationary,
-        # new in round 4 (batch 25): BPE merge application with exact
-        # compression accounting (the tokenizer-run pass)
-        "text_bpe_apply": ftext.bpe_apply,
-        # new in round 4 (batch 25): MinHash estimator certification —
-        # est vs exact Jaccard per candidate (found+fixed the degenerate
-        # affine family)
-        "dedup_minhash_accuracy": fdedup.minhash_accuracy,
-        # new in round 4 (batch 25): log2-binned degree distribution
-        # with per-bin mass (the celebrity-vertex skew audit)
-        "graph_degree_histogram": pgraph.degree_histogram,
-        # new in round 4 (batch 24): length-bucketed batch assembly with
-        # exact padding-waste accounting (the bucketing sampler)
-        "split_length_buckets": fsplit.length_buckets,
-        # new in round 4 (batch 24): hourly-series autocorrelation at
-        # fixed lags (the seasonality detector; exact moments)
-        "events_autocorrelation": evan.autocorrelation,
-        # new in round 4 (batch 24): cosine-threshold operating curve
-        # over the LSH candidate chain (in-hash monotone certificate)
-        "sim_threshold_sweep": fsim.threshold_sweep,
-        # new in round 4 (batch 23): seasonal-naive backtest with exact
-        # integer MAEs (the forecast-evaluation analytics shape)
-        "events_seasonal_baseline": evan.seasonal_baseline,
-        # new in round 4 (batch 23): keyness / corpus-drift detection
-        # between source slices (smoothed frequency ratio)
-        "text_keyness": ftext.keyness,
-        # new in round 4 (batch 23): degree assortativity as a pure
-        # integer moment ratio (the mixing-pattern graph metric)
-        "graph_assortativity": pgraph.assortativity,
-        # new in round 4 (batch 22): equi-depth histogram with per-bucket
-        # NDV (the optimizer-statistics collection primitive)
-        "events_equidepth_histogram": evan.equidepth_histogram,
-        # new in round 4 (batch 22): greedy k-center farthest-point
-        # seeding with its coverage-radius ladder
-        "sim_farthest_init": fsim.farthest_init,
-        # new in round 4 (batch 22): Newman modularity of the brand
-        # partition over the co-purchase graph (fixed-point integers)
-        "graph_modularity": pgraph.modularity,
-        # new in round 4 (batch 21): CDC changeset derivation by
-        # snapshot diff (the inverse of events_upsert_merge)
-        "events_change_capture": evan.change_capture,
-        # new in round 4 (batch 21): multi-source BFS hop distance with
-        # in-band convergence certificate (frontier expansion)
-        "graph_bfs_distance": pgraph.bfs_distance,
-        # new in round 4 (batch 21): skip-gram collocation mining by
-        # exact-integer lift (the word2vec phrase-pass statistic)
-        "text_collocations": ftext.collocations,
-        # new in round 4 (batch 20): centroid-distance OOD pruning gate
-        # (SemDeDup's sibling: drop far-from-distribution embeddings)
-        "sim_ood_centroid": fsim.ood_centroid,
-        # new in round 4 (batch 20): A/B experiment readout with exact
-        # integer chi-square significance (windowed attribution)
-        "events_ab_test": evan.ab_test,
-        # new in round 4 (batch 20): exact distinct users per hopping
-        # window (the non-mergeable aggregate, batch flavor)
-        "events_sliding_distinct": evan.sliding_distinct,
-        # new in round 4 (batch 19): exact nearest-rank percentiles — the
-        # sketch entry's ground-truth counterpart (percentile_disc)
-        "events_exact_percentiles": evan.exact_percentiles,
-        # new in round 4 (batch 19): sequenceMatch with a negative
-        # condition (no 'error' strictly between the chain anchors)
-        "events_sequence_match": evan.sequence_match,
-        # new in round 4 (batch 19): fixed-weight linear quality
-        # classifier over hashed features (DCLM fastText-filter shape)
-        "text_quality_logit": ftext.quality_logit,
-        # new in round 4 (batch 17): cosine radius search with per-pair
-        # LSH-hit certification (the threshold query shape next to top-k)
-        "sim_range_search": fsim.range_search,
-        # new in round 4 (batch 17): Feistel epoch shuffle — stateless
-        # deterministic per-epoch training order with in-hash bijection proof
-        "split_epoch_shuffle": fsplit.epoch_shuffle,
-        # new in round 4 (batch 17): ClickHouse windowFunnel semantics
-        # (completion window anchored at step-1) beside the unbounded funnel
-        "events_window_funnel": evan.window_funnel,
-        # new in round 4 (batch 16): CollapsingMergeTree sign-collapse
-        # final state with in-hash collapse certificate
-        "events_collapsing_state": evan.collapsing_state,
-        # new in round 4 (batch 16): integer-lexical DGA triage over
-        # query names (the DNS-telemetry security surface)
-        "dns_qname_features": lambda s, d: an.qname_features(
-            prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY")
+        # the numpy scorer is checked by top-k membership (recall == 1.0)
+        "sim_pandas_recall": (fsim.pandas_recall, fsim.pandas_recall_sql),
+        "dedup_lsh_verified": (fdedup.lsh_verified_pairs, fdedup.lsh_verified_pairs_sql),
+        "dedup_cc_clusters": (fdedup.cc_clusters, fdedup.cc_clusters_sql),
+        "dedup_canonical_corpus": (fdedup.canonical_corpus, fdedup.canonical_corpus_sql),
+        "text_top_ngrams": (ftext.top_ngrams, ftext.top_ngrams_sql),
+        "text_decontaminate": (ftext.decontaminate, ftext.decontaminate_sql),
+        "text_pii_scrub": (ftext.pii_scrub, ftext.pii_scrub_sql),
+        "text_dup_span_fraction": (ftext.dup_span_fraction, ftext.dup_span_fraction_sql),
+        "text_segment_dedup": (ftext.segment_dedup, ftext.segment_dedup_sql),
+        "text_keyword_search": (ftext.keyword_search, ftext.keyword_search_sql),
+        "sim_quantize_int8": (fsim.quantize_int8, fsim.quantize_int8_sql),
+        "split_quality_resample": (fsplit.quality_resample, fsplit.quality_resample_sql),
+        "curate_corpus_v2": (pcur.curate_corpus_v2, pcur.curate_corpus_v2_sql),
+        "curate_corpus_v3": (pcur.curate_corpus_v3, pcur.curate_corpus_v3_sql),
+        # stateless gates: the stream's output equals the batch composition
+        "streaming_curation": (stp.streaming_curation_query, stp.streaming_curation_sql),
+        # the update-mode stream collapsed to final state equals batch clientQuery
+        "dns_streaming_agg": (stp.streaming_query_agg_query, dp.client_query_table_sql),
+        "streaming_dedup_redelivery": (stp.streaming_dedup_query, stp.streaming_dedup_sql),
+        "streaming_late_data": (stp.streaming_late_data_query, stp.streaming_late_data_sql),
+        "streaming_session_window": (
+            stp.streaming_session_window_query,
+            stp.streaming_session_window_sql,
         ),
-        # new in round 4 (batch 15): ClickHouse-style TTL GROUP BY
-        # storage tiering (raw / hourly / daily age ladder)
-        "events_ttl_rollup": evan.ttl_rollup,
-        # new in round 4 (batch 15): incremental materialized-view
-        # maintenance with in-hash merge==recompute proof
-        "events_materialized_rollup": evan.materialized_rollup,
-        # new in round 4 (batch 15): deterministic low-discrepancy
-        # dataloader interleave schedule over language weights
-        "split_interleave_mix": fsplit.interleave_mix,
-        # new in round 4 (batch 14): WebDataset shard packing manifest
-        # via the shared distributed prefix sum
-        "mm_shard_manifest": fmm.shard_manifest,
-        # new in round 4 (batch 14): GDPR batch erasure with in-pass
-        # zero-residue proof
-        "events_user_erasure": evan.user_erasure,
-        # new in round 4 (batch 14): k-core by unrolled peeling with an
-        # in-band convergence certificate
-        "graph_kcore": pgraph.kcore,
-        # new in round 4 (batch 13): mergeable top-k partials — per-day
-        # frequent-items states combined without re-scanning raw data
-        "events_approx_topk_merge": evan.approx_topk_merge,
-        # new in round 4 (batch 13): 1-bit sign-packed Hamming search —
-        # the all-integer end of the vector-compression ladder
-        "sim_binary_hamming": fsim.binary_hamming_topk,
-        # new in round 4 (batch 13): k-fold CV assignment (decoupled
-        # second-round hash, zero shuffle)
-        "split_kfold": fsplit.kfold_assign,
-        # new in round 4 (batch 12): theta sketch set algebra — mergeable
-        # union/intersection/difference on audience sketches
-        "events_theta_sets": evan.theta_sets,
-        # new in round 4 (batch 12): Matryoshka two-stage retrieval —
-        # prefix-dim coarse rank + full-dim rerank (dimension pruning)
-        "sim_matryoshka": fsim.matryoshka_topk,
-        # new in round 4 (batch 12): bucketed co-located fact-fact join
-        # (the pay-the-shuffle-once storage layout; zero Exchange)
-        "tpch_bucketed_join": pbkt.bucketed_join,
-        # new in round 4: simhash family completed — banded Hamming pairs
-        "dedup_simhash_pairs": fdedup.simhash_pairs,
-        # new in round 4: GPT-style concat-and-chunk packing offsets via a
-        # distributed prefix sum (oracle: plain single-window cumsum)
-        "split_token_chunks": fsplit.pack_token_chunks,
-        # new in round 4 (batch 5): Dolma/DCLM-style domain mixing to
-        # exact integer target proportions
-        "curate_domain_mix": fsplit.domain_mix,
-        # new in round 4 (batch 5): count-min-sketch frequency summary
-        # with in-hash overestimate certification
-        "events_heavy_hitters": evan.heavy_hitters,
-        # new in round 4 (batch 5): product quantization — per-subspace
-        # deterministic k-means codebooks (the ANN compression path)
-        # + asymmetric-distance top-k search over the codes
-        "sim_pq_codes": fsim.pq_codes,
-        "sim_pq_adc": fsim.pq_adc_topk,
-        "sim_ivfpq_topk": fsim.ivfpq_topk,
-        "sim_ivfpq_recall": fsim.ivfpq_recall,
-        # new in round 4: arriving-batch dedup vs the existing corpus
-        # (one-sided banded LSH probe + exact-Jaccard verify)
-        "dedup_incremental_ingest": fdedup.incremental_ingest,
-        # new in round 4 (batch 6): Bloom-filter membership pre-screen in
-        # front of the ingest probe (fixed-size broadcast filter,
-        # no-false-negative certificate in the hash)
-        "dedup_bloom_prescreen": fdedup.bloom_prescreen,
-        # new in round 4 (batch 6): SemDeDup — cosine dedup WITHIN k-means
-        # clusters (the clustering quarantines the quadratic)
-        "dedup_semantic": fsim.semantic_dedup,
-        # new in round 4 (batch 6): RAG-stack hybrid retrieval — keyword
-        # + vector candidate lists fused by integer reciprocal-rank fusion
-        "sim_hybrid_rrf": fsim.hybrid_rrf,
-        # new in round 4 (batch 6): the SCALE path for embedding dedup —
-        # LSH-bucketed candidate pairs, exact-cosine verified + its
-        # in-engine pair-recall/precision certificate
-        "dedup_embedding_lsh": fsim.embedding_lsh_dups,
-        "dedup_embedding_lsh_recall": fgt.sampled_embedding_lsh_recall,
-        # new in round 4: weekly cohort retention matrix
-        "events_cohort_retention": evan.cohort_retention,
-        # new in round 4 (batch 2): typed JSON extraction from the props
-        # payload (from_json — the JVM semi-structured path) and
-        # per-user inter-arrival gap profile (lag window + 5-key agg)
-        "events_json_props": evan.json_props_stats,
-        "events_interarrival": evan.interarrival_stats,
-        # new in round 4 (batch 3): native CUBE grouping sets, exact
-        # integer-binned histogram, cross-multiplied z-score outliers,
-        # and deterministic integer PageRank (iterative graph analytics)
-        "tpch_cube_summary": tpch.cube_summary,
-        "events_value_histogram": evan.value_histogram,
-        "events_anomaly_zscore": evan.anomaly_zscore,
-        "graph_pagerank": pgraph.pagerank_top,
-        # new in round 4 (batch 4): CDC MERGE/upsert as one keyed
-        # full-outer join (the Delta/Iceberg MERGE INTO physical shape)
-        "events_upsert_merge": evan.upsert_merge,
-        "events_scd2_history": evan.scd2_history,
-        "events_variant_shred": evan.variant_shred,
-        # new in round 4: Q20-analogue correlated-agg-threshold semi-join
-        "tpch_dominant_suppliers": tpch.dominant_suppliers,
-        # new in round 4 (batch 2): the remaining classic join/predicate
-        # shapes — conditional-agg ratio (Q14), OR-of-conjunctions
-        # predicate (Q19), self-normalizing fraction-of-total HAVING
-        # (Q11), IN-over-grouped-HAVING (Q18), and scalar-avg subquery +
-        # NOT EXISTS cohorts (Q22)
-        "tpch_promo_revenue": tpch.promo_revenue,
-        "tpch_disjunctive_revenue": tpch.disjunctive_revenue,
-        "tpch_important_parts": tpch.important_parts,
-        "tpch_large_volume_customers": tpch.large_volume_customers,
-        "tpch_sales_opportunity": tpch.sales_opportunity,
-        # new in round 3: Q13/Q15-analogue join shapes (outer join with
-        # ON-clause filter + histogram-of-counts; scalar-subquery max)
-        "tpch_customer_dist": tpch.customer_order_distribution,
-        "tpch_top_supplier": tpch.top_supplier,
-        # new in round 4 (batch 5): the last classic shapes — pushdown
-        # scan-sum (Q6), bilateral nation-pair volume (Q7), part-family
-        # profit (Q9), conditional two-way counts (Q12), NOT-IN
-        # exclusion + count-distinct (Q16), double-correlated
-        # EXISTS/NOT EXISTS (Q21), correlated scalar-MIN (Q2)
-        "tpch_forecast_revenue": tpch.forecast_revenue,
-        "tpch_returned_items": tpch.returned_item_customers,
-        "tpch_lateral_topn": tpch.lateral_topn_orders,
-        "tpch_volume_shipping": tpch.volume_shipping,
-        "tpch_product_profit": tpch.product_profit,
-        "tpch_shipmode_priority": tpch.shipmode_priority,
-        "tpch_supplier_cnt": tpch.supplier_cnt,
-        "tpch_waiting_suppliers": tpch.waiting_suppliers,
-        "tpch_min_cost_supplier": tpch.min_cost_supplier,
-        # rcode fallback now matches dns.RcodeToString ('' for unmapped)
-        "dns_decode_queries": lambda s, d: prep.decode_frames(
-            prep.raw_frames(s, d), "CLIENT_QUERY"
+        "streaming_hopping_window": (
+            stp.streaming_hopping_window_query,
+            stp.streaming_hopping_window_sql,
         ),
-        "dns_decode_responses": lambda s, d: prep.decode_frames(
-            prep.raw_frames(s, d), "CLIENT_RESPONSE"
+        "streaming_response_join": (
+            stp.streaming_response_join_query,
+            stp.streaming_response_join_sql,
         ),
-        # join.py interval parsing reworked (ms..week units)
-        "dns_response_time_join": lambda s, d: dp.response_time_table(s, d),
-        "dns_match_once": lambda s, d: oj.match_response_times_once(
-            *dns_pair_streams(s, d)
+        "streaming_outer_join": (stp.streaming_outer_join_query, stp.streaming_outer_join_sql),
+        "streaming_full_outer_join": (
+            stp.streaming_full_outer_join_query,
+            stp.streaming_full_outer_join_sql,
         ),
-        "dns_q4_latency_series": lambda s, d: an.response_time_series(
-            dp.response_time_table(s, d)
+        "streaming_online_dedup": (
+            fdedup.streaming_online_dedup,
+            fdedup.streaming_online_dedup_sql,
         ),
-        "dns_pipeline_e2e": lambda s, d: an.top_query_addresses(
-            dp.client_query_table(
-                s, d, queries=prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY")
-            )
+        "text_unigram_likelihood": (ftext.unigram_likelihood, ftext.unigram_likelihood_sql),
+        "events_gap_fill": (evan.gap_fill, evan.gap_fill_sql),
+        "graph_triangle_count": (pgraph.triangle_count, pgraph.triangle_count_sql),
+        "dedup_containment_prefix": (fdedup.containment_pairs, fdedup.containment_pairs_sql),
+        "sim_mmr_rerank": (fsim.mmr_rerank, fsim.mmr_rerank_sql),
+        "mm_caption_pairs": (fmm.caption_pairs, fmm.caption_pairs_sql),
+        "graph_jaccard_neighbors": (pgraph.jaccard_neighbors, pgraph.jaccard_neighbors_sql),
+        "text_code_detect": (ftext.code_detect, ftext.code_detect_sql),
+        "curate_dataset_card": (pcur.dataset_card, pcur.dataset_card_sql),
+        "split_token_budget": (fsplit.token_budget_sample, fsplit.token_budget_sample_sql),
+        "events_path_transitions": (evan.path_transitions, evan.path_transitions_sql),
+        "events_hll_partials": (evan.hll_partials, evan.hll_partials_sql),
+        "events_zorder_layout": (evan.zorder_layout, evan.zorder_layout_sql),
+        "text_hashed_features": (ftext.hashed_features, ftext.hashed_features_sql),
+        "streaming_static_enrich": (
+            stp.streaming_static_enrich_query,
+            stp.streaming_static_enrich_sql,
         ),
-        # --- sources / projections (P1-P7 over the canonical mapping) ---
-        "dns_query_stream": lambda s, d: dns_query_stream(s, d),
-        "dns_response_stream": lambda s, d: dns_response_stream(s, d),
-        # P2: raw address bytes -> dotted-quad (dnstap.go:292/355)
-        "dns_decode_addresses": lambda s, d: prep.decode_addresses(prep.raw_frames(s, d)),
-        # --- aggregation core (A1-A7, grouping sets, windows) ---
-        "dns_client_query_agg": lambda s, d: dp.client_query_table(s, d),
-        "dns_client_response_agg": lambda s, d: dp.client_response_table(s, d),
+        "text_bpe_merges": (ftext.bpe_merges, ftext.bpe_merges_sql),
+        "events_top_paths": (evan.top_paths, evan.top_paths_sql),
+        "dedup_savings_report": (fdedup.savings_report, fdedup.savings_report_sql),
+        "tpch_discount_bands": (tpch.discount_bands, tpch.discount_bands_sql),
+        "events_weekday_profile": (evan.weekday_profile, evan.weekday_profile_sql),
+        "events_new_returning": (evan.new_returning, evan.new_returning_sql),
+        "mm_modality_mix": (fmm.modality_mix, fmm.modality_mix_sql),
+        "sim_delete_aware_search": (fsim.delete_aware_search, fsim.delete_aware_search_sql),
+        "dedup_rate_by_source": (fdedup.dup_rate_by_source, fdedup.dup_rate_by_source_sql),
+        "tpch_order_aging": (tpch.order_aging, tpch.order_aging_sql),
+        "events_decile_migration": (evan.decile_migration, evan.decile_migration_sql),
+        "dedup_canonical_by_quality": (
+            fdedup.canonical_by_quality,
+            fdedup.canonical_by_quality_sql,
+        ),
+        "text_length_outliers": (ftext.length_outliers, ftext.length_outliers_sql),
+        "dns_client_profile": (an.client_profile, an.client_profile_sql),
+        "text_decontam_sweep": (ftext.decontam_sweep, ftext.decontam_sweep_sql),
+        "curate_version_diff": (pcur.version_diff, pcur.version_diff_sql),
+        "tpch_supplier_hhi": (tpch.supplier_hhi, tpch.supplier_hhi_sql),
+        "split_uncertainty_sample": (fsplit.uncertainty_sample, fsplit.uncertainty_sample_sql),
+        "graph_butterfly_count": (pgraph.butterfly_count, pgraph.butterfly_count_sql),
+        "curate_mixture_temperature": (pcur.mixture_temperature, pcur.mixture_temperature_sql),
+        "dns_latency_heatmap": (an.hit_latency_heatmap, an.hit_latency_heatmap_sql),
+        "dns_name_rollup": (an.name_rollup, an.name_rollup_sql),
+        "events_lorenz_gini": (evan.lorenz_gini, evan.lorenz_gini_sql),
+        "streaming_tombstone_apply": (
+            stp.streaming_tombstone_apply,
+            stp.streaming_tombstone_apply_sql,
+        ),
+        "sim_hard_negatives": (fsim.hard_negatives, fsim.hard_negatives_sql),
+        "text_tokenizer_fertility": (ftext.tokenizer_fertility, ftext.tokenizer_fertility_sql),
+        "split_rendezvous_shards": (fsplit.rendezvous_shards, fsplit.rendezvous_shards_sql),
+        "dedup_source_sketch_sim": (fdedup.source_sketch_sim, fdedup.source_sketch_sim_sql),
+        "events_value_drift": (evan.value_drift, evan.value_drift_sql),
+        "dns_traffic_drift": (an.traffic_drift, an.traffic_drift_sql),
+        "sim_nn_descent_round": (fsim.nn_descent_round, fsim.nn_descent_round_sql),
+        "curate_decontam_certificate": (pcur.decontam_certificate, pcur.decontam_certificate_sql),
+        "mm_scene_cuts": (fmm.scene_cuts, fmm.scene_cuts_sql),
+        "text_langid_eval": (ftext.langid_eval, ftext.langid_eval_sql),
+        "events_zonemap_prune": (evan.zonemap_prune, evan.zonemap_prune_sql),
+        "dns_cache_hit_sim": (an.cache_hit_sim, an.cache_hit_sim_sql),
+        "dedup_minhash_bbit": (fdedup.bbit_minhash, fdedup.bbit_minhash_sql),
+        "sim_hnsw_layers": (fsim.hnsw_layers, fsim.hnsw_layers_sql),
+        "dns_hits_authority": (an.hits_authority, an.hits_authority_sql),
+        "text_cdc_chunks": (ftext.cdc_chunks, ftext.cdc_chunks_sql),
+        "events_kmv_distinct": (evan.kmv_distinct, evan.kmv_distinct_sql),
+        "events_count_min": (evan.count_min, evan.count_min_sql),
+        "text_tfidf_terms": (ftext.tfidf_terms, ftext.tfidf_terms_sql),
+        "mm_image_ahash": (fmm.image_ahash, fmm.image_ahash_sql),
+        "events_rfm_segments": (evan.rfm_segments, evan.rfm_segments_sql),
+        "text_winnow_fingerprints": (ftext.winnow_fingerprints, ftext.winnow_fingerprints_sql),
+        "sim_knn_graph": (fsim.knn_graph, fsim.knn_graph_sql),
+        "text_bigram_lm": (ftext.bigram_lm, ftext.bigram_lm_sql),
+        "graph_link_predict": (pgraph.link_predict, pgraph.link_predict_sql),
+        "streaming_upsert_apply": (stp.streaming_upsert_apply, stp.streaming_upsert_apply_sql),
+        "events_m4_downsample": (evan.m4_downsample, evan.m4_downsample_sql),
+        "mm_audio_vad": (fmm.audio_vad, fmm.audio_vad_sql),
+        "text_fuzzy_match": (ftext.fuzzy_match, ftext.fuzzy_match_sql),
+        "sim_ivf_balance": (fsim.ivf_balance, fsim.ivf_balance_sql),
+        "dedup_pair_examples": (fdedup.pair_examples, fdedup.pair_examples_sql),
+        "split_manifest_checksums": (fsplit.manifest_checksums, fsplit.manifest_checksums_sql),
+        # salting is answer-invariant: the oracle is the plain join
+        "tpch_salted_join": (tpch.salted_revenue_join, tpch.salted_revenue_join_sql),
+        "sim_embedding_drift": (fsim.embedding_drift, fsim.embedding_drift_sql),
+        "events_slo_burn": (evan.slo_burn, evan.slo_burn_sql),
+        "dedup_band_sweep": (fdedup.band_sweep, fdedup.band_sweep_sql),
+        "sim_pq_distortion": (fsim.pq_distortion, fsim.pq_distortion_sql),
+        "events_dau_wau": (evan.dau_wau, evan.dau_wau_sql),
+        "events_feature_matrix": (evan.feature_matrix, evan.feature_matrix_sql),
+        "events_alert_eval": (evan.alert_eval, evan.alert_eval_sql),
+        "text_vocab_growth": (ftext.vocab_growth, ftext.vocab_growth_sql),
+        "dedup_minhash_recall": (fdedup.minhash_recall, fdedup.minhash_recall_sql),
+        "graph_clustering_coefficient": (
+            pgraph.clustering_coefficient,
+            pgraph.clustering_coefficient_sql,
+        ),
+        "curate_source_scorecard": (pcur.source_scorecard, pcur.source_scorecard_sql),
+        "sim_nprobe_sweep": (fsim.nprobe_sweep, fsim.nprobe_sweep_sql),
+        "dedup_cluster_stats": (fdedup.cluster_stats, fdedup.cluster_stats_sql),
+        "split_temporal_embargo": (fsplit.temporal_embargo, fsplit.temporal_embargo_sql),
+        "curate_yield_report": (pcur.yield_report, pcur.yield_report_sql),
+        "split_leakage_safe": (fsplit.leakage_safe_split, fsplit.leakage_safe_split_sql),
+        "events_markov_stationary": (evan.markov_stationary, evan.markov_stationary_sql),
+        "text_bpe_apply": (ftext.bpe_apply, ftext.bpe_apply_sql),
+        "dedup_minhash_accuracy": (fdedup.minhash_accuracy, fdedup.minhash_accuracy_sql),
+        "graph_degree_histogram": (pgraph.degree_histogram, pgraph.degree_histogram_sql),
+        "split_length_buckets": (fsplit.length_buckets, fsplit.length_buckets_sql),
+        "events_autocorrelation": (evan.autocorrelation, evan.autocorrelation_sql),
+        "sim_threshold_sweep": (fsim.threshold_sweep, fsim.threshold_sweep_sql),
+        "events_seasonal_baseline": (evan.seasonal_baseline, evan.seasonal_baseline_sql),
+        "text_keyness": (ftext.keyness, ftext.keyness_sql),
+        "graph_assortativity": (pgraph.assortativity, pgraph.assortativity_sql),
+        "events_equidepth_histogram": (evan.equidepth_histogram, evan.equidepth_histogram_sql),
+        "sim_farthest_init": (fsim.farthest_init, fsim.farthest_init_sql),
+        "graph_modularity": (pgraph.modularity, pgraph.modularity_sql),
+        "events_change_capture": (evan.change_capture, evan.change_capture_sql),
+        "graph_bfs_distance": (pgraph.bfs_distance, pgraph.bfs_distance_sql),
+        "text_collocations": (ftext.collocations, ftext.collocations_sql),
+        "sim_ood_centroid": (fsim.ood_centroid, fsim.ood_centroid_sql),
+        "events_ab_test": (evan.ab_test, evan.ab_test_sql),
+        "events_sliding_distinct": (evan.sliding_distinct, evan.sliding_distinct_sql),
+        "events_exact_percentiles": (evan.exact_percentiles, evan.exact_percentiles_sql),
+        "events_sequence_match": (evan.sequence_match, evan.sequence_match_sql),
+        "text_quality_logit": (ftext.quality_logit, ftext.quality_logit_sql),
+        "sim_range_search": (fsim.range_search, fsim.range_search_sql),
+        "split_epoch_shuffle": (fsplit.epoch_shuffle, fsplit.epoch_shuffle_sql),
+        "events_window_funnel": (evan.window_funnel, evan.window_funnel_sql),
+        "events_collapsing_state": (evan.collapsing_state, evan.collapsing_state_sql),
+        "dns_qname_features": (
+            lambda s, d: an.qname_features(
+                prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY")
+            ),
+            lambda: an.qname_features_sql(prep.decode_frames_sql("CLIENT_QUERY")),
+        ),
+        "events_ttl_rollup": (evan.ttl_rollup, evan.ttl_rollup_sql),
+        "events_materialized_rollup": (evan.materialized_rollup, evan.materialized_rollup_sql),
+        "split_interleave_mix": (fsplit.interleave_mix, fsplit.interleave_mix_sql),
+        "mm_shard_manifest": (fmm.shard_manifest, fmm.shard_manifest_sql),
+        "events_user_erasure": (evan.user_erasure, evan.user_erasure_sql),
+        "graph_kcore": (pgraph.kcore, pgraph.kcore_sql),
+        "events_approx_topk_merge": (evan.approx_topk_merge, evan.approx_topk_merge_sql),
+        "sim_binary_hamming": (fsim.binary_hamming_topk, fsim.binary_hamming_topk_sql),
+        "split_kfold": (fsplit.kfold_assign, fsplit.kfold_assign_sql),
+        "events_theta_sets": (evan.theta_sets, evan.theta_sets_sql),
+        "sim_matryoshka": (fsim.matryoshka_topk, fsim.matryoshka_topk_sql),
+        "tpch_bucketed_join": (pbkt.bucketed_join, pbkt.bucketed_join_sql),
+        "dedup_simhash_pairs": (fdedup.simhash_pairs, fdedup.simhash_pairs_sql),
+        "split_token_chunks": (fsplit.pack_token_chunks, fsplit.pack_token_chunks_sql),
+        "curate_domain_mix": (fsplit.domain_mix, fsplit.domain_mix_sql),
+        "events_heavy_hitters": (evan.heavy_hitters, evan.heavy_hitters_sql),
+        "sim_pq_codes": (fsim.pq_codes, fsim.pq_codes_sql),
+        "sim_pq_adc": (fsim.pq_adc_topk, fsim.pq_adc_topk_sql),
+        "sim_ivfpq_topk": (fsim.ivfpq_topk, fsim.ivfpq_topk_sql),
+        "sim_ivfpq_recall": (fsim.ivfpq_recall, fsim.ivfpq_recall_sql),
+        "dedup_incremental_ingest": (fdedup.incremental_ingest, fdedup.incremental_ingest_sql),
+        "dedup_bloom_prescreen": (fdedup.bloom_prescreen, fdedup.bloom_prescreen_sql),
+        "dedup_semantic": (fsim.semantic_dedup, fsim.semantic_dedup_sql),
+        "sim_hybrid_rrf": (fsim.hybrid_rrf, fsim.hybrid_rrf_sql),
+        "dedup_embedding_lsh": (fsim.embedding_lsh_dups, fsim.embedding_lsh_dups_sql),
+        "dedup_embedding_lsh_recall": (
+            fgt.sampled_embedding_lsh_recall,
+            fgt.sampled_embedding_lsh_recall_sql,
+        ),
+        "events_cohort_retention": (evan.cohort_retention, evan.cohort_retention_sql),
+        "events_json_props": (evan.json_props_stats, evan.json_props_stats_sql),
+        "events_interarrival": (evan.interarrival_stats, evan.interarrival_stats_sql),
+        "tpch_cube_summary": (tpch.cube_summary, tpch.cube_summary_sql),
+        "events_value_histogram": (evan.value_histogram, evan.value_histogram_sql),
+        "events_anomaly_zscore": (evan.anomaly_zscore, evan.anomaly_zscore_sql),
+        "graph_pagerank": (pgraph.pagerank_top, pgraph.pagerank_top_sql),
+        "events_upsert_merge": (evan.upsert_merge, evan.upsert_merge_sql),
+        "events_scd2_history": (evan.scd2_history, evan.scd2_history_sql),
+        "events_variant_shred": (evan.variant_shred, evan.variant_shred_sql),
+        "tpch_dominant_suppliers": (tpch.dominant_suppliers, tpch.dominant_suppliers_sql),
+        "tpch_promo_revenue": (tpch.promo_revenue, tpch.promo_revenue_sql),
+        "tpch_disjunctive_revenue": (tpch.disjunctive_revenue, tpch.disjunctive_revenue_sql),
+        "tpch_important_parts": (tpch.important_parts, tpch.important_parts_sql),
+        "tpch_large_volume_customers": (
+            tpch.large_volume_customers,
+            tpch.large_volume_customers_sql,
+        ),
+        "tpch_sales_opportunity": (tpch.sales_opportunity, tpch.sales_opportunity_sql),
+        "tpch_customer_dist": (
+            tpch.customer_order_distribution,
+            tpch.customer_order_distribution_sql,
+        ),
+        "tpch_top_supplier": (tpch.top_supplier, tpch.top_supplier_sql),
+        "tpch_forecast_revenue": (tpch.forecast_revenue, tpch.forecast_revenue_sql),
+        "tpch_returned_items": (tpch.returned_item_customers, tpch.returned_item_customers_sql),
+        "tpch_lateral_topn": (tpch.lateral_topn_orders, tpch.lateral_topn_orders_sql),
+        "tpch_volume_shipping": (tpch.volume_shipping, tpch.volume_shipping_sql),
+        "tpch_product_profit": (tpch.product_profit, tpch.product_profit_sql),
+        "tpch_shipmode_priority": (tpch.shipmode_priority, tpch.shipmode_priority_sql),
+        "tpch_supplier_cnt": (tpch.supplier_cnt, tpch.supplier_cnt_sql),
+        "tpch_waiting_suppliers": (tpch.waiting_suppliers, tpch.waiting_suppliers_sql),
+        "tpch_min_cost_supplier": (tpch.min_cost_supplier, tpch.min_cost_supplier_sql),
+        "dns_decode_queries": (
+            lambda s, d: prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY"),
+            lambda: prep.decode_frames_sql("CLIENT_QUERY"),
+        ),
+        "dns_decode_responses": (
+            lambda s, d: prep.decode_frames(prep.raw_frames(s, d), "CLIENT_RESPONSE"),
+            lambda: prep.decode_frames_sql("CLIENT_RESPONSE"),
+        ),
+        "dns_response_time_join": (
+            lambda s, d: dp.response_time_table(s, d),
+            dp.response_time_table_sql,
+        ),
+        "dns_match_once": (
+            lambda s, d: oj.match_response_times_once(*dns_pair_streams(s, d)),
+            lambda: oj.match_response_times_once_sql(PAIR_QUERY_SQL, PAIR_RESPONSE_SQL),
+        ),
+        "dns_q4_latency_series": (
+            lambda s, d: an.response_time_series(dp.response_time_table(s, d)),
+            lambda: an.response_time_series_sql(dp.response_time_table_sql()),
+        ),
+        "dns_pipeline_e2e": (
+            lambda s, d: an.top_query_addresses(
+                dp.client_query_table(
+                    s, d, queries=prep.decode_frames(prep.raw_frames(s, d), "CLIENT_QUERY")
+                )
+            ),
+            lambda: an.top_query_addresses_sql(
+                dp.client_query_table_sql(stream_sql=prep.decode_frames_sql("CLIENT_QUERY"))
+            ),
+        ),
+        # P1-P7: sources and projections over the canonical mapping
+        "dns_query_stream": (lambda s, d: dns_query_stream(s, d), lambda: QUERY_STREAM_SQL),
+        "dns_response_stream": (
+            lambda s, d: dns_response_stream(s, d),
+            lambda: RESPONSE_STREAM_SQL,
+        ),
+        "dns_decode_addresses": (
+            lambda s, d: prep.decode_addresses(prep.raw_frames(s, d)),
+            prep.decode_addresses_sql,
+        ),
+        # A1-A7: the aggregation core (grouping sets, tumbling windows)
+        "dns_client_query_agg": (
+            lambda s, d: dp.client_query_table(s, d),
+            dp.client_query_table_sql,
+        ),
+        "dns_client_response_agg": (
+            lambda s, d: dp.client_response_table(s, d),
+            dp.client_response_table_sql,
+        ),
         # pass-through mode A8 (aggregator.go:556-565)
-        "dns_passthrough": lambda s, d: dp.client_response_table(s, d, no_agg),
-        # J1 complement: responses with no pending query (anti join)
-        "dns_orphan_responses": lambda s, d: oj.orphan_responses(
-            *dns_pair_streams(s, d)
+        "dns_passthrough": (
+            lambda s, d: dp.client_response_table(s, d, no_agg),
+            lambda: dp.client_response_table_sql(no_agg),
         ),
-        # --- F6 bitmask sampling ---
-        "dns_sampling": lambda s, d: sample_by_dns_id(
-            dns_pair_streams(s, d)[0], _SAMPLE_MASK, _SAMPLE_MATCH
+        "dns_orphan_responses": (
+            lambda s, d: oj.orphan_responses(*dns_pair_streams(s, d)),
+            lambda: oj.orphan_responses_sql(PAIR_QUERY_SQL, PAIR_RESPONSE_SQL),
         ),
-        # --- K1 column mapping / pruning ---
-        "dns_column_pruning": lambda s, d: apply_column_config(
-            dns_query_stream(s, d), _PRUNE_CFG
+        "dns_sampling": (
+            lambda s, d: sample_by_dns_id(
+                dns_pair_streams(s, d)[0], _SAMPLE_MASK, _SAMPLE_MATCH
+            ),
+            lambda: sample_by_dns_id_sql(PAIR_QUERY_SQL, _SAMPLE_MASK, _SAMPLE_MATCH),
         ),
-        # --- Q1-Q3 downstream analytics (quickstart.md:99-154) ---
-        "dns_q1_top_addresses": lambda s, d: an.top_query_addresses(
-            dp.client_query_table(s, d)
+        "dns_column_pruning": (
+            lambda s, d: apply_column_config(dns_query_stream(s, d), _PRUNE_CFG),
+            lambda: apply_column_config_sql(QUERY_STREAM_SQL, _PRUNE_CFG),
         ),
-        "dns_q2_top_nxdomain": lambda s, d: an.top_nxdomain_names(
-            dp.client_response_table(s, d)
+        # Q1-Q3: the downstream dashboard queries (quickstart.md:99-154)
+        "dns_q1_top_addresses": (
+            lambda s, d: an.top_query_addresses(dp.client_query_table(s, d)),
+            lambda: an.top_query_addresses_sql(dp.client_query_table_sql()),
         ),
-        "dns_q3_nonok_series": lambda s, d: an.non_ok_time_series(
-            dp.client_response_table(s, d)
+        "dns_q2_top_nxdomain": (
+            lambda s, d: an.top_nxdomain_names(dp.client_response_table(s, d)),
+            lambda: an.top_nxdomain_names_sql(dp.client_response_table_sql()),
         ),
-        # --- event-stream analytics patterns ---
-        "events_sessionize": evan.sessionize,
-        "events_session_window": evan.session_window_stats,
-        "events_running_totals": evan.running_totals,
-        "events_value_quantiles": evan.value_quantiles,
-        "events_rollup_daily": evan.rollup_daily,
-        # as-of join (backward, union+running-last — operators/asof.py)
-        "events_asof_attribution": evan.asof_attribution,
-        # ordered funnel conversion over events
-        "events_funnel": evan.funnel_conversion,
-        "tpch_market_share": tpch.market_share,
-        # --- training-data ops: deduplication + similarity ---
-        "dedup_minhash_lsh": fdedup.minhash_lsh_pairs,
-        "sim_cosine_topk": fsim.cosine_topk,
-        "sim_lsh_ann": fsim.lsh_bucketed_ann,
-        "sim_ivf_topk": fsim.ivf_topk,
-        # ANN quality: recall@k of LSH buckets vs exact brute force
-        "sim_ann_recall": fsim.ann_recall,
-        # new in round 4: the IVF path gets the same in-engine quality metric
-        "sim_ivf_recall": fsim.ivf_recall,
-        # new in round 4 (batch 2): iterative ML on the engine — two
-        # unrolled Lloyd iterations with exact-integer centroid state
-        "sim_kmeans": fsim.kmeans_assign,
-        "dedup_exact": fdedup.exact_dedup,
-        # r9: the deliberately-quadratic ground-truth verifiers now run
-        # on the deterministic 1/7 pair sample (functions/ground_truth.py
-        # — residue-keyed equi-joins, audit waivers retired); the full
-        # exact forms stay exported by dedup.py/similarity.py and pinned
-        # by tests
-        "dedup_ngram_jaccard": fgt.sampled_ngram_jaccard_pairs,
-        "dedup_minhash_signatures": fdedup.minhash_signatures,
-        "dedup_simhash": fdedup.simhash_signatures,
-        "sim_label_centroids": fsim.label_centroids,
-        # new in round 4 (batch 10): grouped-map applyInPandas surface —
-        # per-label min-max scaling on exact quantized integers
-        "sim_label_minmax": fsim.label_minmax,
-        "dedup_embedding_cosine": fgt.sampled_embedding_cosine_dups,
-        # --- training-data ops: multimodal columns ---
-        "mm_media_metadata": fmm.media_metadata,
-        "mm_media_features": fmm.media_features,
-        "mm_frame_sample": fmm.frame_sample,
-        "events_pivot_counts": evan.pivot_event_counts,
-        "events_distinct_users": evan.distinct_users,
-        # set-operation surface (INTERSECT / EXCEPT cohorts)
-        "events_user_set_ops": evan.user_set_ops,
-        # IVF-style two-level assignment — the coarse-quantizer form of
-        # the Lloyd assignment step (n·(k1 + nprobe·k/k1) folds, never
-        # the flat n·k cross join)
-        "sim_kmeans_twolevel": fsim.kmeans_assign_twolevel,
+        "dns_q3_nonok_series": (
+            lambda s, d: an.non_ok_time_series(dp.client_response_table(s, d)),
+            lambda: an.non_ok_time_series_sql(dp.client_response_table_sql()),
+        ),
+        "events_sessionize": (evan.sessionize, evan.sessionize_sql),
+        "events_session_window": (evan.session_window_stats, evan.session_window_stats_sql),
+        "events_running_totals": (evan.running_totals, evan.running_totals_sql),
+        "events_value_quantiles": (evan.value_quantiles, evan.value_quantiles_sql),
+        "events_rollup_daily": (evan.rollup_daily, evan.rollup_daily_sql),
+        "events_asof_attribution": (evan.asof_attribution, evan.asof_attribution_sql),
+        "events_funnel": (evan.funnel_conversion, evan.funnel_conversion_sql),
+        "tpch_market_share": (tpch.market_share, tpch.market_share_sql),
+        "dedup_minhash_lsh": (fdedup.minhash_lsh_pairs, fdedup.minhash_lsh_pairs_sql),
+        "sim_cosine_topk": (fsim.cosine_topk, fsim.cosine_topk_sql),
+        "sim_lsh_ann": (fsim.lsh_bucketed_ann, fsim.lsh_bucketed_ann_sql),
+        "sim_ivf_topk": (fsim.ivf_topk, fsim.ivf_topk_sql),
+        "sim_ann_recall": (fsim.ann_recall, fsim.ann_recall_sql),
+        "sim_ivf_recall": (fsim.ivf_recall, fsim.ivf_recall_sql),
+        "sim_kmeans": (fsim.kmeans_assign, fsim.kmeans_assign_sql),
+        "dedup_exact": (fdedup.exact_dedup, fdedup.exact_dedup_sql),
+        # the quadratic ground-truth verifiers run on the deterministic 1/7
+        # pair sample (functions/ground_truth.py); the full exact forms stay
+        # in dedup.py / similarity.py, pinned by tests
+        "dedup_ngram_jaccard": (
+            fgt.sampled_ngram_jaccard_pairs,
+            fgt.sampled_ngram_jaccard_pairs_sql,
+        ),
+        "dedup_minhash_signatures": (fdedup.minhash_signatures, fdedup.minhash_signatures_sql),
+        "dedup_simhash": (fdedup.simhash_signatures, fdedup.simhash_signatures_sql),
+        "sim_label_centroids": (fsim.label_centroids, fsim.label_centroids_sql),
+        "sim_label_minmax": (fsim.label_minmax, fsim.label_minmax_sql),
+        "dedup_embedding_cosine": (
+            fgt.sampled_embedding_cosine_dups,
+            fgt.sampled_embedding_cosine_dups_sql,
+        ),
+        "mm_media_metadata": (fmm.media_metadata, fmm.media_metadata_sql),
+        "mm_media_features": (fmm.media_features, fmm.media_features_sql),
+        "mm_frame_sample": (fmm.frame_sample, fmm.frame_sample_sql),
+        "events_pivot_counts": (evan.pivot_event_counts, evan.pivot_event_counts_sql),
+        "events_distinct_users": (evan.distinct_users, evan.distinct_users_sql),
+        "events_user_set_ops": (evan.user_set_ops, evan.user_set_ops_sql),
+        "sim_kmeans_twolevel": (fsim.kmeans_assign_twolevel, fsim.kmeans_assign_twolevel_sql),
     }
+
+def queries() -> dict[str, SparkForm]:
+    return {name: spark_form for name, (spark_form, _) in _contract().items()}
 
 def oracle_sql() -> dict[str, str]:
-    no_agg = AggregatorConfig(aggregate=False)
-    cq = dp.client_query_table_sql()
-    cr = dp.client_response_table_sql()
-    rt = dp.response_time_table_sql()
-    return {
-        "dns_query_stream": QUERY_STREAM_SQL,
-        "dns_response_stream": RESPONSE_STREAM_SQL,
-        "dns_decode_queries": prep.decode_frames_sql("CLIENT_QUERY"),
-        "dns_decode_responses": prep.decode_frames_sql("CLIENT_RESPONSE"),
-        "dns_decode_addresses": prep.decode_addresses_sql(),
-        "dns_pipeline_e2e": an.top_query_addresses_sql(
-            dp.client_query_table_sql(stream_sql=prep.decode_frames_sql("CLIENT_QUERY"))
-        ),
-        "dns_client_query_agg": cq,
-        "dns_client_response_agg": cr,
-        "dns_passthrough": dp.client_response_table_sql(no_agg),
-        "dns_response_time_join": rt,
-        "dns_orphan_responses": oj.orphan_responses_sql(
-            PAIR_QUERY_SQL, PAIR_RESPONSE_SQL
-        ),
-        "dns_match_once": oj.match_response_times_once_sql(
-            PAIR_QUERY_SQL, PAIR_RESPONSE_SQL
-        ),
-        # exact state machine == sequence pairing on the collision-free
-        # pair streams; the streaming run is unbounded (no TTL), so the
-        # oracle uses the matching 30-day upper bound
-        "dns_stateful_match": oj.match_response_times_once_sql(
-            PAIR_QUERY_SQL, PAIR_RESPONSE_SQL, "INTERVAL '30 days'"
-        ),
-        "dns_sampling": sample_by_dns_id_sql(PAIR_QUERY_SQL, _SAMPLE_MASK, _SAMPLE_MATCH),
-        "dns_column_pruning": apply_column_config_sql(QUERY_STREAM_SQL, _PRUNE_CFG),
-        "dns_q1_top_addresses": an.top_query_addresses_sql(cq),
-        "dns_q2_top_nxdomain": an.top_nxdomain_names_sql(cr),
-        "dns_q3_nonok_series": an.non_ok_time_series_sql(cr),
-        "dns_q4_latency_series": an.response_time_series_sql(rt),
-        "tpch_pricing_summary": tpch.pricing_summary_sql(),
-        "tpch_top_orders": tpch.top_orders_sql(),
-        "tpch_region_revenue": tpch.region_revenue_sql(),
-        "tpch_topk_parts_per_brand": tpch.topk_parts_per_brand_sql(),
-        "tpch_distinct_aggregates": tpch.distinct_aggregates_sql(),
-        "tpch_segment_semi_anti": tpch.segment_semi_anti_sql(),
-        "events_sessionize": evan.sessionize_sql(),
-        "events_session_window": evan.session_window_stats_sql(),
-        "events_pivot_counts": evan.pivot_event_counts_sql(),
-        "events_running_totals": evan.running_totals_sql(),
-        "events_distinct_users": evan.distinct_users_sql(),
-        "events_value_quantiles": evan.value_quantiles_sql(),
-        "events_rollup_daily": evan.rollup_daily_sql(),
-        "events_asof_attribution": evan.asof_attribution_sql(),
-        "events_rolling_hour": evan.rolling_hour_stats_sql(),
-        # round 4: sketch entry now hash-checked via accuracy bounds
-        "events_sketch_stats": evan.sketch_accuracy_sql(),
-        "split_train_val_test": fsplit.split_assignments_sql(),
-        "split_stratified_sample": fsplit.stratified_sample_sql(),
-        "tpch_market_share": tpch.market_share_sql(),
-        "tpch_exists_late_ship": tpch.exists_late_ship_sql(),
-        "tpch_small_qty_revenue": tpch.small_qty_revenue_sql(),
-        "curate_corpus_e2e": pcur.curate_corpus_sql(),
-        "events_funnel": evan.funnel_conversion_sql(),
-        "events_user_set_ops": evan.user_set_ops_sql(),
-        "text_stats": ftext.text_stats_sql(),
-        "text_quality": ftext.quality_scores_sql(),
-        "text_lang_id": ftext.lang_id_sql(),
-        "text_fingerprints": ftext.fingerprints_sql(),
-        "text_regex_tokens": ftext.regex_tokens_sql(),
-        "dedup_exact": fdedup.exact_dedup_sql(),
-        "dedup_ngram_jaccard": fgt.sampled_ngram_jaccard_pairs_sql(),
-        "dedup_minhash_signatures": fdedup.minhash_signatures_sql(),
-        "dedup_minhash_lsh": fdedup.minhash_lsh_pairs_sql(),
-        "dedup_lsh_verified": fdedup.lsh_verified_pairs_sql(),
-        "dedup_cc_clusters": fdedup.cc_clusters_sql(),
-        "dedup_canonical_corpus": fdedup.canonical_corpus_sql(),
-        "text_top_ngrams": ftext.top_ngrams_sql(),
-        "text_decontaminate": ftext.decontaminate_sql(),
-        "text_pii_scrub": ftext.pii_scrub_sql(),
-        "text_dup_span_fraction": ftext.dup_span_fraction_sql(),
-        "text_segment_dedup": ftext.segment_dedup_sql(),
-        "text_keyword_search": ftext.keyword_search_sql(),
-        "sim_quantize_int8": fsim.quantize_int8_sql(),
-        "split_quality_resample": fsplit.quality_resample_sql(),
-        "curate_corpus_v2": pcur.curate_corpus_v2_sql(),
-        "curate_corpus_v3": pcur.curate_corpus_v3_sql(),
-        "streaming_curation": stp.streaming_curation_sql(),
-        # update-mode stream collapsed to final state == batch clientQuery
-        "dns_streaming_agg": cq,
-        "streaming_dedup_redelivery": stp.streaming_dedup_sql(),
-        "streaming_late_data": stp.streaming_late_data_sql(),
-        "streaming_session_window": stp.streaming_session_window_sql(),
-        "streaming_hopping_window": stp.streaming_hopping_window_sql(),
-        "streaming_response_join": stp.streaming_response_join_sql(),
-        "streaming_outer_join": stp.streaming_outer_join_sql(),
-        "streaming_full_outer_join": stp.streaming_full_outer_join_sql(),
-        "streaming_online_dedup": fdedup.streaming_online_dedup_sql(),
-        "text_unigram_likelihood": ftext.unigram_likelihood_sql(),
-        "events_gap_fill": evan.gap_fill_sql(),
-        "graph_triangle_count": pgraph.triangle_count_sql(),
-        "dedup_containment_prefix": fdedup.containment_pairs_sql(),
-        "sim_mmr_rerank": fsim.mmr_rerank_sql(),
-        "mm_caption_pairs": fmm.caption_pairs_sql(),
-        "graph_jaccard_neighbors": pgraph.jaccard_neighbors_sql(),
-        "text_code_detect": ftext.code_detect_sql(),
-        "curate_dataset_card": pcur.dataset_card_sql(),
-        "split_token_budget": fsplit.token_budget_sample_sql(),
-        "events_path_transitions": evan.path_transitions_sql(),
-        "sim_label_minmax": fsim.label_minmax_sql(),
-        "text_bpe_merges": ftext.bpe_merges_sql(),
-        "events_top_paths": evan.top_paths_sql(),
-        "dedup_savings_report": fdedup.savings_report_sql(),
-        "tpch_discount_bands": tpch.discount_bands_sql(),
-        "events_weekday_profile": evan.weekday_profile_sql(),
-        "events_new_returning": evan.new_returning_sql(),
-        "mm_modality_mix": fmm.modality_mix_sql(),
-        "sim_delete_aware_search": fsim.delete_aware_search_sql(),
-        "dedup_rate_by_source": fdedup.dup_rate_by_source_sql(),
-        "tpch_order_aging": tpch.order_aging_sql(),
-        "events_decile_migration": evan.decile_migration_sql(),
-        "dedup_canonical_by_quality": fdedup.canonical_by_quality_sql(),
-        "text_length_outliers": ftext.length_outliers_sql(),
-        "dns_client_profile": an.client_profile_sql(),
-        "text_decontam_sweep": ftext.decontam_sweep_sql(),
-        "curate_version_diff": pcur.version_diff_sql(),
-        "tpch_supplier_hhi": tpch.supplier_hhi_sql(),
-        "split_uncertainty_sample": fsplit.uncertainty_sample_sql(),
-        "graph_butterfly_count": pgraph.butterfly_count_sql(),
-        "curate_mixture_temperature": pcur.mixture_temperature_sql(),
-        "dns_latency_heatmap": an.hit_latency_heatmap_sql(),
-        "dns_name_rollup": an.name_rollup_sql(),
-        "events_lorenz_gini": evan.lorenz_gini_sql(),
-        "streaming_tombstone_apply": stp.streaming_tombstone_apply_sql(),
-        "sim_hard_negatives": fsim.hard_negatives_sql(),
-        "text_tokenizer_fertility": ftext.tokenizer_fertility_sql(),
-        "split_rendezvous_shards": fsplit.rendezvous_shards_sql(),
-        "dedup_source_sketch_sim": fdedup.source_sketch_sim_sql(),
-        "events_value_drift": evan.value_drift_sql(),
-        "dns_traffic_drift": an.traffic_drift_sql(),
-        "sim_nn_descent_round": fsim.nn_descent_round_sql(),
-        "curate_decontam_certificate": pcur.decontam_certificate_sql(),
-        "mm_scene_cuts": fmm.scene_cuts_sql(),
-        "text_langid_eval": ftext.langid_eval_sql(),
-        "events_zonemap_prune": evan.zonemap_prune_sql(),
-        "dns_cache_hit_sim": an.cache_hit_sim_sql(),
-        "dedup_minhash_bbit": fdedup.bbit_minhash_sql(),
-        "sim_hnsw_layers": fsim.hnsw_layers_sql(),
-        "dns_hits_authority": an.hits_authority_sql(),
-        "text_cdc_chunks": ftext.cdc_chunks_sql(),
-        "events_kmv_distinct": evan.kmv_distinct_sql(),
-        "events_count_min": evan.count_min_sql(),
-        "text_tfidf_terms": ftext.tfidf_terms_sql(),
-        "mm_image_ahash": fmm.image_ahash_sql(),
-        "events_rfm_segments": evan.rfm_segments_sql(),
-        "text_winnow_fingerprints": ftext.winnow_fingerprints_sql(),
-        "sim_knn_graph": fsim.knn_graph_sql(),
-        "text_bigram_lm": ftext.bigram_lm_sql(),
-        "graph_link_predict": pgraph.link_predict_sql(),
-        "streaming_upsert_apply": stp.streaming_upsert_apply_sql(),
-        "events_m4_downsample": evan.m4_downsample_sql(),
-        "mm_audio_vad": fmm.audio_vad_sql(),
-        "text_fuzzy_match": ftext.fuzzy_match_sql(),
-        "sim_ivf_balance": fsim.ivf_balance_sql(),
-        "dedup_pair_examples": fdedup.pair_examples_sql(),
-        "split_manifest_checksums": fsplit.manifest_checksums_sql(),
-        "tpch_salted_join": tpch.salted_revenue_join_sql(),
-        "sim_embedding_drift": fsim.embedding_drift_sql(),
-        "events_slo_burn": evan.slo_burn_sql(),
-        "dedup_band_sweep": fdedup.band_sweep_sql(),
-        "sim_pq_distortion": fsim.pq_distortion_sql(),
-        "events_dau_wau": evan.dau_wau_sql(),
-        "events_feature_matrix": evan.feature_matrix_sql(),
-        "events_alert_eval": evan.alert_eval_sql(),
-        "text_vocab_growth": ftext.vocab_growth_sql(),
-        "dedup_minhash_recall": fdedup.minhash_recall_sql(),
-        "graph_clustering_coefficient": pgraph.clustering_coefficient_sql(),
-        "curate_source_scorecard": pcur.source_scorecard_sql(),
-        "sim_nprobe_sweep": fsim.nprobe_sweep_sql(),
-        "dedup_cluster_stats": fdedup.cluster_stats_sql(),
-        "split_temporal_embargo": fsplit.temporal_embargo_sql(),
-        "curate_yield_report": pcur.yield_report_sql(),
-        "split_leakage_safe": fsplit.leakage_safe_split_sql(),
-        "events_markov_stationary": evan.markov_stationary_sql(),
-        "text_bpe_apply": ftext.bpe_apply_sql(),
-        "dedup_minhash_accuracy": fdedup.minhash_accuracy_sql(),
-        "graph_degree_histogram": pgraph.degree_histogram_sql(),
-        "split_length_buckets": fsplit.length_buckets_sql(),
-        "events_autocorrelation": evan.autocorrelation_sql(),
-        "sim_threshold_sweep": fsim.threshold_sweep_sql(),
-        "events_seasonal_baseline": evan.seasonal_baseline_sql(),
-        "text_keyness": ftext.keyness_sql(),
-        "graph_assortativity": pgraph.assortativity_sql(),
-        "events_equidepth_histogram": evan.equidepth_histogram_sql(),
-        "sim_farthest_init": fsim.farthest_init_sql(),
-        "graph_modularity": pgraph.modularity_sql(),
-        "events_change_capture": evan.change_capture_sql(),
-        "graph_bfs_distance": pgraph.bfs_distance_sql(),
-        "text_collocations": ftext.collocations_sql(),
-        "sim_ood_centroid": fsim.ood_centroid_sql(),
-        "events_ab_test": evan.ab_test_sql(),
-        "events_sliding_distinct": evan.sliding_distinct_sql(),
-        "events_exact_percentiles": evan.exact_percentiles_sql(),
-        "events_sequence_match": evan.sequence_match_sql(),
-        "text_quality_logit": ftext.quality_logit_sql(),
-        "sim_range_search": fsim.range_search_sql(),
-        "split_epoch_shuffle": fsplit.epoch_shuffle_sql(),
-        "events_window_funnel": evan.window_funnel_sql(),
-        "events_collapsing_state": evan.collapsing_state_sql(),
-        "dns_qname_features": an.qname_features_sql(
-            prep.decode_frames_sql("CLIENT_QUERY")
-        ),
-        "events_ttl_rollup": evan.ttl_rollup_sql(),
-        "events_materialized_rollup": evan.materialized_rollup_sql(),
-        "split_interleave_mix": fsplit.interleave_mix_sql(),
-        "mm_shard_manifest": fmm.shard_manifest_sql(),
-        "events_user_erasure": evan.user_erasure_sql(),
-        "graph_kcore": pgraph.kcore_sql(),
-        "events_approx_topk_merge": evan.approx_topk_merge_sql(),
-        "sim_binary_hamming": fsim.binary_hamming_topk_sql(),
-        "split_kfold": fsplit.kfold_assign_sql(),
-        "events_theta_sets": evan.theta_sets_sql(),
-        "sim_matryoshka": fsim.matryoshka_topk_sql(),
-        "tpch_bucketed_join": pbkt.bucketed_join_sql(),
-        "events_hll_partials": evan.hll_partials_sql(),
-        "events_zorder_layout": evan.zorder_layout_sql(),
-        "text_hashed_features": ftext.hashed_features_sql(),
-        "streaming_static_enrich": stp.streaming_static_enrich_sql(),
-        "dedup_simhash_pairs": fdedup.simhash_pairs_sql(),
-        "split_token_chunks": fsplit.pack_token_chunks_sql(),
-        "curate_domain_mix": fsplit.domain_mix_sql(),
-        "events_heavy_hitters": evan.heavy_hitters_sql(),
-        "sim_pq_codes": fsim.pq_codes_sql(),
-        "sim_pq_adc": fsim.pq_adc_topk_sql(),
-        "sim_ivfpq_topk": fsim.ivfpq_topk_sql(),
-        "sim_ivfpq_recall": fsim.ivfpq_recall_sql(),
-        "dedup_incremental_ingest": fdedup.incremental_ingest_sql(),
-        "dedup_bloom_prescreen": fdedup.bloom_prescreen_sql(),
-        "dedup_semantic": fsim.semantic_dedup_sql(),
-        "sim_hybrid_rrf": fsim.hybrid_rrf_sql(),
-        "dedup_embedding_lsh": fsim.embedding_lsh_dups_sql(),
-        "dedup_embedding_lsh_recall": fgt.sampled_embedding_lsh_recall_sql(),
-        "events_cohort_retention": evan.cohort_retention_sql(),
-        "events_json_props": evan.json_props_stats_sql(),
-        "events_interarrival": evan.interarrival_stats_sql(),
-        "tpch_cube_summary": tpch.cube_summary_sql(),
-        "events_value_histogram": evan.value_histogram_sql(),
-        "events_anomaly_zscore": evan.anomaly_zscore_sql(),
-        "graph_pagerank": pgraph.pagerank_top_sql(),
-        "events_upsert_merge": evan.upsert_merge_sql(),
-        "events_scd2_history": evan.scd2_history_sql(),
-        "events_variant_shred": evan.variant_shred_sql(),
-        "tpch_dominant_suppliers": tpch.dominant_suppliers_sql(),
-        "tpch_promo_revenue": tpch.promo_revenue_sql(),
-        "tpch_disjunctive_revenue": tpch.disjunctive_revenue_sql(),
-        "tpch_important_parts": tpch.important_parts_sql(),
-        "tpch_large_volume_customers": tpch.large_volume_customers_sql(),
-        "tpch_sales_opportunity": tpch.sales_opportunity_sql(),
-        "tpch_customer_dist": tpch.customer_order_distribution_sql(),
-        "tpch_top_supplier": tpch.top_supplier_sql(),
-        "tpch_forecast_revenue": tpch.forecast_revenue_sql(),
-        "tpch_returned_items": tpch.returned_item_customers_sql(),
-        "tpch_lateral_topn": tpch.lateral_topn_orders_sql(),
-        "tpch_volume_shipping": tpch.volume_shipping_sql(),
-        "tpch_product_profit": tpch.product_profit_sql(),
-        "tpch_shipmode_priority": tpch.shipmode_priority_sql(),
-        "tpch_supplier_cnt": tpch.supplier_cnt_sql(),
-        "tpch_waiting_suppliers": tpch.waiting_suppliers_sql(),
-        "tpch_min_cost_supplier": tpch.min_cost_supplier_sql(),
-        "dedup_simhash": fdedup.simhash_signatures_sql(),
-        "sim_cosine_topk": fsim.cosine_topk_sql(),
-        "sim_lsh_ann": fsim.lsh_bucketed_ann_sql(),
-        "sim_ivf_topk": fsim.ivf_topk_sql(),
-        "sim_label_centroids": fsim.label_centroids_sql(),
-        "dedup_embedding_cosine": fgt.sampled_embedding_cosine_dups_sql(),
-        "mm_media_metadata": fmm.media_metadata_sql(),
-        "mm_media_features": fmm.media_features_sql(),
-        "mm_frame_sample": fmm.frame_sample_sql(),
-        "text_repetition": ftext.repetition_filter_sql(),
-        "sim_ann_recall": fsim.ann_recall_sql(),
-        "sim_ivf_recall": fsim.ivf_recall_sql(),
-        "sim_kmeans": fsim.kmeans_assign_sql(),
-        "sim_pandas_recall": fsim.pandas_recall_sql(),
-        "sim_kmeans_twolevel": fsim.kmeans_assign_twolevel_sql(),
-    }
+    return {name: oracle() for name, (_, oracle) in _contract().items()}

@@ -106,7 +106,7 @@ def _bag_key_expr(dialect: str) -> str:
     return f"md5(array_to_string(list_sort({toks}), ' '))"
 
 
-def _exact_dedup_sql(dialect: str) -> str:
+def exact_dedup_sql(dialect: str = "duckdb") -> str:
     bag = _bag_key_expr(dialect)
     return f"""
 SELECT bag_key, min(doc_id) AS canonical_id, count(*) AS n_members
@@ -118,14 +118,11 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on the bag-of-words key (md5 of the sorted token list):
     catches byte-identical texts AND word-order shuffles; one shuffle."""
     _register(spark, sf_dir)
-    return spark.sql(_exact_dedup_sql("spark"))
-
-def exact_dedup_sql() -> str:
-    return _exact_dedup_sql("duckdb")
+    return spark.sql(exact_dedup_sql("spark"))
 
 # --------------------------------------------------- n-gram Jaccard (exact)
 
-def _jaccard_sql(dialect: str) -> str:
+def ngram_jaccard_pairs_sql(dialect: str = "duckdb") -> str:
     """The EXACT ground-truth verifier the oracle pins: the self-join
     shuffles on the shingle, so one shingle appearing in ``f`` documents
     contributes O(f^2) candidate rows — deliberately quadratic-risk,
@@ -150,10 +147,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle key is the shingle; hot shingles are the skew risk the LSH
     path avoids."""
     _register(spark, sf_dir)
-    return spark.sql(_jaccard_sql("spark"))
-
-def ngram_jaccard_pairs_sql() -> str:
-    return _jaccard_sql("duckdb")
+    return spark.sql(ngram_jaccard_pairs_sql("spark"))
 
 # ----------------------------------------------------------- MinHash + LSH
 
@@ -606,7 +600,7 @@ ORDER BY d.doc_id
 
 # ----------------------------------------------------------------- SimHash
 
-def _simhash_sql(dialect: str) -> str:
+def simhash_signatures_sql(dialect: str = "duckdb") -> str:
     toks = _toks(dialect)
     h = _hash_tok(dialect, "tok")
     if dialect == "spark":
@@ -635,17 +629,14 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per document (bitwise vote over distinct-token
     hashes)."""
     _register(spark, sf_dir)
-    return spark.sql(_simhash_sql("spark"))
-
-def simhash_signatures_sql() -> str:
-    return _simhash_sql("duckdb")
+    return spark.sql(simhash_signatures_sql("spark"))
 
 SIMHASH_HAMMING_MAX = 3  # near-dup threshold
 SIMHASH_BANDS = SIMHASH_HAMMING_MAX + 1  # pigeonhole: <=3 flips -> 1 equal band
 _SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 15
 _SIMHASH_BAND_MASK = (1 << _SIMHASH_BAND_BITS) - 1
 
-def _simhash_pairs_sql(dialect: str) -> str:
+def simhash_pairs_sql(dialect: str = "duckdb") -> str:
     """Near-dup pairs from SimHash signatures, LSH-banded.
 
     Pigeonhole: hamming(a, b) <= 3 implies at least one of the 4
@@ -662,7 +653,7 @@ def _simhash_pairs_sql(dialect: str) -> str:
     signature map stage once (ReusedExchange) instead of once per join
     side, and no corpus-derived broadcast exists at any scale.
     """
-    sigs = _simhash_sql(dialect).replace("ORDER BY doc_id", "")
+    sigs = simhash_signatures_sql(dialect).replace("ORDER BY doc_id", "")
     if dialect == "spark":
         series = f"explode(sequence(0, {SIMHASH_BANDS - 1}))"
         bval = f"shiftright(simhash, band * {_SIMHASH_BAND_BITS}) & {_SIMHASH_BAND_MASK}"
@@ -690,10 +681,7 @@ ORDER BY doc_a, doc_b
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-verified SimHash near-dup pairs (banded candidates)."""
     _register(spark, sf_dir)
-    return spark.sql(_simhash_pairs_sql("spark"))
-
-def simhash_pairs_sql() -> str:
-    return _simhash_pairs_sql("duckdb")
+    return spark.sql(simhash_pairs_sql("spark"))
 
 # -------------------------------------------------- incremental ingest
 
@@ -705,7 +693,7 @@ def simhash_pairs_sql() -> str:
 #: subquery, so the oracle stays exact)
 INGEST_SOURCE_SQL = "(SELECT max(source) FROM documents)"
 
-def _incremental_ingest_sql(dialect: str) -> str:
+def incremental_ingest_sql(dialect: str = "duckdb") -> str:
     """Dedup an ARRIVING batch against the EXISTING corpus — the
     production incremental-ingest shape (one-shot corpus dedup answers
     "what do I keep"; ingest answers "is this new doc already there").
@@ -767,10 +755,7 @@ def incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Admit/reject decisions for an arriving batch vs the existing
     corpus (banded LSH probe + exact-Jaccard verification)."""
     _register(spark, sf_dir)
-    return spark.sql(_incremental_ingest_sql("spark"))
-
-def incremental_ingest_sql() -> str:
-    return _incremental_ingest_sql("duckdb")
+    return spark.sql(incremental_ingest_sql("spark"))
 
 # ------------------------------------------------- Bloom-filter pre-screen
 
@@ -778,7 +763,7 @@ BLOOM_M = 1024  # filter bits
 BLOOM_K = 3  # hash functions
 
 
-def _bloom_sql(dialect: str) -> str:
+def bloom_prescreen_sql(dialect: str = "duckdb") -> str:
     """Bloom-filter membership pre-screen for the arriving batch — the
     cheap gate IN FRONT of ``incremental_ingest``'s LSH probe.
 
@@ -849,11 +834,8 @@ def bloom_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter pre-screen of the arriving batch against the
     existing corpus's exact-dedup keys (no false negatives)."""
     _register(spark, sf_dir)
-    return spark.sql(_bloom_sql("spark"))
+    return spark.sql(bloom_prescreen_sql("spark"))
 
-
-def bloom_prescreen_sql() -> str:
-    return _bloom_sql("duckdb")
 
 # ----------------------------------------------- online streaming dedup
 
@@ -890,7 +872,7 @@ def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-evolution loop a 100 TB ingest pipeline runs daily, executed
     as a real foreachBatch stream.
 
-    The semantics this certifies (and ``_online_dedup_sql`` replays
+    The semantics this certifies (and ``streaming_online_dedup_sql`` replays
     unrolled): a doc is rejected iff an ADMITTED doc from an EARLIER
     batch is a verified near-dup. Chains therefore behave like real
     online dedup — if A admits and B (dup of A) rejects, a later C
@@ -999,7 +981,7 @@ def streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def _online_dedup_sql(dialect: str) -> str:
+def streaming_online_dedup_sql(dialect: str = "duckdb") -> str:
     """Unrolled replay of the online semantics: the verified near-dup
     relation is computed once over all ordered pairs, then the
     ``STREAM_CHUNKS`` admitted sets fold left-to-right (reject iff a
@@ -1060,16 +1042,12 @@ ORDER BY c.doc_id
 """
 
 
-def streaming_online_dedup_sql() -> str:
-    return _online_dedup_sql("duckdb")
-
-
 # ------------------------------------- asymmetric containment (prefix filter)
 
 CONT_TAU_E6 = 800_000  # containment threshold tau = 0.8, e6-scaled
 
 
-def _containment_sql(dialect: str) -> str:
+def containment_pairs_sql(dialect: str = "duckdb") -> str:
     """Asymmetric CONTAINMENT dedup: pairs where shingles(a) are mostly a
     subset of shingles(b) — |sh(a) AND sh(b)| / |sh(a)| >= tau. Jaccard
     misses these (a short doc quoted inside a long one has tiny Jaccard
@@ -1231,11 +1209,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed containment pairs (doc_a mostly inside doc_b) at tau=0.8,
     candidates via the prefix filter, verified with exact integers."""
     _register(spark, sf_dir)
-    return spark.sql(_containment_sql("spark"))
-
-
-def containment_pairs_sql() -> str:
-    return _containment_sql("duckdb")
+    return spark.sql(containment_pairs_sql("spark"))
 
 
 # ------------------------------------- MinHash estimator certification
@@ -1243,7 +1217,7 @@ def containment_pairs_sql() -> str:
 MH_TOL_E6 = 375_000  # 3 sigma at 16 permutations: 3*sqrt(.25/16) = 0.375
 
 
-def _minhash_accuracy_sql(dialect: str) -> str:
+def minhash_accuracy_sql(dialect: str = "duckdb") -> str:
     """MinHash ACCURACY certification — the `events_sketch_stats`
     pattern applied to the estimator the whole LSH chain stands on:
     for every banded-LSH candidate pair, the signature-agreement
@@ -1300,11 +1274,7 @@ ORDER BY doc_a, doc_b
 def minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-candidate-pair MinHash estimate vs exact Jaccard, error flagged."""
     _register(spark, sf_dir)
-    return spark.sql(_minhash_accuracy_sql("spark"))
-
-
-def minhash_accuracy_sql() -> str:
-    return _minhash_accuracy_sql("duckdb")
+    return spark.sql(minhash_accuracy_sql("spark"))
 
 
 # ------------------------------------- cluster size distribution
@@ -1312,7 +1282,7 @@ def minhash_accuracy_sql() -> str:
 CLUSTER_BINS = ((1, 1), (2, 2), (3, 4), (5, 8), (9, 1 << 30))
 
 
-def _cluster_stats_sql(dialect: str) -> str:
+def cluster_stats_sql(dialect: str = "duckdb") -> str:
     """Near-dup cluster SIZE DISTRIBUTION — the dedup observability
     readout next to `graph_degree_histogram`'s skew audit: how much of
     the corpus sits in singletons vs duplicate families, and how big
@@ -1370,14 +1340,10 @@ ORDER BY 1
 """)
 
 
-def cluster_stats_sql() -> str:
-    return _cluster_stats_sql("duckdb")
-
-
 # ------------------------------------- MinHash-LSH pair recall (text side)
 
 
-def _minhash_recall_sql(dialect: str) -> str:
+def minhash_recall_sql(dialect: str = "duckdb") -> str:
     """Pair recall of the text MinHash-LSH chain vs the exact all-pairs
     `ngram_jaccard_pairs` ground truth — the text-side twin of
     `dedup_embedding_lsh_recall`, and (with `dedup_minhash_accuracy`)
@@ -1399,7 +1365,7 @@ def _minhash_recall_sql(dialect: str) -> str:
         # subquery form byte-for-byte (oracle stability) — its CTEs
         # materialize, so the subqueries were already single-pass.
         return f"""
-WITH exact_pairs AS ({_jaccard_sql(dialect).replace("ORDER BY doc_a, doc_b", "")}),
+WITH exact_pairs AS ({ngram_jaccard_pairs_sql(dialect).replace("ORDER BY doc_a, doc_b", "")}),
 lsh_pairs AS ({_lsh_verified_sql(dialect)}),
 j AS (
   SELECT CASE WHEN x.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_true,
@@ -1418,7 +1384,7 @@ SELECT n_found, n_true,
 FROM agg
 """
     return f"""
-WITH exact_pairs AS ({_jaccard_sql(dialect).replace("ORDER BY doc_a, doc_b", "")}),
+WITH exact_pairs AS ({ngram_jaccard_pairs_sql(dialect).replace("ORDER BY doc_a, doc_b", "")}),
 lsh_pairs AS ({_lsh_verified_sql(dialect)}),
 hits AS (
   SELECT x.doc_a FROM exact_pairs x JOIN lsh_pairs l
@@ -1436,11 +1402,7 @@ SELECT CAST((SELECT count(*) FROM hits) AS BIGINT) AS n_found,
 def minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row recall of LSH-verified pairs vs the exact Jaccard truth."""
     _register(spark, sf_dir)
-    return spark.sql(_minhash_recall_sql("spark"))
-
-
-def minhash_recall_sql() -> str:
-    return _minhash_recall_sql("duckdb")
+    return spark.sql(minhash_recall_sql("spark"))
 
 
 # ------------------------------------- LSH banding operating curve
@@ -1448,7 +1410,7 @@ def minhash_recall_sql() -> str:
 BAND_SWEEP = (4, 8, 16)  # band counts swept over the 16-hash signature
 
 
-def _band_sweep_sql(dialect: str) -> str:
+def band_sweep_sql(dialect: str = "duckdb") -> str:
     """The MinHash BANDING operating curve — the third tuning
     instrument beside `sim_threshold_sweep` (verify threshold) and
     `sim_nprobe_sweep` (probe depth): candidate and verified-pair
@@ -1546,11 +1508,7 @@ ORDER BY n_bands
 def band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate/verified counts per band count, curve certified."""
     _register(spark, sf_dir)
-    return spark.sql(_band_sweep_sql("spark"))
-
-
-def band_sweep_sql() -> str:
-    return _band_sweep_sql("duckdb")
+    return spark.sql(band_sweep_sql("spark"))
 
 
 # ------------------------------------- near-dup pair review surface
@@ -1559,7 +1517,7 @@ PAIR_EXAMPLES_TOP = 10
 PAIR_SNIPPET_CHARS = 40
 
 
-def _pair_examples_sql(dialect: str) -> str:
+def pair_examples_sql(dialect: str = "duckdb") -> str:
     """Human-REVIEW surface for the near-dup pipeline — the "show me
     what we are about to drop" table every curation UI renders before
     a destructive dedup run: the top verified pairs by exact Jaccard
@@ -1591,11 +1549,7 @@ ORDER BY r.jaccard_e6 DESC, r.doc_a, r.doc_b
 def pair_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top verified near-dup pairs with snippets — the review table."""
     _register(spark, sf_dir)
-    return spark.sql(_pair_examples_sql("spark"))
-
-
-def pair_examples_sql() -> str:
-    return _pair_examples_sql("duckdb")
+    return spark.sql(pair_examples_sql("spark"))
 
 
 # ------------------------------------------- b-bit MinHash compression
@@ -1605,7 +1559,7 @@ _BBIT_MASK = (1 << BBIT_B) - 1
 _BBIT_C_E6 = 1_000_000 // (1 << BBIT_B)  # random-collision floor C = 2^-b
 
 
-def _bbit_minhash_sql(dialect: str) -> str:
+def bbit_minhash_sql(dialect: str = "duckdb") -> str:
     """b-bit MinHash (Li & Koenig, 2010): store only the lowest
     ``BBIT_B`` bits of each minhash value — a 14x storage cut vs the
     28-bit minima at N_HASHES=16 — and correct the estimator for the
@@ -1674,17 +1628,13 @@ def bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b-bit MinHash corrected estimates vs full-width and exact, per
     LSH candidate pair."""
     _register(spark, sf_dir)
-    return spark.sql(_bbit_minhash_sql("spark"))
-
-
-def bbit_minhash_sql() -> str:
-    return _bbit_minhash_sql("duckdb")
+    return spark.sql(bbit_minhash_sql("spark"))
 
 
 # ------------------------------------------- mergeable source sketches
 
 
-def _source_sketch_sql(dialect: str) -> str:
+def source_sketch_sim_sql(dialect: str = "duckdb") -> str:
     """MinHash MERGEABILITY, demonstrated end-to-end: the signature of
     a UNION of sets is the elementwise min of the sets' signatures, so
     a per-SOURCE signature is just ``min(minhash) GROUP BY (source,
@@ -1753,17 +1703,13 @@ ORDER BY source_a, source_b
 def source_sketch_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-pair Jaccard from merged (unioned) MinHash sketches."""
     _register(spark, sf_dir)
-    return spark.sql(_source_sketch_sql("spark"))
-
-
-def source_sketch_sim_sql() -> str:
-    return _source_sketch_sql("duckdb")
+    return spark.sql(source_sketch_sim_sql("spark"))
 
 
 # ------------------------------------------- quality-aware canonicals
 
 
-def _canonical_quality_sql(dialect: str) -> str:
+def canonical_by_quality_sql(dialect: str = "duckdb") -> str:
     """Canonical selection by QUALITY — the production refinement of
     `dedup_canonical_corpus`'s min-id rule: inside every near-dup
     cluster keep the member with the highest quality score (ties by
@@ -1845,14 +1791,10 @@ ORDER BY cluster_id
 """)
 
 
-def canonical_by_quality_sql() -> str:
-    return _canonical_quality_sql("duckdb")
-
-
 # ------------------------------------------- dup rate by source
 
 
-def _dup_rate_by_source_sql(dialect: str) -> str:
+def dup_rate_by_source_sql(dialect: str = "duckdb") -> str:
     """Duplicate-rate SCORECARD by source — "which crawls are
     duplicate-heavy" (the per-source flavor of `dedup_cluster_stats`,
     and the number a crawl-budget owner acts on): per source the doc
@@ -1910,14 +1852,10 @@ ORDER BY source
 """)
 
 
-def dup_rate_by_source_sql() -> str:
-    return _dup_rate_by_source_sql("duckdb")
-
-
 # ------------------------------------------- dedup savings report
 
 
-def _savings_report_sql(dialect: str) -> str:
+def savings_report_sql(dialect: str = "duckdb") -> str:
     """Dedup SAVINGS report — the one-row executive summary a storage/
     compute owner reads ("what did near-dup dedup actually buy"):
     corpus docs/tokens/chars before vs after canonical dedup (min-id
@@ -1964,10 +1902,6 @@ def savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register(spark, sf_dir)
     labels = _cc_labels(spark, sf_dir)
     labels.createOrReplaceTempView("cc_labels_view")
-    body = _savings_report_sql("spark")
+    body = savings_report_sql("spark")
     body = body[body.index("flagged AS ("):].replace("labels l", "cc_labels_view l")
     return spark.sql("WITH " + body)
-
-
-def savings_report_sql() -> str:
-    return _savings_report_sql("duckdb")

@@ -35,8 +35,8 @@ Two properties make this the right fix rather than a smaller lie:
    nothing inside a kept pair is sampled.
 
 The sampled SQL is composed by assertion-guarded substring substitution
-of the PRODUCTION dialect builders (``dedup._jaccard_sql``,
-``similarity._cosine_pairs_sql``, ``similarity._embedding_lsh_recall_sql``)
+of the PRODUCTION dialect builders (``dedup.ngram_jaccard_pairs_sql``,
+``similarity.embedding_cosine_dups_sql``, ``similarity._embedding_lsh_recall_sql``)
 — the ``sampled_minhash_recall_sql`` technique from the r8 gate — so SQL
 drift in the production modules fails loudly here instead of silently
 diverging. The full exact forms remain exported by their home modules
@@ -108,14 +108,14 @@ def _substitute(full: str, old: str, new: str, what: str) -> str:
 
 # ------------------------------------------------- exact n-gram Jaccard
 
-def _sampled_jaccard_sql(dialect: str) -> str:
-    """``dedup._jaccard_sql`` with the pair sample keyed into the shingle
+def sampled_ngram_jaccard_pairs_sql(dialect: str = "duckdb") -> str:
+    """``dedup.ngram_jaccard_pairs_sql`` with the pair sample keyed into the shingle
     self-join. Join keys become (shingle, residue): the hot-shingle
     straggler the old DECLARED waiver named is spread over GT_SAMPLE_MOD
     tasks at (f/M)^2 rows each, and the pair-aggregate state shrinks M x.
     ``common`` per kept pair is still counted over ALL the pair's
     shingles — the jaccard values are exact."""
-    full = _dd._jaccard_sql(dialect)
+    full = _dd.ngram_jaccard_pairs_sql(dialect)
     old = "FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id"
     new = _residue_join("s", "doc_id", "doc_id, sh", extra_on="a.sh = b.sh AND ")
     return _substitute(full, old, new, "ngram_jaccard pair join")
@@ -126,20 +126,16 @@ def sampled_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample (contract form of the ground-truth verifier; the full exact
     relation stays available as ``dedup.ngram_jaccard_pairs``)."""
     _dd._register(spark, sf_dir)
-    return spark.sql(_sampled_jaccard_sql("spark"))
-
-
-def sampled_ngram_jaccard_pairs_sql() -> str:
-    return _sampled_jaccard_sql("duckdb")
+    return spark.sql(sampled_ngram_jaccard_pairs_sql("spark"))
 
 
 # ------------------------------------------------- all-pairs cosine dups
 
-def _sampled_cosine_pairs_sql(dialect: str) -> str:
-    """``similarity._cosine_pairs_sql`` with the all-pairs nested loop
+def sampled_embedding_cosine_dups_sql(dialect: str = "duckdb") -> str:
+    """``similarity.embedding_cosine_dups_sql`` with the all-pairs nested loop
     replaced by the residue equi-join: the O(n^2) cosine fold runs only
     on the kept 1/7 of pairs, and the plan is a hash/merge join."""
-    full = _fsim._cosine_pairs_sql(dialect)
+    full = _fsim.embedding_cosine_dups_sql(dialect)
     old = "FROM e a JOIN e b ON a.vec_id < b.vec_id"
     new = _residue_join("e", "vec_id", "vec_id, embedding, nrm")
     return _substitute(full, old, new, "cosine all-pairs join")
@@ -150,16 +146,12 @@ def sampled_embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame
     pair sample (contract form of the all-pairs verifier; full form:
     ``similarity.embedding_cosine_dups``)."""
     _fsim._register(spark, sf_dir, spread=True)
-    return spark.sql(_sampled_cosine_pairs_sql("spark"))
-
-
-def sampled_embedding_cosine_dups_sql() -> str:
-    return _sampled_cosine_pairs_sql("duckdb")
+    return spark.sql(sampled_embedding_cosine_dups_sql("spark"))
 
 
 # --------------------------------------------- LSH dedup recall vs exact
 
-def _sampled_lsh_recall_sql(dialect: str) -> str:
+def sampled_embedding_lsh_recall_sql(dialect: str = "duckdb") -> str:
     """``similarity._embedding_lsh_recall_sql`` with BOTH pair CTEs
     restricted to the same deterministic pair sample: ``exact_pairs`` by
     the residue equi-join (it embeds the quadratic verifier), and
@@ -168,11 +160,11 @@ def _sampled_lsh_recall_sql(dialect: str) -> str:
     and denominator are restricted identically, so the quotient is the
     true pair recall on the sampled population."""
     full = _fsim._embedding_lsh_recall_sql(dialect)
-    exact = _fsim._cosine_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")
-    sampled_exact = _sampled_cosine_pairs_sql(dialect).replace(
+    exact = _fsim.embedding_cosine_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")
+    sampled_exact = sampled_embedding_cosine_dups_sql(dialect).replace(
         "ORDER BY vec_a, vec_b", ""
     )
-    lsh = _fsim._embedding_lsh_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")
+    lsh = _fsim.embedding_lsh_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")
     sampled_lsh = (
         f"SELECT * FROM ({lsh}\n) __lshsamp WHERE {gt_sample_pred('vec_a', 'vec_b')}"
     )
@@ -185,8 +177,4 @@ def sampled_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, both restricted to the deterministic 1/7 pair sample
     (contract form; full form: ``similarity.embedding_lsh_dup_recall``)."""
     _fsim._register(spark, sf_dir, spread=True)
-    return spark.sql(_sampled_lsh_recall_sql("spark"))
-
-
-def sampled_embedding_lsh_recall_sql() -> str:
-    return _sampled_lsh_recall_sql("duckdb")
+    return spark.sql(sampled_embedding_lsh_recall_sql("spark"))

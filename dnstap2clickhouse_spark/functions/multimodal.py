@@ -318,7 +318,7 @@ VAD_WINDOWS = 8  # analysis windows over the stand-in PCM payload
 _VAD_WIN_BYTES = 32 // VAD_WINDOWS  # samples (bytes) per window
 
 
-def _audio_vad_sql(dialect: str) -> str:
+def audio_vad_sql(dialect: str = "duckdb") -> str:
     """Windowed-energy voice-activity detection over audio payloads —
     the silence-trim / VAD gating pass an ASR training pipeline runs
     before transcription (keep voiced spans, drop silence): the PCM
@@ -372,11 +372,7 @@ def audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_audio_vad_sql("spark"))
-
-
-def audio_vad_sql() -> str:
-    return _audio_vad_sql("duckdb")
+    return spark.sql(audio_vad_sql("spark"))
 
 
 # --------------------------------------------- perceptual-hash dedup
@@ -388,7 +384,7 @@ _AHASH_BAND_MASK = (1 << _AHASH_BAND_BITS) - 1
 AHASH_HAM_MAX = 3  # pigeonhole: <= 3 flips -> 1 identical band
 
 
-def _image_ahash_sql(dialect: str) -> str:
+def image_ahash_sql(dialect: str = "duckdb") -> str:
     """Perceptual-hash near-duplicate image detection — average hash
     (aHash): downsample to an ``AHASH_PIXELS``-pixel grayscale
     thumbnail, set bit i when pixel i is at least the thumbnail mean
@@ -427,7 +423,7 @@ def _image_ahash_sql(dialect: str) -> str:
     under ``tot``), re-aggregated bands, then fetch-joined the band
     table twice more for Hamming verification on keys the r10 verdict
     flagged as non-canonicalizable ((doc_id) vs (doc_id, band) — item
-    6). Now the plan is exactly ``_simhash_pairs_sql``'s audited
+    6). Now the plan is exactly ``simhash_pairs_sql``'s audited
     shape: band rows are mask/shift projections of the signature, the
     per-band values carry the full signature through the candidate
     join, and verification is an inline ``bit_count(sig_a ^ sig_b)``
@@ -540,11 +536,7 @@ ORDER BY doc_a, doc_b
 def image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-verified aHash near-dup image pairs (banded candidates)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_image_ahash_sql("spark"))
-
-
-def image_ahash_sql() -> str:
-    return _image_ahash_sql("duckdb")
+    return spark.sql(image_ahash_sql("spark"))
 
 
 # --------------------------------------------- video scene-cut detect
@@ -552,7 +544,7 @@ def image_ahash_sql() -> str:
 SCENE_THRESH = 128  # |frame-intensity delta| >= threshold => cut
 
 
-def _scene_cuts_sql(dialect: str) -> str:
+def scene_cuts_sql(dialect: str = "duckdb") -> str:
     """Video scene-cut detection — the shot-segmentation pass a video
     training pipeline runs before sampling frames or aligning captions
     (detect cuts, then sample per shot instead of per fixed stride,
@@ -604,17 +596,13 @@ ORDER BY doc_id, frame_idx
 def scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detected scene cuts (frame index + intensity delta) per video."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_scene_cuts_sql("spark"))
-
-
-def scene_cuts_sql() -> str:
-    return _scene_cuts_sql("duckdb")
+    return spark.sql(scene_cuts_sql("spark"))
 
 
 # --------------------------------------------- modality mix report
 
 
-def _modality_mix_sql(dialect: str) -> str:
+def modality_mix_sql(dialect: str = "duckdb") -> str:
     """Modality MIX report — the dataset-card table for a multimodal
     corpus ("how much of the training set is image vs audio vs video,
     and how big is each"): per mime type the row count, total payload
@@ -664,8 +652,4 @@ ORDER BY mime
 def modality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-mime row/byte shares + mean pixel budget (dataset card)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_modality_mix_sql("spark"))
-
-
-def modality_mix_sql() -> str:
-    return _modality_mix_sql("duckdb")
+    return spark.sql(modality_mix_sql("spark"))

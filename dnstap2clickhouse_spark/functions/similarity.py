@@ -126,7 +126,7 @@ def _normed(dialect: str) -> str:
         f"{_dot('embedding', 'embedding', dialect)} AS nrm FROM embeddings"
     )
 
-def _brute_force_sql(dialect: str) -> str:
+def cosine_topk_sql(dialect: str = "duckdb") -> str:
     dot = _dot("q.embedding", "c.embedding", dialect)
     # broadcast the tiny query set, NOT the corpus: the non-equi join is
     # a nested loop whose build side must be the small one, or the plan
@@ -155,10 +155,7 @@ ORDER BY query_id, rank
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k for the query vectors."""
     _register(spark, sf_dir)
-    return spark.sql(_brute_force_sql("spark"))
-
-def cosine_topk_sql() -> str:
-    return _brute_force_sql("duckdb")
+    return spark.sql(cosine_topk_sql("spark"))
 
 def cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k with the scoring in a vectorized Pandas
@@ -251,7 +248,7 @@ def _bucket_expr(col: str, table: int, dialect: str) -> str:
         return f"pmod({wide}, shiftleft(CAST(1 AS BIGINT), nb))"
     return f"({wide}) % (CAST(1 AS BIGINT) << nb)"
 
-def _lsh_sql(dialect: str) -> str:
+def lsh_bucketed_ann_sql(dialect: str = "duckdb") -> str:
     """Multi-table sign-LSH: UNION (distinct) of per-table same-bucket
     equi-joins — each branch stays a hash/broadcast equi-join at scale;
     more tables = higher recall at linear candidate cost. Bucket ids and
@@ -271,7 +268,7 @@ def _lsh_sql(dialect: str) -> str:
         )
     union = "\nUNION\n".join(branches)
     # LIMIT on the query CTE: row no-op, plan-visible boundedness (see
-    # _brute_force_sql)
+    # cosine_topk_sql)
     return f"""
 WITH {_lsh_bits_cte(dialect)},
 e AS (SELECT vec_id, embedding, nrm, {buckets}
@@ -294,7 +291,7 @@ def _recall_vs_brute_sql(dialect: str, approx_sql: str) -> str:
     template serves every index flavor (LSH / IVF / IVF-PQ) so the
     metric definition cannot drift between them."""
     return f"""
-WITH brute AS ({_brute_force_sql(dialect).replace("ORDER BY query_id, rank", "")}),
+WITH brute AS ({cosine_topk_sql(dialect).replace("ORDER BY query_id, rank", "")}),
 approx AS ({approx_sql.replace("ORDER BY query_id, rank", "")})
 SELECT b.query_id,
        CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
@@ -304,21 +301,18 @@ FROM brute b LEFT JOIN approx a
 GROUP BY b.query_id ORDER BY b.query_id
 """
 
-def _ann_recall_sql(dialect: str) -> str:
+def ann_recall_sql(dialect: str = "duckdb") -> str:
     """recall@k of the LSH ANN against the exact brute-force top-k,
     per query vector — the standard ANN quality metric, computed
     entirely in-engine so index-parameter sweeps (LSH_TABLES / the derived width)
     are a query away. The ground-truth side is the already-linear
     brute-force scan; the join is a tiny (N_QUERIES x k) equi-join."""
-    return _recall_vs_brute_sql(dialect, _lsh_sql(dialect))
+    return _recall_vs_brute_sql(dialect, lsh_bucketed_ann_sql(dialect))
 
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@k of ``lsh_bucketed_ann`` vs ``cosine_topk``."""
     _register(spark, sf_dir)
-    return spark.sql(_ann_recall_sql("spark"))
-
-def ann_recall_sql() -> str:
-    return _ann_recall_sql("duckdb")
+    return spark.sql(ann_recall_sql("spark"))
 
 def pandas_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable form of the numpy scorer: recall@k of
@@ -354,7 +348,7 @@ def pandas_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def pandas_recall_sql() -> str:
-    brute = _brute_force_sql("duckdb").replace("ORDER BY query_id, rank", "")
+    brute = cosine_topk_sql("duckdb").replace("ORDER BY query_id, rank", "")
     return f"""
 WITH brute AS ({brute})
 SELECT b.query_id,
@@ -369,12 +363,9 @@ def lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via multi-table sign-bit LSH: only same-bucket candidates
     scored; union across tables trades compute for recall."""
     _register(spark, sf_dir)
-    return spark.sql(_lsh_sql("spark"))
+    return spark.sql(lsh_bucketed_ann_sql("spark"))
 
-def lsh_bucketed_ann_sql() -> str:
-    return _lsh_sql("duckdb")
-
-def _centroid_sql(dialect: str) -> str:
+def label_centroids_sql(dialect: str = "duckdb") -> str:
     """Per-label centroids via scaled-integer sums (order-free, exact)."""
     if dialect == "spark":
         elem = "element_at(embedding, CAST(dim AS INT))"
@@ -396,7 +387,7 @@ FROM sums ORDER BY label, dim
 
 COSINE_DUP_THRESHOLD = 0.45
 
-def _cosine_pairs_sql(dialect: str) -> str:
+def embedding_cosine_dups_sql(dialect: str = "duckdb") -> str:
     dot = _dot("a.embedding", "b.embedding", dialect)
     return f"""
 WITH e AS ({_normed(dialect)}),
@@ -415,19 +406,13 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set comes from the LSH buckets (``lsh_bucketed_ann``) or
     IVF cells first, and only candidates are scored."""
     _register(spark, sf_dir, spread=True)
-    return spark.sql(_cosine_pairs_sql("spark"))
-
-def embedding_cosine_dups_sql() -> str:
-    return _cosine_pairs_sql("duckdb")
+    return spark.sql(embedding_cosine_dups_sql("spark"))
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Element-wise mean embedding per label (the IVF coarse-quantizer
     building block), deterministic via scaled-integer sums."""
     _register(spark, sf_dir)
-    return spark.sql(_centroid_sql("spark"))
-
-def label_centroids_sql() -> str:
-    return _centroid_sql("duckdb")
+    return spark.sql(label_centroids_sql("spark"))
 
 IVF_NPROBE = 2
 
@@ -437,7 +422,7 @@ def _ivf_cell_ctes(dialect: str) -> str:
     ``cell_scored``/``cell_ranked`` (per-vector cell affinities),
     ``assign`` (nearest cell per vector) and ``probes`` (each query's
     ``IVF_NPROBE`` closest cells). ONE definition feeds both
-    ``_ivf_sql`` and ``_ivfpq_sql``, so the "same probe set" premise of
+    ``ivf_topk_sql`` and ``ivfpq_topk_sql``, so the "same probe set" premise of
     the recall lower-bound theorem (test_ivfpq_recall_bounded_by_
     ivf_recall) is true by construction, not by parallel editing.
 
@@ -457,7 +442,7 @@ def _ivf_cell_ctes(dialect: str) -> str:
     keeps the window form byte-for-byte: its ``arg_max`` rejects
     composite ordering keys, and the oracle runs at sf0.01 where the
     sort is irrelevant — both dialects compute the same argmin."""
-    cent_inner = _centroid_sql(dialect).replace(" ORDER BY label, dim", "")
+    cent_inner = label_centroids_sql(dialect).replace(" ORDER BY label, dim", "")
     if dialect == "spark":
         cvec = (
             "SELECT label, transform(sort_array(collect_list(struct(dim, centroid))), "
@@ -496,7 +481,7 @@ probes AS (
   SELECT vec_id AS query_id, label AS cell
   FROM cell_ranked WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE})"""
 
-def _ivf_sql(dialect: str) -> str:
+def ivf_topk_sql(dialect: str = "duckdb") -> str:
     """IVF ANN: coarse-quantize every vector to its nearest centroid cell,
     then search only the query's ``IVF_NPROBE`` closest cells.
 
@@ -535,16 +520,13 @@ ORDER BY query_id, rank
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN search over centroid cells."""
     _register(spark, sf_dir)
-    return spark.sql(_ivf_sql("spark"))
-
-def ivf_topk_sql() -> str:
-    return _ivf_sql("duckdb")
+    return spark.sql(ivf_topk_sql("spark"))
 
 # ----------------------------------------------- int8 storage quantization
 
 QUANT_LEVELS = 255  # quantization steps; emitted codes are shifted to [-128, 127]
 
-def _quantize_sql(dialect: str) -> str:
+def quantize_int8_sql(dialect: str = "duckdb") -> str:
     """Per-dimension min/max int8 quantization codes for every vector.
 
     Scale shape: the per-dim stats aggregate has 64 keys — map-side
@@ -589,33 +571,27 @@ ORDER BY vec_id, dim
 def quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8 quantization codes (vec_id, dim, code) for the whole corpus."""
     _register(spark, sf_dir)
-    return spark.sql(_quantize_sql("spark"))
+    return spark.sql(quantize_int8_sql("spark"))
 
-def quantize_int8_sql() -> str:
-    return _quantize_sql("duckdb")
-
-def _ivf_recall_sql(dialect: str) -> str:
+def ivf_recall_sql(dialect: str = "duckdb") -> str:
     """recall@k of the IVF ANN against the exact brute-force top-k —
-    the same in-engine quality metric `_ann_recall_sql` provides for the
+    the same in-engine quality metric `ann_recall_sql` provides for the
     LSH path, so IVF_K/IVF_NPROBE sweeps are a query away. Ground truth
     is the already-linear brute-force scan; the compare join is a tiny
     (N_QUERIES x k) equi-join."""
-    return _recall_vs_brute_sql(dialect, _ivf_sql(dialect))
+    return _recall_vs_brute_sql(dialect, ivf_topk_sql(dialect))
 
 def ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@k of ``ivf_topk`` vs ``cosine_topk``."""
     _register(spark, sf_dir)
-    return spark.sql(_ivf_recall_sql("spark"))
-
-def ivf_recall_sql() -> str:
-    return _ivf_recall_sql("duckdb")
+    return spark.sql(ivf_recall_sql("spark"))
 
 # ------------------------------------------------------- k-means (Lloyd)
 
 #: The k-means/SemDeDup cell count is CORPUS-DERIVED, not a constant:
 #: k = ceil(n / KMEANS_TARGET_OCCUPANCY), computed IN-ENGINE by an
 #: exact-integer scalar subquery over the corpus count (see the ``kk``
-#: CTE in ``_kmeans_sql``), so cell occupancy stays ~constant as the
+#: CTE in ``kmeans_assign_sql``), so cell occupancy stays ~constant as the
 #: corpus grows and the cell-pruned family's total intra-cell pair work
 #: (sum of occupancy^2 over cells) stays LINEAR in n instead of the
 #: O(n^2/k) a fixed k degrades to (SCALING.md measured 889 s fixed k=4
@@ -653,8 +629,8 @@ _E9 = 1_000_000_000
 
 def _qarr_sql(dialect: str) -> str:
     """e9 integer quantization of the embedding array — the shared entry
-    point into the exact-centroid arithmetic (`_kmeans_sql`,
-    `_farthest_init_sql`)."""
+    point into the exact-centroid arithmetic (`kmeans_assign_sql`,
+    `farthest_init_sql`)."""
     if dialect == "spark":
         return f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_E9}) AS BIGINT))"
     return f"list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_E9}) AS BIGINT))"
@@ -666,7 +642,7 @@ def _cdist_cols(dialect: str, qcol: str, ca: str) -> str:
     integer vector column ``qcol`` and the integer-sum centroid aliased
     ``ca`` (columns ``sv``, ``n``). ``_cdist_cols(d, "q.qv", "c")`` is
     byte-identical to the historical ``_cdist_sql`` output; the aliases
-    exist for `_twolevel_assign_sql`'s joins (vector-vs-seed under
+    exist for `kmeans_assign_twolevel_sql`'s joins (vector-vs-seed under
     different FROM aliases)."""
     nd = KMEANS_DIMS
     if dialect == "spark":
@@ -691,7 +667,7 @@ def _argmin_over(
 ) -> str:
     """Lowest-``cand`` argmin of ``d`` per ``key`` over the ``inner``
     relation — the module's ONE definition of the Lloyd-assignment
-    argmin (`_kmeans_sql` and `_twolevel_assign_sql` both splice it, so
+    argmin (`kmeans_assign_sql` and `kmeans_assign_twolevel_sql` both splice it, so
     the tie-break semantics cannot drift between sites).
 
     Spark emits a single ``min_by(cand, struct(d, cand))`` HASH
@@ -729,17 +705,17 @@ def _cdist_sql(dialect: str) -> str:
     centroid ``c`` (``sv``, ``n``): a fixed-order fold over dims of
     ``(qv*n - sv)^2`` doubles, one division by ``n^2`` at the end — every
     FP op has a fixed operand order, so both engines produce identical
-    doubles. Single definition shared by ``_kmeans_sql`` and
-    ``_ood_centroid_sql`` so the distance semantics cannot drift."""
+    doubles. Single definition shared by ``kmeans_assign_sql`` and
+    ``ood_centroid_sql`` so the distance semantics cannot drift."""
     return _cdist_cols(dialect, "q.qv", "c")
 
 
-def _kmeans_sql(dialect: str) -> str:
+def kmeans_assign_sql(dialect: str = "duckdb") -> str:
     """Two unrolled Lloyd iterations of k-means, bit-deterministic.
 
     The iterative-ML pattern on the engine: centroids live as EXACT
     per-dimension integer sums ``(sv, n)`` (embeddings quantized once at
-    e9, the `_centroid_sql` idiom), so the update step is order-free.
+    e9, the `label_centroids_sql` idiom), so the update step is order-free.
     The assignment distance is computed per (vector, centroid) as a
     fixed-order left fold over dims of ``(q*n - s)^2`` doubles, then one
     division by ``n^2`` — every FP op has a fixed operand order, so both
@@ -811,10 +787,7 @@ SELECT vec_id, cluster FROM a2 ORDER BY vec_id
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster assignment after two Lloyd iterations (corpus-derived k)."""
     _register(spark, sf_dir)
-    return spark.sql(_kmeans_sql("spark"))
-
-def kmeans_assign_sql() -> str:
-    return _kmeans_sql("duckdb")
+    return spark.sql(kmeans_assign_sql("spark"))
 
 
 # -------------------------------- two-level (coarse-pruned) assignment
@@ -836,7 +809,7 @@ KMEANS_COARSE_OCCUPANCY = 8_000
 KMEANS_COARSE_NPROBE = 2
 
 
-def _twolevel_assign_sql(dialect: str) -> str:
+def kmeans_assign_twolevel_sql(dialect: str = "duckdb") -> str:
     """Coarse-pruned nearest-seed assignment (both dialects — the
     ``sim_kmeans_twolevel`` contract entry; its exhaustive-probe
     equality with the flat argmin and its plan shape are additionally
@@ -944,11 +917,7 @@ def kmeans_assign_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style two-level nearest-seed assignment (the scale form:
     n·(k1 + nprobe·k/k1) distance folds, never the flat n·k cross join)."""
     _register(spark, sf_dir)
-    return spark.sql(_twolevel_assign_sql("spark"))
-
-
-def kmeans_assign_twolevel_sql() -> str:
-    return _twolevel_assign_sql("duckdb")
+    return spark.sql(kmeans_assign_twolevel_sql("spark"))
 
 
 # ------------------------------------------------- product quantization
@@ -964,10 +933,10 @@ def _pq_sql(dialect: str) -> str:
     vector-compression path for ANN at 100 TB — codes are
     ``PQ_SUBS * log2(PQ_K)`` bits instead of ``dims * 32``.
 
-    Same bit-determinism contract as ``_kmeans_sql`` (exact-integer
+    Same bit-determinism contract as ``kmeans_assign_sql`` (exact-integer
     centroid sums, fixed-order distance folds, ties to the lowest
     codeword). The assign/update CTE machinery deliberately parallels
-    ``_kmeans_sql`` rather than sharing code: the two entries are each
+    ``kmeans_assign_sql`` rather than sharing code: the two entries are each
     pinned by a 3-scale oracle plus a numpy reimplementation test, so a
     contract change applied to one and not the other fails its gates
     rather than drifting silently. Generalized by a ``sub`` key: every
@@ -1040,7 +1009,7 @@ a2 AS ({assign("c1")})""",
         hint,
     )
 
-def _pq_codes_sql(dialect: str) -> str:
+def pq_codes_sql(dialect: str = "duckdb") -> str:
     ctes, _, _ = _pq_sql(dialect)
     return f"""
 {ctes}
@@ -1050,12 +1019,9 @@ SELECT vec_id, sub, code FROM a2 ORDER BY vec_id, sub
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(vector, subspace) PQ code after one Lloyd round per codebook."""
     _register(spark, sf_dir)
-    return spark.sql(_pq_codes_sql("spark"))
+    return spark.sql(pq_codes_sql("spark"))
 
-def pq_codes_sql() -> str:
-    return _pq_codes_sql("duckdb")
-
-def _pq_adc_sql(dialect: str) -> str:
+def pq_adc_topk_sql(dialect: str = "duckdb") -> str:
     """PQ search by Asymmetric Distance Computation: the query keeps its
     full subvectors, the corpus keeps only its codes; per query a
     ``PQ_SUBS x PQ_K`` lookup table of query↔codeword distances is
@@ -1102,12 +1068,9 @@ ORDER BY query_id, rank
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k nearest by PQ asymmetric distance (codes-only corpus side)."""
     _register(spark, sf_dir)
-    return spark.sql(_pq_adc_sql("spark"))
+    return spark.sql(pq_adc_topk_sql("spark"))
 
-def pq_adc_topk_sql() -> str:
-    return _pq_adc_sql("duckdb")
-
-def _ivfpq_sql(dialect: str) -> str:
+def ivfpq_topk_sql(dialect: str = "duckdb") -> str:
     """IVF-PQ: the two ANN stages composed the way a production vector
     index runs them (FAISS's IVF-ADC form, Jégou et al. 2011 §V) —
     coarse IVF cells prune the CANDIDATE set, then PQ asymmetric
@@ -1161,40 +1124,34 @@ ORDER BY query_id, rank
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k by IVF-pruned candidates scored with PQ asymmetric distance."""
     _register(spark, sf_dir)
-    return spark.sql(_ivfpq_sql("spark"))
+    return spark.sql(ivfpq_topk_sql("spark"))
 
-def ivfpq_topk_sql() -> str:
-    return _ivfpq_sql("duckdb")
-
-def _ivfpq_recall_sql(dialect: str) -> str:
+def ivfpq_recall_sql(dialect: str = "duckdb") -> str:
     """recall@k of the composed IVF-PQ index against the exact
     brute-force top-k — completes the quality-sweep trio (LSH, IVF,
     IVF-PQ), so the cell-count/nprobe/codebook-size trade-off is
     measurable with one query per configuration. The PQ stage adds code
     quantization error on top of IVF's cell pruning, so this recall
     lower-bounds `sim_ivf_recall`'s."""
-    return _recall_vs_brute_sql(dialect, _ivfpq_sql(dialect))
+    return _recall_vs_brute_sql(dialect, ivfpq_topk_sql(dialect))
 
 def ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@k of ``ivfpq_topk`` vs ``cosine_topk``."""
     _register(spark, sf_dir)
-    return spark.sql(_ivfpq_recall_sql("spark"))
-
-def ivfpq_recall_sql() -> str:
-    return _ivfpq_recall_sql("duckdb")
+    return spark.sql(ivfpq_recall_sql("spark"))
 
 # ------------------------------------------------- semantic dedup (SemDeDup)
 
 SEMANTIC_DUP_THRESHOLD = COSINE_DUP_THRESHOLD
 
 
-def _semantic_dedup_sql(dialect: str) -> str:
+def semantic_dedup_sql(dialect: str = "duckdb") -> str:
     """SemDeDup (Abbas et al. 2023): k-means clusters quarantine the
     quadratic, cosine de-dups WITHIN each cluster only.
 
-    Reuses the two-Lloyd-round assignment CTEs from ``_kmeans_sql``
+    Reuses the two-Lloyd-round assignment CTEs from ``kmeans_assign_sql``
     verbatim (string surgery on the shared prefix, the
-    ``_incremental_ingest_sql`` idiom) — the clustering this entry
+    ``incremental_ingest_sql`` idiom) — the clustering this entry
     de-dups within is literally the audited, oracle-checked one. Pair
     generation is an EQUI-join on the cluster id (never all-pairs): cost
     is sum over clusters of size^2, which SemDeDup keeps bounded at
@@ -1210,7 +1167,7 @@ def _semantic_dedup_sql(dialect: str) -> str:
     module's bit-determinism contract, so the oracle hash certifies the
     whole cluster -> pair -> verdict chain.
     """
-    km = _kmeans_sql(dialect)
+    km = kmeans_assign_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -1236,11 +1193,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDeDup verdict: cluster id, kept flag, and the
     lower-id intra-cluster near-duplicate it defers to (or -1)."""
     _register(spark, sf_dir)
-    return spark.sql(_semantic_dedup_sql("spark"))
+    return spark.sql(semantic_dedup_sql("spark"))
 
-
-def semantic_dedup_sql() -> str:
-    return _semantic_dedup_sql("duckdb")
 
 # ------------------------------------------- centroid-distance OOD filter
 
@@ -1258,15 +1212,15 @@ OOD_FACTOR_DEN = 100
 _OOD_DESCALE = "1e12"
 
 
-def _ood_centroid_sql(dialect: str) -> str:
+def ood_centroid_sql(dialect: str = "duckdb") -> str:
     """Embedding-space outlier pruning (the DataComp/DFN-family curation
     gate next to SemDeDup's near-dup gate): a vector is out-of-
     distribution when its distance to its own k-means centroid exceeds
     ``OOD_FACTOR`` x that cluster's mean member distance — far-from-
     distribution samples are exactly what embedding-based quality
     filters drop before training. Reuses the two-Lloyd-round centroid
-    CTEs from ``_kmeans_sql`` verbatim (string surgery, the
-    ``_semantic_dedup_sql`` idiom) and the SAME ``_cdist_sql`` distance
+    CTEs from ``kmeans_assign_sql`` verbatim (string surgery, the
+    ``semantic_dedup_sql`` idiom) and the SAME ``_cdist_sql`` distance
     definition, then quantizes the assigned-centroid distance once at e6
     and makes the verdict a cross-multiplied exact-integer compare
     (``dist * n * DEN > FACTOR_NUM * sum_dist``) against the cluster's
@@ -1276,7 +1230,7 @@ def _ood_centroid_sql(dialect: str) -> str:
     cluster-keyed aggregate of 2 integers joins back by cluster id —
     nothing corpus-sized shuffles beyond the assignment itself.
     """
-    km = _kmeans_sql(dialect)
+    km = kmeans_assign_sql(dialect)
     prefix = km[: km.index("a2 AS (")].rstrip().rstrip(",") + ","
     dist = _cdist_sql(dialect)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
@@ -1318,11 +1272,7 @@ ORDER BY d.vec_id
 def ood_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector OOD verdict vs its own cluster's mean centroid distance."""
     _register(spark, sf_dir)
-    return spark.sql(_ood_centroid_sql("spark"))
-
-
-def ood_centroid_sql() -> str:
-    return _ood_centroid_sql("duckdb")
+    return spark.sql(ood_centroid_sql("spark"))
 
 
 # --------------------------------------------- hybrid retrieval (RRF fusion)
@@ -1333,7 +1283,7 @@ RRF_SCALE = 1_000_000  # integer scale: score = Σ SCALE div (K + rank)
 HYBRID_QUERY_VEC = 0  # the query vector paired with the keyword query
 
 
-def _hybrid_rrf_sql(dialect: str) -> str:
+def hybrid_rrf_sql(dialect: str = "duckdb") -> str:
     """Hybrid retrieval: keyword (BM25-idf integer scoring, the
     ``text_keyword_search`` weights) + vector (brute-force cosine, the
     ``sim_cosine_topk`` fold) candidate lists fused by reciprocal-rank
@@ -1402,16 +1352,13 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register(spark, sf_dir)
     _lt(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_hybrid_rrf_sql("spark"))
+    return spark.sql(hybrid_rrf_sql("spark"))
 
-
-def hybrid_rrf_sql() -> str:
-    return _hybrid_rrf_sql("duckdb")
 
 # ----------------------------------- LSH-quarantined embedding dedup pairs
 
 
-def _embedding_lsh_pairs_sql(dialect: str) -> str:
+def embedding_lsh_dups_sql(dialect: str = "duckdb") -> str:
     """The SCALE path for embedding near-dup detection — the vector-space
     analogue of ``dedup_minhash_lsh``: candidate pairs come from
     same-bucket self-joins over the multi-table sign-LSH (each branch a
@@ -1466,11 +1413,7 @@ def embedding_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins, exact-cosine verified) — the production path next to the
     quarantined all-pairs verifier."""
     _register(spark, sf_dir)
-    return spark.sql(_embedding_lsh_pairs_sql("spark"))
-
-
-def embedding_lsh_dups_sql() -> str:
-    return _embedding_lsh_pairs_sql("duckdb")
+    return spark.sql(embedding_lsh_dups_sql("spark"))
 
 
 def _embedding_lsh_recall_sql(dialect: str) -> str:
@@ -1482,7 +1425,7 @@ def _embedding_lsh_recall_sql(dialect: str) -> str:
     count of LSH pairs absent from the exact relation, which the oracle
     hash pins to 0."""
     if dialect == "spark":
-        # ONE pass of each pair relation (the `_minhash_recall_sql`
+        # ONE pass of each pair relation (the `minhash_recall_sql`
         # restructure, embedding twin): the scalar-subquery form
         # re-planned the QUADRATIC exact verifier ~3x and the LSH chain
         # ~2x per evaluation — 52 embedding-payload scans in one plan,
@@ -1493,8 +1436,8 @@ def _embedding_lsh_recall_sql(dialect: str) -> str:
         # scalar-subquery form byte-for-byte (CTEs materialize there —
         # already single-pass).
         return f"""
-WITH exact_pairs AS ({_cosine_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
-lsh_pairs AS ({_embedding_lsh_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
+WITH exact_pairs AS ({embedding_cosine_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
+lsh_pairs AS ({embedding_lsh_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
 j AS (
   SELECT CASE WHEN x.vec_a IS NOT NULL THEN 1 ELSE 0 END AS is_true,
          CASE WHEN l.vec_a IS NOT NULL THEN 1 ELSE 0 END AS is_lsh
@@ -1512,8 +1455,8 @@ SELECT n_found, n_true,
 FROM agg
 """
     return f"""
-WITH exact_pairs AS ({_cosine_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
-lsh_pairs AS ({_embedding_lsh_pairs_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
+WITH exact_pairs AS ({embedding_cosine_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
+lsh_pairs AS ({embedding_lsh_dups_sql(dialect).replace("ORDER BY vec_a, vec_b", "")}),
 hits AS (
   SELECT x.vec_a FROM exact_pairs x JOIN lsh_pairs l
     ON x.vec_a = l.vec_a AND x.vec_b = l.vec_b)
@@ -1542,7 +1485,7 @@ MMR_POOL = 10  # relevance candidates per query entering the re-rank
 MMR_K = 3  # diversified results returned per query
 
 
-def _mmr_sql(dialect: str) -> str:
+def mmr_rerank_sql(dialect: str = "duckdb") -> str:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998)
     — the diversity pass a RAG stack runs after retrieval: greedily pick
     the candidate maximizing ``0.5*rel - 0.5*max_sim_to_selected``, so
@@ -1614,7 +1557,7 @@ ORDER BY query_id, pos
 """
 
 
-#: anchor splitting ``_mmr_sql`` into the corpus pass (everything up to
+#: anchor splitting ``mmr_rerank_sql`` into the corpus pass (everything up to
 #: and including the ``pool`` CTE) and the greedy steps that follow —
 #: must match the SQL text exactly once or the splice raises.
 _MMR_STEP_ANCHOR = ",\nsel1 AS ("
@@ -1642,7 +1585,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import materialize_scan
 
     _register(spark, sf_dir)
-    sql = _mmr_sql("spark")
+    sql = mmr_rerank_sql("spark")
     if sql.count(_MMR_STEP_ANCHOR) != 1:
         raise RuntimeError("mmr pool splice anchor drifted")
     prefix, steps = sql.split(_MMR_STEP_ANCHOR)
@@ -1653,10 +1596,6 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _MMR_STEP_ANCHOR
         + steps
     )
-
-
-def mmr_rerank_sql() -> str:
-    return _mmr_sql("duckdb")
 
 
 # -------------------------------------- grouped-map normalization (Arrow)
@@ -1736,7 +1675,7 @@ def _prefix(col: str, dialect: str, dims: int = MRL_PREFIX) -> str:
     return f"{col}[1:{dims}]"
 
 
-def _matryoshka_sql(dialect: str) -> str:
+def matryoshka_topk_sql(dialect: str = "duckdb") -> str:
     """Matryoshka (MRL, Kusupati et al. 2022) two-stage retrieval — the
     modern production ANN shape for nested-representation embeddings:
     the COARSE stage ranks every corpus vector by cosine over only the
@@ -1807,11 +1746,7 @@ ORDER BY query_id, rank
 def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-dim coarse rank + full-dim rerank top-k (see builder)."""
     _register(spark, sf_dir)
-    return spark.sql(_matryoshka_sql("spark"))
-
-
-def matryoshka_topk_sql() -> str:
-    return _matryoshka_sql("duckdb")
+    return spark.sql(matryoshka_topk_sql("spark"))
 
 
 # ------------------------------------------- binary (sign) embeddings
@@ -1840,7 +1775,7 @@ def _hamming(dialect: str, a: str, b: str) -> str:
     return f"bit_count(xor({a}, {b}))"  # DuckDB: ^ is exponentiation
 
 
-def _binary_hamming_sql(dialect: str) -> str:
+def binary_hamming_topk_sql(dialect: str = "duckdb") -> str:
     """Binary (sign-quantized) embedding search — the cheapest vector
     compression: 1 bit per dimension (64x smaller than float32), packed
     into ``BIN_WORDS`` integer words at ingest; search is Hamming
@@ -1886,11 +1821,7 @@ ORDER BY query_id, rank
 def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-packed Hamming top-k (see builder)."""
     _register(spark, sf_dir)
-    return spark.sql(_binary_hamming_sql("spark"))
-
-
-def binary_hamming_topk_sql() -> str:
-    return _binary_hamming_sql("duckdb")
+    return spark.sql(binary_hamming_topk_sql("spark"))
 
 
 # ------------------------------------------------------- range search
@@ -1898,7 +1829,7 @@ def binary_hamming_topk_sql() -> str:
 RANGE_TAU = 0.3  # cosine radius (~2.4 sigma for random 64-dim vectors)
 
 
-def _range_search_sql(dialect: str) -> str:
+def range_search_sql(dialect: str = "duckdb") -> str:
     """Threshold (radius) search — the similarity family's remaining
     query shape next to top-k: ALL corpus vectors within cosine >=
     RANGE_TAU of each query vector, not a fixed count. The measured
@@ -1948,11 +1879,7 @@ ORDER BY t.query_id, t.neighbor_id
 def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All neighbors within the cosine radius + per-pair LSH hit flag."""
     _register(spark, sf_dir)
-    return spark.sql(_range_search_sql("spark"))
-
-
-def range_search_sql() -> str:
-    return _range_search_sql("duckdb")
+    return spark.sql(range_search_sql("spark"))
 
 
 # ------------------------------------------- farthest-point seeding
@@ -1961,7 +1888,7 @@ FPS_K = 4  # centers selected (seed + 3 greedy picks)
 _FPS_DESCALE = "1e12"  # same d-unit descale as the OOD gate
 
 
-def _farthest_init_sql(dialect: str) -> str:
+def farthest_init_sql(dialect: str = "duckdb") -> str:
     """Greedy k-center (farthest-point) seeding — the deterministic
     init primitive in front of Lloyd (`sim_kmeans` deliberately seeds
     by id; THIS is the quality init real pipelines use: kmeans++'s
@@ -2099,21 +2026,17 @@ def farthest_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def farthest_init_sql() -> str:
-    return _farthest_init_sql("duckdb")
-
-
 # ------------------------------------------- threshold operating curve
 
 SWEEP_THRESHOLDS_E2 = (30, 35, 40, 45, 50, 55, 60)  # cosine e2 ladder
 
 
-def _threshold_sweep_sql(dialect: str) -> str:
+def threshold_sweep_sql(dialect: str = "duckdb") -> str:
     """The dedup-threshold OPERATING CURVE — how a pipeline owner picks
     the knob every near-dup entry fixes at ``COSINE_DUP_THRESHOLD``:
     candidate pairs from the audited sign-LSH chain (the
-    ``_embedding_lsh_pairs_sql`` CTEs reused verbatim up to the scoring
-    relation — string surgery, the `_semantic_dedup_sql` idiom), then
+    ``embedding_lsh_dups_sql`` CTEs reused verbatim up to the scoring
+    relation — string surgery, the `semantic_dedup_sql` idiom), then
     ONE pass histograms every pair to the highest ladder threshold it
     clears (a mapper-side CASE), and the per-threshold counts are the
     suffix sums of that <=7-row histogram against the 7-row ladder — the
@@ -2127,7 +2050,7 @@ def _threshold_sweep_sql(dialect: str) -> str:
     drift); ``monotone_ok`` certifies in-hash that the curve is
     non-increasing in the threshold (a lag over the 7-row ladder).
     """
-    base = _embedding_lsh_pairs_sql(dialect)
+    base = embedding_lsh_dups_sql(dialect)
     prefix = base[: base.rindex("SELECT vec_a, vec_b, cosine FROM scored")].rstrip()
     thr = "\nUNION ALL\n".join(
         f"SELECT CAST({t} AS BIGINT) AS t_e2" for t in SWEEP_THRESHOLDS_E2
@@ -2156,11 +2079,7 @@ ORDER BY t_e2
 def threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair counts across the cosine-threshold ladder, curve certified."""
     _register(spark, sf_dir)
-    return spark.sql(_threshold_sweep_sql("spark"))
-
-
-def threshold_sweep_sql() -> str:
-    return _threshold_sweep_sql("duckdb")
+    return spark.sql(threshold_sweep_sql("spark"))
 
 
 # ------------------------------------------- IVF nprobe operating curve
@@ -2168,7 +2087,7 @@ def threshold_sweep_sql() -> str:
 NPROBE_LADDER = (1, 2, 4)  # probe counts swept (IVF_NPROBE = 2 in prod)
 
 
-def _nprobe_sweep_sql(dialect: str) -> str:
+def nprobe_sweep_sql(dialect: str = "duckdb") -> str:
     """The IVF tuning curve — recall@k as a function of ``nprobe``, the
     knob every IVF deployment sweeps before fixing `IVF_NPROBE` (the
     `sim_threshold_sweep` pattern applied to the partition-pruning
@@ -2243,7 +2162,7 @@ scored AS (
   FROM cand c
   JOIN e q ON q.vec_id = c.query_id
   JOIN e n ON n.vec_id = c.neighbor_id),
-brute AS ({_brute_force_sql(dialect).replace("ORDER BY query_id, rank", "")}),
+brute AS ({cosine_topk_sql(dialect).replace("ORDER BY query_id, rank", "")}),
 curve AS ({arms})
 SELECT nprobe, n_hits,
        (n_hits * 1000000) {div} {N_QUERIES * TOP_K} AS recall_e6,
@@ -2257,11 +2176,7 @@ ORDER BY nprobe
 def nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k per IVF probe depth, curve certified monotone."""
     _register(spark, sf_dir)
-    return spark.sql(_nprobe_sweep_sql("spark"))
-
-
-def nprobe_sweep_sql() -> str:
-    return _nprobe_sweep_sql("duckdb")
+    return spark.sql(nprobe_sweep_sql("spark"))
 
 
 # ------------------------------------------- PQ distortion report
@@ -2269,13 +2184,13 @@ def nprobe_sweep_sql() -> str:
 _PQ_DESCALE = "1e12"  # e18 fold units -> e6 report units
 
 
-def _pq_distortion_sql(dialect: str) -> str:
+def pq_distortion_sql(dialect: str = "duckdb") -> str:
     """PQ compression-DISTORTION report — what the code compression
     actually costs in distance fidelity, per query (the capacity-
     planning twin of the recall instruments: recall says "did the
     right ids surface", this says "how wrong are the distances the
     ranking ran on"): for each query's ADC top-k pairs (the audited
-    `_pq_adc_sql` CTEs spliced verbatim), the EXACT full-precision
+    `pq_adc_topk_sql` CTEs spliced verbatim), the EXACT full-precision
     squared distance is computed by the same fixed-order fold the
     kmeans family uses, and the report is per-query mean ADC vs mean
     exact distance plus the mean |ADC − exact| quantization error, all
@@ -2284,7 +2199,7 @@ def _pq_distortion_sql(dialect: str) -> str:
     aggregate — the exact fold runs on k pairs per query, never the
     corpus.
     """
-    base = _pq_adc_sql(dialect)
+    base = pq_adc_topk_sql(dialect)
     prefix = base[: base.rindex("ranked AS (")].rstrip().rstrip(",") + ","
     div = "div" if dialect == "spark" else "//"
     if dialect == "spark":
@@ -2328,11 +2243,7 @@ ORDER BY query_id
 def pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query ADC-vs-exact distance distortion over the top-k pairs."""
     _register(spark, sf_dir)
-    return spark.sql(_pq_distortion_sql("spark"))
-
-
-def pq_distortion_sql() -> str:
-    return _pq_distortion_sql("duckdb")
+    return spark.sql(pq_distortion_sql("spark"))
 
 
 # ------------------------------------------- embedding distribution drift
@@ -2340,7 +2251,7 @@ def pq_distortion_sql() -> str:
 DRIFT_GROUPS = 2  # slices compared: label % 2 (stand-in for two snapshots)
 
 
-def _embedding_drift_sql(dialect: str) -> str:
+def embedding_drift_sql(dialect: str = "duckdb") -> str:
     """Embedding-distribution DRIFT between two corpus slices — the
     vector-space twin of `text_keyness` (that one asks which TOKENS
     shifted; this asks whether the embedding cloud itself moved — the
@@ -2393,17 +2304,13 @@ FROM tot t CROSS JOIN top p
 def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row mean-vector drift report between the two label slices."""
     _register(spark, sf_dir)
-    return spark.sql(_embedding_drift_sql("spark"))
-
-
-def embedding_drift_sql() -> str:
-    return _embedding_drift_sql("duckdb")
+    return spark.sql(embedding_drift_sql("spark"))
 
 
 # ------------------------------------------- IVF cell-balance audit
 
 
-def _ivf_balance_sql(dialect: str) -> str:
+def ivf_balance_sql(dialect: str = "duckdb") -> str:
     """IVF cell-OCCUPANCY balance audit — the partition-skew readout
     for vector search (the `graph_degree_histogram` story applied to
     the index: a hot cell is a hot partition, and at 100 TB one
@@ -2436,11 +2343,7 @@ ORDER BY o.cell
 def ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell occupancy + global imbalance factor of the IVF index."""
     _register(spark, sf_dir)
-    return spark.sql(_ivf_balance_sql("spark"))
-
-
-def ivf_balance_sql() -> str:
-    return _ivf_balance_sql("duckdb")
+    return spark.sql(ivf_balance_sql("spark"))
 
 
 # ------------------------------------------------- cell-pruned kNN graph
@@ -2448,7 +2351,7 @@ def ivf_balance_sql() -> str:
 KNN_K = 3  # neighbors kept per vector
 
 
-def _knn_graph_sql(dialect: str) -> str:
+def knn_graph_sql(dialect: str = "duckdb") -> str:
     """k-NN GRAPH construction, cell-pruned: every vector's top-k
     same-cluster neighbors by exact cosine — the build step for
     graph-based ANN (the base layer HNSW/NSG descend) and the
@@ -2461,12 +2364,12 @@ def _knn_graph_sql(dialect: str) -> str:
     neighbors in OTHER cells are missed; the `sim_ivf_recall` /
     `sim_nprobe_sweep` instruments quantify that trade.
 
-    Reuses the two-Lloyd-round assignment CTEs from ``_kmeans_sql``
-    verbatim (string surgery, the ``_semantic_dedup_sql`` idiom) and
+    Reuses the two-Lloyd-round assignment CTEs from ``kmeans_assign_sql``
+    verbatim (string surgery, the ``semantic_dedup_sql`` idiom) and
     the module's bit-deterministic cosine fold, so ranks and ties
     (cosine DESC, then neighbor id) are identical in both engines.
     """
-    km = _kmeans_sql(dialect)
+    km = kmeans_assign_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -2492,11 +2395,7 @@ ORDER BY src, rank
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``KNN_K`` same-cell neighbors per vector (exact cosine)."""
     _register(spark, sf_dir)
-    return spark.sql(_knn_graph_sql("spark"))
-
-
-def knn_graph_sql() -> str:
-    return _knn_graph_sql("duckdb")
+    return spark.sql(knn_graph_sql("spark"))
 
 
 # --------------------------------------------- HNSW layer assignment
@@ -2504,7 +2403,7 @@ def knn_graph_sql() -> str:
 HNSW_MAX_LAYER = 8  # cap (28-bit hash could reach 27 trailing zeros)
 
 
-def _hnsw_layers_sql(dialect: str) -> str:
+def hnsw_layers_sql(dialect: str = "duckdb") -> str:
     """HNSW layer assignment (Malkov & Yashunin 2018), the index
     SKELETON a distributed graph-ANN build partitions by: each vector
     draws its maximum layer from a geometric distribution, realized
@@ -2555,17 +2454,13 @@ ORDER BY c.layer
 def hnsw_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW layer histogram + level sizes from trailing-zero draws."""
     _register(spark, sf_dir)
-    return spark.sql(_hnsw_layers_sql("spark"))
-
-
-def hnsw_layers_sql() -> str:
-    return _hnsw_layers_sql("duckdb")
+    return spark.sql(hnsw_layers_sql("spark"))
 
 
 # --------------------------------------------- NN-Descent refinement
 
 
-def _nn_descent_sql(dialect: str) -> str:
+def nn_descent_round_sql(dialect: str = "duckdb") -> str:
     """One NN-Descent round (Dong, Moses & Li, WWW'11): start from a
     RANDOM initial neighborhood — the paper's init, realized as k
     deterministic hash-offset edges per vector over the dense vec-id
@@ -2652,11 +2547,7 @@ ORDER BY 1, 4
 def nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Refined top-``KNN_K`` per vector after one NN-Descent round."""
     _register(spark, sf_dir)
-    return spark.sql(_nn_descent_sql("spark"))
-
-
-def nn_descent_round_sql() -> str:
-    return _nn_descent_sql("duckdb")
+    return spark.sql(nn_descent_round_sql("spark"))
 
 
 # --------------------------------------------- hard-negative mining
@@ -2664,7 +2555,7 @@ def nn_descent_round_sql() -> str:
 HARDNEG_K = 3  # negatives kept per anchor
 
 
-def _hard_negatives_sql(dialect: str) -> str:
+def hard_negatives_sql(dialect: str = "duckdb") -> str:
     """Hard-negative mining for contrastive training (the DPR/SimCSE
     data-prep step): for every anchor vector, the top-``HARDNEG_K``
     most-similar vectors with a DIFFERENT label — near-misses the loss
@@ -2680,7 +2571,7 @@ def _hard_negatives_sql(dialect: str) -> str:
     the label filter only shrinks the pair set. Output is the
     (anchor, negative) training-pair table a contrastive run reads.
     """
-    km = _kmeans_sql(dialect)
+    km = kmeans_assign_sql(dialect)
     prefix = km[: km.rindex("SELECT vec_id, cluster FROM a2")].rstrip() + ","
     dot = _dot("x.embedding", "y.embedding", dialect)
     return f"""{prefix}
@@ -2709,11 +2600,7 @@ ORDER BY anchor, rank
 def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top cross-label in-cell negatives per anchor (exact cosine)."""
     _register(spark, sf_dir)
-    return spark.sql(_hard_negatives_sql("spark"))
-
-
-def hard_negatives_sql() -> str:
-    return _hard_negatives_sql("duckdb")
+    return spark.sql(hard_negatives_sql("spark"))
 
 
 # --------------------------------------------- delete-aware search
@@ -2721,7 +2608,7 @@ def hard_negatives_sql() -> str:
 DELETE_MOD = 10  # tombstoned vectors: vec_id % DELETE_MOD == 3 (10%)
 
 
-def _delete_aware_sql(dialect: str) -> str:
+def delete_aware_search_sql(dialect: str = "duckdb") -> str:
     """Deletion-aware vector search — the index-maintenance reality
     check every ANN deployment hits (GDPR erasure, recalled documents,
     churned users): 10% of the corpus is tombstoned (a deterministic
@@ -2774,8 +2661,4 @@ ORDER BY r.query_id, r.rank
 def delete_aware_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone-filtered top-k + per-query index-decay counter."""
     _register(spark, sf_dir)
-    return spark.sql(_delete_aware_sql("spark"))
-
-
-def delete_aware_search_sql() -> str:
-    return _delete_aware_sql("duckdb")
+    return spark.sql(delete_aware_search_sql("spark"))

@@ -456,7 +456,7 @@ ORDER BY r.doc_id
 TOKEN_BUDGET = 600  # tokens kept per source
 
 
-def _token_budget_sql(dialect: str) -> str:
+def token_budget_sample_sql(dialect: str = "duckdb") -> str:
     """Token-budget corpus assembly — "take N tokens per domain": docs
     are ordered per source by the Lehmer hash (a deterministic,
     content-independent shuffle — the same generator as the split
@@ -495,11 +495,7 @@ ORDER BY source, running
 def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token-budget selection (deterministic hash order)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_token_budget_sql("spark"))
-
-
-def token_budget_sample_sql() -> str:
-    return _token_budget_sql("duckdb")
+    return spark.sql(token_budget_sample_sql("spark"))
 
 
 # --------------------------------------------------- k-fold assignment
@@ -728,7 +724,7 @@ LB_BOUNDS = (64, 128, 256, 512)  # token-length bucket upper bounds
 LB_BATCH = 32  # documents per batch within a bucket
 
 
-def _length_buckets_sql(dialect: str) -> str:
+def length_buckets_sql(dialect: str = "duckdb") -> str:
     """Length-bucketed batch assembly — the dataloader "bucketing
     sampler" every padded-batch trainer uses (batch same-length-ish
     docs together so padding waste stays small): docs bucket by token
@@ -780,11 +776,7 @@ def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_length_buckets_sql("spark"))
-
-
-def length_buckets_sql() -> str:
-    return _length_buckets_sql("duckdb")
+    return spark.sql(length_buckets_sql("spark"))
 
 
 # ------------------------------------------- leakage-safe splitting
@@ -860,7 +852,7 @@ EMB_TEST_DAYS = 7  # test = the last full week
 EMB_GAP_DAYS = 1  # embargo: day between train end and test start is DROPPED
 
 
-def _temporal_embargo_sql(dialect: str) -> str:
+def temporal_embargo_sql(dialect: str = "duckdb") -> str:
     """Time-based train/test split with an EMBARGO gap — the temporal
     counterpart of `split_leakage_safe` (that one kills hash/near-dup
     leakage; this kills temporal leakage, the financial-ML "purged
@@ -908,17 +900,13 @@ def temporal_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_temporal_embargo_sql("spark"))
-
-
-def temporal_embargo_sql() -> str:
-    return _temporal_embargo_sql("duckdb")
+    return spark.sql(temporal_embargo_sql("spark"))
 
 
 # ------------------------------------------- split content checksums
 
 
-def _manifest_checksums_sql(dialect: str) -> str:
+def manifest_checksums_sql(dialect: str = "duckdb") -> str:
     """Per-split CONTENT CHECKSUM manifest — the reproducibility audit
     every dataset release ships ("did my train split change between
     builds?"): per split, document count, token mass, and an
@@ -958,11 +946,7 @@ def manifest_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_manifest_checksums_sql("spark"))
-
-
-def manifest_checksums_sql() -> str:
-    return _manifest_checksums_sql("duckdb")
+    return spark.sql(manifest_checksums_sql("spark"))
 
 
 # --------------------------------------------- rendezvous sharding
@@ -970,7 +954,7 @@ def manifest_checksums_sql() -> str:
 RV_SHARDS = 8  # current shard count; the entry also evaluates S+1
 
 
-def _rendezvous_sql(dialect: str) -> str:
+def rendezvous_shards_sql(dialect: str = "duckdb") -> str:
     """Rendezvous / highest-random-weight sharding (Thaler & Ravishankar
     1998) — the consistent-assignment scheme shard routers and
     partitioned caches use: a key lives on the shard maximizing
@@ -1036,11 +1020,7 @@ ORDER BY 1
 def rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard HRW assignment counts + resharding movement audit."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_rendezvous_sql("spark"))
-
-
-def rendezvous_shards_sql() -> str:
-    return _rendezvous_sql("duckdb")
+    return spark.sql(rendezvous_shards_sql("spark"))
 
 
 # --------------------------------------------- uncertainty sampling
@@ -1048,7 +1028,7 @@ def rendezvous_shards_sql() -> str:
 UNCERTAIN_K = 25  # docs surfaced for labeling per round
 
 
-def _uncertainty_sql(dialect: str) -> str:
+def uncertainty_sample_sql(dialect: str = "duckdb") -> str:
     """Active-learning UNCERTAINTY SAMPLING — the model-in-the-loop
     labeling step of a curation pipeline: surface the ``UNCERTAIN_K``
     documents whose quality-classifier logit (`text_quality_logit`'s
@@ -1064,9 +1044,9 @@ def _uncertainty_sql(dialect: str) -> str:
     is TakeOrderedAndProject on (margin, doc_id) — no new shuffle
     class at any corpus size.
     """
-    from .text import LOGIT_KEEP_E6, _quality_logit_sql
+    from .text import LOGIT_KEEP_E6, quality_logit_sql
 
-    scored = _quality_logit_sql(dialect).replace("ORDER BY doc_id", "")
+    scored = quality_logit_sql(dialect).replace("ORDER BY doc_id", "")
     return f"""
 WITH scored AS ({scored}),
 margins AS (
@@ -1088,8 +1068,4 @@ ORDER BY rank
 def uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``UNCERTAIN_K`` docs nearest the quality-gate threshold."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_uncertainty_sql("spark"))
-
-
-def uncertainty_sample_sql() -> str:
-    return _uncertainty_sql("duckdb")
+    return spark.sql(uncertainty_sample_sql("spark"))

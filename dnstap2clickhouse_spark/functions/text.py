@@ -166,9 +166,9 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    return spark.sql(_repetition_sql("spark"))
+    return spark.sql(repetition_filter_sql("spark"))
 
-def _repetition_sql(dialect: str) -> str:
+def repetition_filter_sql(dialect: str = "duckdb") -> str:
     bg = _bigrams(dialect)
     if dialect == "spark":
         # toks computed once in an inner projection (split would otherwise
@@ -201,9 +201,6 @@ SELECT doc_id, n_bigrams,
         AND CAST(top_c AS DOUBLE) / n_bigrams <= {TOP_BIGRAM_MAX}) AS keep
 FROM agg ORDER BY doc_id
 """
-
-def repetition_filter_sql() -> str:
-    return _repetition_sql("duckdb")
 
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprints: content md5 + order-sensitive polynomial
@@ -262,7 +259,7 @@ def _kgram_rows(dialect: str, k: int, where: str = "") -> str:
         return f"SELECT doc_id, explode({g}) AS gram FROM ({inner})"
     return f"SELECT doc_id, unnest({g}) AS gram FROM documents {where}"
 
-def _top_ngrams_sql(dialect: str) -> str:
+def top_ngrams_sql(dialect: str = "duckdb") -> str:
     rows = _kgram_rows(dialect, TOP_NGRAM_K)
     return f"""
 WITH g AS ({rows})
@@ -282,12 +279,9 @@ def top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs: each partition pre-counts its copies before the shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    return spark.sql(_top_ngrams_sql("spark"))
+    return spark.sql(top_ngrams_sql("spark"))
 
-def top_ngrams_sql() -> str:
-    return _top_ngrams_sql("duckdb")
-
-def _decontaminate_sql(dialect: str) -> str:
+def decontaminate_sql(dialect: str = "duckdb") -> str:
     eval_where = f"WHERE source = '{EVAL_SOURCE}'"
     train_where = f"WHERE source <> '{EVAL_SOURCE}'"
     train_rows = _kgram_rows(dialect, DECONTAM_K, train_where)
@@ -322,10 +316,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, both keyed on doc_id."""
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    return spark.sql(_decontaminate_sql("spark"))
-
-def decontaminate_sql() -> str:
-    return _decontaminate_sql("duckdb")
+    return spark.sql(decontaminate_sql("spark"))
 
 # --------------------------------------------------------------- PII scrub
 
@@ -343,7 +334,7 @@ def _re_lit(dialect: str, pat: str) -> str:
     SQL (left alone)."""
     return "'" + (pat.replace("\\", "\\\\") if dialect == "spark" else pat) + "'"
 
-def _pii_scrub_sql(dialect: str) -> str:
+def pii_scrub_sql(dialect: str = "duckdb") -> str:
     """The synthetic corpus carries no PII, so the query INJECTS a
     deterministic specimen of each class per document before scrubbing —
     both dialects inject identically, so the oracle hash certifies the
@@ -395,16 +386,13 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughput, the same cost class as the C4 cleaning pass."""
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    return spark.sql(_pii_scrub_sql("spark"))
-
-def pii_scrub_sql() -> str:
-    return _pii_scrub_sql("duckdb")
+    return spark.sql(pii_scrub_sql("spark"))
 
 # ------------------------------------------------- duplicated-span fraction
 
 DUPSPAN_K = 8  # word 8-grams, the decontamination granularity
 
-def _dup_span_sql(dialect: str) -> str:
+def dup_span_fraction_sql(dialect: str = "duckdb") -> str:
     rows = _kgram_rows(dialect, DUPSPAN_K)
     return f"""
 WITH g AS (SELECT DISTINCT doc_id, gram FROM ({rows})),
@@ -443,10 +431,7 @@ def dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded LSH candidate structure."""
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    return spark.sql(_dup_span_sql("spark"))
-
-def dup_span_fraction_sql() -> str:
-    return _dup_span_sql("duckdb")
+    return spark.sql(dup_span_fraction_sql("spark"))
 
 SEGMENT_WORDS = 10  # C4 dedups ~3-sentence spans; word windows here
 
@@ -545,7 +530,7 @@ def _kw_score_parts(dialect: str) -> tuple[str, str, str]:
     )
     return df_cols, weights, score
 
-def _keyword_search_sql(dialect: str) -> str:
+def keyword_search_sql(dialect: str = "duckdb") -> str:
     """Keyword relevance search with EXACT integer scoring.
 
     Classic tf-idf ranking needs log(N/df) — but libm logs are not
@@ -577,17 +562,14 @@ def keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_keyword_search_sql("spark"))
-
-def keyword_search_sql() -> str:
-    return _keyword_search_sql("duckdb")
+    return spark.sql(keyword_search_sql("spark"))
 
 # --------------------------------------------- unigram-likelihood scoring
 
 UNIGRAM_SCALE = 1_000_000
 
 
-def _unigram_likelihood_sql(dialect: str) -> str:
+def unigram_likelihood_sql(dialect: str = "duckdb") -> str:
     """CCNet-style language-model quality signal, made deterministic:
     instead of KenLM perplexity (float log-probs, not bit-portable), the
     score is the per-doc MEAN TOKEN CORPUS FREQUENCY as an exact scaled
@@ -626,11 +608,7 @@ def unigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc mean token corpus frequency (scaled integer) — the
     deterministic stand-in for LM-perplexity quality filtering."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_unigram_likelihood_sql("spark"))
-
-
-def unigram_likelihood_sql() -> str:
-    return _unigram_likelihood_sql("duckdb")
+    return spark.sql(unigram_likelihood_sql("spark"))
 
 
 # ------------------------------------------------- code-vs-prose gate
@@ -642,7 +620,7 @@ CODE_KEYWORDS = ("def ", "return ", "import ", "function ", "void ", "class ")
 CODE_KW_MIN = 2
 
 
-def _code_detect_sql(dialect: str) -> str:
+def code_detect_sql(dialect: str = "duckdb") -> str:
     """Heuristic code-vs-prose classifier — the curation gate that routes
     documents to the code pipeline (or drops code from a prose corpus):
     symbol-character density plus a keyword-corroboration rule, the
@@ -682,11 +660,7 @@ ORDER BY doc_id
 def code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc code-vs-prose verdict with its exact integer features."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_code_detect_sql("spark"))
-
-
-def code_detect_sql() -> str:
-    return _code_detect_sql("duckdb")
+    return spark.sql(code_detect_sql("spark"))
 
 
 # ----------------------------------------------- hashing-trick features
@@ -694,7 +668,7 @@ def code_detect_sql() -> str:
 HASHED_DIM = 32  # fixed feature dimension (buckets)
 
 
-def _hashed_features_sql(dialect: str) -> str:
+def hashed_features_sql(dialect: str = "duckdb") -> str:
     """Feature hashing (Weinberger et al. 2009, the "hashing trick") —
     the fixed-dimension bag-of-words featurizer large-scale linear
     models and dataset classifiers use: no vocabulary is ever built or
@@ -731,11 +705,7 @@ ORDER BY doc_id, bucket
 def hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse hashed bag-of-words features, ``HASHED_DIM`` buckets."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_hashed_features_sql("spark"))
-
-
-def hashed_features_sql() -> str:
-    return _hashed_features_sql("duckdb")
+    return spark.sql(hashed_features_sql("spark"))
 
 
 # ----------------------------------------------------- BPE merge learning
@@ -746,7 +716,7 @@ BPE_TOP = 5  # pairs reported per round
 BPE_MARK = "@"
 
 
-def _bpe_merges_sql(dialect: str) -> str:
+def bpe_merges_sql(dialect: str = "duckdb") -> str:
     """Byte-pair-encoding merge learning (Sennrich et al. 2016) — the
     tokenizer-TRAINING primitive of an LLM data pipeline (the existing
     `text_regex_tokens` only applies a tokenizer): count all adjacent
@@ -808,13 +778,9 @@ ORDER BY round, rank
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned BPE merge table (2 unrolled rounds) — see `_bpe_merges_sql`."""
+    """Learned BPE merge table (2 unrolled rounds) — see `bpe_merges_sql`."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_bpe_merges_sql("spark"))
-
-
-def bpe_merges_sql() -> str:
-    return _bpe_merges_sql("duckdb")
+    return spark.sql(bpe_merges_sql("spark"))
 
 
 # ----------------------------------------------- linear quality classifier
@@ -823,7 +789,7 @@ LOGIT_W_BUCKETS = 17  # weight domain: lehmer2(bucket) % 17 - 8 in [-8, 8]
 LOGIT_KEEP_E6 = 0  # keep docs with mean token weight >= 0 (logit_e6 scale)
 
 
-def _quality_logit_sql(dialect: str) -> str:
+def quality_logit_sql(dialect: str = "duckdb") -> str:
     """Model-based quality filtering, the DCLM/fastText-classifier shape
     (Li et al. 2024's fastText filter; CCNet's linear LM gate): score
     each document with a FIXED linear model over its hashed bag-of-words
@@ -868,11 +834,7 @@ ORDER BY doc_id
 def quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-weight linear quality classifier over hashed features."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_quality_logit_sql("spark"))
-
-
-def quality_logit_sql() -> str:
-    return _quality_logit_sql("duckdb")
+    return spark.sql(quality_logit_sql("spark"))
 
 
 # ----------------------------------------------- collocation mining
@@ -883,7 +845,7 @@ COLLOC_TOP = 20  # collocations reported
 _COLLOC_E6 = 1_000_000
 
 
-def _collocations_sql(dialect: str) -> str:
+def collocations_sql(dialect: str = "duckdb") -> str:
     """Collocation mining — the corpus-statistics primitive under
     word2vec/GloVe co-occurrence matrices and phrase detection (Mikolov
     et al. 2013's phrase pass): count directional skip-gram pairs
@@ -957,11 +919,7 @@ LIMIT {COLLOC_TOP}
 def collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top skip-gram collocations by exact-integer lift."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_collocations_sql("spark"))
-
-
-def collocations_sql() -> str:
-    return _collocations_sql("duckdb")
+    return spark.sql(collocations_sql("spark"))
 
 
 # ----------------------------------------------- keyness (corpus drift)
@@ -972,7 +930,7 @@ KEYNESS_TOP = 20
 _KEYNESS_E3 = 1000
 
 
-def _keyness_sql(dialect: str) -> str:
+def keyness_sql(dialect: str = "duckdb") -> str:
     """Keyness / corpus-drift detection — which tokens distinguish one
     corpus slice from another (corpus-linguistics keyness analysis;
     the practical "did my crawl distribution shift" and "what
@@ -1020,11 +978,7 @@ LIMIT {KEYNESS_TOP}
 def keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top group-A-distinctive tokens by smoothed frequency ratio."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_keyness_sql("spark"))
-
-
-def keyness_sql() -> str:
-    return _keyness_sql("duckdb")
+    return spark.sql(keyness_sql("spark"))
 
 
 # ----------------------------------------------- BPE merge application
@@ -1032,13 +986,13 @@ def keyness_sql() -> str:
 BPE_MARK2 = "#"  # round-2 merged symbol; ASCII corpus, cannot collide
 
 
-def _bpe_apply_sql(dialect: str) -> str:
+def bpe_apply_sql(dialect: str = "duckdb") -> str:
     """Tokenizer APPLICATION — the other half of `text_bpe_merges`
     (which LEARNS the merge table): apply the two learned merges to
     every word of every document and account the compression, the
     pass a pipeline runs over 100 TB once a tokenizer is frozen.
     The learned winners come from the SAME unrolled CTE chain
-    (string surgery on `_bpe_merges_sql`'s prefix through ``p2`` —
+    (string surgery on `bpe_merges_sql`'s prefix through ``p2`` —
     the merges applied are literally the audited learned ones, they
     cannot drift), each applied as left-to-right non-overlapping
     ``replace`` (identical semantics in both engines). Per document:
@@ -1048,7 +1002,7 @@ def _bpe_apply_sql(dialect: str) -> str:
     counts + two 1-row winner broadcasts + one mapper-side rewrite
     and doc-keyed aggregate.
     """
-    base = _bpe_merges_sql(dialect)
+    base = bpe_merges_sql(dialect)
     prefix = base[: base.index("top1 AS")].rstrip().rstrip(",")
     toks = _toks(dialect)
     unnest = "explode" if dialect == "spark" else "unnest"
@@ -1075,11 +1029,7 @@ ORDER BY doc_id
 def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc compression from applying the learned BPE merges."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_bpe_apply_sql("spark"))
-
-
-def bpe_apply_sql() -> str:
-    return _bpe_apply_sql("duckdb")
+    return spark.sql(bpe_apply_sql("spark"))
 
 
 # ----------------------------------------------- vocabulary growth curve
@@ -1087,7 +1037,7 @@ def bpe_apply_sql() -> str:
 VOCAB_QUARTILES = 4
 
 
-def _vocab_growth_sql(dialect: str) -> str:
+def vocab_growth_sql(dialect: str = "duckdb") -> str:
     """Vocabulary GROWTH curve (Heaps' law) — how fast the distinct-
     token count grows as the corpus accretes, the statistic behind
     "will my tokenizer/vocab saturate" and "is this crawl adding new
@@ -1147,19 +1097,19 @@ ORDER BY i.q
 """
 
 
-#: anchor splitting ``_vocab_growth_sql`` into the doc-rank CTE and the
+#: anchor splitting ``vocab_growth_sql`` into the doc-rank CTE and the
 #: token-side consumers — must match exactly once or the splice raises.
 _VG_TK_ANCHOR = ",\ntk AS ("
 
 
 def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps-law quartile curve — see `_vocab_growth_sql` (distributed
+    """Heaps-law quartile curve — see `vocab_growth_sql` (distributed
     prefix-sum doc rank, staged once)."""
     from ..sources.tables import materialize_scan
     from .splits import LEHMER_P, _bucket2_sql, global_prefix_sum
 
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    sql = _vocab_growth_sql("spark")
+    sql = vocab_growth_sql("spark")
     if sql.count(_VG_TK_ANCHOR) != 1 or not sql.startswith("\nWITH ordered AS ("):
         raise RuntimeError("vocab_growth splice anchor drifted")
     docs = spark.sql(
@@ -1191,10 +1141,6 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def vocab_growth_sql() -> str:
-    return _vocab_growth_sql("duckdb")
-
-
 # ------------------------------------------------ blocked fuzzy match
 
 FUZZY_TITLE_CHARS = 32  # "title" = leading slice of the document
@@ -1202,7 +1148,7 @@ FUZZY_BLOCK_CHARS = 8  # blocking-key prefix
 FUZZY_MAX_DIST = 5
 
 
-def _fuzzy_match_sql(dialect: str) -> str:
+def fuzzy_match_sql(dialect: str = "duckdb") -> str:
     """Blocked edit-distance record linkage — the fuzzy-matching shape
     every entity-resolution / near-title-dedup pipeline runs: a cheap
     BLOCKING key (here the title's first ``FUZZY_BLOCK_CHARS`` chars)
@@ -1249,11 +1195,7 @@ ORDER BY doc_a, doc_b
 def fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-blocked Levenshtein near-title pairs (dist <= 5)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_fuzzy_match_sql("spark"))
-
-
-def fuzzy_match_sql() -> str:
-    return _fuzzy_match_sql("duckdb")
+    return spark.sql(fuzzy_match_sql("spark"))
 
 
 # ------------------------------------------------ bigram LM scoring
@@ -1261,7 +1203,7 @@ def fuzzy_match_sql() -> str:
 BIGRAM_SCALE = 1_000_000
 
 
-def _bigram_lm_sql(dialect: str) -> str:
+def bigram_lm_sql(dialect: str = "duckdb") -> str:
     """Markov-1 extension of `text_unigram_likelihood`: per document,
     the mean CONDITIONAL bigram frequency — for each adjacent pair
     (a, b), ``P(b|a) ~ count(a,b) / count(a,·)`` as an exact scaled
@@ -1310,11 +1252,7 @@ ORDER BY doc_id
 def bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc mean conditional bigram frequency (exact e6 rational)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_bigram_lm_sql("spark"))
-
-
-def bigram_lm_sql() -> str:
-    return _bigram_lm_sql("duckdb")
+    return spark.sql(bigram_lm_sql("spark"))
 
 
 # ------------------------------------------------ winnowing fingerprints
@@ -1323,7 +1261,7 @@ WINNOW_K = 3  # word k-gram granularity
 WINNOW_W = 4  # selection window (guarantee horizon = W + K - 1 words)
 
 
-def _winnow_sql(dialect: str) -> str:
+def winnow_fingerprints_sql(dialect: str = "duckdb") -> str:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every word ``WINNOW_K``-gram,
     slide a ``WINNOW_W``-window over the hash sequence, and in each
@@ -1381,11 +1319,7 @@ ORDER BY doc_id, fp_pos
 def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowed (position, hash) fingerprint set per document."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_winnow_sql("spark"))
-
-
-def winnow_fingerprints_sql() -> str:
-    return _winnow_sql("duckdb")
+    return spark.sql(winnow_fingerprints_sql("spark"))
 
 
 # ------------------------------------------------ TF-IDF top terms
@@ -1394,7 +1328,7 @@ TFIDF_TOP = 3  # terms kept per document
 TFIDF_SCALE = 1_000_000
 
 
-def _tfidf_sql(dialect: str) -> str:
+def tfidf_terms_sql(dialect: str = "duckdb") -> str:
     """Per-document top-``TFIDF_TOP`` terms by TF-IDF — the canonical
     keyword-extraction / document-representation pass (the sparse
     counterpart of the embedding column; BM25-family retrieval and
@@ -1446,11 +1380,7 @@ ORDER BY doc_id, rank
 def tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``TFIDF_TOP`` TF-IDF terms per document (linear-IDF e6)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_tfidf_sql("spark"))
-
-
-def tfidf_terms_sql() -> str:
-    return _tfidf_sql("duckdb")
+    return spark.sql(tfidf_terms_sql("spark"))
 
 
 # ------------------------------------------- content-defined chunking
@@ -1458,7 +1388,7 @@ def tfidf_terms_sql() -> str:
 CDC_DIVISOR = 8  # boundary when token hash % divisor == 0 (mean chunk ~8)
 
 
-def _cdc_sql(dialect: str) -> str:
+def cdc_chunks_sql(dialect: str = "duckdb") -> str:
     """Content-defined chunking (Manber 1994 / LBFS): a chunk boundary
     falls AFTER every token whose hash is ``0 mod CDC_DIVISOR``, so
     boundaries are decided by CONTENT, not position — insert or delete
@@ -1526,17 +1456,13 @@ ORDER BY c.doc_id, chunk_idx
 def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunks per document + corpus occurrence counts."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_cdc_sql("spark"))
-
-
-def cdc_chunks_sql() -> str:
-    return _cdc_sql("duckdb")
+    return spark.sql(cdc_chunks_sql("spark"))
 
 
 # ------------------------------------------- classifier eval harness
 
 
-def _langid_eval_sql(dialect: str) -> str:
+def langid_eval_sql(dialect: str = "duckdb") -> str:
     """Classifier EVALUATION harness over the lang_id heuristic: join
     predictions to the labeled ``lang`` column and emit the confusion
     matrix with per-cell exact-e6 precision (cell / predicted-class
@@ -1581,17 +1507,13 @@ ORDER BY true_lang, pred_lang
 def langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix + per-cell precision/recall of lang_id."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_langid_eval_sql("spark"))
-
-
-def langid_eval_sql() -> str:
-    return _langid_eval_sql("duckdb")
+    return spark.sql(langid_eval_sql("spark"))
 
 
 # ------------------------------------------- tokenizer fertility
 
 
-def _fertility_sql(dialect: str) -> str:
+def tokenizer_fertility_sql(dialect: str = "duckdb") -> str:
     """Tokenizer FERTILITY by source — tokens-per-word, the standard
     tokenizer-evaluation metric (a tokenizer with fertility 2.1 on one
     domain and 1.2 on another inflates the first domain's compute
@@ -1638,11 +1560,7 @@ ORDER BY source
 def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source tokens-per-word fertility (exact e6) + corpus ratio."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_fertility_sql("spark"))
-
-
-def tokenizer_fertility_sql() -> str:
-    return _fertility_sql("duckdb")
+    return spark.sql(tokenizer_fertility_sql("spark"))
 
 
 # ------------------------------------------- decontamination k-sweep
@@ -1650,7 +1568,7 @@ def tokenizer_fertility_sql() -> str:
 DECON_SWEEP_KS = (4, 8, 16)
 
 
-def _decontam_sweep_sql(dialect: str) -> str:
+def decontam_sweep_sql(dialect: str = "duckdb") -> str:
     """Gram-size SENSITIVITY SWEEP for benchmark decontamination — the
     tuning curve behind `text_decontaminate`'s K choice (the
     `dedup_band_sweep` instrument applied to the other knob): for each
@@ -1685,11 +1603,7 @@ JOIN (SELECT DISTINCT gram FROM ({eval_rows}) e2) eg ON tg.gram = eg.gram""")
 def decontam_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dropped-doc and eval-gram counts per candidate gram size."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_decontam_sweep_sql("spark"))
-
-
-def decontam_sweep_sql() -> str:
-    return _decontam_sweep_sql("duckdb")
+    return spark.sql(decontam_sweep_sql("spark"))
 
 
 # ------------------------------------------- robust length outliers
@@ -1697,7 +1611,7 @@ def decontam_sweep_sql() -> str:
 MAD_K = 3  # flag when |x - median| > MAD_K * MAD
 
 
-def _length_outliers_sql(dialect: str) -> str:
+def length_outliers_sql(dialect: str = "duckdb") -> str:
     """Robust length-outlier gate — median/MAD instead of mean/stddev
     (the mean is exactly what a few monster documents corrupt, so the
     classic z-score gate misses the very rows it should drop; the
@@ -1785,7 +1699,7 @@ def _rank_median(spark: SparkSession, df: DataFrame, key: str, name: str = "mad_
 
 def length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median/MAD robust token-length outlier flags per document
-    (distributed nearest-rank medians — see `_length_outliers_sql` for
+    (distributed nearest-rank medians — see `length_outliers_sql` for
     why not unpartitioned windows)."""
     from ..sources.tables import materialize_scan
 
@@ -1807,11 +1721,11 @@ def length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (majority-NULL text): the reference form degrades to the
         # empty relation / NULL flags — don't build literal SQL from
         # Python None (review finding)
-        return spark.sql(_length_outliers_sql("spark"))
+        return spark.sql(length_outliers_sql("spark"))
     devs = lens.select("doc_id", F.expr(f"abs(n_tokens - {med}) AS dev"))
     mad, _ = _rank_median(spark, devs, "dev", name="mad_rank_dev")
     if mad is None:
-        return spark.sql(_length_outliers_sql("spark"))
+        return spark.sql(length_outliers_sql("spark"))
     return lens.select(
         "doc_id",
         "n_tokens",
@@ -1821,7 +1735,3 @@ def length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(abs(n_tokens - {med}) > {MAD_K} * {mad} AS BOOLEAN) AS is_outlier"
         ),
     ).orderBy("doc_id")
-
-
-def length_outliers_sql() -> str:
-    return _length_outliers_sql("duckdb")

@@ -77,7 +77,7 @@ ORDER BY doc_id
 
 # ------------------------------------------------- full modern pipeline
 
-def _curate_v2_sql(dialect: str) -> str:
+def curate_corpus_v2_sql(dialect: str = "duckdb") -> str:
     """The complete modern curation chain in ONE declarative plan:
     quality gate → repetition gate → benchmark decontamination →
     near-dup suppression (LSH-verified pairs, greedy drop-max) →
@@ -98,12 +98,12 @@ def _curate_v2_sql(dialect: str) -> str:
     from ..functions.splits import RESAMPLE_BUCKETS, RESAMPLE_SCALE, _bucket2_sql
     from ..functions.text import (
         EVAL_SOURCE,
-        _decontaminate_sql,
-        _repetition_sql,
+        decontaminate_sql,
+        repetition_filter_sql,
     )
 
-    rep = _repetition_sql(dialect).replace("ORDER BY doc_id", "")
-    dec = _decontaminate_sql(dialect).replace("ORDER BY d.doc_id", "")
+    rep = repetition_filter_sql(dialect).replace("ORDER BY doc_id", "")
+    dec = decontaminate_sql(dialect).replace("ORDER BY d.doc_id", "")
     vp = _lsh_verified_sql(dialect)
     stats = ",\n         ".join(_stats_exprs(dialect))
     cases = " ".join(
@@ -135,17 +135,14 @@ ORDER BY doc_id
 """
 
 def curate_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full modern curation pipeline (see ``_curate_v2_sql``)."""
+    """Full modern curation pipeline (see ``curate_corpus_v2_sql``)."""
     from ..functions.dedup import _register
 
     # same spread-and-register as the dedup chain this plan embeds
     _register(spark, sf_dir)
-    return spark.sql(_curate_v2_sql("spark"))
+    return spark.sql(curate_corpus_v2_sql("spark"))
 
-def curate_corpus_v2_sql() -> str:
-    return _curate_v2_sql("duckdb")
-
-def _curate_v3_sql(dialect: str) -> str:
+def curate_corpus_v3_sql(dialect: str = "duckdb") -> str:
     """v2 plus the SEMANTIC gate — the two-modality curation chain a
     current pretraining pipeline runs (DCLM/Llama-style): the text side
     (quality → repetition → decontamination → LSH-verified lexical
@@ -154,7 +151,7 @@ def _curate_v3_sql(dialect: str) -> str:
     the shared id space (``doc_id == vec_id`` — how a production corpus
     keys its text and embedding shards).
 
-    Built by splicing the semantic verdict into ``_curate_v2_sql`` as a
+    Built by splicing the semantic verdict into ``curate_corpus_v2_sql`` as a
     derived-table LEFT JOIN (join only to DROPPED verdicts; survivors
     see NULL), so the v2 plan text — and everything audited about it —
     is reused verbatim. A doc missing from the embedding shard passes
@@ -166,10 +163,10 @@ def _curate_v3_sql(dialect: str) -> str:
     join — the quarantined-quadratic contract documented on
     ``dedup_semantic`` applies unchanged.
     """
-    from ..functions.similarity import _semantic_dedup_sql
+    from ..functions.similarity import semantic_dedup_sql
 
-    v2 = _curate_v2_sql(dialect)
-    sem = _semantic_dedup_sql(dialect).replace("ORDER BY m.vec_id", "").strip()
+    v2 = curate_corpus_v2_sql(dialect)
+    sem = semantic_dedup_sql(dialect).replace("ORDER BY m.vec_id", "").strip()
     join_anchor = "  LEFT JOIN dropped v ON v.doc_id = s.doc_id\n"
     pred_anchor = "    AND v.doc_id IS NULL\n"
     # EACH anchor must appear exactly once — a drifted single anchor would
@@ -191,15 +188,12 @@ def curate_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_docs(spark, sf_dir)
     _register_emb(spark, sf_dir)
-    return spark.sql(_curate_v3_sql("spark"))
-
-def curate_corpus_v3_sql() -> str:
-    return _curate_v3_sql("duckdb")
+    return spark.sql(curate_corpus_v3_sql("spark"))
 
 
 # --------------------------------------------------------- dataset card
 
-def _dataset_card_sql(dialect: str) -> str:
+def dataset_card_sql(dialect: str = "duckdb") -> str:
     """One-row corpus datasheet — the summary block of a dataset card
     (Gebru et al., "Datasheets for Datasets"): document count, token
     mass, language/source diversity, exact-duplicate rate, and mean
@@ -242,10 +236,7 @@ FROM agg
 def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus datasheet summary row (exact integers throughout)."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_dataset_card_sql("spark"))
-
-def dataset_card_sql() -> str:
-    return _dataset_card_sql("duckdb")
+    return spark.sql(dataset_card_sql("spark"))
 
 
 # ------------------------------------------------ pipeline yield report
@@ -253,13 +244,13 @@ def dataset_card_sql() -> str:
 YIELD_STAGES = ("corpus", "quality", "repetition", "decontam", "near_dup", "resample")
 
 
-def _yield_report_sql(dialect: str) -> str:
+def yield_report_sql(dialect: str = "duckdb") -> str:
     """Per-gate YIELD funnel of the v2 curation pipeline — the ops
     readout a pipeline owner reads before anything else (which gate is
     eating the corpus? did a config change move a stage's drop rate?):
     every v2 gate's survivor count as the gates apply cumulatively, in
     the chain's documented order. Built by string surgery on
-    ``_curate_v2_sql``'s prefix (the audited gate relations themselves
+    ``curate_corpus_v2_sql``'s prefix (the audited gate relations themselves
     — `rep`, `dec`, `dropped`, `scored` — so the report cannot drift
     from the pipeline), with each gate reduced to a 0/1 flag and the
     funnel one aggregate of running conjunctions. The final stage's
@@ -269,7 +260,7 @@ def _yield_report_sql(dialect: str) -> str:
     """
     from ..functions.splits import RESAMPLE_BUCKETS, RESAMPLE_SCALE, _bucket2_sql
 
-    v2 = _curate_v2_sql(dialect)
+    v2 = curate_corpus_v2_sql(dialect)
     prefix = v2[: v2.index("kept AS (")].rstrip().rstrip(",") + ","
     rs = f"{_bucket2_sql('s.doc_id', RESAMPLE_BUCKETS)} < s.quality * {RESAMPLE_SCALE} * {RESAMPLE_BUCKETS}"
     if dialect == "spark":
@@ -332,17 +323,13 @@ def yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import _register
 
     _register(spark, sf_dir)
-    return spark.sql(_yield_report_sql("spark"))
-
-
-def yield_report_sql() -> str:
-    return _yield_report_sql("duckdb")
+    return spark.sql(yield_report_sql("spark"))
 
 
 # ------------------------------------------------ per-source scorecard
 
 
-def _source_scorecard_sql(dialect: str) -> str:
+def source_scorecard_sql(dialect: str = "duckdb") -> str:
     """Per-SOURCE curation scorecard — the "which crawls earn their
     spot in the mix" decision input (`curate_domain_mix` sets
     proportions; THIS is the evidence table it is set from): for every
@@ -350,7 +337,7 @@ def _source_scorecard_sql(dialect: str) -> str:
     summing, so the mean is exact integer arithmetic — no float sum
     order anywhere), and each gate's failure count (low quality,
     repetition, contamination, near-dup), plus the final kept count
-    under the full v2 rule. Gate relations are `_curate_v2_sql`'s own
+    under the full v2 rule. Gate relations are `curate_corpus_v2_sql`'s own
     CTEs (the `curate_yield_report` splice), so the scorecard cannot
     disagree with the pipeline. Plan: the gate relations + one
     source-keyed aggregate (source domain is small; output is
@@ -358,7 +345,7 @@ def _source_scorecard_sql(dialect: str) -> str:
     """
     from ..functions.splits import RESAMPLE_BUCKETS, RESAMPLE_SCALE, _bucket2_sql
 
-    v2 = _curate_v2_sql(dialect)
+    v2 = curate_corpus_v2_sql(dialect)
     prefix = v2[: v2.index("kept AS (")].rstrip().rstrip(",") + ","
     div = "div" if dialect == "spark" else "//"
     rs = f"{_bucket2_sql('s.doc_id', RESAMPLE_BUCKETS)} < s.quality * {RESAMPLE_SCALE} * {RESAMPLE_BUCKETS}"
@@ -396,17 +383,13 @@ def source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import _register
 
     _register(spark, sf_dir)
-    return spark.sql(_source_scorecard_sql("spark"))
-
-
-def source_scorecard_sql() -> str:
-    return _source_scorecard_sql("duckdb")
+    return spark.sql(source_scorecard_sql("spark"))
 
 
 # ------------------------------------------- decontamination certificate
 
 
-def _decontam_certificate_sql(dialect: str) -> str:
+def decontam_certificate_sql(dialect: str = "duckdb") -> str:
     """End-to-end decontamination CERTIFICATE over the v2 pipeline's
     FINAL output: re-derive the held-out eval split's 8-gram set,
     re-probe every document that survived the full curation chain
@@ -426,7 +409,7 @@ def _decontam_certificate_sql(dialect: str) -> str:
     """
     from ..functions.text import DECONTAM_K, EVAL_SOURCE, _kgram_rows
 
-    v2 = _curate_v2_sql(dialect).replace("ORDER BY doc_id", "")
+    v2 = curate_corpus_v2_sql(dialect).replace("ORDER BY doc_id", "")
     train_rows = _kgram_rows(dialect, DECONTAM_K, f"WHERE source <> '{EVAL_SOURCE}'")
     eval_rows = _kgram_rows(dialect, DECONTAM_K, f"WHERE source = '{EVAL_SOURCE}'")
     hint = "/*+ BROADCAST(eg) */ " if dialect == "spark" else ""
@@ -457,16 +440,12 @@ def decontam_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import _register
 
     _register(spark, sf_dir)
-    return spark.sql(_decontam_certificate_sql("spark"))
-
-
-def decontam_certificate_sql() -> str:
-    return _decontam_certificate_sql("duckdb")
+    return spark.sql(decontam_certificate_sql("spark"))
 
 
 # ------------------------------------------- temperature-scaled mixture
 
-def _mixture_temperature_sql(dialect: str) -> str:
+def mixture_temperature_sql(dialect: str = "duckdb") -> str:
     """Temperature-scaled source mixture — the data-recipe move every
     modern pretraining run makes (LLaMA/Gopher report tau ~ 0.5-0.7):
     raw per-source doc counts are flattened to ``n^(1/tau^-1) =
@@ -512,17 +491,13 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_mixture_temperature_sql("spark"))
-
-
-def mixture_temperature_sql() -> str:
-    return _mixture_temperature_sql("duckdb")
+    return spark.sql(mixture_temperature_sql("spark"))
 
 
 # ------------------------------------------- pipeline version diff
 
 
-def _version_diff_sql(dialect: str) -> str:
+def version_diff_sql(dialect: str = "duckdb") -> str:
     """Dataset RELEASE DIFF between pipeline versions — the regression
     report a data team reads before shipping a recipe change: full
     outer join of the v2 and v3 final corpora on doc_id, rolled up per
@@ -537,8 +512,8 @@ def _version_diff_sql(dialect: str) -> str:
     Scale shape: both pipelines' own censuses, plus one doc-keyed full
     outer join and a <= |splits|-row rollup.
     """
-    v2 = _curate_v2_sql(dialect).replace("ORDER BY doc_id", "")
-    v3 = _curate_v3_sql(dialect).replace("ORDER BY doc_id", "")
+    v2 = curate_corpus_v2_sql(dialect).replace("ORDER BY doc_id", "")
+    v3 = curate_corpus_v3_sql(dialect).replace("ORDER BY doc_id", "")
     return f"""
 WITH a AS ({v2}),
 b AS ({v3}),
@@ -566,8 +541,4 @@ def version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_docs(spark, sf_dir)
     _register_emb(spark, sf_dir)
-    return spark.sql(_version_diff_sql("spark"))
-
-
-def version_diff_sql() -> str:
-    return _version_diff_sql("duckdb")
+    return spark.sql(version_diff_sql("spark"))

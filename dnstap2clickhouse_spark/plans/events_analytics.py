@@ -137,7 +137,7 @@ SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
 FROM events GROUP BY event_type ORDER BY event_type
 """
 
-def _value_quantiles_sql(dialect: str) -> str:
+def value_quantiles_sql(dialect: str = "duckdb") -> str:
     """Exact interpolated percentiles per event type, as ONE shared
     SQL text in both dialects: per-type rank + explicit linear
     interpolation ``v_lo + (v_hi - v_lo) * frac`` with
@@ -196,12 +196,9 @@ FROM sel ORDER BY event_type
 
 def value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated per-type percentiles (shared-text
-    interpolation — see `_value_quantiles_sql`)."""
+    interpolation — see `value_quantiles_sql`)."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_value_quantiles_sql("spark"))
-
-def value_quantiles_sql() -> str:
-    return _value_quantiles_sql("duckdb")
+    return spark.sql(value_quantiles_sql("spark"))
 
 def rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-hierarchy rollup: per (day, event_type) counts plus per-day
@@ -1042,7 +1039,7 @@ ORDER BY event_id
 # ------------------------------------------------- time-series gap fill
 
 
-def _gap_fill_sql(dialect: str) -> str:
+def gap_fill_sql(dialect: str = "duckdb") -> str:
     """Dense hourly series per event_type: every hour of the corpus span
     appears for every type, absent hours filled with an explicit 0 — the
     densification step every dashboard/forecast consumer needs before
@@ -1084,11 +1081,7 @@ def gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_gap_fill_sql("spark"))
-
-
-def gap_fill_sql() -> str:
-    return _gap_fill_sql("duckdb")
+    return spark.sql(gap_fill_sql("spark"))
 
 
 # --------------------------------------------------- path transitions
@@ -1096,7 +1089,7 @@ def gap_fill_sql() -> str:
 PATH_TOP = 15
 
 
-def _path_transitions_sql(dialect: str) -> str:
+def path_transitions_sql(dialect: str = "duckdb") -> str:
     """User-journey transition matrix — the product-analytics "what do
     users do next" query: per user, consecutive event pairs (ordered by
     time, event_id tiebreak) counted globally per (from, to) type pair,
@@ -1131,11 +1124,7 @@ LIMIT {PATH_TOP}
 def path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``PATH_TOP`` (from, to) event-type transitions with shares."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_path_transitions_sql("spark"))
-
-
-def path_transitions_sql() -> str:
-    return _path_transitions_sql("duckdb")
+    return spark.sql(path_transitions_sql("spark"))
 
 
 # ------------------------------------------- mergeable HLL partials
@@ -1236,7 +1225,7 @@ def _zorder_interleave(a: str, b: str, bits: int = ZORDER_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _zorder_layout_sql(dialect: str) -> str:
+def zorder_layout_sql(dialect: str = "duckdb") -> str:
     """Z-order (Morton-curve) data layout — the lakehouse OPTIMIZE
     ZORDER BY pass: each dimension is min/max-normalized to the full
     16-bit range (the step every real implementation performs — raw
@@ -1299,11 +1288,7 @@ ORDER BY z_bucket
 def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map summary of the Z-order layout pass (see builder)."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_zorder_layout_sql("spark"))
-
-
-def zorder_layout_sql() -> str:
-    return _zorder_layout_sql("duckdb")
+    return spark.sql(zorder_layout_sql("spark"))
 
 
 # --------------------------------------------- theta sketch set algebra
@@ -1556,7 +1541,7 @@ TTL_RAW_DAYS = 7
 TTL_HOURLY_DAYS = 14
 
 
-def _ttl_rollup_sql(dialect: str) -> str:
+def ttl_rollup_sql(dialect: str = "duckdb") -> str:
     """Age-tiered storage rollup — ClickHouse's ``TTL ... GROUP BY``
     semantics (clickhouse.go's target engine ages out raw rows the same
     way): events younger than 7 days stay RAW, 7-14 days collapse to
@@ -1607,7 +1592,7 @@ ORDER BY tier, bucket_ts, event_type
 
 
 def _ttl_rollup_pushed_sql(raw_us: int, hourly_us: int) -> str:
-    """Spark deployment form of ``_ttl_rollup_sql``: the tier boundaries
+    """Spark deployment form of ``ttl_rollup_sql``: the tier boundaries
     arrive as exact unix-micros LITERALS (one bounded 1-row max(ts)
     collect — the documented scalar class), so each UNION branch is a
     single scan under a STATIC range filter instead of re-deriving the
@@ -1639,7 +1624,7 @@ ORDER BY tier, bucket_ts, event_type
 
 
 def ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Age-tiered TTL rollup (raw / hourly / daily) — see `_ttl_rollup_sql`."""
+    """Age-tiered TTL rollup (raw / hourly / daily) — see `ttl_rollup_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     # exact integer micros: unix_micros is tz-free (a TIMESTAMP collect
     # would round-trip through the Python driver's LOCAL zone), and
@@ -1648,15 +1633,11 @@ def ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT unix_micros(date_trunc('day', max(ts))) AS d0 FROM events"
     ).first()["d0"]
     if d0 is None:  # empty corpus: the reference form returns the empty relation
-        return spark.sql(_ttl_rollup_sql("spark"))
+        return spark.sql(ttl_rollup_sql("spark"))
     day_us = 86_400 * 1_000_000
     return spark.sql(
         _ttl_rollup_pushed_sql(d0 - TTL_RAW_DAYS * day_us, d0 - TTL_HOURLY_DAYS * day_us)
     )
-
-
-def ttl_rollup_sql() -> str:
-    return _ttl_rollup_sql("duckdb")
 
 
 # -------------------------------------------- incremental MV maintenance
@@ -1726,7 +1707,7 @@ def materialized_rollup_sql() -> str:
 # --------------------------------------------- sign-collapse final state
 
 
-def _collapsing_state_sql(dialect: str) -> str:
+def collapsing_state_sql(dialect: str = "duckdb") -> str:
     """CollapsingMergeTree semantics — the remaining merge-tree family
     member of the reference's target store (next to Summing =
     `materialized_rollup`, Replacing/versioned = `scd2_history` /
@@ -1779,11 +1760,7 @@ ORDER BY c.user_id
 def collapsing_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-collapse final state per user + in-hash collapse certificate."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_collapsing_state_sql("spark"))
-
-
-def collapsing_state_sql() -> str:
-    return _collapsing_state_sql("duckdb")
+    return spark.sql(collapsing_state_sql("spark"))
 
 
 # ---------------------------------------------- windowed funnel
@@ -1791,7 +1768,7 @@ def collapsing_state_sql() -> str:
 FUNNEL_WINDOW_DAYS = 3  # completion window anchored at the step-1 time
 
 
-def _window_funnel_sql(dialect: str) -> str:
+def window_funnel_sql(dialect: str = "duckdb") -> str:
     """ClickHouse ``windowFunnel`` semantics next to the unbounded
     `funnel_conversion`: a user converts at step N only via an ordered
     chain signup -> click -> purchase that COMPLETES within
@@ -1838,13 +1815,9 @@ SELECT '{steps[2]}', (SELECT CAST(count(*) AS BIGINT) FROM s3),
 
 
 def window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed funnel counts next to unbounded ones — see `_window_funnel_sql`."""
+    """Windowed funnel counts next to unbounded ones — see `window_funnel_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_window_funnel_sql("spark"))
-
-
-def window_funnel_sql() -> str:
-    return _window_funnel_sql("duckdb")
+    return spark.sql(window_funnel_sql("spark"))
 
 
 # ------------------------------------------------ journey mining
@@ -1852,7 +1825,7 @@ def window_funnel_sql() -> str:
 PATHS_TOP = 15  # top 3-step journeys surfaced
 
 
-def _top_paths_sql(dialect: str) -> str:
+def top_paths_sql(dialect: str = "duckdb") -> str:
     """Top 3-step user journeys — the n-gram extension of the 2-gram
     `path_transitions` (ClickHouse's sequence analytics family): for
     every user, each consecutive (a, b, c) event-type triple in ts
@@ -1880,13 +1853,9 @@ LIMIT {PATHS_TOP}
 
 
 def top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top 3-step journeys with exact counts — see `_top_paths_sql`."""
+    """Top 3-step journeys with exact counts — see `top_paths_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_top_paths_sql("spark"))
-
-
-def top_paths_sql() -> str:
-    return _top_paths_sql("duckdb")
+    return spark.sql(top_paths_sql("spark"))
 
 
 # ------------------------------------------------ exact percentiles
@@ -1894,7 +1863,7 @@ def top_paths_sql() -> str:
 PCT_RANKS = (50, 95, 99)  # nearest-rank percentiles reported
 
 
-def _exact_percentiles_sql(dialect: str) -> str:
+def exact_percentiles_sql(dialect: str = "duckdb") -> str:
     """EXACT per-type value percentiles by nearest-rank selection
     (``percentile_disc`` semantics, ClickHouse ``quantileExact``) — the
     exact counterpart the approximate `events_sketch_stats` entry is
@@ -1929,13 +1898,9 @@ ORDER BY event_type
 
 
 def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact nearest-rank p50/p95/p99 per event type — see `_exact_percentiles_sql`."""
+    """Exact nearest-rank p50/p95/p99 per event type — see `exact_percentiles_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_exact_percentiles_sql("spark"))
-
-
-def exact_percentiles_sql() -> str:
-    return _exact_percentiles_sql("duckdb")
+    return spark.sql(exact_percentiles_sql("spark"))
 
 
 # ------------------------------------------------ sequence matching
@@ -1945,7 +1910,7 @@ SEQ_TO = "purchase"  # chain end
 SEQ_NOT = "error"  # the negative condition: none of these strictly between
 
 
-def _sequence_match_sql(dialect: str) -> str:
+def sequence_match_sql(dialect: str = "duckdb") -> str:
     """ClickHouse ``sequenceMatch('(?1)(?2)')`` semantics WITH a negative
     condition — the event-pattern shape `events_window_funnel` cannot
     express: per user, the earliest signup->purchase chain, plus whether
@@ -1986,11 +1951,7 @@ ORDER BY c.user_id
 def sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user signup->purchase chain with a no-error-between verdict."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_sequence_match_sql("spark"))
-
-
-def sequence_match_sql() -> str:
-    return _sequence_match_sql("duckdb")
+    return spark.sql(sequence_match_sql("spark"))
 
 
 # ------------------------------------------------ A/B experiment analysis
@@ -2016,7 +1977,7 @@ AB_CHI2_DEN = 10_000
 AB_CHI2_SAFE_NT = 10_000_000
 
 
-def _ab_test_sql(dialect: str, safe_nt: int = AB_CHI2_SAFE_NT) -> str:
+def ab_test_sql(dialect: str = "duckdb", safe_nt: int = AB_CHI2_SAFE_NT) -> str:
     """Experiment (A/B) analysis — the product-analytics readout every
     event pipeline ends in: users are assigned a variant by the
     second-round Lehmer hash (deterministic, uncorrelated with the
@@ -2086,11 +2047,7 @@ ORDER BY m.variant
 def ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-variant conversion counts, exact e6 rates, chi-square verdict."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ab_test_sql("spark"))
-
-
-def ab_test_sql() -> str:
-    return _ab_test_sql("duckdb")
+    return spark.sql(ab_test_sql("spark"))
 
 
 # ------------------------------------------- sliding-window distinct users
@@ -2099,7 +2056,7 @@ SLIDE_WINDOW_US = 3600 * 1_000_000  # 1-hour panes ...
 SLIDE_STEP_US = 900 * 1_000_000  # ... every 15 min => 4 panes per event
 
 
-def _sliding_distinct_sql(dialect: str) -> str:
+def sliding_distinct_sql(dialect: str = "duckdb") -> str:
     """EXACT distinct users per hopping window (1 h every 15 min) — the
     batch shape whose count-only flavor `streaming_hopping_window` runs
     as a stream, here with the aggregate no pane-merge can compose from
@@ -2137,13 +2094,9 @@ ORDER BY win_start_us
 
 
 def sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-pane event and distinct-user counts — see `_sliding_distinct_sql`."""
+    """Exact per-pane event and distinct-user counts — see `sliding_distinct_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_sliding_distinct_sql("spark"))
-
-
-def sliding_distinct_sql() -> str:
-    return _sliding_distinct_sql("duckdb")
+    return spark.sql(sliding_distinct_sql("spark"))
 
 
 # ------------------------------------------------ snapshot change capture
@@ -2151,7 +2104,7 @@ def sliding_distinct_sql() -> str:
 CDC_LOOKBACK_DAYS = 25  # old snapshot cut: day-truncated max ts minus this
 
 
-def _change_capture_sql(dialect: str) -> str:
+def change_capture_sql(dialect: str = "duckdb") -> str:
     """CDC changeset DERIVATION — the inverse of `events_upsert_merge`
     (which APPLIES a change batch): diff two as-of snapshots of the
     per-(user, event_type) latest state and emit the (op, old, new)
@@ -2196,13 +2149,9 @@ ORDER BY n.user_id, n.event_type
 
 
 def change_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-diff changeset (insert/update ops) — see `_change_capture_sql`."""
+    """Snapshot-diff changeset (insert/update ops) — see `change_capture_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_change_capture_sql("spark"))
-
-
-def change_capture_sql() -> str:
-    return _change_capture_sql("duckdb")
+    return spark.sql(change_capture_sql("spark"))
 
 
 # ------------------------------------------- equi-depth histogram (stats)
@@ -2210,7 +2159,7 @@ def change_capture_sql() -> str:
 EQD_BUCKETS = 8  # quantile buckets
 
 
-def _equidepth_histogram_sql(dialect: str) -> str:
+def equidepth_histogram_sql(dialect: str = "duckdb") -> str:
     """Equi-DEPTH histogram construction — the optimizer-statistics
     primitive (ClickHouse `quantile`-based stats, Spark CBO column
     histograms, AQE's skew detection all consume this shape), next to
@@ -2252,7 +2201,7 @@ ORDER BY 1
 
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-bucket equi-depth histogram with per-bucket NDV (distributed
-    prefix-sum rank — see `_equidepth_histogram_sql` for why not an
+    prefix-sum rank — see `equidepth_histogram_sql` for why not an
     unpartitioned window)."""
     from ..functions.splits import global_prefix_sum
 
@@ -2260,7 +2209,7 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         # portable NULL placement: Spark windows sort NULLs first, the
         # DuckDB oracle's row_number sorts them last — the boolean
         # prefix pins nulls-last in BOTH engines, the
-        # _value_quantiles_sql pattern (r6 ADVICE finding)
+        # value_quantiles_sql pattern (r6 ADVICE finding)
         "value", "event_id", "value IS NULL AS __vnull"
     )
     ranked, n = global_prefix_sum(
@@ -2273,7 +2222,7 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n == 0:  # reference form: empty ranked relation -> empty output
         load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-        return spark.sql(_equidepth_histogram_sql("spark"))
+        return spark.sql(equidepth_histogram_sql("spark"))
     # n comes free from the prefix sum's own driver offset pass — a
     # count(*) here would be a second full scan (review finding)
     return (
@@ -2293,17 +2242,13 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def equidepth_histogram_sql() -> str:
-    return _equidepth_histogram_sql("duckdb")
-
-
 # ------------------------------------------- seasonal baseline backtest
 
 SEAS_TRAIN_DAYS = 21  # train on the first 3 weeks, test on the rest
 _SEAS_E6 = 1_000_000
 
 
-def _seasonal_baseline_sql(dialect: str) -> str:
+def seasonal_baseline_sql(dialect: str = "duckdb") -> str:
     """Forecast backtesting — the analytics-engine shape under every
     capacity-planning dashboard: fit the SEASONAL-NAIVE baseline
     (per-(type, hour-of-day) mean of the train window) and the global
@@ -2361,11 +2306,7 @@ ORDER BY t.event_type
 def seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive vs global-mean backtest, exact integer MAEs."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_seasonal_baseline_sql("spark"))
-
-
-def seasonal_baseline_sql() -> str:
-    return _seasonal_baseline_sql("duckdb")
+    return spark.sql(seasonal_baseline_sql("spark"))
 
 
 # ------------------------------------------------ series autocorrelation
@@ -2374,7 +2315,7 @@ ACF_LAGS = (1, 24)  # hours: adjacent-hour memory and daily seasonality
 _ACF_E6 = 1_000_000
 
 
-def _autocorrelation_sql(dialect: str) -> str:
+def autocorrelation_sql(dialect: str = "duckdb") -> str:
     """Autocorrelation of the hourly event-count series at the
     ``ACF_LAGS`` lags — the seasonality DETECTOR whose exploitation
     side is `events_seasonal_baseline` (a real pipeline runs this
@@ -2421,11 +2362,7 @@ ORDER BY lag
 def autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-moment autocorrelation of the hourly series at fixed lags."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_autocorrelation_sql("spark"))
-
-
-def autocorrelation_sql() -> str:
-    return _autocorrelation_sql("duckdb")
+    return spark.sql(autocorrelation_sql("spark"))
 
 
 # ------------------------------------------- Markov stationary masses
@@ -2433,7 +2370,7 @@ def autocorrelation_sql() -> str:
 MARKOV_E12 = 1_000_000_000_000
 
 
-def _markov_stationary_sql(dialect: str) -> str:
+def markov_stationary_sql(dialect: str = "duckdb") -> str:
     """Power iteration toward the stationary distribution of the
     event-type Markov chain — "where do user journeys spend their
     time" (the `events_path_transitions` matrix put to its classic
@@ -2497,7 +2434,7 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import materialize_scan
 
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    sql = _markov_stationary_sql("spark")
+    sql = markov_stationary_sql("spark")
     marker = "rowt AS ("
     if sql.count(marker) != 1 or sql.count("FROM pairs") != 3:
         raise RuntimeError("markov pairs splice anchor drifted")
@@ -2508,16 +2445,12 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"WITH {marker}{tail}".replace("FROM pairs", f"FROM {view}"))
 
 
-def markov_stationary_sql() -> str:
-    return _markov_stationary_sql("duckdb")
-
-
 # ------------------------------------------------ feature-store matrix
 
 FEAT_RECENT_DAYS = 7  # recency window for the *_recent features
 
 
-def _feature_matrix_sql(dialect: str) -> str:
+def feature_matrix_sql(dialect: str = "duckdb") -> str:
     """Per-user FEATURE MATRIX materialization — the feature-store
     pass that turns an event log into a fixed-width model input table
     (the batch half of every online/offline feature platform): per
@@ -2559,13 +2492,9 @@ ORDER BY user_id
 
 
 def feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width per-user feature table — see `_feature_matrix_sql`."""
+    """Fixed-width per-user feature table — see `feature_matrix_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_feature_matrix_sql("spark"))
-
-
-def feature_matrix_sql() -> str:
-    return _feature_matrix_sql("duckdb")
+    return spark.sql(feature_matrix_sql("spark"))
 
 
 # ------------------------------------------------ declarative alerting
@@ -2579,7 +2508,7 @@ ALERT_RULES = (
 )
 
 
-def _alert_eval_sql(dialect: str) -> str:
+def alert_eval_sql(dialect: str = "duckdb") -> str:
     """Declarative threshold ALERTING — the monitoring-backend shape
     the reference's ClickHouse deployment ultimately feeds (Grafana
     alert rules over time-bucketed aggregates): a RULES table (literal
@@ -2623,13 +2552,9 @@ ORDER BY r.rule_id, m.h
 
 
 def alert_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fired (rule, hour) alert rows — see `_alert_eval_sql`."""
+    """Fired (rule, hour) alert rows — see `alert_eval_sql`."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_alert_eval_sql("spark"))
-
-
-def alert_eval_sql() -> str:
-    return _alert_eval_sql("duckdb")
+    return spark.sql(alert_eval_sql("spark"))
 
 
 # ------------------------------------------------ DAU / WAU stickiness
@@ -2637,7 +2562,7 @@ def alert_eval_sql() -> str:
 WAU_DAYS = 7
 
 
-def _dau_wau_sql(dialect: str) -> str:
+def dau_wau_sql(dialect: str = "duckdb") -> str:
     """DAU/WAU engagement with the stickiness ratio — THE product-
     analytics headline metric pair: per day, distinct active users that
     day (DAU), distinct users active in the trailing ``WAU_DAYS``
@@ -2676,11 +2601,7 @@ ORDER BY d.day
 def dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day DAU, trailing WAU, and exact e6 stickiness."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_dau_wau_sql("spark"))
-
-
-def dau_wau_sql() -> str:
-    return _dau_wau_sql("duckdb")
+    return spark.sql(dau_wau_sql("spark"))
 
 
 # ------------------------------------------------ SLO error budget
@@ -2688,7 +2609,7 @@ def dau_wau_sql() -> str:
 SLO_BP = 2000  # error-rate SLO in basis points (20%)
 
 
-def _slo_burn_sql(dialect: str) -> str:
+def slo_burn_sql(dialect: str = "duckdb") -> str:
     """SLO error-budget BURN-DOWN — the SRE readout over the event log
     (the reference's telemetry store feeds exactly this dashboard):
     per day, events/errors/exact-bp error rate, whether the day
@@ -2725,11 +2646,7 @@ ORDER BY day
 def slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily SLO compliance and cumulative budget burn — exact integers."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_slo_burn_sql("spark"))
-
-
-def slo_burn_sql() -> str:
-    return _slo_burn_sql("duckdb")
+    return spark.sql(slo_burn_sql("spark"))
 
 
 # ------------------------------------------------ M4 chart downsampling
@@ -2737,7 +2654,7 @@ def slo_burn_sql() -> str:
 M4_WIDTH = 64  # pixel-column buckets
 
 
-def _m4_downsample_sql(dialect: str) -> str:
+def m4_downsample_sql(dialect: str = "duckdb") -> str:
     """M4 time-series downsampling (Jugel et al., VLDB 2014) — the
     pixel-perfect chart reduction a Grafana-class dashboard applies
     before rendering (the reference's telemetry store feeds exactly
@@ -2790,11 +2707,7 @@ def m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_m4_downsample_sql("spark"))
-
-
-def m4_downsample_sql() -> str:
-    return _m4_downsample_sql("duckdb")
+    return spark.sql(m4_downsample_sql("spark"))
 
 
 # ------------------------------------------------ RFM segmentation
@@ -2802,7 +2715,7 @@ def m4_downsample_sql() -> str:
 RFM_TILES = 5
 
 
-def _rfm_sql(dialect: str) -> str:
+def rfm_segments_sql(dialect: str = "duckdb") -> str:
     """RFM customer segmentation — the classic marketing-analytics
     scoring (Hughes 1994): per user, Recency (time since last event),
     Frequency (event count) and Monetary (summed cents-scaled value),
@@ -2851,11 +2764,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_rfm_sql("spark"))
-
-
-def rfm_segments_sql() -> str:
-    return _rfm_sql("duckdb")
+    return spark.sql(rfm_segments_sql("spark"))
 
 
 # ------------------------------------------------ Count-Min sketch
@@ -2865,7 +2774,7 @@ CM_WIDTH = 64  # counters per row (sketch = CM_DEPTH * CM_WIDTH cells)
 CM_TOP = 10  # heavy hitters audited against the sketch
 
 
-def _count_min_sql(dialect: str) -> str:
+def count_min_sql(dialect: str = "duckdb") -> str:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) heavy-hitter
     audit: build the ``CM_DEPTH x CM_WIDTH`` counter sketch over the
     event stream's user ids, then read the top-``CM_TOP`` users (by
@@ -2928,11 +2837,7 @@ def count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_count_min_sql("spark"))
-
-
-def count_min_sql() -> str:
-    return _count_min_sql("duckdb")
+    return spark.sql(count_min_sql("spark"))
 
 
 # ------------------------------------------------ KMV distinct sketch
@@ -2941,7 +2846,7 @@ KMV_K = 16
 _KMV_SPACE = 1 << 28  # the shared 28-bit hash space
 
 
-def _kmv_sql(dialect: str) -> str:
+def kmv_distinct_sql(dialect: str = "duckdb") -> str:
     """KMV / bottom-k distinct sketch (Bar-Yossef et al. 2002; the
     k-minimum-values estimator under theta sketches): keep the ``KMV_K``
     smallest distinct hash values of the key stream; the i-th smallest
@@ -2998,17 +2903,13 @@ def kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_kmv_sql("spark"))
-
-
-def kmv_distinct_sql() -> str:
-    return _kmv_sql("duckdb")
+    return spark.sql(kmv_distinct_sql("spark"))
 
 
 # ------------------------------------------------ zone-map pruning audit
 
 
-def _zonemap_prune_sql(dialect: str) -> str:
+def zonemap_prune_sql(dialect: str = "duckdb") -> str:
     """Zone-map PRUNING audit — the payoff query for the
     `events_zorder_layout` pass: take the Z-order zone map (per-bucket
     min/max rectangles over (user_id, hour)) and a concrete 2-D range
@@ -3026,7 +2927,7 @@ def _zonemap_prune_sql(dialect: str) -> str:
     the intersect test is a narrow map over bucket rows. The corpus is
     touched only by the layout pass this splices (one aggregate).
     """
-    base = _zorder_layout_sql(dialect)
+    base = zorder_layout_sql(dialect)
     body = base[: base.rindex("ORDER BY z_bucket")].rstrip()
     idiv = "div" if dialect == "spark" else "//"
     return f"""
@@ -3049,11 +2950,7 @@ ORDER BY z.z_bucket
 def zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket scan/skip decision for a mid-quartile 2-D predicate."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_zonemap_prune_sql("spark"))
-
-
-def zonemap_prune_sql() -> str:
-    return _zonemap_prune_sql("duckdb")
+    return spark.sql(zonemap_prune_sql("spark"))
 
 
 # ------------------------------------------------ numeric feature drift
@@ -3061,7 +2958,7 @@ def zonemap_prune_sql() -> str:
 VALUE_DRIFT_FLAG_E6 = 10_000  # flag a decile whose share moved >= 1 pp
 
 
-def _value_drift_sql(dialect: str) -> str:
+def value_drift_sql(dialect: str = "duckdb") -> str:
     """Numeric feature drift — the training-serving-skew monitor: bin
     the REFERENCE window (first half of the observation span, the
     "training" distribution) into exact nearest-rank deciles, bucket
@@ -3137,7 +3034,7 @@ ORDER BY bucket
 """
 
 
-#: anchors splitting ``_value_drift_sql`` into (c/b/tagged corpus pass),
+#: anchors splitting ``value_drift_sql`` into (c/b/tagged corpus pass),
 #: (ref/ranked/n1/edges — the rank machinery the prefix sum replaces),
 #: and the shared bucket/share tail — each must match exactly once.
 _VD_REF_ANCHOR = "\nref AS ("
@@ -3147,12 +3044,12 @@ _VD_TAIL_ANCHOR = "\nbucketed AS ("
 def value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-decile value-share drift vs the reference-half edges
     (staged corpus pass + prefix-sum edge ranks — see
-    `_value_drift_sql` for why not an unpartitioned window)."""
+    `value_drift_sql` for why not an unpartitioned window)."""
     from ..functions.splits import global_prefix_sum
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    sql = _value_drift_sql("spark")
+    sql = value_drift_sql("spark")
     i1, i2 = sql.find(_VD_REF_ANCHOR), sql.find(_VD_TAIL_ANCHOR)
     if (
         sql.count(_VD_REF_ANCHOR) != 1
@@ -3219,16 +3116,12 @@ def value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def value_drift_sql() -> str:
-    return _value_drift_sql("duckdb")
-
-
 # ------------------------------------------------ Lorenz curve + Gini
 
 LORENZ_TILES = 10
 
 
-def _lorenz_sql(dialect: str) -> str:
+def lorenz_gini_sql(dialect: str = "duckdb") -> str:
     """Value-concentration report — the Lorenz curve and exact Gini
     coefficient of per-user monetary value ("what share of revenue do
     the top deciles carry"), the whale-analysis readout every
@@ -3286,11 +3179,7 @@ def lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_lorenz_sql("spark"))
-
-
-def lorenz_gini_sql() -> str:
-    return _lorenz_sql("duckdb")
+    return spark.sql(lorenz_gini_sql("spark"))
 
 
 # ------------------------------------------------ decile migration
@@ -3298,7 +3187,7 @@ def lorenz_gini_sql() -> str:
 MIGRATION_TILES = 10
 
 
-def _decile_migration_sql(dialect: str) -> str:
+def decile_migration_sql(dialect: str = "duckdb") -> str:
     """User value-decile MIGRATION matrix between window halves — the
     segment-movement report a growth team reads next to RFM ("are my
     top-decile users staying top-decile?"): per user the summed
@@ -3359,17 +3248,13 @@ def decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_decile_migration_sql("spark"))
-
-
-def decile_migration_sql() -> str:
-    return _decile_migration_sql("duckdb")
+    return spark.sql(decile_migration_sql("spark"))
 
 
 # ------------------------------------------------ new vs returning
 
 
-def _new_returning_sql(dialect: str) -> str:
+def new_returning_sql(dialect: str = "duckdb") -> str:
     """Weekly NEW vs RETURNING user split — the growth team's first
     chart (`events_dau_wau` gives stickiness; this attributes each
     week's active mass to acquisition vs retention): a user's first
@@ -3415,17 +3300,13 @@ def new_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_new_returning_sql("spark"))
-
-
-def new_returning_sql() -> str:
-    return _new_returning_sql("duckdb")
+    return spark.sql(new_returning_sql("spark"))
 
 
 # ------------------------------------------------ weekday profile
 
 
-def _weekday_profile_sql(dialect: str) -> str:
+def weekday_profile_sql(dialect: str = "duckdb") -> str:
     """Weekday ACTIVITY profile — the seasonality fingerprint
     (`events_seasonal_baseline` exploits daily seasonality; this is
     the weekly-shape readout capacity planning and anomaly baselining
@@ -3463,8 +3344,4 @@ def weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("events",))
-    return spark.sql(_weekday_profile_sql("spark"))
-
-
-def weekday_profile_sql() -> str:
-    return _weekday_profile_sql("duckdb")
+    return spark.sql(weekday_profile_sql("spark"))

@@ -28,7 +28,7 @@ R_E12 = 1_000_000_000_000  # total rank mass, e12-scaled
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an exact rational
 PAGERANK_TOP = 20
 
-def _pagerank_sql(dialect: str) -> str:
+def pagerank_top_sql(dialect: str = "duckdb") -> str:
     d = "div" if dialect == "spark" else "//"
     teleport = f"(({DAMP_DEN - DAMP_NUM} * ({R_E12} {d} n)) {d} {DAMP_DEN})"
 
@@ -128,10 +128,22 @@ def pagerank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PAGERANK_TOP)
     )
     w = W.orderBy(F.desc("rank_e12"), "vertex")
-    return top.withColumn("pos", F.row_number().over(w).cast("bigint")).orderBy("pos")
+    return _release(
+        top.withColumn("pos", F.row_number().over(w).cast("bigint")).orderBy("pos"),
+        deg,
+        edges,
+    )
 
-def pagerank_top_sql() -> str:
-    return _pagerank_sql("duckdb")
+
+def _release(result: DataFrame, *cached: DataFrame) -> DataFrame:
+    """Materialize ``result`` (an eager ``localCheckpoint``, as
+    ``propagate_min_labels`` does), then unpersist every relation the
+    caller persisted: the returned DataFrame no longer reads them, so no
+    call leaves a cached relation in the session."""
+    result = result.localCheckpoint()
+    for df_ in cached:
+        df_.unpersist()
+    return result
 
 
 # ------------------------------------------------------ triangle count
@@ -177,7 +189,7 @@ def _copurchase_pairs_df(spark: SparkSession, sf_dir: str):
     )
 
 
-def _triangle_sql(dialect: str) -> str:
+def triangle_count_sql(dialect: str = "duckdb") -> str:
     """Triangle count over the part co-purchase graph (two parts are
     adjacent when one order ships both with quantity >= TRIANGLE_MIN_QTY),
     using DEGREE-ORDERED edge orientation — the classic O(E^1.5) bound.
@@ -243,11 +255,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_triangle_sql("spark"))
-
-
-def triangle_count_sql() -> str:
-    return _triangle_sql("duckdb")
+    return spark.sql(triangle_count_sql("spark"))
 
 
 # ------------------------------------------------- neighbor similarity
@@ -256,7 +264,7 @@ JACCARD_NEIGHBORS_TOP = 20
 JN_MIN_COMMON = 2  # wedge-count floor before a pair is scored
 
 
-def _jaccard_neighbors_sql(dialect: str) -> str:
+def jaccard_neighbors_sql(dialect: str = "duckdb") -> str:
     """Top node pairs by neighborhood Jaccard |N(a) AND N(b)| /
     |N(a) OR N(b)| over the co-purchase graph — the "customers who
     bought X also bought Y" similar-products query.
@@ -271,7 +279,7 @@ def _jaccard_neighbors_sql(dialect: str) -> str:
     Scale shape: wedge volume is sum(deg^2) — at 100 TB the standard
     guards are a hub-degree cap (drop or sample celebrity vertices,
     which add noise to co-occurrence similarity anyway) or the
-    degree-ordered orientation used by `_triangle_sql`; at the corpus
+    degree-ordered orientation used by `triangle_count_sql`; at the corpus
     sizes the oracle certifies the plain wedge group-by is the right
     plan. Reference scope: beyond dnstap2clickhouse's surface; the
     co-occurrence-similarity formulation is the public
@@ -319,11 +327,7 @@ def jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_jaccard_neighbors_sql("spark"))
-
-
-def jaccard_neighbors_sql() -> str:
-    return _jaccard_neighbors_sql("duckdb")
+    return spark.sql(jaccard_neighbors_sql("spark"))
 
 
 # ------------------------------------------------------------- k-core
@@ -332,7 +336,7 @@ KCORE_K = 3  # coreness threshold
 KCORE_ROUNDS = 4  # unrolled peel rounds (convergence certified in-query)
 
 
-def _kcore_sql(dialect: str) -> str:
+def kcore_sql(dialect: str = "duckdb") -> str:
     """K-core decomposition of the part co-purchase graph by iterative
     peeling: repeatedly drop vertices with degree < k and re-derive the
     induced subgraph. The classic "dense cohort" graph primitive (spam
@@ -421,7 +425,7 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg0 = sym.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     k = deg0.filter(F.col("deg") >= KCORE_K).select("u")
     counts: list[int] = []
-    ks = []  # per-round survivor caches, released below
+    ks = []  # per-round survivor caches, released by _release
     n_last = None
     for _ in range(KCORE_ROUNDS):
         k = k.persist()
@@ -436,24 +440,17 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ks.append(k)
     counts.append(k.count())
     converged = counts[-1] == counts[-2]
-    # release every per-round cache the returned result does not need:
-    # it reads sym + the LAST loop round's survivor set (ks[-2], which
-    # n_last joins against) — the cd41544 leak discipline
-    for df_ in ks[:-2] + ks[-1:]:
-        df_.unpersist()
-    return (
+    return _release(
         n_last.filter(F.col("deg") >= KCORE_K)
         .select(
             F.col("u").alias("part"),
             F.col("deg").alias("core_degree"),
             F.lit(converged).alias("converged"),
         )
-        .orderBy("part")
+        .orderBy("part"),
+        sym,
+        *ks,
     )
-
-
-def kcore_sql() -> str:
-    return _kcore_sql("duckdb")
 
 
 # ------------------------------------------------ multi-source BFS
@@ -462,7 +459,7 @@ BFS_SEEDS = 4  # hub seeds: top-degree vertices (deterministic id tiebreak)
 BFS_ROUNDS = 3  # unrolled frontier expansions => distances 0..BFS_ROUNDS
 
 
-def _bfs_sql(dialect: str) -> str:
+def bfs_distance_sql(dialect: str = "duckdb") -> str:
     """Multi-source BFS distance over the part co-purchase graph — the
     frontier-expansion primitive next to the repo's other iterative
     graph shapes (label propagation = `dedup_cc_clusters`, damped walks
@@ -546,34 +543,28 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = seeds.select("u", F.lit(0).cast("bigint").alias("dist")).persist()
     stats = []  # (reached count, distance mass) per round
     stats.append((d.count(), 0))
-    superseded = []  # per-round distance caches, released below
+    rounds = [d]  # per-round distance caches, released by _release
     for _ in range(BFS_ROUNDS):
         relax = sym.join(d, "u").select(
             F.col("v").alias("u"), (F.col("dist") + F.lit(1)).cast("bigint").alias("dist")
         )
-        superseded.append(d)
         d = (
             d.unionAll(relax)
             .groupBy("u")
             .agg(F.min("dist").cast("bigint").alias("dist"))
             .persist()
         )
+        rounds.append(d)
         row = d.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dist").alias("mass")
         ).collect()[0]
         stats.append((row.n, row.mass))
     converged = stats[-1] == stats[-2]
-    # release superseded per-round caches (the returned result reads
-    # only the FINAL distance table; sym stays for its re-materialization)
-    for df_ in superseded:
-        df_.unpersist()
-    return (
-        d.select("u", "dist", F.lit(converged).alias("converged")).orderBy("u")
+    return _release(
+        d.select("u", "dist", F.lit(converged).alias("converged")).orderBy("u"),
+        sym,
+        *rounds,
     )
-
-
-def bfs_distance_sql() -> str:
-    return _bfs_sql("duckdb")
 
 
 # ------------------------------------------------ partition modularity
@@ -581,7 +572,7 @@ def bfs_distance_sql() -> str:
 _MOD_E6 = 1_000_000
 
 
-def _modularity_sql(dialect: str) -> str:
+def modularity_sql(dialect: str = "duckdb") -> str:
     """Newman modularity of a vertex partition over the part
     co-purchase graph — the community-quality readout every graph
     clustering is scored by: ``Q = sum_c (m_c/m - (d_c/2m)^2)`` with
@@ -625,11 +616,7 @@ def modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_modularity_sql("spark"))
-
-
-def modularity_sql() -> str:
-    return _modularity_sql("duckdb")
+    return spark.sql(modularity_sql("spark"))
 
 
 # ------------------------------------------------ degree assortativity
@@ -637,7 +624,7 @@ def modularity_sql() -> str:
 _ASSORT_E6 = 1_000_000
 
 
-def _assortativity_sql(dialect: str) -> str:
+def assortativity_sql(dialect: str = "duckdb") -> str:
     """Degree assortativity of the part co-purchase graph (Newman 2002)
     — the mixing-pattern metric next to `graph_modularity`'s community
     quality: do high-degree parts co-purchase with other hubs (r > 0)
@@ -680,11 +667,7 @@ def assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_assortativity_sql("spark"))
-
-
-def assortativity_sql() -> str:
-    return _assortativity_sql("duckdb")
+    return spark.sql(assortativity_sql("spark"))
 
 
 # ------------------------------------------------ degree distribution
@@ -692,7 +675,7 @@ def assortativity_sql() -> str:
 DEG_HIST_MAX_BIN = 14  # log2 bins 0..14 (degree >= 2^14 folds into the top)
 
 
-def _degree_histogram_sql(dialect: str) -> str:
+def degree_histogram_sql(dialect: str = "duckdb") -> str:
     """Log-binned degree distribution of the part co-purchase graph —
     the first diagnostic run on any production graph (is it power-law?
     where does the celebrity tail start? which bin breaks the wedge
@@ -727,11 +710,7 @@ def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_degree_histogram_sql("spark"))
-
-
-def degree_histogram_sql() -> str:
-    return _degree_histogram_sql("duckdb")
+    return spark.sql(degree_histogram_sql("spark"))
 
 
 # ------------------------------------------------ clustering coefficient
@@ -739,19 +718,19 @@ def degree_histogram_sql() -> str:
 _CLUST_E6 = 1_000_000
 
 
-def _clustering_sql(dialect: str) -> str:
+def clustering_coefficient_sql(dialect: str = "duckdb") -> str:
     """Global clustering coefficient (transitivity) of the co-purchase
     graph — `3 * triangles / open wedges`, the "do my customers'
     baskets close into cliques" readout and the third global graph
     metric beside `graph_modularity` (community quality) and
     `graph_assortativity` (mixing). Triangles come from the audited
-    degree-ordered census (`_triangle_sql`'s CTEs spliced verbatim —
+    degree-ordered census (`triangle_count_sql`'s CTEs spliced verbatim —
     the count cannot drift from the standalone entry); the wedge
     denominator is the exact ``sum(d*(d-1)/2)`` over the SAME degree
     relation. The coefficient emits as the exact e6 integer quotient;
     dividend ``3*T*e6`` is BIGINT-safe to ~3e12 triangles.
     """
-    base = _triangle_sql(dialect)
+    base = triangle_count_sql(dialect)
     prefix = base[: base.rindex("SELECT (SELECT")].rstrip().rstrip(",") + ","
     div = "div" if dialect == "spark" else "//"
     return f"""{prefix}
@@ -770,11 +749,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_clustering_sql("spark"))
-
-
-def clustering_coefficient_sql() -> str:
-    return _clustering_sql("duckdb")
+    return spark.sql(clustering_coefficient_sql("spark"))
 
 
 # ------------------------------------------------- link prediction
@@ -783,7 +758,7 @@ LP_TOP = 20
 LP_MIN_COMMON = 2  # common-neighbor floor before a pair is scored
 
 
-def _link_predict_sql(dialect: str) -> str:
+def link_predict_sql(dialect: str = "duckdb") -> str:
     """Link prediction by the resource-allocation index (Zhou, Lü &
     Zhang 2009): for each NON-adjacent pair, ``RA(a,b) = Σ_{z ∈
     N(a)∩N(b)} 1/deg(z)`` — common neighbors weighted inversely by how
@@ -834,11 +809,7 @@ def link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_link_predict_sql("spark"))
-
-
-def link_predict_sql() -> str:
-    return _link_predict_sql("duckdb")
+    return spark.sql(link_predict_sql("spark"))
 
 
 # ------------------------------------------------- butterfly counting
@@ -846,7 +817,7 @@ def link_predict_sql() -> str:
 BUTTERFLY_TOP = 20
 
 
-def _butterfly_sql(dialect: str) -> str:
+def butterfly_count_sql(dialect: str = "duckdb") -> str:
     """Butterfly (2x2 biclique) counting on the BIPARTITE order↔part
     graph — the bipartite analogue of the triangle census
     (`graph_triangle_count` runs on the projected graph; butterflies
@@ -890,8 +861,4 @@ def butterfly_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_butterfly_sql("spark"))
-
-
-def butterfly_count_sql() -> str:
-    return _butterfly_sql("duckdb")
+    return spark.sql(butterfly_count_sql("spark"))

@@ -1132,7 +1132,7 @@ ORDER BY revenue DESC, c_custkey LIMIT {limit}
 LATERAL_SEGMENT = "BUILDING"
 LATERAL_N = 2
 
-def _lateral_topn_sql(dialect: str) -> str:
+def lateral_topn_orders_sql(dialect: str = "duckdb") -> str:
     # DuckDB requires an explicit ON for JOIN LATERAL; Spark rejects one
     on = " ON true" if dialect == "duckdb" else ""
     return f"""
@@ -1158,10 +1158,7 @@ def lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_lateral_topn_sql("spark"))
-
-def lateral_topn_orders_sql() -> str:
-    return _lateral_topn_sql("duckdb")
+    return spark.sql(lateral_topn_orders_sql("spark"))
 
 
 # ------------------------------------------------ salted-join entry
@@ -1222,7 +1219,7 @@ ORDER BY o.o_orderpriority
 # ------------------------------------------------- HHI concentration
 
 
-def _supplier_hhi_sql(dialect: str) -> str:
+def supplier_hhi_sql(dialect: str = "duckdb") -> str:
     """Supply-chain CONCENTRATION: the Herfindahl-Hirschman index of
     supplier revenue share within each nation — the antitrust/risk
     metric ("is this nation's supply dominated by one supplier?"),
@@ -1269,11 +1266,7 @@ def supplier_hhi(spark, sf_dir: str):
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem", "supplier", "nation"))
-    return spark.sql(_supplier_hhi_sql("spark"))
-
-
-def supplier_hhi_sql() -> str:
-    return _supplier_hhi_sql("duckdb")
+    return spark.sql(supplier_hhi_sql("spark"))
 
 
 # ------------------------------------------------- order aging report
@@ -1281,7 +1274,7 @@ def supplier_hhi_sql() -> str:
 AGING_DAYS = (30, 90, 365)  # bucket edges (days before the snapshot)
 
 
-def _order_aging_sql(dialect: str) -> str:
+def order_aging_sql(dialect: str = "duckdb") -> str:
     """Open-order AGING report — the operational warehouse query every
     order desk runs ("what's been open 30/90/365+ days, and how much
     money is stuck"): non-final orders (status <> 'F') bucketed by age
@@ -1323,11 +1316,7 @@ def order_aging(spark, sf_dir: str):
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("orders",))
-    return spark.sql(_order_aging_sql("spark"))
-
-
-def order_aging_sql() -> str:
-    return _order_aging_sql("duckdb")
+    return spark.sql(order_aging_sql("spark"))
 
 
 # ------------------------------------------------- discount bands
@@ -1335,7 +1324,7 @@ def order_aging_sql() -> str:
 DISCOUNT_BAND_E2 = 2  # 2-percentage-point discount bands
 
 
-def _discount_bands_sql(dialect: str) -> str:
+def discount_bands_sql(dialect: str = "duckdb") -> str:
     """Discount EFFECTIVENESS bands — the pricing-analytics rollup
     behind Q19's point lookup ("does a deeper discount actually move
     volume, and what does it cost in revenue?"): lineitems grouped
@@ -1375,8 +1364,4 @@ def discount_bands(spark, sf_dir: str):
     from ..sources.tables import register_views
 
     register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_discount_bands_sql("spark"))
-
-
-def discount_bands_sql() -> str:
-    return _discount_bands_sql("duckdb")
+    return spark.sql(discount_bands_sql("spark"))

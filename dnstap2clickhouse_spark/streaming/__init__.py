@@ -1,5 +1,4 @@
 from .pipeline import (
-    read_events_stream,
     streaming_response_time_join,
     streaming_exact_dedup,
     streaming_curation_filter,
@@ -9,7 +8,6 @@ from .pipeline import (
 from .match_state import stateful_match_once, tag_pair_streams, simulate_match
 
 __all__ = [
-    "read_events_stream",
     "streaming_response_time_join",
     "streaming_exact_dedup",
     "streaming_curation_filter",

@@ -32,21 +32,8 @@ from pyspark.sql.types import TimestampType
 
 from ..config import AggregatorConfig
 from ..operators.join import _j1_pair
-from ..sources.events import BRIDGE_SCHEMA, dns_pair_streams
+from ..sources.events import dns_pair_streams
 from ..sources.tables import load_table, materialize_scan
-
-def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """File-source stream over events-shaped parquet chunks.
-
-    Schema is pinned to ``BRIDGE_SCHEMA`` (file streams must not infer).
-    ``maxFilesPerTrigger=1`` makes each file one micro-batch, mirroring
-    the reference's framed micro-batching.
-    """
-    return (
-        spark.readStream.schema(BRIDGE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
 
 def streaming_response_time_join(
     events: DataFrame,
@@ -244,15 +231,15 @@ def streaming_curation_sql() -> str:
     composition (quality >= min AND repetition keep AND not
     contaminated) over the training-side documents."""
     from ..functions.text import (
-        _decontaminate_sql,
+        decontaminate_sql,
         _quality_expr,
-        _repetition_sql,
+        repetition_filter_sql,
         _stats_exprs,
     )
     from ..plans.curation import QUALITY_MIN
 
-    rep = _repetition_sql("duckdb").replace("ORDER BY doc_id", "")
-    dec = _decontaminate_sql("duckdb").replace("ORDER BY d.doc_id", "")
+    rep = repetition_filter_sql("duckdb").replace("ORDER BY doc_id", "")
+    dec = decontaminate_sql("duckdb").replace("ORDER BY d.doc_id", "")
     stats = ", ".join(_stats_exprs("duckdb"))
     return f"""
 WITH rep AS ({rep}),

@@ -382,13 +382,13 @@ def test_kgrams_and_decontaminate_handle_short_docs(spark):
     spark.createDataFrame(rows, cols).createOrReplaceTempView("documents")
     try:
         got = {r.doc_id: (r.n_shared, r.contaminated)
-               for r in spark.sql(ft._decontaminate_sql("spark")).collect()}
+               for r in spark.sql(ft.decontaminate_sql("spark")).collect()}
         assert got == {2: (0, False), 3: (0, False), 4: (0, False)}
         con = duckdb.connect()
         con.register("documents", pd.DataFrame(rows, columns=cols))
         oracle = {
             int(r.doc_id): (int(r.n_shared), bool(r.contaminated))
-            for _, r in con.execute(ft._decontaminate_sql("duckdb")).df().iterrows()
+            for _, r in con.execute(ft.decontaminate_sql("duckdb")).df().iterrows()
         }
         assert oracle == got
     finally:

@@ -4,7 +4,8 @@ for the edges a replay cannot reach — one-triangle and wedge-free
 graphs, k-core cascades at and beyond the unroll depth, a BFS chain
 longer than the unroll — and the plan property the SQL-form entries
 rely on: the co-purchase edge build is shared by Spark's exchange
-reuse, not by a cached relation left in the session.
+reuse, not by a cached relation left in the session, and the
+DataFrame-form entries release every relation they persist.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import itertools
 from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from dnstap2clickhouse_spark.plans import graph as pgraph
@@ -64,7 +66,7 @@ def test_pagerank_mass_conservation(spark):
     dust + per-edge division dust) of it."""
     register_views(spark, SF, ("orders", "lineitem"))
     full = spark.sql(
-        pgraph._pagerank_sql("spark").replace(
+        pgraph.pagerank_top_sql("spark").replace(
             f"WHERE pos <= {pgraph.PAGERANK_TOP}", ""
         )
     )
@@ -131,7 +133,7 @@ def test_triangle_count_fixture(spark):
         ).selectExpr(
             "* EXCEPT (l_shipdate)", "CAST(l_shipdate AS TIMESTAMP) AS l_shipdate"
         ).createOrReplaceTempView("lineitem")
-        row = spark.sql(pgraph._triangle_sql("spark")).collect()[0]
+        row = spark.sql(pgraph.triangle_count_sql("spark")).collect()[0]
     finally:
         orig.createOrReplaceTempView("lineitem")
     assert (row.n_nodes, row.n_edges, row.n_triangles) == (5, 4, 1)
@@ -158,7 +160,7 @@ def test_triangle_count_wedge_free_graph_reports_zero(spark):
         ).selectExpr(
             "* EXCEPT (l_shipdate)", "CAST(l_shipdate AS TIMESTAMP) AS l_shipdate"
         ).createOrReplaceTempView("lineitem")
-        row = spark.sql(pgraph._triangle_sql("spark")).collect()[0]
+        row = spark.sql(pgraph.triangle_count_sql("spark")).collect()[0]
     finally:
         orig.createOrReplaceTempView("lineitem")
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (4, 2, 0, 0)
@@ -179,8 +181,18 @@ def test_triangle_count_shares_edge_build_by_exchange_reuse(spark):
     assert "ReusedExchange" in plan
     assert "InMemoryTableScan" not in plan
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    want = sorted(tuple(r) for r in spark.sql(pgraph._triangle_sql("spark")).collect())
+    want = sorted(tuple(r) for r in spark.sql(pgraph.triangle_count_sql("spark")).collect())
     assert rows == want and rows
+
+
+@pytest.mark.parametrize("name", ["pagerank_top", "kcore", "bfs_distance"])
+def test_dataframe_entries_leave_nothing_cached(spark, name):
+    """The DataFrame-form entries persist their edge build and per-round
+    tables; each materializes its result once and unpersists them all,
+    so no call leaves a cached relation in the session."""
+    spark.catalog.clearCache()
+    assert getattr(pgraph, name)(spark, SF).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ------------------------------------------------ clustering coefficient
@@ -301,7 +313,7 @@ def test_kcore_cascade_fixture(spark):
     orig = load_table(spark, SF, "lineitem")
     try:
         _edges_to_lineitem(spark, edges).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._kcore_sql("spark")).collect()
+        out = spark.sql(pgraph.kcore_sql("spark")).collect()
         assert {r.part for r in out} == {1, 2, 3, 4}
         assert all(r.core_degree == 3 for r in out)
         assert all(r.converged for r in out)
@@ -341,7 +353,7 @@ def test_kcore_certificate_honest_on_deep_cascade(spark):
     orig = load_table(spark, SF, "lineitem")
     try:
         _edges_to_lineitem(spark, edges).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._kcore_sql("spark")).collect()
+        out = spark.sql(pgraph.kcore_sql("spark")).collect()
         assert all(not r.converged for r in out)
         # the survivor set happens to equal the true core here, but
         # vertex 1's degree still counts the unpeeled tree root — the
@@ -401,7 +413,7 @@ def test_bfs_certificate_honest_on_long_chain(spark):
         # degree-2 everywhere except the endpoints: seeds = 4 lowest-id
         # degree-2 vertices (2,3,4,5) -> frontier still moving at round 3
         _edges_to_lineitem(spark, chain).createOrReplaceTempView("lineitem")
-        out = spark.sql(pgraph._bfs_sql("spark")).collect()
+        out = spark.sql(pgraph.bfs_distance_sql("spark")).collect()
         deg = Counter()
         for a, b in chain:
             deg[a] += 1
@@ -425,7 +437,7 @@ def test_bfs_df_form_equals_sql(spark):
     each round's distance table — pin bit-equality with the SQL form."""
     register_views(spark, SF, ("lineitem",))
     sql_rows = sorted(
-        (r.u, r.dist, r.converged) for r in spark.sql(pgraph._bfs_sql("spark")).collect()
+        (r.u, r.dist, r.converged) for r in spark.sql(pgraph.bfs_distance_sql("spark")).collect()
     )
     df_rows = sorted(
         (r.u, r.dist, r.converged) for r in pgraph.bfs_distance(spark, SF).collect()

@@ -138,25 +138,20 @@ except ImportError:  # pragma: no cover
 # ------------------------------------------------------- streaming flavor
 
 @pytest.fixture(scope="module")
-def events_dir(spark):
+def events_stream(spark):
+    """events replayed as ``STREAM_CHUNKS`` ordered event_id-range
+    micro-batches."""
     from dnstap2clickhouse_spark.sources.tables import load_table
+    from dnstap2clickhouse_spark.streaming.pipeline import _range_chunked_stream
 
-    d = tempfile.mkdtemp(prefix="match_stream_")
-    ev = load_table(spark, SF, "events")
-    n = ev.count()
-    step = (n + 3) // 4
-    for i in range(4):
-        ev.filter((ev.event_id >= i * step) & (ev.event_id < (i + 1) * step)).coalesce(
-            1
-        ).write.mode("append").parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    with _range_chunked_stream(spark, load_table(spark, SF, "events"), "event_id") as stream:
+        yield stream
 
-def test_stateful_match_equals_batch_on_one_to_one(spark, events_dir):
+def test_stateful_match_equals_batch_on_one_to_one(spark, events_stream):
     """The exact state machine agrees with sequence pairing on
     collision-free input, across micro-batch boundaries (state carried
     between batches)."""
-    q, r = dns_pair_streams(spark, "", events=st.read_events_stream(spark, events_dir))
+    q, r = dns_pair_streams(spark, "", events=events_stream)
     sdf = stateful_match_once(tag_pair_streams(q, r))
     mem = st.run_stream_to_memory(sdf, "append", spark)
 

@@ -58,7 +58,7 @@ def test_containment_grouped_rewrite_output_identical(spark):
     """The set-grouped + positional-filtered form must reproduce the
     old per-doc form exactly (values AND ordering)."""
     fd._register(spark, SF)
-    new = spark.sql(fd._containment_sql("spark")).collect()
+    new = spark.sql(fd.containment_pairs_sql("spark")).collect()
     old = spark.sql(_old_containment_spark_sql()).collect()
     assert new == old
     assert len(new) > 0  # a 0-row pair relation would be a red flag
@@ -66,7 +66,7 @@ def test_containment_grouped_rewrite_output_identical(spark):
 
 def test_containment_plan_groups_by_exact_set_and_position_filters(spark):
     fd._register(spark, SF)
-    sql = fd._containment_sql("spark")
+    sql = fd.containment_pairs_sql("spark")
     # exact set identity: the grouping key is the sorted shingle array
     assert "sort_array(sh)" in sql
     # the PPJoin positional filter rides the candidate join
@@ -80,7 +80,7 @@ def test_containment_plan_groups_by_exact_set_and_position_filters(spark):
 def test_containment_oracle_sql_unchanged_r10_form():
     """The DuckDB referee must stay independent of the Spark rewrite:
     the oracle keeps the per-doc count-window form."""
-    sql = fd._containment_sql("duckdb")
+    sql = fd.containment_pairs_sql("duckdb")
     assert "count(*) OVER (PARTITION BY r.doc_id)" in sql
     assert "sort_array" not in sql
     assert "least(" not in sql

@@ -41,7 +41,7 @@ def test_collapsing_certificate_detects_lost_cancel(spark):
     """Drop one cancel row from the changelog (the unbalanced-sign
     failure CollapsingMergeTree documents) — net_sign leaves 1 and the
     certificate must go false for that key."""
-    sql = evan._collapsing_state_sql("spark")
+    sql = evan.collapsing_state_sql("spark")
     ev = load_table(spark, SF, "events")
     # pick a user with >= 2 events so it has at least one cancel row
     uid = (

@@ -94,7 +94,7 @@ def test_manifest_checksum_detects_content_change(spark):
             edited, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).createOrReplaceTempView("documents")
         after = {r.split: r.content_checksum for r in spark.sql(
-            fsplit._manifest_checksums_sql("spark")).collect()}
+            fsplit.manifest_checksums_sql("spark")).collect()}
     finally:
         docs.createOrReplaceTempView("documents")
     changed = {s for s in before if before[s] != after[s]}

@@ -165,7 +165,7 @@ def test_fuzzy_match_catch_boundary(spark):
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
         ).createOrReplaceTempView("documents")
         got = [(r.doc_a, r.doc_b, r.edit_dist)
-               for r in spark.sql(ftext._fuzzy_match_sql("spark")).collect()]
+               for r in spark.sql(ftext.fuzzy_match_sql("spark")).collect()]
     finally:
         docs.createOrReplaceTempView("documents")
     assert got == [(1, 2, 2)]

@@ -60,7 +60,7 @@ def test_bigram_lm_scores_fluency_direction(spark):
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
         ).createOrReplaceTempView("documents")
         got = {r.doc_id: r.mean_cond_e6
-               for r in spark.sql(ftext._bigram_lm_sql("spark")).collect()}
+               for r in spark.sql(ftext.bigram_lm_sql("spark")).collect()}
     finally:
         docs.createOrReplaceTempView("documents")
     assert got[1] == got[2] > got[3]

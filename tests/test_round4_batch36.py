@@ -162,7 +162,7 @@ def test_image_ahash_identical_images_pair(spark):
     try:
         spark.createDataFrame(rows, schema).createOrReplaceTempView("documents")
         got = [(r.doc_a, r.doc_b, r.hamming)
-               for r in spark.sql(fmm._image_ahash_sql("spark")).collect()]
+               for r in spark.sql(fmm.image_ahash_sql("spark")).collect()]
     finally:
         docs.createOrReplaceTempView("documents")
     assert (0, 3, 0) in got

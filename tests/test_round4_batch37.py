@@ -124,7 +124,7 @@ def test_cdc_resynchronizes_after_insertion(spark):
             rows,
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
         ).createOrReplaceTempView("documents")
-        out = spark.sql(ftext._cdc_sql("spark")).collect()
+        out = spark.sql(ftext.cdc_chunks_sql("spark")).collect()
     finally:
         docs.createOrReplaceTempView("documents")
     fps = {1: [], 2: []}
@@ -173,7 +173,7 @@ def test_kmv_duplicate_insensitive(spark):
             "'{}' AS props",
         ).createOrReplaceTempView("events")
         dedup = [(r.rank, r.user_id, r.hash_value)
-                 for r in spark.sql(evan._kmv_sql("spark")).collect()]
+                 for r in spark.sql(evan.kmv_distinct_sql("spark")).collect()]
     finally:
         ev.createOrReplaceTempView("events")
     assert full == dedup

@@ -121,7 +121,7 @@ def test_value_drift_fires_on_engineered_shift(spark):
             "event_id", "timestamp_micros(t_us) AS ts", "user_id",
             "event_type", "value", "props",
         ).createOrReplaceTempView("events")
-        shifted = spark.sql(evan._value_drift_sql("spark")).collect()
+        shifted = spark.sql(evan.value_drift_sql("spark")).collect()
     finally:
         ev.createOrReplaceTempView("events")
     assert any(r.drifted for r in shifted)

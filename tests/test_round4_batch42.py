@@ -24,7 +24,7 @@ def test_hard_negatives_cross_label_and_replay(spark):
         assert r.anchor_label != r.negative_label
     # replay: within each k-means cell, the top different-label cosine
     cells = {r.vec_id: r.cluster
-             for r in spark.sql(fsim._kmeans_sql("spark")).collect()}
+             for r in spark.sql(fsim.kmeans_assign_sql("spark")).collect()}
     embs = {r.vec_id: (r.embedding, r.label)
             for r in load_table(spark, SF, "embeddings").collect()}
 

@@ -111,7 +111,7 @@ def test_gini_boundary_laws(spark):
             "event_id", "timestamp_micros(t_us) AS ts", "user_id",
             "event_type", "value", "props",
         ).createOrReplaceTempView("events")
-        return spark.sql(evan._lorenz_sql("spark")).collect()
+        return spark.sql(evan.lorenz_gini_sql("spark")).collect()
 
     try:
         equal = run([(i, i, i % 20, "view", 5.0, "{}") for i in range(100)])

@@ -99,7 +99,7 @@ def test_hhi_boundary_laws(spark):
             supp_rows, "s_suppkey BIGINT, s_nationkey BIGINT"
         ).createOrReplaceTempView("supplier")
         return {r.nation: r for r in
-                spark.sql(tpch._supplier_hhi_sql("spark")).collect()}
+                spark.sql(tpch.supplier_hhi_sql("spark")).collect()}
 
     try:
         # nation 0: monopoly; nation 1: four equal suppliers

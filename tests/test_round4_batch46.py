@@ -83,7 +83,7 @@ def test_length_outliers_robust_to_monster_doc(spark):
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
         ).createOrReplaceTempView("documents")
         out = {r.doc_id: r.is_outlier
-               for r in spark.sql(ftext._length_outliers_sql("spark")).collect()}
+               for r in spark.sql(ftext.length_outliers_sql("spark")).collect()}
     finally:
         docs.createOrReplaceTempView("documents")
     assert out[99]

@@ -84,7 +84,7 @@ def test_order_aging_exact_edges(spark):
             " o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING",
         ).createOrReplaceTempView("orders")
         got = {r.age_bucket: r.n_orders
-               for r in spark.sql(tpch._order_aging_sql("spark")).collect()}
+               for r in spark.sql(tpch.order_aging_sql("spark")).collect()}
     finally:
         od.createOrReplaceTempView("orders")
     assert got == {f"0-{e1}d": 2, f"{e1}-{tpch.AGING_DAYS[1]}d": 1}

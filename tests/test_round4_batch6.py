@@ -49,7 +49,7 @@ def test_bloom_no_false_negatives_on_injected_dup(spark):
         spark.createDataFrame(
             rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).createOrReplaceTempView("documents")
-        got = {r.doc_id: r for r in spark.sql(fdedup._bloom_sql("spark")).collect()}
+        got = {r.doc_id: r for r in spark.sql(fdedup.bloom_prescreen_sql("spark")).collect()}
     finally:
         orig.createOrReplaceTempView("documents")
     assert set(got) == {10, 11, 12}

@@ -52,7 +52,7 @@ def test_gap_fill_injected_gap(spark):
         ).selectExpr(
             "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "event_type", "value", "props"
         ).createOrReplaceTempView("events")
-        out = {str(r.hour): r.n_events for r in spark.sql(evan._gap_fill_sql("spark")).collect()}
+        out = {str(r.hour): r.n_events for r in spark.sql(evan.gap_fill_sql("spark")).collect()}
     finally:
         orig.createOrReplaceTempView("events")
     assert out == {
@@ -116,7 +116,7 @@ def test_containment_catches_asymmetric_pair_jaccard_misses(spark):
         spark.createDataFrame(
             rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).createOrReplaceTempView("documents")
-        got = {(r.doc_a, r.doc_b) for r in spark.sql(fdedup._containment_sql("spark")).collect()}
+        got = {(r.doc_a, r.doc_b) for r in spark.sql(fdedup.containment_pairs_sql("spark")).collect()}
     finally:
         orig.createOrReplaceTempView("documents")
     assert (2, 1) in got
@@ -254,7 +254,7 @@ def test_code_detect_fixture(spark):
         spark.createDataFrame(
             rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).createOrReplaceTempView("documents")
-        got = {r.doc_id: r for r in spark.sql(ftext._code_detect_sql("spark")).collect()}
+        got = {r.doc_id: r for r in spark.sql(ftext.code_detect_sql("spark")).collect()}
     finally:
         orig.createOrReplaceTempView("documents")
     assert got[1].is_code
@@ -309,7 +309,7 @@ def test_dataset_card_counts(spark):
         spark.createDataFrame(
             rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).createOrReplaceTempView("documents")
-        c2 = spark.sql(pcur._dataset_card_sql("spark")).collect()[0]
+        c2 = spark.sql(pcur.dataset_card_sql("spark")).collect()[0]
     finally:
         orig.createOrReplaceTempView("documents")
     assert (c2.n_docs, c2.n_exact_dups, c2.n_langs, c2.n_sources) == (3, 1, 2, 2)

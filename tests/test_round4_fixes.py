@@ -187,7 +187,7 @@ def test_pii_scrub_redacts_every_class(spark):
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     spark.createDataFrame(rows, cols).createOrReplaceTempView("documents")
     try:
-        got = {r.doc_id: r for r in spark.sql(ft._pii_scrub_sql("spark")).collect()}
+        got = {r.doc_id: r for r in spark.sql(ft.pii_scrub_sql("spark")).collect()}
         # injection adds exactly one of each class to every doc
         for d, r in got.items():
             assert r.clean, (d, r)
@@ -200,7 +200,7 @@ def test_pii_scrub_redacts_every_class(spark):
 
         con = duckdb.connect()
         con.register("documents", pd.DataFrame(rows, columns=cols))
-        odf = con.execute(ft._pii_scrub_sql("duckdb")).df()
+        odf = con.execute(ft.pii_scrub_sql("duckdb")).df()
         want = {int(r.doc_id): r for _, r in odf.iterrows()}
         for d in got:
             assert got[d].scrub_hash == want[d].scrub_hash
@@ -224,7 +224,7 @@ def test_dup_span_fraction_known_graph(spark):
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     spark.createDataFrame(rows, cols).createOrReplaceTempView("documents")
     try:
-        got = {r.doc_id: r for r in spark.sql(ft._dup_span_sql("spark")).collect()}
+        got = {r.doc_id: r for r in spark.sql(ft.dup_span_fraction_sql("spark")).collect()}
         assert got[1].n_grams == 3 and got[1].dup_fraction == 1.0 and got[1].mostly_dup
         assert got[2].dup_fraction == 1.0
         assert got[3].n_grams == 3 and got[3].dup_fraction == 0.0 and not got[3].mostly_dup
@@ -305,11 +305,11 @@ def test_simhash_pairs_bands_catch_identical_docs(spark):
     try:
         sigs = {
             r.doc_id: r.simhash
-            for r in spark.sql(dedup._simhash_sql("spark")).collect()
+            for r in spark.sql(dedup.simhash_signatures_sql("spark")).collect()
         }
         got = {
             (r.doc_a, r.doc_b): r.hamming
-            for r in spark.sql(dedup._simhash_pairs_sql("spark")).collect()
+            for r in spark.sql(dedup.simhash_pairs_sql("spark")).collect()
         }
         # brute-force expectation over the 3 signatures
         want = {}
@@ -365,7 +365,7 @@ try:
         try:
             got = {
                 r.doc_id: (r.n_grams, r.n_shared_grams)
-                for r in spark.sql(ft._dup_span_sql("spark")).collect()
+                for r in spark.sql(ft.dup_span_fraction_sql("spark")).collect()
             }
         finally:
             load_table(spark, "/root/testdata/sf0.001", "documents").createOrReplaceTempView(
@@ -390,7 +390,7 @@ try:
         cols = ["doc_id", "text", "lang", "source", "n_chars"]
         spark.createDataFrame(rows, cols).createOrReplaceTempView("documents")
         try:
-            [r] = spark.sql(ft._pii_scrub_sql("spark")).collect()
+            [r] = spark.sql(ft.pii_scrub_sql("spark")).collect()
         finally:
             load_table(spark, "/root/testdata/sf0.001", "documents").createOrReplaceTempView(
                 "documents"

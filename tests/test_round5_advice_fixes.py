@@ -63,7 +63,7 @@ def test_chi_square_exact_past_bigint_range(spark):
     n_users = 120_000
     ev = _synth_ab_events(spark, n_users)
     ev.createOrReplaceTempView("events")
-    got = [r.asDict() for r in spark.sql(evan._ab_test_sql("spark")).collect()]
+    got = [r.asDict() for r in spark.sql(evan.ab_test_sql("spark")).collect()]
     assert len(got) == 2 and {r["variant"] for r in got} == {0, 1}
 
     # the cross-products genuinely exceed int64 here — the regime the
@@ -83,7 +83,7 @@ def test_chi_square_exact_past_bigint_range(spark):
     pdf = ev.toPandas()
     con = duckdb.connect()
     con.register("events", pdf)
-    oracle = con.execute(evan._ab_test_sql("duckdb")).fetchall()
+    oracle = con.execute(evan.ab_test_sql("duckdb")).fetchall()
     assert sorted((r[0], bool(r[4])) for r in oracle) == sorted(
         (r["variant"], r["significant"]) for r in got
     )
@@ -100,7 +100,7 @@ def test_temporal_embargo_empty_train_reads_false(spark):
         "id AS event_id",
         "0.0 AS value",
     ).createOrReplaceTempView("events")
-    rows = spark.sql(fsplit._temporal_embargo_sql("spark")).collect()
+    rows = spark.sql(fsplit.temporal_embargo_sql("spark")).collect()
     assert len(rows) > 0
     splits = {r.split for r in rows}
     assert "train" not in splits  # the regime under test

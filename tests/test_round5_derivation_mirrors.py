@@ -31,7 +31,7 @@ def test_kmeans_k_sql_matches_mirror_beyond_floor(spark):
     _register_synthetic(spark, n)
     k = fsim.kmeans_k(n)
     assert k == 6  # the regime under test, not the corpus floor
-    rows = spark.sql(fsim._kmeans_sql("spark")).collect()
+    rows = spark.sql(fsim.kmeans_assign_sql("spark")).collect()
     assert len(rows) == n
     clusters = {r.cluster for r in rows}
     assert clusters <= set(range(k))

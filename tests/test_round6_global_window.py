@@ -74,21 +74,21 @@ def _rows(df):
 def test_equidepth_prefix_sum_equals_sql(spark):
     got = _rows(ev.equidepth_histogram(spark, SF))
     ev.load_table(spark, SF, "events").createOrReplaceTempView("events")
-    ref = _rows(spark.sql(ev._equidepth_histogram_sql("spark")))
+    ref = _rows(spark.sql(ev.equidepth_histogram_sql("spark")))
     assert got == ref and len(got) > 0
 
 
 def test_length_outliers_prefix_sum_equals_sql(spark):
     got = _rows(ftext.length_outliers(spark, SF))
     ftext.load_table(spark, SF, "documents").createOrReplaceTempView("documents")
-    ref = _rows(spark.sql(ftext._length_outliers_sql("spark")))
+    ref = _rows(spark.sql(ftext.length_outliers_sql("spark")))
     assert got == ref and len(got) > 0
 
 
 def test_vocab_growth_prefix_sum_equals_sql(spark):
     got = _rows(ftext.vocab_growth(spark, SF))
     ftext.load_table(spark, SF, "documents").createOrReplaceTempView("documents")
-    ref = _rows(spark.sql(ftext._vocab_growth_sql("spark")))
+    ref = _rows(spark.sql(ftext.vocab_growth_sql("spark")))
     assert got == ref and len(got) > 0
 
 
@@ -103,8 +103,8 @@ def test_fixed_entries_audit_clean(spark):
 
 
 def test_vocab_growth_anchor_present_exactly_once():
-    assert ftext._vocab_growth_sql("spark").count(ftext._VG_TK_ANCHOR) == 1
-    assert ftext._vocab_growth_sql("spark").startswith("\nWITH ordered AS (")
+    assert ftext.vocab_growth_sql("spark").count(ftext._VG_TK_ANCHOR) == 1
+    assert ftext.vocab_growth_sql("spark").startswith("\nWITH ordered AS (")
 
 
 MULTI_ARG_ORDER = (
@@ -149,14 +149,14 @@ def test_value_drift_prefix_sum_equals_sql(spark):
     to 'bound' it). The staged + prefix-sum form must be row-exact and
     audit-clean."""
     got = _rows(ev.value_drift(spark, SF))
-    ref = _rows(spark.sql(ev._value_drift_sql("spark")))
+    ref = _rows(spark.sql(ev.value_drift_sql("spark")))
     assert got == ref and len(got) > 0
     plan = ev.value_drift(spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert audit_plan(plan) == []
 
 
 def test_value_drift_anchors_present():
-    s = ev._value_drift_sql("spark")
+    s = ev.value_drift_sql("spark")
     assert s.count(ev._VD_REF_ANCHOR) == 1
     assert s.count(ev._VD_TAIL_ANCHOR) == 1
 
@@ -217,7 +217,7 @@ def test_length_outliers_majority_null_text_falls_back(spark):
     with mock.patch.object(ftext, "load_table", lambda s, d, n: s.table("documents")):
         got = sorted(map(tuple, ftext.length_outliers(spark, SF).collect()))
         ref = sorted(
-            map(tuple, spark.sql(ftext._length_outliers_sql("spark")).collect())
+            map(tuple, spark.sql(ftext.length_outliers_sql("spark")).collect())
         )
         assert got == ref and len(got) == 10
 

@@ -67,7 +67,7 @@ def test_bloom_hint_broadcasts_bounded_side(no_auto_broadcast):
     silently no-opped because the join binds the CTE under alias `o`."""
     spark = no_auto_broadcast
     fdedup._register(spark, SF)
-    df = spark.sql(fdedup._bloom_sql("spark"))
+    df = spark.sql(fdedup.bloom_prescreen_sql("spark"))
     assert audit_hints(df) == 0
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -87,9 +87,9 @@ def test_no_contract_spark_sql_hints_a_nonalias_cte():
     import re
 
     sqls = [
-        fdedup._bloom_sql("spark"),
-        sim._hybrid_rrf_sql("spark"),
-        sim._mmr_sql("spark"),
+        fdedup.bloom_prescreen_sql("spark"),
+        sim.hybrid_rrf_sql("spark"),
+        sim.mmr_rerank_sql("spark"),
     ]
     for s in sqls:
         for name in re.findall(r"/\*\+\s*BROADCAST\((\w+)\)\s*\*/", s):
@@ -103,14 +103,14 @@ def test_no_contract_spark_sql_hints_a_nonalias_cte():
 
 
 def test_mmr_anchor_present_exactly_once():
-    assert sim._mmr_sql("spark").count(sim._MMR_STEP_ANCHOR) == 1
-    assert sim._mmr_sql("duckdb").count(sim._MMR_STEP_ANCHOR) == 1
+    assert sim.mmr_rerank_sql("spark").count(sim._MMR_STEP_ANCHOR) == 1
+    assert sim.mmr_rerank_sql("duckdb").count(sim._MMR_STEP_ANCHOR) == 1
 
 
 def test_mmr_spliced_equals_pure_sql(spark):
     got = sorted(map(tuple, sim.mmr_rerank(spark, SF).collect()))
     sim._register(spark, SF)
-    pure = sorted(map(tuple, spark.sql(sim._mmr_sql("spark")).collect()))
+    pure = sorted(map(tuple, spark.sql(sim.mmr_rerank_sql("spark")).collect()))
     assert got == pure and len(got) > 0
 
 
@@ -131,7 +131,7 @@ def test_mmr_returned_plan_reads_no_corpus(no_auto_broadcast):
 
 def test_ttl_pushed_equals_reference_sql(spark):
     got = sorted(map(tuple, ev.ttl_rollup(spark, SF).collect()))
-    ref = sorted(map(tuple, spark.sql(ev._ttl_rollup_sql("spark")).collect()))
+    ref = sorted(map(tuple, spark.sql(ev.ttl_rollup_sql("spark")).collect()))
     assert got == ref and len(got) > 0
 
 

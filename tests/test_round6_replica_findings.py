@@ -22,7 +22,7 @@ SF = "/root/testdata/sf0.001"
 def test_value_quantiles_one_shared_text():
     """The fix IS the shared text: any dialect split here reopens the
     door to engine-specific interpolation orders."""
-    assert ev._value_quantiles_sql("spark") == ev._value_quantiles_sql("duckdb")
+    assert ev.value_quantiles_sql("spark") == ev.value_quantiles_sql("duckdb")
 
 
 def test_value_quantiles_bit_equal_cross_engine(spark):
@@ -151,8 +151,8 @@ def test_zorder_seconds_form_shared_and_fraction_safe(spark):
     0.1 s of a boundary, maximizing the old divergence)."""
     import unittest.mock as mock
 
-    assert "date_diff('second'" not in ev._zorder_layout_sql("duckdb")
-    assert "date_diff('second'" not in ev._zonemap_prune_sql("duckdb")
+    assert "date_diff('second'" not in ev.zorder_layout_sql("duckdb")
+    assert "date_diff('second'" not in ev.zonemap_prune_sql("duckdb")
 
     # t0 = 0.9s; events at +0.2s steps — boundary counting and floor
     # disagree on most rows under the old form

@@ -71,30 +71,30 @@ def test_sweep_instruments_are_single_pass_on_spark():
     from dnstap2clickhouse_spark.functions import dedup as fdedup
     from dnstap2clickhouse_spark.plans import curation as pcur
 
-    s = fdedup._minhash_recall_sql("spark")
+    s = fdedup.minhash_recall_sql("spark")
     assert "FULL OUTER JOIN lsh_pairs" in s and "(SELECT count(*) FROM hits)" not in s
-    k = fdedup._minhash_recall_sql("duckdb")
+    k = fdedup.minhash_recall_sql("duckdb")
     assert "(SELECT count(*) FROM hits)" in k and "FULL OUTER JOIN" not in k
 
-    s = fdedup._band_sweep_sql("spark")
+    s = fdedup.band_sweep_sql("spark")
     assert "(SELECT CAST(count(*) AS BIGINT) FROM cand" not in s
     assert s.count("n_candidates") >= 4  # fused count+verify per config
-    k = fdedup._band_sweep_sql("duckdb")
+    k = fdedup.band_sweep_sql("duckdb")
     assert "(SELECT CAST(count(*) AS BIGINT) FROM cand4)" in k
 
     from dnstap2clickhouse_spark.functions import similarity as fsim
 
     # (brute's own internal `scored` CTE also matches "FROM scored" —
     # count the sweep's references via the per-arm filter form)
-    s = fsim._nprobe_sweep_sql("spark")
+    s = fsim.nprobe_sweep_sql("spark")
     assert "FROM VALUES" in s and s.count("FROM scored s") == 1
     assert s.count("FROM scored WHERE first_probe") == 0
-    k = fsim._nprobe_sweep_sql("duckdb")
+    k = fsim.nprobe_sweep_sql("duckdb")
     assert k.count("FROM scored WHERE first_probe") == len(fsim.NPROBE_LADDER)
 
-    s = pcur._yield_report_sql("spark")
+    s = pcur.yield_report_sql("spark")
     assert "LATERAL VIEW inline(array(" in s and s.count("FROM funnel") == 1
-    k = pcur._yield_report_sql("duckdb")
+    k = pcur.yield_report_sql("duckdb")
     assert k.count("FROM funnel") == len(pcur.YIELD_STAGES)
 
 
@@ -116,7 +116,7 @@ def test_embedding_recall_single_pass_and_fps_df_form(spark):
     fsim._register(spark, sf)
     sql_rows = [
         (r.sel, r.cid, r.radius_e6)
-        for r in spark.sql(fsim._farthest_init_sql("spark")).collect()
+        for r in spark.sql(fsim.farthest_init_sql("spark")).collect()
     ]
     df_rows = [
         (r.sel, r.cid, r.radius_e6) for r in fsim.farthest_init(spark, sf).collect()
@@ -135,7 +135,7 @@ def test_markov_pairs_materialized_once(spark):
     sf = "/root/testdata/sf0.001"
     load_table(spark, sf, "events").createOrReplaceTempView("events")
     sql_rows = sorted(
-        tuple(r) for r in spark.sql(pev._markov_stationary_sql("spark")).collect()
+        tuple(r) for r in spark.sql(pev.markov_stationary_sql("spark")).collect()
     )
     ent = pev.markov_stationary(spark, sf)
     df_rows = sorted(tuple(r) for r in ent.collect())
@@ -155,7 +155,7 @@ def test_farthest_init_degenerate_corpus_matches_sql(spark):
     spark.createDataFrame(
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     ).createOrReplaceTempView("embeddings")
-    assert spark.sql(fsim._farthest_init_sql("spark")).collect() == []
+    assert spark.sql(fsim.farthest_init_sql("spark")).collect() == []
     # call the DF form against the same temp view (bypass _register)
     import dnstap2clickhouse_spark.functions.similarity as s
 
@@ -169,7 +169,7 @@ def test_farthest_init_degenerate_corpus_matches_sql(spark):
     con = _duck.connect()
     con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
     con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
-    assert con.execute(fsim._farthest_init_sql("duckdb")).fetchall() == []
+    assert con.execute(fsim.farthest_init_sql("duckdb")).fetchall() == []
 
 
 def test_expensive_ctes_are_single_referenced():
@@ -177,7 +177,7 @@ def test_expensive_ctes_are_single_referenced():
     single-consumers: a second reference to a Lloyd round or the pair
     join would double the whole corpus-sized subtree (Spark inlines,
     0 ReusedExchange — measured). Pin refcount == 1 in both dialects."""
-    for build in (fsim._semantic_dedup_sql, fsim._knn_graph_sql, fsim._hard_negatives_sql):
+    for build in (fsim.semantic_dedup_sql, fsim.knn_graph_sql, fsim.hard_negatives_sql):
         for dialect in ("spark", "duckdb"):
             sql = build(dialect)
             for cte in ("a1", "c1", "a2", "pairs"):

@@ -40,12 +40,12 @@ def _register_both(spark, rows):
 
 def test_minhash_recall_zero_pair_corpus_both_dialects(spark):
     con = _register_both(spark, _docs(12))
-    got = spark.sql(fdedup._minhash_recall_sql("spark")).collect()
+    got = spark.sql(fdedup.minhash_recall_sql("spark")).collect()
     assert len(got) == 1
     r = got[0]
     # the defined zero-denominator case: no true pairs -> recall 1.0
     assert (r.n_found, r.n_true, r.pair_recall, r.n_false_pos) == (0, 0, 1.0, 0)
-    oracle = con.execute(fdedup._minhash_recall_sql("duckdb")).fetchall()
+    oracle = con.execute(fdedup.minhash_recall_sql("duckdb")).fetchall()
     assert oracle == [(0, 0, 1.0, 0)]
 
 
@@ -53,10 +53,10 @@ def test_band_sweep_zero_candidate_corpus_both_dialects(spark):
     con = _register_both(spark, _docs(12))
     got = sorted(
         (r.n_bands, r.rows_per_band, r.n_candidates, r.n_verified, r.cand_monotone)
-        for r in spark.sql(fdedup._band_sweep_sql("spark")).collect()
+        for r in spark.sql(fdedup.band_sweep_sql("spark")).collect()
     )
     # one row per swept config even with zero candidates anywhere
     assert [g[0] for g in got] == sorted(fdedup.BAND_SWEEP)
     assert all(g[2] == 0 and g[3] == 0 and g[4] for g in got)
-    oracle = sorted(con.execute(fdedup._band_sweep_sql("duckdb")).fetchall())
+    oracle = sorted(con.execute(fdedup.band_sweep_sql("duckdb")).fetchall())
     assert [tuple(g) for g in got] == [tuple(o) for o in oracle]

@@ -4,7 +4,7 @@
   NULLs first, DuckDB's row_number sorts them last — a nullable rank key
   silently shifted every equidepth bucket boundary / decile edge /
   median between engines. All rank orderings now lead with the portable
-  ``(col IS NULL)`` boolean (the ``_value_quantiles_sql`` pattern);
+  ``(col IS NULL)`` boolean (the ``value_quantiles_sql`` pattern);
   pinned here on engineered NULL-bearing corpora where the OLD forms
   provably diverged.
 - ``events_ab_test`` overflow guard (r6 verdict item 6): the
@@ -283,8 +283,8 @@ def _events_parquet_views(spark):
 
 def test_ab_test_default_cross_engine_with_flag(spark):
     con = _events_parquet_views(spark)
-    got = spark.sql(ev._ab_test_sql("spark")).toPandas()
-    oracle = con.execute(ev._ab_test_sql("duckdb")).df()
+    got = spark.sql(ev.ab_test_sql("spark")).toPandas()
+    oracle = con.execute(ev.ab_test_sql("duckdb")).df()
     assert _records(got) == _records(oracle)
     assert "chi2_exact" in got.columns
     assert bool(got["chi2_exact"].all())  # test corpus is far in-range
@@ -296,12 +296,12 @@ def test_ab_test_guard_forces_null_identically(spark):
     # NULL significant + chi2_exact=false, with every other column
     # identical to the unguarded form — no raise anywhere
     con = _events_parquet_views(spark)
-    got = spark.sql(ev._ab_test_sql("spark", safe_nt=1)).toPandas()
-    oracle = con.execute(ev._ab_test_sql("duckdb", safe_nt=1)).df()
+    got = spark.sql(ev.ab_test_sql("spark", safe_nt=1)).toPandas()
+    oracle = con.execute(ev.ab_test_sql("duckdb", safe_nt=1)).df()
     assert _records(got) == _records(oracle)
     assert got["significant"].isna().all()
     assert not got["chi2_exact"].any()
-    base = spark.sql(ev._ab_test_sql("spark")).toPandas()
+    base = spark.sql(ev.ab_test_sql("spark")).toPandas()
     for c in ("variant", "n_users", "n_conv", "conv_e6"):
         assert list(got[c]) == list(base[c])
 

@@ -134,8 +134,8 @@ def test_ab_guard_flag_law(events, safe_nt):
         " value DOUBLE, user_id BIGINT, ts TIMESTAMP)"
     )
     con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?)", rows)
-    guarded = con.execute(ev._ab_test_sql("duckdb", safe_nt=safe_nt)).fetchall()
-    base = con.execute(ev._ab_test_sql("duckdb")).fetchall()
+    guarded = con.execute(ev.ab_test_sql("duckdb", safe_nt=safe_nt)).fetchall()
+    base = con.execute(ev.ab_test_sql("duckdb")).fetchall()
     # same arm rows; count/rate columns never depend on the bound
     assert [r[:4] for r in guarded] == [r[:4] for r in base]
     for r in guarded:

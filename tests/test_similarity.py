@@ -11,7 +11,7 @@ byte-for-byte (oracle stability). Same for `_ivf_cell_ctes`'s ``assign``
 
 - string shape: the Spark strings carry no window argmin, the DuckDB
   strings carry no ``min_by``/``max_by``;
-- executed-plan shape: ``_kmeans_sql('spark')`` runs ZERO Window
+- executed-plan shape: ``kmeans_assign_sql('spark')`` runs ZERO Window
   operators, and ``sim_ivf_topk``'s plan keeps at most two (the
   query-side probe ranking — whose corpus scan must carry the pushed
   ``vec_id < N_QUERIES`` filter — and the final top-k);
@@ -53,7 +53,7 @@ SF = "/root/testdata/sf0.001"
 # ------------------------------------------------------- argmin shape
 
 def test_spark_argmin_is_aggregate_duckdb_is_window():
-    for build in (fsim._kmeans_sql, fsim._twolevel_assign_sql, fsim._ood_centroid_sql):
+    for build in (fsim.kmeans_assign_sql, fsim.kmeans_assign_twolevel_sql, fsim.ood_centroid_sql):
         s, k = build("spark"), build("duckdb")
         assert "min_by" in s and "FILTER (WHERE d = md)" not in s
         assert "min_by" not in k and "FILTER (WHERE d = md)" in k
@@ -69,7 +69,7 @@ def _windows(plan: str) -> int:
 
 def test_flat_kmeans_plan_runs_zero_windows(spark):
     fsim._register(spark, SF)
-    df = spark.sql(fsim._kmeans_sql("spark"))
+    df = spark.sql(fsim.kmeans_assign_sql("spark"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert _windows(plan) == 0
     # the argmin survives optimization as an aggregate, not a sort
@@ -78,7 +78,7 @@ def test_flat_kmeans_plan_runs_zero_windows(spark):
 
 def test_ivf_plan_windows_bounded_and_probe_scan_pruned(spark):
     fsim._register(spark, SF)
-    df = spark.sql(fsim._ivf_sql("spark"))
+    df = spark.sql(fsim.ivf_topk_sql("spark"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # probe ranking (query rows only) + final top-k — never a third,
     # corpus-sized window (the pre-restructure plan ran it twice more)
@@ -102,13 +102,13 @@ def test_all_ties_aggregate_matches_window_form(spark):
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     ).createOrReplaceTempView("embeddings")
     got = {
-        r.vec_id: r.cluster for r in spark.sql(fsim._kmeans_sql("spark")).collect()
+        r.vec_id: r.cluster for r in spark.sql(fsim.kmeans_assign_sql("spark")).collect()
     }
     assert sorted(got) == list(range(n))
     con = duckdb.connect()
     con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
     con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
-    oracle = dict(con.execute(fsim._kmeans_sql("duckdb")).fetchall())
+    oracle = dict(con.execute(fsim.kmeans_assign_sql("duckdb")).fetchall())
     assert got == oracle
     # the tie actually bound: the first Lloyd round's seed distances all
     # tie, so every first-round assignment collapsed to cluster 0 — the
@@ -200,7 +200,7 @@ def test_twolevel_duplicate_seeds_every_vector_assigned(spark, monkeypatch):
     ).createOrReplaceTempView("embeddings")
     got = {
         r.vec_id: r.cluster
-        for r in spark.sql(fsim._twolevel_assign_sql("spark")).collect()
+        for r in spark.sql(fsim.kmeans_assign_twolevel_sql("spark")).collect()
     }
     # completeness: one row per vector, no silent drops from empty cells
     assert sorted(got) == list(range(n))
@@ -209,5 +209,5 @@ def test_twolevel_duplicate_seeds_every_vector_assigned(spark, monkeypatch):
     con = duckdb.connect()
     con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
     con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
-    oracle = dict(con.execute(fsim._twolevel_assign_sql("duckdb")).fetchall())
+    oracle = dict(con.execute(fsim.kmeans_assign_twolevel_sql("duckdb")).fetchall())
     assert got == oracle

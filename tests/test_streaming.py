@@ -42,23 +42,14 @@ from dnstap2clickhouse_spark.streaming import pipeline as stp
 from dnstap2clickhouse_spark.streaming.stats import EngineStatsListener, stats_intervals
 
 SF = "/root/testdata/sf0.001"
-N_CHUNKS = 4
 WATERMARK = "10 minutes"
 
 @pytest.fixture(scope="module")
-def events_dir(spark):
-    """events split into N parquet chunk files (one micro-batch each)."""
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    ev = load_table(spark, SF, "events")
-    n = ev.count()
-    step = (n + N_CHUNKS - 1) // N_CHUNKS
-    for i in range(N_CHUNKS):
-        chunk = ev.filter(
-            (ev.event_id >= i * step) & (ev.event_id < (i + 1) * step)
-        ).coalesce(1)
-        chunk.write.mode("append").parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def events_stream(spark):
+    """events replayed as ``STREAM_CHUNKS`` ordered event_id-range
+    micro-batches (event time rises with event_id)."""
+    with stp._range_chunked_stream(spark, load_table(spark, SF, "events"), "event_id") as stream:
+        yield stream
 
 def _passthrough(stream):
     """A8 (aggregate=false): the batch clientResponse builder over a
@@ -72,8 +63,8 @@ def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
-def test_stream_query_agg_equals_batch(spark, events_dir):
-    q = dns_query_stream(spark, "", events=st.read_events_stream(spark, events_dir))
+def test_stream_query_agg_equals_batch(spark, events_stream):
+    q = dns_query_stream(spark, "", events=events_stream)
     sdf = dp.client_query_table(spark, "", queries=q.withWatermark("queryTime", WATERMARK))
     mem = st.run_stream_to_memory(sdf, "update", spark)
     # update mode appends every refinement; last write per key is final
@@ -86,8 +77,8 @@ def test_stream_query_agg_equals_batch(spark, events_dir):
     cols = ["windowStart", *dp.QUERY_KEYS, "queryTime", "counter"]
     assert _rows(final, cols) == _rows(batch, cols)
 
-def test_stream_response_agg_equals_batch(spark, events_dir):
-    r = dns_response_stream(spark, "", events=st.read_events_stream(spark, events_dir))
+def test_stream_response_agg_equals_batch(spark, events_stream):
+    r = dns_response_stream(spark, "", events=events_stream)
     sdf = dp.client_response_table(
         spark, "", responses=r.withWatermark("responseTime", WATERMARK)
     )
@@ -101,27 +92,25 @@ def test_stream_response_agg_equals_batch(spark, events_dir):
     cols = ["windowStart", *dp.RESPONSE_KEYS, "responseTime", "counter"]
     assert _rows(final, cols) == _rows(batch, cols)
 
-def test_stream_join_equals_batch(spark, events_dir):
-    sdf = st.streaming_response_time_join(st.read_events_stream(spark, events_dir))
+def test_stream_join_equals_batch(spark, events_stream):
+    sdf = st.streaming_response_time_join(events_stream)
     mem = st.run_stream_to_memory(sdf, "append", spark)
     q, r = dns_pair_streams(spark, SF)
     batch = match_response_times(q, r)
     cols = ["responseTime", "identity", "delta_us"]
     assert _rows(mem, cols) == _rows(batch, cols)
 
-def test_stream_join_then_window_avg_is_one_query(spark, events_dir):
+def test_stream_join_then_window_avg_is_one_query(spark, events_stream):
     """A windowed aggregation after the stream-stream join runs as ONE
     append-mode availableNow query, and equals the batch
     clientQueryResponseTime table on every window the final watermark
-    closed. The chunks form one micro-batch, so no row arrives late."""
-    from dnstap2clickhouse_spark.__main__ import read_events_source
+    closed. The chunks arrive in event-time order, so no row arrives
+    late."""
     from dnstap2clickhouse_spark.operators.join import avg_response_time_samples
 
     cfg = AggregatorConfig()
     interval = cfg.response_time_interval_s
-    joined = st.streaming_response_time_join(
-        read_events_source(spark, None, events_dir), cfg, watermark=WATERMARK
-    )
+    joined = st.streaming_response_time_join(events_stream, cfg, watermark=WATERMARK)
     sdf = avg_response_time_samples(joined, f"{interval} seconds")
     q = (
         sdf.writeStream.outputMode("append")
@@ -143,14 +132,14 @@ def test_stream_join_then_window_avg_is_one_query(spark, events_dir):
         q.stop()
         spark.catalog.dropTempView("rt_one_query")
 
-def test_stream_passthrough_counts(spark, events_dir):
-    sdf = _passthrough(st.read_events_stream(spark, events_dir))
+def test_stream_passthrough_counts(spark, events_stream):
+    sdf = _passthrough(events_stream)
     mem = st.run_stream_to_memory(sdf, "append", spark)
     batch = dp.client_response_table(spark, SF, AggregatorConfig(aggregate=False))
     assert mem.count() == batch.count()
     assert mem.agg({"counter": "sum"}).first()[0] == batch.count()
 
-def test_foreach_batch_sink_with_column_config(spark, events_dir):
+def test_foreach_batch_sink_with_column_config(spark, events_stream, tmp_path):
     """The daemon's foreachBatch fan-out writes every enabled table from
     each micro-batch: K1-mapped partial counts under one ``__epoch`` per
     batch, with the window start kept as a hidden column that
@@ -164,12 +153,16 @@ def test_foreach_batch_sink_with_column_config(spark, events_dir):
             "questionType": "",  # an empty physical name prunes the column (K1)
             "counter": "hits",
         }
-        _, tables = build_streams(spark, cfg, events_dir)
+        _, tables = build_streams(spark, cfg, str(tmp_path))  # the table builders only
+        chunks = events_stream.select(  # the daemon's chunk schema; dnstap columns NULL
+            *(
+                F.col(f.name) if f.name in events_stream.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in CHUNK_SCHEMA
+            )
+        )
         q = (
-            spark.readStream.schema(CHUNK_SCHEMA)  # the daemon's chunk schema
-            .option("maxFilesPerTrigger", 1)  # one chunk per micro-batch
-            .parquet(events_dir)
-            .writeStream.foreachBatch(_mapped_writer(out, tables))
+            chunks.writeStream.foreachBatch(_mapped_writer(out, tables))
             .trigger(availableNow=True)
             .start()
         )
@@ -178,29 +171,24 @@ def test_foreach_batch_sink_with_column_config(spark, events_dir):
         assert set(written.columns) == {"ts", "ident", "hits", "__epoch", "__windowStart"}
         assert written.count() > 0
         epochs = spark.read.parquet(os.path.join(out, "clientQuery")).select("__epoch").distinct()
-        assert sorted(r[0] for r in epochs.collect()) == list(range(N_CHUNKS))
+        assert sorted(r[0] for r in epochs.collect()) == list(range(stp.STREAM_CHUNKS))
         got = read_output_table(spark, os.path.join(out, "clientQuery"))
         want = dp.client_query_table(spark, SF).drop("windowStart")
         assert _rows(got) == _rows(want, got.columns)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
-def test_streaming_exact_dedup_collapses_redelivery(spark, events_dir):
-    """At-least-once input (every chunk delivered twice, within-batch and
-    across batches) must collapse to exactly the batch-distinct rows."""
-    dup_dir = tempfile.mkdtemp(prefix="events_dup_")
-    try:
-        src = spark.read.parquet(events_dir)
-        # two full deliveries: duplicates both inside one file and across
-        # micro-batch boundaries
-        src.unionAll(src).coalesce(2).write.mode("append").parquet(dup_dir)
-        src.coalesce(1).write.mode("append").parquet(dup_dir)
-        sdf = st.streaming_exact_dedup(st.read_events_stream(spark, dup_dir))
+def test_streaming_exact_dedup_collapses_redelivery(spark):
+    """At-least-once input (every row delivered three times, within-batch
+    and across batches) must collapse to exactly the batch-distinct rows."""
+    batch = load_table(spark, SF, "events")
+    # deliveries 0, 0, 1: duplicates both inside micro-batch 0 and across
+    # the micro-batch boundary
+    copies = batch.withColumn("delivery", F.explode(F.array(F.lit(0), F.lit(0), F.lit(1))))
+    with stp._chunked_file_stream(spark, copies, "delivery", 2) as stream:
+        sdf = st.streaming_exact_dedup(stream.drop("delivery"))
         got = st.run_stream_to_memory(sdf, "append", spark)
-        batch = load_table(spark, SF, "events")
-        assert _rows(got) == _rows(batch.select(*got.columns))
-    finally:
-        shutil.rmtree(dup_dir, ignore_errors=True)
+    assert _rows(got) == _rows(batch.select(*got.columns))
 
 def test_checkpoint_restart_resumes_without_reprocessing(spark):
     """K4 upgrade claim (ARCHITECTURE.md): a checkpointed query restarted
@@ -235,14 +223,13 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark):
     assert got.select("event_id").distinct().count() == ev.count()  # no loss
     shutil.rmtree(base, ignore_errors=True)
 
-def test_streaming_session_window_append_equals_closed_batch(spark, events_dir):
+def test_streaming_session_window_append_equals_closed_batch(spark, events_stream):
     """Native session_window in a STREAM (append mode): emitted sessions
     must equal exactly the batch sessions already closed by the final
     watermark (end <= max_ts - delay); later sessions are still open."""
     gap_s, delay = 1800, "10 minutes"
-    stream = st.read_events_stream(spark, events_dir)
     sdf = (
-        stream.withWatermark("ts", delay)
+        events_stream.withWatermark("ts", delay)
         .groupBy("user_id", F.session_window("ts", f"{gap_s} seconds"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -694,11 +681,9 @@ def test_listener_counts_rows(spark, tmp_path):
     listener = EngineStatsListener()
     spark.streams.addListener(listener)
     try:
-        d = str(tmp_path / "chunks")
         ev = load_table(spark, SF, "events")
-        ev.coalesce(1).write.mode("append").parquet(d)
-        sdf = _passthrough(st.read_events_stream(spark, d))
-        st.run_stream_to_memory(sdf, "append", spark)
+        with stp._range_chunked_stream(spark, ev, "event_id") as stream:
+            st.run_stream_to_memory(_passthrough(stream), "append", spark)
         # PySpark delivers listener callbacks asynchronously — poll
         import time
 

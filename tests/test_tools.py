@@ -28,7 +28,9 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 # --------------------------------------------------- queries() oracles
 
 def test_every_query_has_an_oracle():
-    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+    oracles = entrymod.oracle_sql()
+    assert list(entrymod.queries()) == list(oracles)
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
 
 
 # ------------- check_correctness --sampled (replica-gate composition)
@@ -176,9 +178,9 @@ def test_sampled_gt_plans_are_hazard_free(spark):
 def test_substitution_guards_trip_on_drift(monkeypatch):
     """The assertion-guarded composition fails loudly when the production
     SQL drifts instead of silently diverging."""
-    monkeypatch.setattr(dd, "_jaccard_sql", lambda dialect, *a, **k: "SELECT 1")
+    monkeypatch.setattr(dd, "ngram_jaccard_pairs_sql", lambda dialect, *a, **k: "SELECT 1")
     with pytest.raises(AssertionError, match="drifted"):
-        gt._sampled_jaccard_sql("duckdb")
+        gt.sampled_ngram_jaccard_pairs_sql("duckdb")
 
 
 # ------------------------------------------------------ compare_bench

@@ -57,7 +57,7 @@ SAMPLED_OUTPUT = frozenset({"dedup_simhash_pairs"})
 
 
 def sampled_minhash_recall_sql(dialect: str) -> str:
-    """Recall-over-a-pair-sample variant of ``_minhash_recall_sql``,
+    """Recall-over-a-pair-sample variant of ``minhash_recall_sql``,
     composed by substituting the two pair CTE bodies of the PRODUCTION
     SQL (same aggregation tail verbatim). The sample predicate lands on
     the pair key before the recall join/aggregate; both engines push it
@@ -68,8 +68,8 @@ def sampled_minhash_recall_sql(dialect: str) -> str:
     dedup.py fails loudly here instead of silently diverging."""
     from dnstap2clickhouse_spark.functions import dedup as dd
 
-    full = dd._minhash_recall_sql(dialect)
-    exact = dd._jaccard_sql(dialect).replace("ORDER BY doc_a, doc_b", "")
+    full = dd.minhash_recall_sql(dialect)
+    exact = dd.ngram_jaccard_pairs_sql(dialect).replace("ORDER BY doc_a, doc_b", "")
     lsh = dd._lsh_verified_sql(dialect)
     for inner in (exact, lsh):
         assert inner in full, "recall SQL drifted; update sampled composition"

@@ -40,18 +40,18 @@ def main() -> None:
         print(f"{label}: min {min(times):.1f}s rows={n}", flush=True)
 
     # --- SemDeDup: k is corpus-derived IN the SQL since round 5 ---
-    # (k = ceil(n / KMEANS_TARGET_OCCUPANCY), the kk CTE in _kmeans_sql)
+    # (k = ceil(n / KMEANS_TARGET_OCCUPANCY), the kk CTE in kmeans_assign_sql)
     # so the SAME audited SQL runs at both scales and occupancy stays
     # constant: the knob this script used to monkey-patch is the plan.
-    run(fsim._semantic_dedup_sql("spark"), SF01, "sf0.1  dedup_semantic k=derived")
-    run(fsim._semantic_dedup_sql("spark"), REPLICA, "sf1    dedup_semantic k=derived")
+    run(fsim.semantic_dedup_sql("spark"), SF01, "sf0.1  dedup_semantic k=derived")
+    run(fsim.semantic_dedup_sql("spark"), REPLICA, "sf1    dedup_semantic k=derived")
 
     # --- embedding LSH: bucket width is corpus-derived IN the SQL too
     # (round 5: the lb CTE masks the wide sign bucket to nb = f(count);
     # 4 bits at sf0.1, 8 bits at the replica) — same audited SQL at both
     # scales, occupancy constant, candidate count near-linear.
-    run(fsim._embedding_lsh_pairs_sql("spark"), SF01, "sf0.1  dedup_embedding_lsh nb=derived")
-    run(fsim._embedding_lsh_pairs_sql("spark"), REPLICA, "sf1    dedup_embedding_lsh nb=derived")
+    run(fsim.embedding_lsh_dups_sql("spark"), SF01, "sf0.1  dedup_embedding_lsh nb=derived")
+    run(fsim.embedding_lsh_dups_sql("spark"), REPLICA, "sf1    dedup_embedding_lsh nb=derived")
 
     spark.stop()
 
